@@ -511,12 +511,10 @@ object Cli {
             (!f.ptrim || f.pmediaPath.isDefined)) =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val flags = parseAdmitFlags(rest).get
-      import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, when}
+      import org.apache.spark.sql.SaveMode
+      import org.apache.spark.sql.functions.{col, count, expr, lit}
+      import xscale.{Admission, DedupClusters, PerceptualDedup, Similarity}
       val batch = spark.read.parquet(batchPath)
-      // batch signatures feed classification AND the sidecar append — one
-      // text pass, materialized once (batch-sized frame)
-      val batchSigs = graft.xscale.DedupClusters.ckpt(
-        xscale.Dedup.dedupSignatures(batch), flags.ckptDir)
       val sidecar0 = flags.sigsDir.filter(d => hfsExists(spark, d))
       // --compact: reconcile the sidecar with the LIVE corpus before
       // classifying — a later re-filter/re-dedup that removed docs leaves
@@ -531,12 +529,12 @@ object Cli {
       // the state (the same non-atomic two-write caveat as the lake swap).
       val sidecar = sidecar0.map { d =>
         if (flags.compact) {
-          val compacted = graft.xscale.DedupClusters.ckpt(
+          val compacted = DedupClusters.ckpt(
             xscale.Dedup.compactSignatures(
               spark.read.parquet(d),
               spark.read.parquet(corpusPath).select("doc_id")),
             flags.ckptDir)
-          compacted.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(d)
+          compacted.write.mode(SaveMode.Overwrite).parquet(d)
         }
         d
       }
@@ -553,14 +551,10 @@ object Cli {
         case (Some(d), _) => spark.read.parquet(d)
         case (None, Some(d)) =>
           xscale.Dedup.dedupSignatures(spark.read.parquet(corpusPath))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(d)
+            .write.mode(SaveMode.Overwrite).parquet(d)
           spark.read.parquet(d)
         case _ => xscale.Dedup.dedupSignatures(spark.read.parquet(corpusPath))
       }
-      // one classification pass, materialized once: the report aggregate
-      // and the admitted join both read it
-      val st0 = graft.xscale.DedupClusters.ckpt(
-        xscale.Dedup.incrementalDedupSigs(corpusSigs, batchSigs), flags.ckptDir)
       // --emb/--bemb: the EMBEDDING leg (vec_id == doc_id, the corpus
       // verb's convention) — flags still-admitted docs whose vector has a
       // cosine >= tau neighbor in the corpus (x74_admit_emb's rule:
@@ -572,47 +566,41 @@ object Cli {
       // corpus assignment under the dir, later runs classify with ZERO
       // corpus-embedding access (the --emb path may be retired) and the
       // finally-admitted vectors' state rows append after classification.
-      val embState = (flags.embPath, flags.bembPath) match {
-        case (Some(ce), Some(be)) =>
-          val bEmb = spark.read.parquet(be)
-          val frame = flags.esigsDir match {
-            case Some(d) =>
-              val bootstrapped = hfsExists(spark, s"$d/centroids") ||
-                hfsExists(spark, s"$d/halves")
-              // --compact: reconcile the assign table with the LIVE corpus
-              // ids before classifying — the emb analog of the sig-sidecar
-              // compaction above (stale vectors poison admission the same
-              // way: a rewording of deleted content keeps flagging
-              // near_dup_corpus_emb); corpus contributes ID PROJECTION
-              // only, centroids stay frozen. Same non-atomic-rewrite
-              // caveat — pass --ckpt so the cut is storage-backed.
-              if (flags.compact && bootstrapped) {
-                val compacted = graft.xscale.DedupClusters.ckpt(
-                  xscale.Similarity.compactEmbAssign(
-                    spark.read.parquet(s"$d/assign"),
-                    spark.read.parquet(corpusPath)
-                      .select(col("doc_id").as("vec_id"))),
-                  flags.ckptDir)
-                compacted.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                  .parquet(s"$d/assign")
-              }
-              // bootstrap flavor auto-chosen by corpus size (flat coarse
-              // cells within Similarity.FlatEmbBoundary, IMI product cells
-              // past it — the bootstrap that survives 100x); the state
-              // layout self-describes, the classifier detects it
-              if (!bootstrapped)
-                xscale.Similarity.admitEmbeddingBootstrapAuto(
-                  spark.read.parquet(ce), d,
-                  trainSample = 0.1, checkpointDir = flags.ckptDir)
-              xscale.Similarity.admitEmbeddingSigs(
-                spark, d, bEmb, checkpointDir = flags.ckptDir)
-            case None =>
-              xscale.Similarity.admitEmbeddingFrame(
-                spark.read.parquet(ce), bEmb,
+      val embFrame = for (ce <- flags.embPath; be <- flags.bembPath) yield {
+        val bEmb = spark.read.parquet(be)
+        flags.esigsDir match {
+          case Some(d) =>
+            val bootstrapped = hfsExists(spark, s"$d/centroids") ||
+              hfsExists(spark, s"$d/halves")
+            // --compact: reconcile the assign table with the LIVE corpus
+            // ids before classifying — the emb analog of the sig-sidecar
+            // compaction above (stale vectors poison admission the same
+            // way: a rewording of deleted content keeps flagging
+            // near_dup_corpus_emb); corpus contributes ID PROJECTION
+            // only, centroids stay frozen. Same non-atomic-rewrite
+            // caveat — pass --ckpt so the cut is storage-backed.
+            if (flags.compact && bootstrapped) {
+              val compacted = DedupClusters.ckpt(
+                Similarity.compactEmbAssign(
+                  spark.read.parquet(s"$d/assign"),
+                  spark.read.parquet(corpusPath).select(col("doc_id").as("vec_id"))),
+                flags.ckptDir)
+              compacted.write.mode(SaveMode.Overwrite).parquet(s"$d/assign")
+            }
+            // bootstrap flavor auto-chosen by corpus size (flat coarse
+            // cells within Similarity.FlatEmbBoundary, IMI product cells
+            // past it — the bootstrap that survives 100x); the state
+            // layout self-describes, the classifier detects it
+            if (!bootstrapped)
+              Similarity.admitEmbeddingBootstrapAuto(
+                spark.read.parquet(ce), d,
                 trainSample = 0.1, checkpointDir = flags.ckptDir)
-          }
-          Some(graft.xscale.DedupClusters.ckpt(frame, flags.ckptDir))
-        case _ => None
+            Similarity.admitEmbeddingSigs(spark, d, bEmb, checkpointDir = flags.ckptDir)
+          case None =>
+            Similarity.admitEmbeddingFrame(
+              spark.read.parquet(ce), bEmb,
+              trainSample = 0.1, checkpointDir = flags.ckptDir)
+        }
       }
       // --pmedia/--bmedia: the PERCEPTUAL leg (x74_admit_img/_aud's rule)
       // — still-admitted docs whose image or audio dHash has a close
@@ -624,13 +612,12 @@ object Cli {
       // decoder, falls back to the RIFF walk) at the WIDTH the corpus
       // count demands (mediaWideFor — BandBoundary as code, the textLegFor
       // pattern) and records that width in <dir>/meta; later runs read the
-      // meta and hash every batch AT THE STATE'S WIDTH, so a 4-band batch
-      // hash is never compared against an 8-band state. Pre-width states
-      // (no mod column) keep their original image-only classic-width
-      // contract — widening or adding audio to one is a re-bootstrap, the
-      // frozen-centroid retrain rule. Undecodable batch rows pass the leg
-      // unflagged (decode failures are data); --compact reconciles the
-      // bands state with the live corpus ids like the other two sidecars.
+      // meta, and the kernel hashes every batch AT THE STATE'S WIDTH.
+      // Pre-width states (no mod column) keep their original image-only
+      // classic-width contract — widening or adding audio to one is a
+      // re-bootstrap, the frozen-centroid retrain rule. --compact
+      // reconciles the bands state with the live corpus ids like the
+      // other two sidecars.
       // Resolved BEFORE the media leg: the shingle-state SPACES govern
       // which containment spaces the batch decodes, compares and appends
       // (the combined one-decode frame must know whether to accumulate
@@ -644,87 +631,49 @@ object Cli {
         if (!flags.ptrim) None
         else Some(flags.psigsDir match {
           case Some(d) if hfsExists(spark, s"$d/shingles") =>
-            xscale.PerceptualDedup.stateShingleSpaces(
+            PerceptualDedup.stateShingleSpaces(
               spark, s"$d/shmeta", spark.read.parquet(s"$d/shingles"))
-          case _ => xscale.PerceptualDedup.AdmitShingleSpaces
+          case _ => PerceptualDedup.AdmitShingleSpaces
         })
-      val mediaState: Option[MediaLeg] = (flags.pmediaPath, flags.bmediaPath) match {
-        case (Some(cm), Some(bm)) =>
-          def corpusHash(wide: Boolean) = xscale.PerceptualDedup
-            .mediaHashFrame(spark.read.parquet(cm), wide).filter(col("decoded"))
-            .select(col("doc_id").as("cv_id"), col("mod"), col("bands"))
-          def corpusWide() = xscale.PerceptualDedup.mediaWideFor(
-            spark.read.parquet(cm).count())
-          val (corpusBands, wide, legacy) = flags.psigsDir match {
-            case Some(d) =>
-              val bandsPath = s"$d/bands"
-              val metaPath = s"$d/meta"
-              val bootstrapped = hfsExists(spark, bandsPath)
-              if (flags.compact && bootstrapped) {
-                val compacted = graft.xscale.DedupClusters.ckpt(
-                  xscale.PerceptualDedup.compactMediaBands(
-                    spark.read.parquet(bandsPath),
-                    spark.read.parquet(corpusPath)
-                      .select(col("doc_id").as("vec_id"))),
-                  flags.ckptDir)
-                compacted.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                  .parquet(bandsPath)
-              }
-              if (!bootstrapped) {
-                val w = corpusWide()
-                // meta BEFORE bands: the bootstrap probe is on the bands
-                // path, so a crash between the two writes retries into a
-                // full re-bootstrap (meta harmlessly overwritten); the
-                // reverse order could leave a WIDE bands state that later
-                // batches read as classic — silent zero-recall
-                xscale.PerceptualDedup.writeBandMeta(spark, metaPath, w)
-                corpusHash(w).write
-                  .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(bandsPath)
-              }
-              val st = spark.read.parquet(bandsPath)
-              (st, xscale.PerceptualDedup.stateWide(spark, metaPath, st),
-                !st.columns.contains("mod"))
-            case None =>
-              // cut ONCE: admitMediaCompare references the frame twice
-              // (candidate + verify sides) — uncut, the full corpus media
-              // would be decoded twice per run
-              val w = corpusWide()
-              (graft.xscale.DedupClusters.ckpt(corpusHash(w), flags.ckptDir), w, false)
-          }
-          // with --ptrim (non-legacy), ONE decode pass serves both video
-          // signals: the combined frame carries bands AND shingles per
-          // payload (the separate passes each re-ran the per-pixel AVI
-          // decode — 2x the leg's dominant cost)
-          val (batchBands, batchShingles) =
-            if (legacy)
-              (graft.xscale.DedupClusters.ckpt(
-                xscale.PerceptualDedup.imageHashFrame(spark.read.parquet(bm))
-                  .filter(col("decoded")).select("doc_id", "bands"),
-                flags.ckptDir), None)
-            else if (flags.ptrim) {
-              val combined = graft.xscale.DedupClusters.ckpt(
-                xscale.PerceptualDedup.mediaHashShingleFrame(
-                  spark.read.parquet(bm), wide,
-                  vsp = trimSpaces.exists(_.contains("vsp")),
-                  rscales = xscale.PerceptualDedup.rescaleScalesOf(
-                    trimSpaces.getOrElse(Nil))),
+      val bMedia = flags.bmediaPath.map(spark.read.parquet(_))
+      val media = for (cm <- flags.pmediaPath; bm <- bMedia) yield {
+        def corpusHash(wide: Boolean) = PerceptualDedup
+          .mediaHashFrame(spark.read.parquet(cm), wide).filter(col("decoded"))
+          .select(col("doc_id").as("cv_id"), col("mod"), col("bands"))
+        def corpusWide() = PerceptualDedup.mediaWideFor(spark.read.parquet(cm).count())
+        val (corpusBands, wide) = flags.psigsDir match {
+          case Some(d) =>
+            val bandsPath = s"$d/bands"
+            val metaPath = s"$d/meta"
+            val bootstrapped = hfsExists(spark, bandsPath)
+            if (flags.compact && bootstrapped) {
+              val compacted = DedupClusters.ckpt(
+                PerceptualDedup.compactMediaBands(
+                  spark.read.parquet(bandsPath),
+                  spark.read.parquet(corpusPath).select(col("doc_id").as("vec_id"))),
                 flags.ckptDir)
-              (combined.filter(col("decoded")).select("doc_id", "mod", "bands"),
-                Some(graft.xscale.DedupClusters.ckpt(
-                  xscale.PerceptualDedup.shingleRows(combined), flags.ckptDir)))
-            } else
-              (graft.xscale.DedupClusters.ckpt(
-                xscale.PerceptualDedup.mediaHashFrame(spark.read.parquet(bm), wide)
-                  .filter(col("decoded")).select("doc_id", "mod", "bands"),
-                flags.ckptDir), None)
-          Some(MediaLeg(
-            graft.xscale.DedupClusters.ckpt(
-              xscale.PerceptualDedup.admitMediaCompare(
-                corpusBands, batchBands,
-                xscale.PerceptualDedup.widthThreshold(wide)),
-              flags.ckptDir),
-            wide, legacy, batchShingles))
-        case _ => None
+              compacted.write.mode(SaveMode.Overwrite).parquet(bandsPath)
+            }
+            if (!bootstrapped) {
+              val w = corpusWide()
+              // meta BEFORE bands: the bootstrap probe is on the bands
+              // path, so a crash between the two writes retries into a
+              // full re-bootstrap (meta harmlessly overwritten); the
+              // reverse order could leave a WIDE bands state that later
+              // batches read as classic — silent zero-recall
+              PerceptualDedup.writeBandMeta(spark, metaPath, w)
+              corpusHash(w).write.mode(SaveMode.Overwrite).parquet(bandsPath)
+            }
+            val st = spark.read.parquet(bandsPath)
+            (st, PerceptualDedup.stateWide(spark, metaPath, st))
+          case None =>
+            // cut ONCE: admitMediaCompare references the frame twice
+            // (candidate + verify sides) — uncut, the full corpus media
+            // would be decoded twice per run
+            val w = corpusWide()
+            (DedupClusters.ckpt(corpusHash(w), flags.ckptDir), w)
+        }
+        Admission.mediaLeg(corpusBands, wide, bm, trimSpaces, flags.ckptDir)
       }
       // --ptrim: the CONTAINMENT leg — the blind spot the band leg leaves
       // open by design, on all FOUR shingle spaces: a re-cut/excerpt of
@@ -755,295 +704,62 @@ object Cli {
       // classic and wide band states unchanged; --compact reconciles it
       // (left_semi on live ids + DISTINCT — shingle rows are pure
       // values, exact duplicates are always append replays).
-      val trimState: Option[TrimLeg] =
-        if (!flags.ptrim) None
-        else (flags.pmediaPath, flags.bmediaPath) match {
-          case (Some(cm), Some(bm)) =>
-            val shSpaces = trimSpaces.getOrElse(
-              xscale.PerceptualDedup.AdmitShingleSpaces)
-            // the scan emits exactly the spaces the state records (a new
-            // bootstrap: AdmitShingleSpaces incl. the rescale spaces --
-            // SCALED img fingerprints under rs<k>, the x156 state role)
-            def corpusShingleScan() = xscale.PerceptualDedup
-              .mediaShingles(spark.read.parquet(cm),
-                rscales = xscale.PerceptualDedup.rescaleScalesOf(shSpaces))
-              .withColumnRenamed("doc_id", "cv_id")
-            val corpusSh = flags.psigsDir match {
-              case Some(d) =>
-                val shPath = s"$d/shingles"
-                val bootstrapped = hfsExists(spark, shPath)
-                if (flags.compact && bootstrapped) {
-                  val compacted = graft.xscale.DedupClusters.ckpt(
-                    xscale.PerceptualDedup.compactTrimShingles(
-                      spark.read.parquet(shPath),
-                      spark.read.parquet(corpusPath)
-                        .select(col("doc_id").as("vec_id"))),
-                    flags.ckptDir)
-                  compacted.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-                    .parquet(shPath)
-                }
-                if (!bootstrapped) {
-                  // meta BEFORE shingles (the band-meta crash rule): the
-                  // bootstrap probe is on the shingles path, so a crash
-                  // between the writes retries into a full re-bootstrap;
-                  // the reverse order could leave a state whose spaces
-                  // and geometry later batches can only guess
-                  xscale.PerceptualDedup.writeShingleMeta(spark, s"$d/shmeta")
-                  corpusShingleScan().write
-                    .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(shPath)
-                }
-                spark.read.parquet(shPath)
-              case None =>
-                graft.xscale.DedupClusters.ckpt(corpusShingleScan(), flags.ckptDir)
+      val trim = for (spaces <- trimSpaces; cm <- flags.pmediaPath; bm <- bMedia) yield {
+        // the scan emits exactly the spaces the state records (a new
+        // bootstrap: AdmitShingleSpaces incl. the rescale spaces --
+        // SCALED img fingerprints under rs<k>, the x156 state role)
+        def corpusShingleScan() = PerceptualDedup
+          .mediaShingles(spark.read.parquet(cm),
+            rscales = PerceptualDedup.rescaleScalesOf(spaces))
+          .withColumnRenamed("doc_id", "cv_id")
+        val corpusSh = flags.psigsDir match {
+          case Some(d) =>
+            val shPath = s"$d/shingles"
+            val bootstrapped = hfsExists(spark, shPath)
+            if (flags.compact && bootstrapped) {
+              val compacted = DedupClusters.ckpt(
+                PerceptualDedup.compactTrimShingles(
+                  spark.read.parquet(shPath),
+                  spark.read.parquet(corpusPath).select(col("doc_id").as("vec_id"))),
+                flags.ckptDir)
+              compacted.write.mode(SaveMode.Overwrite).parquet(shPath)
             }
-            val shLegacy = !corpusSh.columns.contains("mod")
-            // batch shingles: the media leg's combined one-decode frame
-            // already carries them (non-legacy --pmedia runs); only the
-            // legacy-state path pays a separate shingle decode. Cut once:
-            // referenced by the compare, the strict pass AND the append.
-            // Under a LEGACY shingle state the leg restricts to vid end
-            // to end (compare, strict, append) — the state's original
-            // contract, byte-compatible with pre-crop runs; under an r14
-            // (pre-vsp, meta-less mod-tagged) state it restricts to the
-            // triad the same way — vsp rows neither compare (they would
-            // silently never match) nor append (a partially-covered
-            // space would make future batches' vsp recall depend on
-            // append history).
-            val batchSh0 = mediaState.flatMap(_.batchShingles).getOrElse(
-              graft.xscale.DedupClusters.ckpt(
-                // under the legacy contract the img shingles would only be
-                // filtered away — skip the image tile decode entirely
-                if (shLegacy)
-                  xscale.PerceptualDedup.videoFrameShingles(spark.read.parquet(bm))
-                    .withColumn("mod", lit("vid"))
-                else xscale.PerceptualDedup.mediaShingles(
-                  spark.read.parquet(bm), vsp = shSpaces.contains("vsp"),
-                  rscales = xscale.PerceptualDedup.rescaleScalesOf(shSpaces)),
-                flags.ckptDir))
-            val batchSh =
-              if (shLegacy) batchSh0.filter(col("mod") === "vid")
-              else batchSh0.filter(col("mod").isin(shSpaces: _*))
-            // COMPARE feed: the rescale spaces are asymmetric (state side
-            // scaled, batch side native -- the RescaleSpace contract), so
-            // the batch's rs rows (scaled; kept for the APPEND below) are
-            // swapped for its NATIVE img fingerprints re-tagged per active
-            // rs space -- zero extra decode, and n_sh prices the native
-            // set (the x156 denominator)
-            val rsActive = xscale.PerceptualDedup.RescaleSpaces
-              .filter(sp => shSpaces.contains(sp.space))
-            val batchCompare =
-              if (shLegacy || rsActive.isEmpty) batchSh
-              else batchSh.filter(!col("mod").startsWith("rs"))
-                .unionByName(rsActive.map(sp =>
-                  batchSh.filter(col("mod") === "img")
-                    .withColumn("mod", lit(sp.space)))
-                  .reduce(_ unionByName _))
-            Some(TrimLeg(
-              graft.xscale.DedupClusters.ckpt(
-                xscale.PerceptualDedup.admitTrimCompare(corpusSh, batchCompare),
-                flags.ckptDir),
-              batchSh, shLegacy))
-          case _ => None
+            if (!bootstrapped) {
+              // meta BEFORE shingles (the band-meta crash rule): the
+              // bootstrap probe is on the shingles path, so a crash
+              // between the writes retries into a full re-bootstrap;
+              // the reverse order could leave a state whose spaces
+              // and geometry later batches can only guess
+              PerceptualDedup.writeShingleMeta(spark, s"$d/shmeta")
+              corpusShingleScan().write.mode(SaveMode.Overwrite).parquet(shPath)
+            }
+            spark.read.parquet(shPath)
+          case None =>
+            DedupClusters.ckpt(corpusShingleScan(), flags.ckptDir)
         }
-      // ALL corpus-vs-batch legs run BEFORE either strict pass: a strict
-      // pass elects a survivor per intra-batch cluster, and a corpus leg
-      // that ran AFTER it could reject that survivor — leaving the
-      // cluster with no admitted representative while its losers stay
-      // rejected as near_dup_batch* (the round-12 ADVICE ordering
-      // defect). With every corpus signal applied first, the strict CCs
-      // run over docs that have cleared ALL corpus rules, so an elected
-      // survivor can only be demoted by a LATER strict pass — and then
-      // only because a cross-signal sibling survives in its place (the
-      // residual interplay between sequential strict legs, which keeps a
-      // representative of the merged content either way).
-      val stC1 = embState match {
-        case Some(frame) =>
-          graft.xscale.DedupClusters.ckpt(
-            xscale.Dedup.restatus(
-              st0,
-              frame.filter(col("near_emb")).select(col("vec_id").as("doc_id")),
-              "near_dup_corpus_emb"),
-            flags.ckptDir)
-        case None => st0
+        Admission.trimLeg(corpusSh, spaces, bm, media, flags.ckptDir)
       }
-      val stC2 = mediaState match {
-        case Some(leg) =>
-          // one restatus per modality: near_med carries the decision, mod
-          // names which signal saw it (img/aud/vid — disjoint candidate
-          // spaces, disjoint statuses; startswith folds the width-suffixed
-          // img16/aud16/vid16 small-media rows into their modality's
-          // status). The modality table IS the wiring
-          // (PerceptualDedup.Modalities) — adding a modality there adds
-          // its statuses here.
-          val near = leg.frame.filter(col("near_med"))
-          graft.xscale.DedupClusters.ckpt(
-            xscale.PerceptualDedup.Modalities.foldLeft(stC1) { (st, m) =>
-              xscale.Dedup.restatus(
-                st, near.filter(col("mod").startsWith(m.prefix)).select("doc_id"),
-                m.corpusStatus)
-            },
-            flags.ckptDir)
-        case None => stC1
-      }
-      // the containment corpus leg runs AFTER the band leg: restatus only
-      // demotes still-admitted docs, so a full near-dup keeps its
-      // stronger near_dup_corpus_img/_aud/_vid status and only docs the
-      // band rule cleared can flag near_dup_corpus_vtrim/_icrop/_atrim/
-      // _vcrop — per-SPACE statuses off the Modalities contain column
-      // (exact mod match: shingle spaces are never width-suffixed; a doc
-      // flagged in several spaces takes the first in Modalities order)
-      val stC3 = trimState match {
-        case Some(leg) =>
-          val near = leg.frame.filter(col("near_trim"))
-          // the rescale spaces (rs2/rs4...) fold to ONE status -- the
-          // signal is "resized crop", whatever scale saw it
-          val stSym = xscale.PerceptualDedup.ShingleSpaces.foldLeft(stC2) { (st, cs) =>
-            xscale.Dedup.restatus(
-              st, near.filter(col("mod") === cs.space).select("doc_id"),
-              cs.corpusStatus)
-          }
-          graft.xscale.DedupClusters.ckpt(
-            xscale.Dedup.restatus(
-              stSym,
-              near.filter(col("mod").startsWith("rs")).select("doc_id").distinct(),
-              xscale.PerceptualDedup.RcropCorpusStatus),
-            flags.ckptDir)
-        case None => stC2
-      }
-      // --strict: the batch-vs-corpus rules cannot see two near-dups
-      // arriving TOGETHER (both admitted, both in the corpus forever) —
-      // close the leak with near-dup CC over the admitted docs'
-      // already-computed signatures (batch-sized, zero text access);
-      // cluster losers become near_dup_batch, exactly mirroring
-      // dup_exact_batch one level up the dup hierarchy
-      val stS0 =
-        if (!flags.strict) stC3
-        else graft.xscale.DedupClusters.ckpt(
-          xscale.Dedup.admitStrict(stC3, batchSigs, checkpointDir = flags.ckptDir),
-          flags.ckptDir)
-      // --strict + --emb: the emb analog of the text strict pass, one
-      // signal level down — two REWORDINGS arriving together both clear
-      // the batch-vs-corpus emb rule; within-cell cosine CC over the
-      // FINALLY-admitted docs' already-assigned vectors (zero extra
-      // embedding access), losers re-status near_dup_batch_emb
-      val stS1 = (embState, flags.strict) match {
-        case (Some(frame), true) =>
-          val admNow = stS0.filter(col("status") === "admitted")
-            .select(col("doc_id").as("vec_id"))
-          val losers = xscale.Similarity.admitEmbStrictLosers(
-            frame.join(admNow, "vec_id").select("vec_id", "cid", "cv", "cn"),
-            checkpointDir = flags.ckptDir)
-            .select(col("vec_id").as("doc_id"))
-          graft.xscale.DedupClusters.ckpt(
-            xscale.Dedup.restatus(stS0, losers, "near_dup_batch_emb"),
-            flags.ckptDir)
-        case _ => stS0
-      }
-      // --strict + --pmedia: two re-encodes of the same image (or
-      // re-gains of the same clip, or re-renders of the same video)
-      // arriving together both clear the batch-vs-corpus rule — banded CC
-      // over the FINALLY-admitted docs' already-computed bands
-      // (modality-keyed, so cross-modal pairs never form), losers
-      // re-status near_dup_batch_img/_aud/_vid by their modality (zero
-      // extra decode)
-      val st = (mediaState, flags.strict) match {
-        case (Some(leg), true) =>
-          val admNow = stS1.filter(col("status") === "admitted").select("doc_id")
-          val losers = xscale.PerceptualDedup.admitMediaStrictLosers(
-            leg.frame.join(admNow, "doc_id").select("doc_id", "mod", "bands"),
-            maxHamming = xscale.PerceptualDedup.widthThreshold(leg.wide),
-            checkpointDir = flags.ckptDir,
-            nBands = xscale.PerceptualDedup.widthBands(leg.wide))
-          graft.xscale.DedupClusters.ckpt(
-            xscale.PerceptualDedup.Modalities.foldLeft(stS1) { (st0, m) =>
-              xscale.Dedup.restatus(
-                st0, losers.filter(col("mod").startsWith(m.prefix)).select("doc_id"),
-                m.strictStatus)
-            },
-            flags.ckptDir)
-        case _ => stS1
-      }
-      // --strict + --ptrim: a trim/crop/excerpt and its SOURCE arriving
-      // together both clear the corpus rules — undirected containment CC
-      // over the finally-admitted batch shingles (within one shingle
-      // space), keep BEST by shingle count (the longer clip / larger
-      // image is the source), losers per space off the contain column
-      val stF = (trimState, flags.strict) match {
-        case (Some(leg), true) =>
-          val admNow = st.filter(col("status") === "admitted").select("doc_id")
-          val losers = graft.xscale.DedupClusters.ckpt(
-            xscale.PerceptualDedup.admitTrimStrictLosers(
-              leg.batchShingles.join(admNow, "doc_id"), checkpointDir = flags.ckptDir),
-            flags.ckptDir)
-          val stSymF = xscale.PerceptualDedup.ShingleSpaces.foldLeft(st) { (st0, cs) =>
-            xscale.Dedup.restatus(
-              st0, losers.filter(col("mod") === cs.space).select("doc_id"),
-              cs.strictStatus)
-          }
-          graft.xscale.DedupClusters.ckpt(
-            xscale.Dedup.restatus(
-              stSymF,
-              losers.filter(col("mod").startsWith("rs")).select("doc_id").distinct(),
-              xscale.PerceptualDedup.RcropStrictStatus),
-            flags.ckptDir)
-        case _ => st
-      }
-      stF.groupBy("status")
+      // the batch side of every leg, the status fold and the state
+      // appends are the admission kernel's (shared with StreamingAdmit)
+      val legs = Admission.legs(batch, embFrame, media, trim, flags.ckptDir)
+      val st = Admission.classify(corpusSigs, legs, flags.strict, flags.ckptDir)
+      st.groupBy("status")
         .agg(count(lit(1)).as("n_docs"), expr("bit_xor(key)").as("checksum"))
         .orderBy("status")
         .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .write.mode(SaveMode.Overwrite)
         .parquet(s"$outDir/report")
-      val admittedIds = stF.filter(col("status") === "admitted").select("doc_id")
+      val admittedIds = st.filter(col("status") === "admitted").select("doc_id")
       batch.join(admittedIds, "doc_id")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .write.mode(SaveMode.Overwrite)
         .parquet(s"$outDir/admitted")
-      // sidecar updates: append ONLY the admitted docs' state (the
-      // bootstrap already wrote the corpus state above, pre-classify).
-      // Append-only — a retry after a crash re-runs the whole admit, and
-      // the classification is idempotent against the already-appended
-      // state: re-admitted docs classify dup_exact_corpus, append nothing.
-      // ORDER: emb assign BEFORE the sig sidecar — the sig append is what
-      // flips the retried run to dup_exact_corpus, so any write that must
-      // still happen on retry has to precede it. A crash between the two
-      // then retries into duplicated identical assign rows (collapsed by
-      // --compact, harmless to decisions); the reverse order would leave
-      // the assign table permanently missing the admitted vectors, and
-      // future rewordings of that content would not flag
-      // near_dup_corpus_emb.
-      for (frame <- embState; d <- flags.esigsDir)
-        frame.join(admittedIds, col("vec_id") === col("doc_id"))
-          .select(col("vec_id").as("cv_id"), col("cid"), col("cv"), col("cn"))
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$d/assign")
-      // centroids never change on append — retrain is a re-bootstrap
-      // (x79's add-vs-train rule)
-      // the append CONFORMS to the state's layout: a pre-width (legacy)
-      // state stays (cv_id, bands) — mixing schemas within one parquet
-      // dir would make reads layout-dependent
-      for (leg <- mediaState; d <- flags.psigsDir)
-        leg.frame.join(admittedIds, "doc_id")
-          .select(
-            col("doc_id").as("cv_id") +:
-              (if (leg.legacy) Seq(col("bands")) else Seq(col("mod"), col("bands"))): _*)
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$d/bands")
-      // the shingle append rides the same crash rule: before the sig
-      // append (still-needed on retry), after the output — a crash here
-      // retries into doubled shingle rows, collapsed by --compact's
-      // DISTINCT and harmless to containment decisions. The append
-      // CONFORMS to the state's layout: a legacy (pre-mod) state stays
-      // (cv_id, s1..q2) and only ever receives vid rows (batchShingles
-      // is already vid-filtered under legacy)
-      for (leg <- trimState; d <- flags.psigsDir)
-        leg.batchShingles.join(admittedIds, "doc_id")
-          .select(
-            col("doc_id").as("cv_id") +:
-              ((if (leg.legacy) Nil else Seq(col("mod"))) ++
-                Seq(col("s1"), col("q1"), col("s2"), col("q2"))): _*)
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$d/shingles")
-      flags.sigsDir.foreach { d =>
-        batchSigs.join(admittedIds, "doc_id")
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(d)
-      }
+      // sidecar updates: append ONLY the admitted docs' state, in the
+      // kernel's crash order (the bootstrap already wrote the corpus state
+      // above, pre-classify). A retry after a crash re-runs the whole
+      // admit, and the classification is idempotent against the
+      // already-appended state: re-admitted docs classify
+      // dup_exact_corpus and append nothing.
+      Admission.appendState(admittedIds, legs, flags.sigsDir, flags.esigsDir, flags.psigsDir)
       val byStatus = spark.read.parquet(s"$outDir/report").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       def n(s: String): Long = byStatus.getOrElse(s, 0L)
@@ -1060,26 +776,26 @@ object Cli {
             s""""near_dup_batch_emb":${n("near_dup_batch_emb")},"""
           else "") +
           (if (flags.pmediaPath.isDefined)
-            xscale.PerceptualDedup.Modalities
+            PerceptualDedup.Modalities
               .map(m => s""""${m.corpusStatus}":${n(m.corpusStatus)},""").mkString
           else "") +
           (if (flags.strict && flags.pmediaPath.isDefined)
-            xscale.PerceptualDedup.Modalities
+            PerceptualDedup.Modalities
               .map(m => s""""${m.strictStatus}":${n(m.strictStatus)},""").mkString
           else "") +
           (if (flags.ptrim)
-            xscale.PerceptualDedup.ShingleSpaces
+            PerceptualDedup.ShingleSpaces
               .flatMap(cs =>
                 Seq(s""""${cs.corpusStatus}":${n(cs.corpusStatus)},""") ++
                   (if (flags.strict)
                     Seq(s""""${cs.strictStatus}":${n(cs.strictStatus)},""")
                   else Nil))
               .mkString +
-            s""""${xscale.PerceptualDedup.RcropCorpusStatus}":${
-              n(xscale.PerceptualDedup.RcropCorpusStatus)},""" +
+            s""""${PerceptualDedup.RcropCorpusStatus}":${
+              n(PerceptualDedup.RcropCorpusStatus)},""" +
             (if (flags.strict)
-              s""""${xscale.PerceptualDedup.RcropStrictStatus}":${
-                n(xscale.PerceptualDedup.RcropStrictStatus)},"""
+              s""""${PerceptualDedup.RcropStrictStatus}":${
+                n(PerceptualDedup.RcropStrictStatus)},"""
             else "")
           else "") +
           s""""corpus_state":${jsonStr(if (sidecar.isDefined) "sidecar" else "scan")},""" +
@@ -1105,30 +821,6 @@ object Cli {
       pdedupPath: Option[String] = None,
       pcontainPath: Option[String] = None,
       mqualityPath: Option[String] = None)
-
-  /** The resolved media leg: the admitMediaCompare frame plus the two
-    * state-layout facts every downstream step must agree on — `wide`
-    * (band width, from the `--psigs` meta or the corpus count) and
-    * `legacy` (a pre-width state without a mod column keeps its original
-    * image-only classic contract).
-    */
-  private final case class MediaLeg(
-      frame: org.apache.spark.sql.DataFrame,
-      wide: Boolean,
-      legacy: Boolean,
-      batchShingles: Option[org.apache.spark.sql.DataFrame] = None)
-
-  /** The resolved containment (`--ptrim`) leg: the admitTrimCompare frame,
-    * the (possibly legacy-filtered) batch shingles the strict pass and
-    * the state append reuse, and `legacy` — a pre-mod shingle state keeps
-    * its original VIDEO-ONLY contract (only vid shingles compare and
-    * append; adding the image space is a re-bootstrap, the same rule as
-    * the bands state's width).
-    */
-  private final case class TrimLeg(
-      frame: org.apache.spark.sql.DataFrame,
-      batchShingles: org.apache.spark.sql.DataFrame,
-      legacy: Boolean)
 
   /** Parsed `admit` flags: `--ckpt` = reliable stage-boundary
     * checkpoints (the corpus verb's contract); `--sigs` = the persisted

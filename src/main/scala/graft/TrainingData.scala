@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 
-import xscale.{DataPrep, Dedup, DedupClusters, IncrementalDedup, Similarity, TextAnalysis}
+import xscale.{DataPrep, Dedup, DedupClusters, Similarity, TextAnalysis}
 
 /** The library's public face for training-data pipelines — one object a
   * user imports to run every corpus operation the engine implements,
@@ -104,14 +104,6 @@ object TrainingData {
       if (maxHamming < 0) xscale.PerceptualDedup.MaxHamming else maxHamming,
       checkpointDir)
 
-  /** REAL frame extraction (the x42 stub's production form): every
-    * `every`-th complete AVI frame as a standalone BMP payload —
-    * (doc_id, frame_idx, payload); every downstream IMAGE operator runs
-    * on frames unchanged.
-    */
-  def extractFrames(videos: DataFrame, every: Int = 1): DataFrame =
-    xscale.Multimodal.extractAviFrames(videos, every)
-
   /** MIXED-modality near-dup pairs — the corpus `--pdedup` stage's
     * generator: one pass modality-detects and hashes images, audio clips
     * AND videos ([[xscale.PerceptualDedup.mediaHashFrame]]), keeps them
@@ -141,30 +133,6 @@ object TrainingData {
       darkMaxE3: Long = 30000L,
       brightMinE3: Long = 225000L): DataFrame =
     xscale.Multimodal.imageExposureFrame(media, darkMaxE3, brightMinE3)
-
-  /** Per-clip video QUALITY counters (x146): exact-integer black-frame /
-    * frozen-frame detection over per-frame luma moments through the
-    * hardened AVI walk — [[audioQuality]]/[[imageExposure]]'s twin for
-    * the frame-stream modality; the drop rule is the caller's (e.g.
-    * `n_black/n_frames > 0.5` or `n_frozen/n_frames > 0.9`).
-    */
-  def videoQuality(media: DataFrame, blackMaxMeanE3: Long = 30000L): DataFrame =
-    xscale.Multimodal.videoQualityFrame(media, blackMaxMeanE3)
-
-  /** Per-clip SCENE-CUT counters (x149): shot boundaries over the frame
-    * luma envelope + longest-scene run — the segmentation signal frame
-    * sampling and slideshow detection key on.
-    */
-  def videoSceneCuts(media: DataFrame, cutMinMeanDeltaE3: Long = 50000L): DataFrame =
-    xscale.Multimodal.videoSceneCutFrame(media, cutMinMeanDeltaE3)
-
-  /** The multimodal quality GATE (x150, `Cli corpus --mquality`'s rule):
-    * one modality-detected verdict per media doc — (doc_id, decoded,
-    * mod, flagged); the documented per-modality integer rules live on
-    * [[xscale.Multimodal.mediaQualityFrame]].
-    */
-  def mediaQuality(media: DataFrame): DataFrame =
-    xscale.Multimodal.mediaQualityFrame(media)
 
   /** Per-clip UTTERANCE segmentation (x151): silence-gap splitting with
     * pauses kept inside utterances — the VAD-style signal speech
@@ -197,25 +165,6 @@ object TrainingData {
   def connectedComponentsStar(pairs: DataFrame,
       checkpointDir: Option[String] = None): DataFrame =
     DedupClusters.connectedComponentsStar(pairs, checkpointDir = checkpointDir)
-
-  /** Dedup a new batch against a corpus without shuffling the corpus:
-    * Bloom-gated anti-join on the normalized-text key. Build the filter
-    * once per corpus version with [[IncrementalDedup.corpusBloom]].
-    */
-  def dedupIncremental(corpus: DataFrame, batch: DataFrame,
-      bloom: org.apache.spark.util.sketch.BloomFilter,
-      orderCols: Seq[String] = Seq("doc_id")): DataFrame =
-    IncrementalDedup.newDocs(corpus, batch, bloom, orderCols)
-
-  /** MinHash signature per group (e.g. per source): sketches the union of
-    * the group's 60-bit shingle hashes via the [[org.apache.spark.sql.graftnative.MinHashAgg]]
-    * custom aggregate. Input needs (`groupCol`, `hashCol: long`); compare
-    * signatures component-wise to estimate cross-group Jaccard.
-    */
-  def minhashSketch(df: DataFrame, groupCol: String, hashCol: String, k: Int = 16): DataFrame =
-    df.groupBy(groupCol).agg(
-      org.apache.spark.sql.graftnative.MinHashAgg(
-        org.apache.spark.sql.functions.col(hashCol), k).as("sig"))
 
   // ---- similarity search ----
 
@@ -296,11 +245,6 @@ object TrainingData {
     Similarity.semDedup(emb, tau, nc, trainSample, checkpointDir)
 
   // ---- text analysis / quality ----
-
-  /** Gopher/C4 rule metrics + per-rule booleans + `r_keep`, one native
-    * pass per row.
-    */
-  def qualityAnnotate(docs: DataFrame): DataFrame = TextAnalysis.gopherAnnotate(docs)
 
   /** Docs passing every Gopher/C4 rule. */
   def qualityFilter(docs: DataFrame): DataFrame = TextAnalysis.qualityFilter(docs)
@@ -1317,12 +1261,4 @@ object TrainingData {
       trainSample: Double = 1.0,
       checkpointDir: Option[String] = None): DataFrame =
     Similarity.imiCells(emb, nc, trainSample, checkpointDir)
-
-  /** Per-doc quality scores (x09's scoring expression): (doc_id, n_tok,
-    * score_e4) — the shared input of the filter sweep (x100), curriculum
-    * (x101), keep-best dedup (x95) and the streaming quality gate. Input
-    * needs (doc_id, text, n_chars). Pure per-row expression, no shuffle.
-    */
-  def qualityScores(docs: DataFrame): DataFrame =
-    xscale.TextAnalysis.qualityPerDoc(docs)
 }

@@ -4,58 +4,49 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.xscale.{Dedup, DedupClusters, PerceptualDedup, Similarity}
+import graft.xscale.{Admission, PerceptualDedup, Similarity}
 
 /** Streaming ADMISSION — x74's four-status decision rule (plus the strict
   * intra-batch near-dup refinement) as a continuous ingest path: each
   * micro-batch is classified against the persisted dedup-state sidecar
-  * (doc_id, 60-bit exact key, K-minhash sig — [[Dedup.dedupSignatures]]),
-  * admitted docs flow to the output, their signatures append to the state,
-  * and the per-batch status report (x74's hash-verified row shape) appends
-  * to an audit table. The batch twin is `Cli admit --sigs --strict`; the
-  * state AND the decision rule are byte-identical (spec-pinned by a
-  * cross-surface parity test), so a pipeline can admit continuously during
-  * the day and reconcile with the batch verb at night
-  * ([[Dedup.compactSignatures]] / [[Similarity.compactEmbAssign]]) without
-  * changing currencies.
+  * (doc_id, 60-bit exact key, K-minhash sig —
+  * [[graft.xscale.Dedup.dedupSignatures]]), admitted docs flow to the
+  * output, their signatures append to the state, and the per-batch status
+  * report (x74's hash-verified row shape) appends to an audit table.
   *
-  * The EMBEDDING leg (`Cli admit --emb --esigs`'s rule) runs when
-  * `esigsPath` is set: batch vectors are assigned to the state's frozen
-  * cells ([[Similarity.admitEmbeddingSigs]] — flat or IMI, the layout
-  * self-describes), still-admitted docs with a within-cell cosine ≥ τ
-  * corpus neighbor re-status `near_dup_corpus_emb`, and under `strict`
-  * the intra-batch rewording CC ([[Similarity.admitEmbStrictLosers]])
-  * re-statuses cluster losers `near_dup_batch_emb`. The state must be
-  * BOOTSTRAPPED before streaming starts (`Cli admit --esigs` run 1, or
-  * [[Similarity.admitEmbeddingBootstrapAuto]]) — a stream has no corpus
-  * to train on; finally-admitted vectors append to `esigsPath/assign`
-  * exactly as the batch verb appends, so the two surfaces interleave.
+  * This object and `Cli admit` are two callers of ONE kernel,
+  * [[Admission]]: the batch-side leg build, the status fold and the
+  * crash-ordered state appends live there, so the state AND the decision
+  * rule are byte-identical (spec-pinned by cross-surface parity tests) and
+  * a pipeline can admit continuously during the day and reconcile with the
+  * batch verb at night ([[graft.xscale.Dedup.compactSignatures]] /
+  * [[Similarity.compactEmbAssign]]) without changing currencies. What
+  * stays here is what a stream does differently: it reads states that
+  * must already be BOOTSTRAPPED (a stream has no corpus to train on or
+  * hash — bootstrap with `Cli admit` run 1, or
+  * [[Similarity.admitEmbeddingBootstrapAuto]] for the emb state), appends
+  * its report under a `batch_id`, and appends admitted rows to `outPath`
+  * before the kernel's state appends.
   *
-  * The MEDIA leg (`Cli admit --pmedia --psigs`'s rule) runs when
-  * `psigsPath` is set: batch payloads are dHashed
-  * ([[PerceptualDedup.imageHashFrame]] — real decode, undecodable rows
-  * pass unflagged), banded-compared against the persisted bands state
-  * (`near_dup_corpus_img`), and under `strict` the intra-batch re-encode
-  * CC ([[PerceptualDedup.admitMediaStrictLosers]]) re-statuses cluster
-  * losers `near_dup_batch_img`; finally-admitted bands append to
-  * `psigsPath/bands`. Bootstrap with `Cli admit --psigs` run 1.
-  *
-  * The CONTAINMENT leg (`Cli admit --ptrim`'s rule) runs when `ptrim`
-  * is set beside the media leg, on BOTH containment modalities: batch
-  * videos' frame-bigram shingles and batch images' diagonal
-  * tile-neighborhood shingles ([[PerceptualDedup.mediaShingles]] — one
-  * decode pass, `mod` keeps the spaces disjoint) are
-  * containment-compared against `psigsPath/shingles` (the re-cut/
-  * excerpt or tile-aligned crop whose whole-payload hash differs BY
-  * DESIGN, so the band leg admits it); ≥ 0.8 containment re-statuses
-  * `near_dup_corpus_vtrim`/`_icrop` per modality (the [[PerceptualDedup
-  * .Modalities]] containment column), and under `strict` the keep-best
-  * CC ([[PerceptualDedup.admitTrimStrictLosers]] — the longer clip /
-  * larger image survives) re-statuses losers
-  * `near_dup_batch_vtrim`/`_icrop`; finally-admitted shingles append to
-  * the state. A pre-mod shingle state keeps its video-only contract
-  * (widening is a re-bootstrap). Bootstrap with
-  * `Cli admit --ptrim --psigs` run 1.
+  * The legs, each on when its state path is set:
+  *  - EMBEDDING (`esigsPath`, `Cli admit --emb --esigs`'s rule): batch
+  *    vectors are assigned to the state's frozen cells
+  *    ([[Similarity.admitEmbeddingSigs]] — flat or IMI, the layout
+  *    self-describes); a within-cell cosine ≥ τ corpus neighbor flags
+  *    `near_dup_corpus_emb`, the strict rewording CC
+  *    `near_dup_batch_emb`.
+  *  - MEDIA (`psigsPath`, `Cli admit --pmedia --psigs`'s rule): batch
+  *    payloads are dHashed at the bands state's width (real decode,
+  *    undecodable rows pass unflagged) and banded-compared against it
+  *    (`near_dup_corpus_img/_aud/_vid`, strict `near_dup_batch_*`).
+  *  - CONTAINMENT (`ptrim` beside the media leg, `Cli admit --ptrim`'s
+  *    rule): batch shingles in the shingle state's spaces are
+  *    containment-compared against `psigsPath/shingles` — the re-cut,
+  *    excerpt or crop whose whole-payload hash differs BY DESIGN, so the
+  *    band leg admits it; ≥ 0.8 containment flags the space's corpus
+  *    status ([[PerceptualDedup.Modalities]]), the strict keep-best CC its
+  *    batch status. A pre-mod shingle state keeps its video-only contract
+  *    (widening is a re-bootstrap).
   *
   * Why foreachBatch + explicit parquet state rather than the keyed state
   * store: the near-dup decision is an OR across 4 LSH band buckets per doc
@@ -71,37 +62,26 @@ import graft.xscale.{Dedup, DedupClusters, PerceptualDedup, Similarity}
   * EMBEDDINGS are never touched. Per micro-batch the decision is
   * O(batch + candidates); state appends are admitted-docs-only.
   *
-  * Write order (crash semantics): `outPath` first, then the emb assign
-  * and media bands appends, then the SIG state append LAST. The sig append is the write
-  * that flips a replayed micro-batch to `dup_exact_corpus` (admitted set
-  * empty), so every write that must still happen on replay has to
-  * precede it: a crash anywhere before the sig append replays into
-  * duplicated output rows / duplicated identical assign rows (both
-  * detectable and compactable by doc_id). Either reverse order is silent
-  * LOSS — output rows that never reach `outPath`, or an assign table
-  * permanently missing the batch's vectors so later rewordings of that
-  * content are never flagged `near_dup_corpus_emb` (ordering
-  * fault-injection-pinned in the spec). Report/out/state are still
-  * separate writes — exactly-once across all of them needs a
-  * transactional table format underneath (the lake-swap caveat).
+  * Write order (crash semantics): the report, then `outPath`, then the
+  * kernel's state appends with the SIG state LAST — see [[Admission]] for
+  * why a crash in any window replays into duplication, never loss
+  * (fault-injection-pinned in the spec).
   */
 object StreamingAdmit {
 
   /** Classify one (micro-)batch against the signature state at `statePath`
-    * (and, when `esigsPath` is set, the frozen emb-admission state) and
+    * (and the emb/media/containment states when their paths are set) and
     * return the admitted rows (original columns). Writes, in order: the
-    * admitted rows to `outPath` (when set — see the write-order note
-    * above), the admitted docs' signatures to the state, the
-    * finally-admitted docs' vectors to `esigsPath/assign`, and (when
-    * `reportPath` is set) the per-status (batch_id, status, n_docs,
-    * checksum) report rows. `batchEmb` carries the batch's vectors
-    * (vec_id == doc_id, the admit convention); docs without a vector pass
-    * the emb leg unflagged. Doc ids must be GLOBALLY UNIQUE across the
-    * stream AND disjoint from the state's corpus ids — they key the
-    * state, and the crash-window retry exclusions (`cv_id =!= doc_id` in
-    * the emb/media compares) rely on a batch doc never legitimately
-    * reusing a corpus id; a deployment without disjoint id spaces must
-    * key state by a content hash instead.
+    * per-status (batch_id, status, n_docs, checksum) report rows (when
+    * `reportPath` is set), the admitted rows to `outPath` (when set), then
+    * the admitted docs' state rows ([[Admission.appendState]]). `batchEmb`
+    * carries the batch's vectors (vec_id == doc_id, the admit convention);
+    * docs without a vector pass the emb leg unflagged. Doc ids must be
+    * GLOBALLY UNIQUE across the stream AND disjoint from the state's
+    * corpus ids — they key the state, and the crash-window retry
+    * exclusions (`cv_id =!= doc_id` in the emb/media compares) rely on a
+    * batch doc never legitimately reusing a corpus id; a deployment
+    * without disjoint id spaces must key state by a content hash instead.
     */
   def admit(
       spark: SparkSession,
@@ -119,229 +99,36 @@ object StreamingAdmit {
       ptrim: Boolean = false): DataFrame = {
     val sPath = new org.apache.hadoop.fs.Path(statePath)
     val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the cuts are batch-sized; route through DedupClusters.ckpt so a
-    // real cluster can make them storage-backed (the x30/x50 pattern) —
-    // the default localCheckpoint recomputes on executor loss, which for
-    // the st cut would re-read a state dir the appends below advance
-    val batchSigs = DedupClusters.ckpt(Dedup.dedupSignatures(batch), checkpointDir)
-    val stateSigs =
-      if (fs.exists(sPath)) spark.read.parquet(statePath)
-      else batchSigs.limit(0)
-    val st0 = Dedup.incrementalDedupSigs(stateSigs, batchSigs)
-    // EMB leg frame — the batch verb's composition; ckpt'd once, it feeds
-    // the corpus-near restatus, the strict CC and the state append below
-    val embFrame = (esigsPath, batchEmb) match {
-      case (Some(d), Some(be)) =>
-        Some(DedupClusters.ckpt(
-          Similarity.admitEmbeddingSigs(spark, d, be, checkpointDir = checkpointDir),
-          checkpointDir))
-      case _ => None
-    }
-    // MEDIA leg frame — the batch verb's --pmedia/--psigs composition:
-    // batch payloads hashed once (real decode, modality-detected;
-    // undecodable rows pass unflagged) AT THE STATE'S WIDTH (the meta
-    // self-description — a 4-band batch hash is never compared against an
-    // 8-band state), compared banded against the persisted bands state;
-    // finally-admitted bands append to the state below. A pre-width state
-    // (no mod column) keeps its original image-only classic contract.
-    // The state must be BOOTSTRAPPED before streaming (Cli admit --psigs
-    // run 1) — a stream has no corpus to hash.
     // The ptrim contract check runs BEFORE the shingle-state read below:
     // a misconfigured call must fail with the named message, not with a
-    // path-missing read error pointing at state corruption.
+    // path-missing read error pointing at state corruption (the batch verb
+    // rejects --ptrim without --pmedia the same way).
     require(!ptrim || (psigsPath.isDefined && batchMedia.isDefined),
       "ptrim = true requires psigsPath and batchMedia — without them every " +
         "re-cut video would be admitted unflagged (silent zero recall)")
-    // Resolved before the media leg (the batch verb's rule): the shingle
-    // state's SPACES govern which containment spaces the batch decodes,
-    // compares and appends — meta-first (geometry validated, loud
+    val embFrame = for (d <- esigsPath; be <- batchEmb)
+      yield Similarity.admitEmbeddingSigs(spark, d, be, checkpointDir = checkpointDir)
+    // the shingle state's SPACES govern which containment spaces the batch
+    // decodes, compares and appends — meta-first (geometry validated, loud
     // failure on mismatch), layout fallback for meta-less states
-    // (pre-mod → vid only; r14 mod-tagged → the triad, no vsp).
     val trimSpaces: Option[Seq[String]] =
       if (!ptrim) None
       else psigsPath.map(d =>
         PerceptualDedup.stateShingleSpaces(
           spark, s"$d/shmeta", spark.read.parquet(s"$d/shingles")))
-    val mediaLeg = (psigsPath, batchMedia) match {
-      case (Some(d), Some(bm)) =>
-        val stateBands = spark.read.parquet(s"$d/bands")
-        val legacy = !stateBands.columns.contains("mod")
-        val wide = PerceptualDedup.stateWide(spark, s"$d/meta", stateBands)
-        // with ptrim (non-legacy), ONE decode pass serves both video
-        // signals — the batch verb's combined-frame rule
-        val (batchBands, batchShingles) =
-          if (legacy)
-            (DedupClusters.ckpt(
-              PerceptualDedup.imageHashFrame(bm).filter(col("decoded"))
-                .select("doc_id", "bands"), checkpointDir), None)
-          else if (ptrim) {
-            val combined = DedupClusters.ckpt(
-              PerceptualDedup.mediaHashShingleFrame(bm, wide,
-                vsp = trimSpaces.exists(_.contains("vsp")),
-                rscales = PerceptualDedup.rescaleScalesOf(
-                  trimSpaces.getOrElse(Nil))), checkpointDir)
-            (combined.filter(col("decoded")).select("doc_id", "mod", "bands"),
-              Some(DedupClusters.ckpt(
-                PerceptualDedup.shingleRows(combined), checkpointDir)))
-          } else
-            (DedupClusters.ckpt(
-              PerceptualDedup.mediaHashFrame(bm, wide).filter(col("decoded"))
-                .select("doc_id", "mod", "bands"), checkpointDir), None)
-        Some((DedupClusters.ckpt(
-          PerceptualDedup.admitMediaCompare(
-            stateBands, batchBands, PerceptualDedup.widthThreshold(wide)),
-          checkpointDir), wide, legacy, batchShingles))
-      case _ => None
+    val mediaLeg = for (d <- psigsPath; bm <- batchMedia) yield {
+      val stateBands = spark.read.parquet(s"$d/bands")
+      Admission.mediaLeg(stateBands, PerceptualDedup.stateWide(spark, s"$d/meta", stateBands),
+        bm, trimSpaces, checkpointDir)
     }
-    val mediaFrame = mediaLeg.map(_._1)
-    // TRIM leg frame — the batch verb's --ptrim composition: batch
-    // videos' distinct frame-bigram shingles vs the persisted shingle
-    // state (the re-cut/excerpt whose temporal hash differs BY DESIGN,
-    // so the band leg admits it); finally-admitted shingles append
-    // below. Bootstrapped by `Cli admit --ptrim --psigs` run 1. The
-    // ptrim-requires-batchMedia contract is enforced up top, BEFORE the
-    // trimSpaces state read (the batch verb REJECTS --ptrim without
-    // --pmedia; the library surface must not silently downgrade to zero
-    // trim recall either).
-    val trimLeg = (psigsPath, batchMedia) match {
-      case (Some(d), Some(bm)) if ptrim =>
-        val stateSh = spark.read.parquet(s"$d/shingles")
-        // a pre-mod shingle state keeps the VIDEO-ONLY contract end to
-        // end (compare, strict, append) — the batch verb's rule; an r14
-        // (meta-less mod-tagged) state keeps the triad the same way
-        val shLegacy = !stateSh.columns.contains("mod")
-        val shSpaces = trimSpaces.getOrElse(
-          PerceptualDedup.AdmitShingleSpaces)
-        val batchSh0 = mediaLeg.flatMap(_._4).getOrElse(
-          DedupClusters.ckpt(
-            // legacy contract: img shingles would only be filtered away —
-            // skip the image tile decode entirely (the batch verb's rule)
-            if (shLegacy)
-              PerceptualDedup.videoFrameShingles(bm).withColumn("mod", lit("vid"))
-            else PerceptualDedup.mediaShingles(
-              bm, vsp = shSpaces.contains("vsp"),
-              rscales = PerceptualDedup.rescaleScalesOf(shSpaces)), checkpointDir))
-        val batchSh =
-          if (shLegacy) batchSh0.filter(col("mod") === "vid")
-          else batchSh0.filter(col("mod").isin(shSpaces: _*))
-        // COMPARE feed (the batch verb's rule): rescale spaces are
-        // asymmetric -- swap the batch's scaled rs rows (kept for the
-        // append) for its native img fingerprints re-tagged per active
-        // rs space
-        val rsActive = PerceptualDedup.RescaleSpaces
-          .filter(sp => shSpaces.contains(sp.space))
-        val batchCompare =
-          if (shLegacy || rsActive.isEmpty) batchSh
-          else batchSh.filter(!col("mod").startsWith("rs"))
-            .unionByName(rsActive.map(sp =>
-              batchSh.filter(col("mod") === "img")
-                .withColumn("mod", lit(sp.space)))
-              .reduce(_ unionByName _))
-        Some((
-          DedupClusters.ckpt(
-            PerceptualDedup.admitTrimCompare(stateSh, batchCompare), checkpointDir),
-          batchSh, shLegacy))
-      case _ => None
-    }
-    // ALL corpus-vs-batch legs BEFORE either strict pass (the batch
-    // verb's ordering, kept in lock-step for cross-surface parity): a
-    // strict survivor must never be subsequently rejected by a later
-    // corpus leg — that would leave its cluster with no admitted
-    // representative while the losers stay rejected.
-    val stC1 = embFrame match {
-      case Some(frame) =>
-        Dedup.restatus(
-          st0, frame.filter(col("near_emb")).select(col("vec_id").as("doc_id")),
-          "near_dup_corpus_emb")
-      case None => st0
-    }
-    val stC2 = mediaFrame match {
-      case Some(frame) =>
-        // startswith folds the width-suffixed img16/aud16/vid16
-        // small-media rows into their modality's status, like the batch
-        // verb; the modality table (PerceptualDedup.Modalities) IS the
-        // wiring on both surfaces
-        val near = frame.filter(col("near_med"))
-        PerceptualDedup.Modalities.foldLeft(stC1) { (st1, m) =>
-          Dedup.restatus(
-            st1, near.filter(col("mod").startsWith(m.prefix)).select("doc_id"),
-            m.corpusStatus)
-        }
-      case None => stC1
-    }
-    // containment corpus leg AFTER the band leg (restatus only demotes
-    // still-admitted docs — a full near-dup keeps its stronger status);
-    // per-modality statuses off the Modalities containment column, the
-    // batch verb's wiring
-    val stC3 = trimLeg match {
-      case Some((frame, _, _)) =>
-        val near = frame.filter(col("near_trim"))
-        val stSym = PerceptualDedup.ShingleSpaces.foldLeft(stC2) { (st1, cs) =>
-          Dedup.restatus(
-            st1, near.filter(col("mod") === cs.space).select("doc_id"),
-            cs.corpusStatus)
-        }
-        // rescale spaces fold to ONE status (the batch verb's rule)
-        Dedup.restatus(
-          stSym,
-          near.filter(col("mod").startsWith("rs")).select("doc_id").distinct(),
-          PerceptualDedup.RcropCorpusStatus)
-      case None => stC2
-    }
-    val stS0 =
-      if (strict) Dedup.admitStrict(stC3, batchSigs, checkpointDir = checkpointDir) else stC3
-    val stS1 = (embFrame, strict) match {
-      case (Some(frame), true) =>
-        val admNow = stS0.filter(col("status") === "admitted")
-          .select(col("doc_id").as("vec_id"))
-        val losers = Similarity.admitEmbStrictLosers(
-          frame.join(admNow, "vec_id").select("vec_id", "cid", "cv", "cn"),
-          checkpointDir = checkpointDir)
-          .select(col("vec_id").as("doc_id"))
-        Dedup.restatus(stS0, losers, "near_dup_batch_emb")
-      case _ => stS0
-    }
-    val st5 = (mediaLeg, strict) match {
-      case (Some((frame, wide, _, _)), true) =>
-        val admNow = stS1.filter(col("status") === "admitted").select("doc_id")
-        val losers = PerceptualDedup.admitMediaStrictLosers(
-          frame.join(admNow, "doc_id").select("doc_id", "mod", "bands"),
-          maxHamming = PerceptualDedup.widthThreshold(wide),
-          checkpointDir = checkpointDir,
-          nBands = PerceptualDedup.widthBands(wide))
-        PerceptualDedup.Modalities.foldLeft(stS1) { (st1, m) =>
-          Dedup.restatus(
-            st1, losers.filter(col("mod").startsWith(m.prefix)).select("doc_id"),
-            m.strictStatus)
-        }
-      case _ => stS1
-    }
-    // --strict + containment leg: a trim/crop and its SOURCE arriving
-    // together both clear the corpus rules — undirected containment CC
-    // over the finally-admitted shingles (within one shingle space),
-    // keep-BEST by shingle count (the longer clip / larger image is the
-    // source), losers near_dup_batch_vtrim/_icrop by modality
-    val st6 = (trimLeg, strict) match {
-      case (Some((_, batchSh, _)), true) =>
-        val admNow = st5.filter(col("status") === "admitted").select("doc_id")
-        val losers = DedupClusters.ckpt(
-          PerceptualDedup.admitTrimStrictLosers(
-            batchSh.join(admNow, "doc_id"), checkpointDir = checkpointDir),
-          checkpointDir)
-        val stSymF = PerceptualDedup.ShingleSpaces.foldLeft(st5) { (st1, cs) =>
-          Dedup.restatus(
-            st1, losers.filter(col("mod") === cs.space).select("doc_id"),
-            cs.strictStatus)
-        }
-        Dedup.restatus(
-          stSymF,
-          losers.filter(col("mod").startsWith("rs")).select("doc_id").distinct(),
-          PerceptualDedup.RcropStrictStatus)
-      case _ => st5
-    }
-    // eager cut BEFORE the state appends: the lazy plan reads the state
-    // dirs, and appending first would make recomputation see new files
-    val st = DedupClusters.ckpt(st6, checkpointDir)
+    val trimLeg = for (spaces <- trimSpaces; d <- psigsPath; bm <- batchMedia)
+      yield Admission.trimLeg(
+        spark.read.parquet(s"$d/shingles"), spaces, bm, mediaLeg, checkpointDir)
+    val legs = Admission.legs(batch, embFrame, mediaLeg, trimLeg, checkpointDir)
+    val stateSigs =
+      if (fs.exists(sPath)) spark.read.parquet(statePath)
+      else legs.sigs.limit(0)
+    val st = Admission.classify(stateSigs, legs, strict, checkpointDir)
     reportPath.foreach { p =>
       st.groupBy("status")
         .agg(count(lit(1)).as("n_docs"), expr("bit_xor(key)").as("checksum"))
@@ -351,44 +138,9 @@ object StreamingAdmit {
     }
     val admittedIds = st.filter(col("status") === "admitted").select("doc_id")
     val admitted = batch.join(admittedIds, "doc_id")
-    // OUTPUT FIRST, then emb state, then sig state LAST. The sig append is
-    // what flips a replayed batch to dup_exact_corpus (admittedIds empty),
-    // so every write that must still happen on replay has to precede it:
-    // a crash after out/assign but before the sig append replays into
-    // duplicated output rows and duplicated identical assign rows (both
-    // documented-benign, compactable), while the reverse orders are
-    // silent LOSS — output rows gone forever, or an assign table
-    // permanently missing the batch's vectors so tomorrow's rewording of
-    // that content sails past near_dup_corpus_emb.
+    // output FIRST, then the kernel's state appends (sig state last)
     outPath.foreach(p => admitted.write.mode(SaveMode.Append).parquet(p))
-    for (frame <- embFrame; d <- esigsPath)
-      frame.join(admittedIds, col("vec_id") === col("doc_id"))
-        .select(col("vec_id").as("cv_id"), col("cid"), col("cv"), col("cn"))
-        .write.mode(SaveMode.Append).parquet(s"$d/assign")
-    // the append CONFORMS to the state's layout (legacy states stay
-    // (cv_id, bands) — mixed schemas in one parquet dir read
-    // layout-dependent)
-    for ((frame, _, legacy, _) <- mediaLeg; d <- psigsPath)
-      frame.join(admittedIds, "doc_id")
-        .select(
-          col("doc_id").as("cv_id") +:
-            (if (legacy) Seq(col("bands")) else Seq(col("mod"), col("bands"))): _*)
-        .write.mode(SaveMode.Append).parquet(s"$d/bands")
-    // shingles ride the same crash rule: before the sig append — a crash
-    // here replays into doubled value-identical shingle rows (collapsed
-    // by --compact's DISTINCT, harmless to containment decisions); the
-    // append CONFORMS to the state's layout (legacy states stay
-    // (cv_id, s1..q2), vid rows only — the batch side is already
-    // vid-filtered under legacy)
-    for ((_, batchSh, shLegacy) <- trimLeg; d <- psigsPath)
-      batchSh.join(admittedIds, "doc_id")
-        .select(
-          col("doc_id").as("cv_id") +:
-            ((if (shLegacy) Nil else Seq(col("mod"))) ++
-              Seq(col("s1"), col("q1"), col("s2"), col("q2"))): _*)
-        .write.mode(SaveMode.Append).parquet(s"$d/shingles")
-    batchSigs.join(admittedIds, "doc_id")
-      .write.mode(SaveMode.Append).parquet(statePath)
+    Admission.appendState(admittedIds, legs, Some(statePath), esigsPath, psigsPath)
     admitted
   }
 

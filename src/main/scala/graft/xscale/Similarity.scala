@@ -989,6 +989,7 @@ object Similarity {
       if (nc > 0) nc
       else math.max(NC.toLong, corpusEmb.count() / TargetClusterSize).toInt
     val cents = trainQuantizer(cvi, ncEff, trainSample, checkpointDir)
+    requireSeeded(cents.nonEmpty, ncEff)
     // assign first, centroids LAST: the centroids table is the commit
     // marker callers probe for state existence, so a bootstrap that dies
     // mid-assign leaves no marker and retries cleanly (a marker-first
@@ -1001,6 +1002,18 @@ object Similarity {
     cents.toDF("cid", "ci").write
       .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/centroids")
   }
+
+  /** Both bootstraps seed k-means from the corpus's first `nc` vec_ids
+    * (the rule the DuckDB oracle twins pin), so a corpus whose ids all sit
+    * at or above `nc` trains NO centroid — and would write an empty state
+    * that every later batch passes unflagged. Fail before any state file
+    * is written.
+    */
+  private def requireSeeded(seeded: Boolean, nc: Int): Unit =
+    require(seeded,
+      s"emb bootstrap: no corpus vec_id is below nc = $nc, so k-means has no " +
+        "seed and the state would be empty (every batch would pass the emb leg " +
+        "unflagged); number the corpus vectors from 0")
 
   /** The corpus size past which the FLAT coarse quantizer's bootstrap
     * assignment is the wrong tool: with auto-nc = n/TargetClusterSize the
@@ -1038,6 +1051,7 @@ object Similarity {
     val fp = DedupClusters.ckpt(fixedPoint(corpusEmb), checkpointDir)
     val ncEff = if (nc > 0) nc else imiAutoNc(corpusEmb.count())
     val halves = pqTrain(fp.select("vec_id", "vi"), 2, ncEff, trainSample, checkpointDir)
+    requireSeeded(halves.forall(_._2.nonEmpty), ncEff)
     // assign + meta first, halves LAST — the commit-marker order (see
     // admitEmbeddingBootstrap): existence probes key on the halves table
     imiCellOf(fp.select("vec_id", "vi"), halves, ncEff)

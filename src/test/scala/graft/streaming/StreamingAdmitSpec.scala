@@ -36,54 +36,59 @@ class StreamingAdmitSpec extends SparkSpec {
     df.select("status", "n_docs", "checksum").as[(String, Long, Long)].collect().toSet
 
   test("sequential admit == Cli admit --sigs --strict day by day (report-checksum parity)") {
-    val base = tmpDir("stream-admit")
-    val statePath = new java.io.File(base, "state").getPath
-    val reportPath = new java.io.File(base, "report").getPath
+    // both folds: strict (the stream's default) and non-strict (`Cli admit`
+    // without --strict), each on fresh state
+    for (strict <- Seq(true, false)) {
+      val base = tmpDir(s"stream-admit-$strict")
+      val statePath = new java.io.File(base, "state").getPath
+      val reportPath = new java.io.File(base, "report").getPath
 
-    val a1 = StreamingAdmit.admit(spark, b1, statePath,
-      reportPath = Some(reportPath), batchId = 0L)
-    // the exact intra-batch rule admits the HASH-ORDER first arrival of
-    // novel1 (1 or 2) plus novel2's doc
-    val ids1 = a1.select("doc_id").as[Long].collect().toSet
-    assert(ids1.size === 2 && ids1.contains(3L) && (ids1 - 3L).subsetOf(Set(1L, 2L)))
+      val a1 = StreamingAdmit.admit(spark, b1, statePath, strict = strict,
+        reportPath = Some(reportPath), batchId = 0L)
+      // the exact intra-batch rule admits the HASH-ORDER first arrival of
+      // novel1 (1 or 2) plus novel2's doc
+      val ids1 = a1.select("doc_id").as[Long].collect().toSet
+      assert(ids1.size === 2 && ids1.contains(3L) && (ids1 - 3L).subsetOf(Set(1L, 2L)))
 
-    val a2 = StreamingAdmit.admit(spark, b2, statePath,
-      reportPath = Some(reportPath), batchId = 1L)
-    val ids2 = a2.select("doc_id").as[Long].collect().toSet
-    // 11 exact-state dup, 12 near-state dup, 13/14 strict keeps the CC
-    // min (13), 15 fresh
-    assert(ids2 === Set(13L, 15L))
-    // state = admitted docs only, across both days
-    val state = spark.read.parquet(statePath).select("doc_id").as[Long].collect().toSet
-    assert(state === ids1 ++ ids2)
+      val a2 = StreamingAdmit.admit(spark, b2, statePath, strict = strict,
+        reportPath = Some(reportPath), batchId = 1L)
+      val ids2 = a2.select("doc_id").as[Long].collect().toSet
+      // 11 exact-state dup, 12 near-state dup, 13/14 strict keeps the CC
+      // min (13) — without strict both pass — 15 fresh
+      assert(ids2 === (if (strict) Set(13L, 15L) else Set(13L, 14L, 15L)))
+      // state = admitted docs only, across both days
+      val state = spark.read.parquet(statePath).select("doc_id").as[Long].collect().toSet
+      assert(state === ids1 ++ ids2)
 
-    // the batch verb, run day by day on the SAME batches with a fresh
-    // sidecar, must produce the identical hash-verified reports
-    val emptyCorpus = b1.filter(lit(false))
-    val corpusPath = new java.io.File(base, "corpus.parquet").getPath
-    val b1Path = new java.io.File(base, "b1.parquet").getPath
-    val b2Path = new java.io.File(base, "b2.parquet").getPath
-    emptyCorpus.write.parquet(corpusPath)
-    b1.write.parquet(b1Path)
-    b2.write.parquet(b2Path)
-    val sigs2 = new java.io.File(base, "sigs2").getPath
-    def cli(batchPath: String, out: String): Unit = {
-      val buf = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(buf)) {
-        assert(graft.Cli.run(spark, List(
-          "admit", corpusPath, batchPath, out, "--sigs", sigs2, "--strict")) === 0)
+      // the batch verb, run day by day on the SAME batches with a fresh
+      // sidecar, must produce the identical hash-verified reports
+      val emptyCorpus = b1.filter(lit(false))
+      val corpusPath = new java.io.File(base, "corpus.parquet").getPath
+      val b1Path = new java.io.File(base, "b1.parquet").getPath
+      val b2Path = new java.io.File(base, "b2.parquet").getPath
+      emptyCorpus.write.parquet(corpusPath)
+      b1.write.parquet(b1Path)
+      b2.write.parquet(b2Path)
+      val sigs2 = new java.io.File(base, "sigs2").getPath
+      def cli(batchPath: String, out: String): Unit = {
+        val buf = new java.io.ByteArrayOutputStream()
+        Console.withOut(new java.io.PrintStream(buf)) {
+          assert(graft.Cli.run(spark, List(
+            "admit", corpusPath, batchPath, out, "--sigs", sigs2) ++
+            (if (strict) List("--strict") else Nil)) === 0)
+        }
       }
+      cli(b1Path, new java.io.File(base, "o1").getPath)
+      cli(b2Path, new java.io.File(base, "o2").getPath)
+      val streamed = spark.read.parquet(reportPath)
+      assert(reportKey(streamed.filter(col("batch_id") === 0L)) ===
+        reportKey(spark.read.parquet(new java.io.File(base, "o1").getPath + "/report")))
+      assert(reportKey(streamed.filter(col("batch_id") === 1L)) ===
+        reportKey(spark.read.parquet(new java.io.File(base, "o2").getPath + "/report")))
+      // and the sidecars agree doc-for-doc
+      val cliState = spark.read.parquet(sigs2).select("doc_id").as[Long].collect().toSet
+      assert(cliState === state)
     }
-    cli(b1Path, new java.io.File(base, "o1").getPath)
-    cli(b2Path, new java.io.File(base, "o2").getPath)
-    val streamed = spark.read.parquet(reportPath)
-    assert(reportKey(streamed.filter(col("batch_id") === 0L)) ===
-      reportKey(spark.read.parquet(new java.io.File(base, "o1").getPath + "/report")))
-    assert(reportKey(streamed.filter(col("batch_id") === 1L)) ===
-      reportKey(spark.read.parquet(new java.io.File(base, "o2").getPath + "/report")))
-    // and the sidecars agree doc-for-doc
-    val cliState = spark.read.parquet(sigs2).select("doc_id").as[Long].collect().toSet
-    assert(cliState === state)
   }
 
   test("sequential admit == Cli admit --sigs --strict --emb --esigs day by day (full parity)") {
@@ -321,7 +326,8 @@ class StreamingAdmitSpec extends SparkSpec {
     // assign vectors) has to PRECEDE it. Inject a real failure at the sig
     // append (its parent path is a plain file, so the parquet write cannot
     // create the directory) and assert the earlier writes already landed:
-    // a crash in this window replays into benign duplication. The reverse
+    // a crash in this window replays into benign duplication (the media
+    // bands and containment shingles ride the same rule). The reverse
     // order would leave the assign table permanently missing the admitted
     // vectors — tomorrow's rewording of that content would never flag
     // near_dup_corpus_emb.
@@ -340,6 +346,15 @@ class StreamingAdmitSpec extends SparkSpec {
       .select(col("doc_id").as("cv_id"), col("bands"))
       .write.parquet(s"$psigs/bands")
     val bandsBefore = spark.read.parquet(s"$psigs/bands").count()
+    // containment shingle state (the ptrim leg): mod-tagged, with its meta
+    PerceptualDedup.writeShingleMeta(spark, s"$psigs/shmeta")
+    PerceptualDedup.mediaShingles(
+      (100L to 102L).map(i => (i, PerceptualDedup.fixtureRcropBmp(i * 7, 0)))
+        .toDF("doc_id", "payload"),
+      rscales = PerceptualDedup.RescaleSet)
+      .withColumnRenamed("doc_id", "cv_id")
+      .write.parquet(s"$psigs/shingles")
+    val shinglesBefore = spark.read.parquet(s"$psigs/shingles").count()
     val blocker = new java.io.File(base, "blocker")
     java.nio.file.Files.writeString(blocker.toPath, "not a directory")
     val statePath = new java.io.File(blocker, "state").getPath
@@ -350,31 +365,36 @@ class StreamingAdmitSpec extends SparkSpec {
       .as[(Long, Array[Float])].collect().toSeq
       .flatMap { case (_, v) => Seq((1L, v), (2L, v)) }
       .toDF("vec_id", "embedding")
+    // doc 4: a fresh tiled image, large enough to carry shingles
+    val b1t = b1.unionByName(Seq((4L, novel4, "s")).toDF("doc_id", "text", "source"))
     val b1m = Seq((1L, PerceptualDedup.fixtureBmp(7007L * 5)),
-      (3L, PerceptualDedup.fixtureBmp(7008L * 5))).toDF("doc_id", "payload")
+      (3L, PerceptualDedup.fixtureBmp(7008L * 5)),
+      (4L, PerceptualDedup.fixtureRcropBmp(7009L * 7, 0))).toDF("doc_id", "payload")
     intercept[Exception] {
-      StreamingAdmit.admit(spark, b1, statePath, strict = true,
+      StreamingAdmit.admit(spark, b1t, statePath, strict = true,
         esigsPath = Some(esigs), batchEmb = Some(b1e), outPath = Some(outPath),
-        psigsPath = Some(psigs), batchMedia = Some(b1m))
+        psigsPath = Some(psigs), batchMedia = Some(b1m), ptrim = true)
     }
     assert(spark.read.parquet(outPath).count() > 0, "output must land before the sig append")
     assert(spark.read.parquet(s"$esigs/assign").count() > assignBefore,
       "emb assign must land before the sig append")
     assert(spark.read.parquet(s"$psigs/bands").count() > bandsBefore,
       "media bands must land before the sig append")
+    assert(spark.read.parquet(s"$psigs/shingles").count() > shinglesBefore,
+      "containment shingles must land before the sig append")
 
-    // RETRY idempotence after exactly this crash: the batch's own vectors
-    // and bands are now IN the emb/media states, so a naive compare would
-    // flag every admitted doc against its own state row (cosine 1 /
-    // hamming 0) and permanently drop it. The self-id exclusion in
-    // admitEmbCompare/admitMediaCompare makes the retry reach the same
-    // admitted set.
+    // RETRY idempotence after exactly this crash: the batch's own vectors,
+    // bands and shingles are now IN the emb/media states, so a naive
+    // compare would flag every admitted doc against its own state row
+    // (cosine 1 / hamming 0 / full containment) and permanently drop it.
+    // The self-id exclusion in admitEmbCompare/admitMediaCompare/
+    // admitTrimCompare makes the retry reach the same admitted set.
     val statePath2 = new java.io.File(base, "state2").getPath
     val firstAdmitted = spark.read.parquet(outPath)
       .select("doc_id").as[Long].collect().toSet
-    val retry = StreamingAdmit.admit(spark, b1, statePath2, strict = true,
+    val retry = StreamingAdmit.admit(spark, b1t, statePath2, strict = true,
       esigsPath = Some(esigs), batchEmb = Some(b1e), outPath = Some(outPath),
-      psigsPath = Some(psigs), batchMedia = Some(b1m))
+      psigsPath = Some(psigs), batchMedia = Some(b1m), ptrim = true)
     assert(retry.select("doc_id").as[Long].collect().toSet === firstAdmitted,
       "retry must re-admit the same docs, not reject them against their own state rows")
   }
