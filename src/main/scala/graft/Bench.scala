@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graftnative.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Sessions.cpus
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Battery fixture sidecar (VERDICT r14 ask #2): a FRESH per-battery
     // temp dir — media queries materialize their closed-form fixtures
@@ -150,7 +142,7 @@ object Bench {
       // bit_xor, not sum: xxhash64 spans the full 64-bit range and an
       // ANSI-mode sum overflows. 2^31 rows ≈ 1 s on 32 threads — big
       // enough that JVM jitter is a small fraction of the reading.
-      spark.range(0L, 1L << 31, 1L, cpus.toInt)
+      spark.range(0L, 1L << 31, 1L, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS s").queryExecution.toRdd.count()
       ()
     }
@@ -168,9 +160,9 @@ object Bench {
     // machine state on this one.
     val n = 1L << 24
     val sentinelShuffle = timeSentinel { () =>
-      val a = spark.range(0L, n, 1L, cpus.toInt)
+      val a = spark.range(0L, n, 1L, cpus)
         .selectExpr("id AS k", "id AS v")
-      val b = spark.range(0L, n, 1L, cpus.toInt)
+      val b = spark.range(0L, n, 1L, cpus)
         .selectExpr("(id ^ 10855845) AS k", "id AS w")
       a.hint("merge").join(b.hint("merge"), "k")
         .selectExpr("bit_xor(xxhash64(v + w)) AS s")

@@ -18,16 +18,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Cli {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"'          => "\\\""
@@ -55,7 +45,7 @@ object Cli {
         args.headOption.getOrElse(""))) {
       usage(); sys.exit(2)
     } else {
-      val spark = session()
+      val spark = Sessions.builder().getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       // O3: run-scoped timeout cancelling the run's job group at the
       // deadline (reference main.go:52-56; opt-in — see RunGuard scaladoc)
@@ -102,7 +92,6 @@ object Cli {
     // run a registered query by name against a testdata dir (the read
     // surface of the engine, mirroring the reference API's GET endpoints)
     case "query" :: name :: dir :: rest if rest.size <= 1 =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       query.Registry.queries.get(name) match {
         case Some(fn) =>
           fn(spark, dir).show(rest.headOption.map(_.toInt).getOrElse(20), false)
@@ -132,7 +121,6 @@ object Cli {
     // audit and every audit is the registered oracle-verified query, so
     // the report numbers are exactly the Verify-gated ones.
     case "report" :: dir :: outDir :: Nil =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val battery = Seq(
         "x38_datasheet", "x97_split_drift", "x100_filter_sweep",
         "x102_oov_rate", "x104_length_quantiles", "x108_ngram_coverage",
@@ -193,7 +181,6 @@ object Cli {
     // near-dup CC → capped audits; --emb adds the IMI embedding signal).
     case "corpus" :: docsPath :: outDir :: rest
         if parseCorpusFlags(rest).isDefined =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val flags = parseCorpusFlags(rest).get
       // --ckpt <dir>: every stage-boundary materialization below becomes a
       // RELIABLE checkpoint (object-store backed) instead of executor-local
@@ -204,9 +191,9 @@ object Cli {
         graft.xscale.DedupClusters.ckpt(df, ckptDir)
       val docs = spark.read.parquet(docsPath)
       val cols = docs.columns.map(org.apache.spark.sql.functions.col).toSeq
-      val quality = TrainingData.qualityFilter(docs).select(cols: _*)
+      val quality = xscale.TextAnalysis.qualityFilter(docs).select(cols: _*)
       val kept =
-        if (flags.strict) TrainingData.repetitionFilter(quality).select(cols: _*)
+        if (flags.strict) xscale.TextAnalysis.repetitionFilter(quality).select(cols: _*)
         else quality
       // --mquality <mediaParquet>: the multimodal QUALITY gate (x150's
       // rule) — drop docs whose media is decodable AND fails its
@@ -237,7 +224,7 @@ object Cli {
       // AND a count — without the cuts every consumer re-runs the whole
       // upstream pipeline. The quality filter itself stays lazy (one
       // cheap per-row scan each for the dedup lineage and kept-count).
-      val exactDeduped = cut(TrainingData.dedupExact(mkept))
+      val exactDeduped = cut(xscale.Dedup.dedupExact(mkept))
       // --scale: the MEASURED 100 TB dedup recipe (NOTES 100× tables) as
       // one preset — CASCADE exact-first (x99: clone mass collapses on the
       // cheap 8-byte norm-key groupBy before any candidate generation;
@@ -366,7 +353,7 @@ object Cli {
         if (flags.despan) {
           // docs emptied entirely by span removal carry no training signal
           // — drop them like any other filter stage
-          val clean = TrainingData.removeSharedSpans(pcontained)
+          val clean = xscale.DataPrep.removeSharedSpans(pcontained)
             .filter(org.apache.spark.sql.functions.col("text_clean") =!= "")
             .select(org.apache.spark.sql.functions.col("doc_id"),
               org.apache.spark.sql.functions.col("text_clean"))
@@ -384,7 +371,7 @@ object Cli {
       val selected = flags.dsirLang match {
         case Some(lang) =>
           val c = org.apache.spark.sql.functions.col _
-          val sel = TrainingData
+          val sel = xscale.DataPrep
             .dsirSelectThreshold(deduped, c("lang") === lang, checkpointDir = ckptDir)
             .filter(c("selected")).select("doc_id")
           deduped.filter(c("lang") === lang)
@@ -393,8 +380,8 @@ object Cli {
         case None => deduped
       }
       val selectedM = if (selected eq deduped) selected else cut(selected)
-      val split = TrainingData.splitAssign(selectedM)
-      val packs = TrainingData.packAssignments(split)
+      val split = xscale.DataPrep.splitAssign(selectedM)
+      val packs = xscale.DataPrep.packAssignments(split)
       // drop any input-carried n_tok: packs derives the authoritative count
       // from the (possibly despan-rewritten) text, and a duplicate column
       // would fail the parquet write
@@ -509,7 +496,6 @@ object Cli {
             (f.pmediaPath.isDefined == f.bmediaPath.isDefined) &&
             (f.psigsDir.isEmpty || f.pmediaPath.isDefined) &&
             (!f.ptrim || f.pmediaPath.isDefined)) =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val flags = parseAdmitFlags(rest).get
       import org.apache.spark.sql.SaveMode
       import org.apache.spark.sql.functions.{col, count, expr, lit}

@@ -3,17 +3,16 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: a physical-plan audit of every registered query.
   *
   * For each query the INITIAL executed plan (pre-AQE) is inspected for the
   * properties this engine is built around — shuffle count, broadcast count,
   * join strategies, parquet filter pushdown, and WindowGroupLimit (the
   * top-1-per-key short-circuit behind `row_number()=1` dedups). Run after
-  * any plan-shaping change:
+  * any plan-shaping change, under the [[Sessions]] shape Bench runs; the
+  * header records the shape. The committed PLANS.md is an 8-core audit:
   *
-  *   sbt "runMain graft.PlanAudit /root/testdata/sf0.1 PLANS.md"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.PlanAudit <testdata>/sf0.1 PLANS.md"
   */
 object PlanAudit {
 
@@ -23,13 +22,8 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Sessions.cpus
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val rows = SparkEntry.queries.toSeq.map { case (name, fn) =>
@@ -46,9 +40,11 @@ object PlanAudit {
     }
     spark.stop()
 
+    val shape =
+      s"${Paths.get(sfDir).getFileName}, local[$cpus], shuffle.partitions=$cpus, GraftExtensions"
     val sb = new StringBuilder
     sb.append(
-      """# Physical-plan audit (sf0.1, local[8], shuffle.partitions=8)
+      s"""# Physical-plan audit ($shape)
         |
         |Generated by `graft.PlanAudit` from `queryExecution.executedPlan` for
         |every registered query. Columns: shuffle exchanges / broadcast

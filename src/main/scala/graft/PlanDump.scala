@@ -3,13 +3,10 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for named registered queries into a
   * directory — the optimization-round evidence files
-  * (`plans/rN/<query>_{before,after}.txt`). Reuses the Bench session shape
-  * (same extensions, shuffle partitions from the core count) so the plans
-  * match what the battery executes.
+  * (`plans/rN/<query>_{before,after}.txt`). Runs the [[Sessions]] shape
+  * Bench runs, so the plans match what the battery executes.
   *
   *   sbt "runMain graft.PlanDump plans/r16 _before x92_rag_retrieval,..."
   *
@@ -23,15 +20,7 @@ object PlanDump {
       if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else SparkEntry.queries.keys.toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graftnative.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     val unknown = names.filterNot(SparkEntry.queries.contains)

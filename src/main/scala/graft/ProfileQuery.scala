@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement harness for the optimization rounds (guide §1): runs named
   * registered queries under the Bench session shape and reports, per query,
@@ -21,15 +20,7 @@ object ProfileQuery {
       if (args.nonEmpty) args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else Seq("q01_pricing_summary")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graftnative.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // battery-equivalent fixture sidecar: media fixtures materialize in the
     // warmup pass, so the measured run prices read + engine like Bench does

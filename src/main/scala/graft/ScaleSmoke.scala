@@ -151,13 +151,7 @@ object ScaleSmoke {
         "batch/fresh-content id bases (9e9 / 2e9-clusters) — re-derive the bases " +
         "from the corpus max doc_id before scaling past 500x")
     val queries = if (args.length > 1) args.drop(1).toSeq else DefaultQueries
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val src = "/root/testdata/sf0.1"
@@ -845,7 +839,7 @@ object ScaleSmoke {
           coalesce(col("nbytes"), lit(-1L)))
       }),
       "x50_joint_auto" -> ((s, d) =>
-        TrainingData.jointDedup(
+        xscale.Dedup.jointDedup(
           s.read.parquet(s"$d/documents.parquet"),
           s.read.parquet(s"$d/embeddings.parquet"),
           trainSample = 0.1,
@@ -855,7 +849,7 @@ object ScaleSmoke {
       // O(n·nc) — the form whose quantizer survives 100× (measured; the
       // flat auto form's assignment is the named quadratic cap there)
       "x50_joint_imi" -> ((s, d) =>
-        TrainingData.jointDedupImi(
+        xscale.Dedup.jointDedupImi(
           s.read.parquet(s"$d/documents.parquet"),
           s.read.parquet(s"$d/embeddings.parquet"),
           trainSample = 0.1,
@@ -864,11 +858,11 @@ object ScaleSmoke {
       // quantizer training (the oracle queries pin nc=NC for the SQL
       // twin's literal)
       "x52_cluster_auto" -> ((s, d) =>
-        TrainingData.clusterCap(
+        xscale.Similarity.clusterCapped(
           s.read.parquet(s"$d/embeddings.parquet"),
           s.read.parquet(s"$d/documents.parquet"), trainSample = 0.1)),
       "x54_proto_auto" -> ((s, d) =>
-        TrainingData.protoPrune(
+        xscale.Similarity.protoPrune(
           s.read.parquet(s"$d/embeddings.parquet"), trainSample = 0.1)),
       // x68 in its production posture: corpus-proportional coarse cells
       // (mean cell ≈ TargetClusterSize vectors, so nprobe/nc keeps the
@@ -878,13 +872,13 @@ object ScaleSmoke {
         val emb = s.read.parquet(s"$d/embeddings.parquet")
         val nc = math.max(xscale.Similarity.NC.toLong,
           emb.count() / xscale.Similarity.TargetClusterSize).toInt
-        TrainingData.ivfPqKnn(emb, col("vec_id") < 10,
+        xscale.Similarity.ivfPqKnn(emb, col("vec_id") < 10,
           ncCoarse = nc, trainSample = 0.1,
           checkpointDir = Some(s"$d/_checkpoints"))
       }),
       // x51 scale path: sampled-threshold selection, no global window
       "x51_dsir_threshold" -> ((s, d) =>
-        TrainingData.dsirSelectThreshold(
+        xscale.DataPrep.dsirSelectThreshold(
           s.read.parquet(s"$d/documents.parquet"), col("lang") === "en")),
       // x57 scale path: the flagship one-plan pipeline with x51's sampled
       // threshold composed in — zero unpartitioned ranking windows.
@@ -899,7 +893,7 @@ object ScaleSmoke {
       // x91 in its production posture: sampled quantizer training +
       // reliable checkpoints (the oracle query trains on every chunk)
       "x91_rag_auto" -> ((s, d) =>
-        TrainingData.ragIndex(
+        xscale.Similarity.ragIndex(
           s.read.parquet(s"$d/documents.parquet"),
           trainSample = 0.1,
           checkpointDir = Some(s"$d/_checkpoints"))),
@@ -908,12 +902,12 @@ object ScaleSmoke {
       // x101 scale posture: sampled-quantile phase cuts, no global window
       // (the registered query pins the oracle-exact global NTILE)
       "x101_curriculum_auto" -> ((s, d) =>
-        TrainingData.curriculumByThresholds(
+        xscale.TextAnalysis.curriculumByThresholds(
           s.read.parquet(s"$d/documents.parquet"))),
       // x104 scale posture: approx percentiles, no per-source window
       // (the registered query pins the exact rank rule)
       "x104_quantiles_auto" -> ((s, d) =>
-        TrainingData.lengthQuantilesApprox(
+        xscale.TextAnalysis.lengthQuantilesApprox(
           s.read.parquet(s"$d/documents.parquet"))),
       // x107 scale posture: sampled-quantile phases + (phase, shard)
       // cumsum — no global window anywhere
@@ -924,7 +918,7 @@ object ScaleSmoke {
       // 10x cells, keeping per-cell rerank cost flat — the IVF contract;
       // the fixed-cap oracle query's cells fatten linearly instead)
       "x92_rag_auto" -> ((s, d) =>
-        TrainingData.ragRetrieval(
+        xscale.Similarity.ragRetrieval(
           s.read.parquet(s"$d/documents.parquet"),
           seedCap = 40000L,
           trainSample = 0.1,
@@ -1014,13 +1008,13 @@ object ScaleSmoke {
           .groupBy("source").agg(count(lit(1)).as("n_after"))
       }),
       "x50_joint_imi_powerlaw" -> ((s, d) =>
-        TrainingData.jointDedupImi(
+        xscale.Dedup.jointDedupImi(
           s.read.parquet(s"$d/powerlaw_documents.parquet"),
           s.read.parquet(s"$d/powerlaw_embeddings.parquet"),
           trainSample = 0.1,
           checkpointDir = Some(s"$d/_checkpoints"))),
       "x50_joint_imi_powerlaw_minhash" -> ((s, d) =>
-        TrainingData.jointDedupImi(
+        xscale.Dedup.jointDedupImi(
           s.read.parquet(s"$d/powerlaw_documents.parquet"),
           s.read.parquet(s"$d/powerlaw_embeddings.parquet"),
           trainSample = 0.1,
@@ -1119,7 +1113,7 @@ object ScaleSmoke {
       "x113_ann_recall_auto" -> ((s, d) => {
         val emb = s.read.parquet(s"$d/embeddings.parquet")
         val sel = col("vec_id") % 1000 === 0
-        TrainingData.annRecall(
+        xscale.Similarity.annRecall(
           xscale.Similarity.knnLsh(emb, sel),
           xscale.Similarity.knnBrute(emb, sel), emb)
       }),

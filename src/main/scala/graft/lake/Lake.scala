@@ -290,16 +290,6 @@ object Lake {
     else spark.read.parquet(swappedTargets.map(_.toString): _*).count()
   }
 
-  /** Single-transaction insert (K7/Q4, the API client's
-    * `PUT /history/transaction`, apiClient/apiClient.go:246-302): a one-row
-    * batch through the same merge path, so the lake's key-unique invariant
-    * holds for API writes exactly as for file ingest.
-    */
-  def insertTransaction(spark: SparkSession, t: Transaction, lakePath: String): Long = {
-    import spark.implicits._
-    upsertIntoLake(spark, Seq(t).toDF(), lakePath)
-  }
-
   /** Compact a lake: collapse every hive partition to ONE parquet file.
     * Merge-heavy ingest accretes small files (every upsert rewrites touched
     * partitions with the writer's task count); at 100 TB the file count —

@@ -654,6 +654,11 @@ object DataPrep {
       .withColumn("fill_e6", expr(s"(1000000 * sum_tok) div (n_packs * $budget)"))
   }
 
+  /** OOV-rate audit (x102): vocabulary from the x19 train split (words in
+    * ≥ minDf distinct train docs), out-of-vocabulary token rate of
+    * val/test per source — the pre-tokenizer-freeze coverage check and
+    * eval-drift alarm.
+    */
   def oovRate(docs: DataFrame): DataFrame = {
     val tok = splitAssign(docs).select(
       col("split"), col("source"), col("doc_id"),
@@ -1088,6 +1093,23 @@ object DataPrep {
     t.withColumn("cum", coalesce(sum("n_tok").over(w), lit(0L)))
       .select(col("doc_id"), col("n_tok"), col("ord"), col("shard"),
         expr(s"cum div $budget").as("pack"))
+  }
+
+  /** Pack hygiene audit (x66): per (shard, pack) doc count, source
+    * diversity and duplicate EXCESS (norm-key collisions inside the same
+    * context window — wasted compute + memorization risk).
+    */
+  def packHygiene(docs: DataFrame, budget: Int = PackBudget,
+      shards: Int = PackShards): DataFrame = {
+    val keyed = docs.select(col("doc_id"), col("source"),
+      h60(Dedup.normText(col("text"))).as("key"))
+    packAssignments(docs, budget, shards)
+      .join(keyed, "doc_id")
+      .groupBy("shard", "pack")
+      .agg(
+        count(lit(1)).as("n_docs"),
+        countDistinct("source").as("n_sources"),
+        (count(lit(1)) - countDistinct("key")).as("dup_excess"))
   }
 
   /** x69 core: deterministic pack REPAIR — the remediation the x66 audit

@@ -359,6 +359,41 @@ object Dedup {
       .unionByName(embImiPairs(emb, tau, ncHalf, trainSample, checkpointDir))
       .distinct()
 
+  /** Joint multi-signal dedup (x50): one survivor per connected component
+    * of the UNION of text-near-dup (simhash) and embedding-near-dup
+    * (cosine) pairs — transitivity works across signals. On a real
+    * cluster pass BOTH scale knobs (see [[jointPairs]]): `checkpointDir`
+    * then covers the cluster assignment AND each CC iteration.
+    */
+  def jointDedup(docs: DataFrame, emb: DataFrame,
+      hamming: Int = 8, tau: Double = 0.45,
+      trainSample: Double = 1.0,
+      checkpointDir: Option[String] = None): DataFrame =
+    DedupClusters.dedupByPairs(
+      docs,
+      jointPairs(docs, emb, hamming, tau,
+        trainSample = trainSample, checkpointDir = checkpointDir),
+      checkpointDir = checkpointDir)
+
+  /** [[jointDedup]] with the embedding leg's candidate cells from the
+    * x138 IMI product quantizer instead of flat k-means: the coarse
+    * assignment drops from O(n·nc) (nc ∝ corpus under auto-nc — the
+    * named 100× cap) to O(n·2√cells), with x138's cell-health audit
+    * pricing the product-grid recall trade. The text leg and the CC
+    * survivor selection are unchanged.
+    */
+  def jointDedupImi(docs: DataFrame, emb: DataFrame,
+      hamming: Int = 8, tau: Double = 0.45,
+      ncHalf: Int = 0,
+      trainSample: Double = 1.0,
+      checkpointDir: Option[String] = None,
+      textLeg: TextLeg = SimhashLeg): DataFrame =
+    DedupClusters.dedupByPairs(
+      docs,
+      jointPairsImi(docs, emb, hamming, tau, ncHalf,
+        trainSample = trainSample, checkpointDir = checkpointDir, textLeg = textLeg),
+      checkpointDir = checkpointDir)
+
   /** x47 core: per unordered source pair, the number of exact-dup groups
     * (normalized-text key) containing docs of both sources. Columns
     * (source_a, source_b, n_groups).

@@ -48,7 +48,9 @@ object DedupClusters {
     }
 
   /** Connected components of an undirected pair list `(a, b)` →
-    * `(id, component)` where component = min node id reachable.
+    * `(id, component)` where component = min node id reachable, by label
+    * propagation (near-dup clique piles) — [[connectedComponentsStar]] for
+    * high-diameter graphs.
     *
     * Skew: a mega-component (one boilerplate phrase cloned into millions of
     * docs) makes its hub node a HOT JOIN KEY in every label-prop round.
@@ -272,6 +274,12 @@ object DedupClusters {
   /** Keep one representative (min doc_id) per duplicate cluster: docs that
     * appear in no pair survive untouched; in each connected component only
     * the smallest doc_id survives. `docs` must carry `doc_id`.
+    *
+    * Pass `checkpointDir` on a real cluster: iteration state then persists
+    * to reliable storage and survives executor loss (executor-local
+    * checkpoints, the default, are irrecoverable mid-iteration). Pass
+    * `salts` > 1 when the pair graph has a mega-component (see
+    * [[connectedComponents]]).
     */
   def dedupByPairs(
       docs: DataFrame,

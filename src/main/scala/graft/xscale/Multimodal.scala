@@ -1988,8 +1988,8 @@ object Multimodal {
         "1000*gray) and decoded through the streaming-row javax.imageio read " +
         "(decodeImageExposure — one pixel row of memory, oversize headers refused); " +
         "the oracle recomputes every counter from the same closed form. Library " +
-        "route for real media: Multimodal.imageExposureFrame / " +
-        "TrainingData.imageExposure. Scale: one decode pass, one groupBy — x12's " +
+        "route for real media: Multimodal.imageExposureFrame. " +
+        "Scale: one decode pass, one groupBy — x12's " +
         "shape; sq overflow needs >1.4e8 px, already refused by the header guard."
     ) { (s, dir) =>
       import s.implicits._
@@ -2108,8 +2108,8 @@ object Multimodal {
         "replays the segmentation with window functions (islands by cumulative gap " +
         "count) while the DECODER runs the general sample-level rule; the two " +
         "agree exactly because fixture silence only occurs in full bands. Library " +
-        "route for real media: Multimodal.audioUtteranceFrame / " +
-        "TrainingData.audioUtterances. Scale: one decode pass + one groupBy."
+        "route for real media: Multimodal.audioUtteranceFrame. " +
+        "Scale: one decode pass + one groupBy."
     ) { (s, dir) =>
       import s.implicits._
       val media = FixtureSidecar(s, s"x151_media_${FixtureSidecar.dirTag(dir)}")(

@@ -882,7 +882,7 @@ object PerceptualDedup {
           col("sh._4").as("s2"), col("sh._5").as("q2")))
   }
 
-  /** Near-dup pairs over a MIXED image/audio media frame — the corpus
+  /** Near-dup pairs over a MIXED image/audio/video media frame — the corpus
     * `--pdedup` stage's pair generator: [[mediaHashFrame]] (undecodable
     * rows dropped) → modality-keyed [[bandNearDupPairs]]. The width is
     * the caller's [[mediaWideFor]] decision on the media count; the

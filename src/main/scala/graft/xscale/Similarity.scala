@@ -284,7 +284,10 @@ object Similarity {
     * self-join shuffles both sides by cid — O(sum cluster²) candidate
     * pairs, never corpus²; pass `nc` ∝ corpus size so clusters stay
     * bounded (the oracle-pinned x30 keeps nc = NC = 8; the 10× smoke shows
-    * the quadratic growth that motivates scaling nc).
+    * the quadratic growth that motivates scaling nc). nc <= 0 (the
+    * default) derives it from the corpus size (~[[TargetClusterSize]]-vector
+    * clusters); trainSample < 1 trains the quantizer on a deterministic
+    * hash-sample.
     */
   def semDedup(
       emb: DataFrame,
@@ -425,6 +428,10 @@ object Similarity {
     cents
   }
 
+  /** Product-quantization codes (x58): per-vector (m, code, sqerr) from m
+    * independent fixed-point codebooks — m bytes/vector instead of 64
+    * floats, the memory step FAISS composes with IVF.
+    */
   def pqCodes(
       emb: DataFrame,
       m: Int = PqM,
@@ -501,7 +508,8 @@ object Similarity {
     * chains (driver-resident codebooks, the x13 rule); assignment is two
     * broadcast argmins inside the scan; the audit is one count to
     * ≤ nc² rows. With `nc = ceil(√(n/TargetClusterSize))` (the auto
-    * rule), cells ∝ corpus and per-vector cost grows only as √cells.
+    * rule, [[imiAutoNc]]), cells ∝ corpus and per-vector cost grows only
+    * as √cells. [[imiAssign]] returns the per-vector cells.
     */
   def imiCells(
       emb: DataFrame,
@@ -1071,6 +1079,8 @@ object Similarity {
     * past it (the only bootstrap that survives corpus-proportional cell
     * counts). The same auto-boundary pattern as `Dedup.textLegFor`;
     * `Cli admit --esigs` uses this. Costs one count() (parquet metadata).
+    * [[admitEmbeddingSigs]] then classifies every batch with zero
+    * corpus-embedding access — the emb twin of `Dedup.dedupSignatures`.
     */
   def admitEmbeddingBootstrapAuto(
       corpusEmb: DataFrame,
@@ -1790,8 +1800,9 @@ object Similarity {
       .withColumn("recall_e6", expr("(1000000 * n_hit) div n_exact"))
   }
 
-  /** LSH top-k: candidates collide in ANY of the NL tables, exact cosine
-    * rank on candidates only. Columns (query_id, rank, neighbor_id).
+  /** LSH top-k, the scale path for [[knnBrute]]: candidates collide in ANY
+    * of the NL tables, exact cosine rank on candidates only. Columns
+    * (query_id, rank, neighbor_id).
     */
   def knnLsh(emb: DataFrame, isQuery: Column, k: Int = 3): DataFrame = {
     val e = withNorm(emb)
@@ -1864,7 +1875,8 @@ object Similarity {
     * dropped rows for accounting, so only the quantizer's rn=1 limit
     * appears there. nc defaults to corpus-proportional (the x30 auto-nc
     * rule) so mean cluster size — and the per-cluster window — stays
-    * bounded as the corpus grows.
+    * bounded as the corpus grows; `trainSample` < 1 trains the quantizer
+    * on a deterministic hash-sample.
     */
   def clusterCapped(
       emb: DataFrame,
@@ -1902,7 +1914,9 @@ object Similarity {
     * Scale posture (100 TB): assignment is the x13 broadcast pass; both
     * windows (hardness rank, cluster size) share one partitioning on cid,
     * so the whole selection is a single keyed shuffle with per-cluster
-    * state only — pass corpus-proportional `nc` to bound cluster size.
+    * state only. nc defaults to corpus-proportional, which bounds cluster
+    * size; `trainSample` < 1 trains the quantizer on a deterministic
+    * hash-sample.
     */
   def protoPrune(
       emb: DataFrame,
@@ -2027,6 +2041,10 @@ object Similarity {
           .as("vi"))
   }
 
+  /** RAG index build (x91): chunk -> signed-feature-hash embed ->
+    * fixed-point coarse quantizer -> per-cell manifest, as one composed
+    * job — the retrieval-side counterpart of the x57 corpus pipeline.
+    */
   def ragIndex(
       docs: DataFrame,
       seedCap: Long = RagSeedCap,

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * impossible — `sbt test` goes red the moment the registered query set
   * and PLANS.md's row set diverge, in either direction. Regenerate with:
   *
-  *   sbt "runMain graft.PlanAudit /root/testdata/sf0.1 PLANS.md"
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.PlanAudit <testdata>/sf0.1 PLANS.md"
   *
   * (Deliberately a plain FunSuite — no SparkSession; parsing a committed
   * artifact must not cost a JVM-wide Spark startup.)

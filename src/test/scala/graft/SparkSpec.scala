@@ -9,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graftnative.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh.getPath)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.builder(4).config("spark.sql.warehouse.dir", wh.getPath).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -2,9 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The public TrainingData facade, driven the way a library user would:
-  * compose a corpus-prep pipeline from the one entry point and check the
-  * invariants, without touching graft.xscale internals.
+import graft.xscale.{DataPrep, Dedup, DedupClusters, Similarity, TextAnalysis}
+
+/** The xscale operators driven the way a library user would: compose a
+  * corpus-prep pipeline from the public operator objects (`TextAnalysis`,
+  * `Dedup`, `DedupClusters`, `DataPrep`, `Similarity`) and check the
+  * invariants, with no registered query or fixture in between. The class
+  * keeps the name it had when these operators sat behind a
+  * `graft.TrainingData` facade, so the test ids stay stable.
   */
 class TrainingDataSpec extends SparkSpec {
   import spark.implicits._
@@ -14,9 +19,9 @@ class TrainingDataSpec extends SparkSpec {
   private lazy val emb = spark.read.parquet(s"$dir/embeddings.parquet")
 
   test("compose: quality filter -> exact dedup -> split -> pack, all lazy") {
-    val prepped = TrainingData.packAssignments(
-      TrainingData.splitAssign(
-        TrainingData.dedupExact(TrainingData.qualityFilter(docs))))
+    val prepped = DataPrep.packAssignments(
+      DataPrep.splitAssign(
+        Dedup.dedupExact(TextAnalysis.qualityFilter(docs))))
     // one composed plan, no intermediate actions
     val n = prepped.count()
     assert(n > 0 && n <= docs.count())
@@ -26,22 +31,22 @@ class TrainingDataSpec extends SparkSpec {
   }
 
   test("near-dup pipeline: pairs -> clusters -> survivors, both CC variants agree") {
-    val pairs = TrainingData.simhashPairs(docs)
+    val pairs = Dedup.simhashPairs(docs)
       .select(col("doc_id_a").as("a"), col("doc_id_b").as("b"))
-    val viaProp = TrainingData.connectedComponents(pairs)
+    val viaProp = DedupClusters.connectedComponents(pairs)
       .as[(Long, Long)].collect().toMap
-    val viaStar = TrainingData.connectedComponentsStar(pairs)
+    val viaStar = DedupClusters.connectedComponentsStar(pairs)
       .as[(Long, Long)].collect().toMap
     assert(viaProp === viaStar)
-    val survivors = TrainingData.dedupByPairs(docs, pairs).count()
+    val survivors = DedupClusters.dedupByPairs(docs, pairs).count()
     assert(survivors < docs.count())
   }
 
   test("knn: lsh results are a subset-ranked view of brute force's candidates") {
     val isQ = col("vec_id") < 5
-    val brute = TrainingData.knnBrute(emb, isQ, k = 10)
+    val brute = Similarity.knnBrute(emb, isQ, k = 10)
       .as[(Long, Long, Long)].collect().groupBy(_._1)
-    val lsh = TrainingData.knnLsh(emb, isQ, k = 3).as[(Long, Long, Long)].collect()
+    val lsh = Similarity.knnLsh(emb, isQ, k = 3).as[(Long, Long, Long)].collect()
     assert(lsh.nonEmpty)
     // every lsh query id is a real query; ranks start at 1
     lsh.groupBy(_._1).foreach { case (q, rows) =>
@@ -51,10 +56,10 @@ class TrainingDataSpec extends SparkSpec {
   }
 
   test("stratified sample + quantize run off the facade with user quotas") {
-    val sampled = TrainingData.stratifiedSample(docs, "lang", lit(5))
+    val sampled = DataPrep.stratifiedSample(docs, "lang", lit(5))
     val counts = sampled.groupBy("lang").count().as[(String, Long)].collect()
     assert(counts.nonEmpty && counts.forall(_._2 <= 5))
-    val q = TrainingData.quantizeInt8(emb)
+    val q = DataPrep.quantizeInt8(emb)
     val bad = q.select(explode(col("qv")).as("x")).filter(abs(col("x")) > 127).count()
     assert(bad === 0)
   }

@@ -128,8 +128,8 @@ class IngestDirectorySpec extends SparkSpec {
   test("insertTransaction: single-row API insert upserts through the merge path (K7/Q4)") {
     val lake = new java.io.File(tmpDir("api"), "lake").getPath
     val t = Transaction("DEBIT", "01/01/2024", "api row", 1.0, 0.0, "", "", "", "chase", "1234")
-    assert(Lake.insertTransaction(spark, t, lake) === 1L)
-    assert(Lake.insertTransaction(spark, t.copy(amount = 2.0), lake) === 1L) // update, not dup
+    assert(Lake.upsertIntoLake(spark, Seq(t).toDF(), lake) === 1L)
+    assert(Lake.upsertIntoLake(spark, Seq(t.copy(amount = 2.0)).toDF(), lake) === 1L) // update, not dup
     val rows = spark.read.parquet(lake)
       .select("description", "amount").as[(String, Double)].collect().toSeq
     assert(rows === Seq(("api row", 2.0)))
@@ -140,7 +140,8 @@ class IngestDirectorySpec extends SparkSpec {
     val t = Transaction("DEBIT", "01/10/2024", "first", 1.0, 0.0, "", "", "", "chase", "1234")
     Lake.upsertIntoLake(spark, Seq(t).toDF(), lake, monthPartitioned = true)
     // a later caller that doesn't know the layout (API insert, streaming)
-    Lake.insertTransaction(spark, t.copy(description = "second", posting_date = "02/15/2024"), lake)
+    Lake.upsertIntoLake(spark,
+      Seq(t.copy(description = "second", posting_date = "02/15/2024")).toDF(), lake)
     val rows = spark.read.parquet(lake).as[Transaction].collect()
     assert(rows.map(_.description).toSet === Set("first", "second"))
     assert(new java.io.File(lake, "data_source=chase/posting_month=2024-02").exists())

@@ -426,14 +426,14 @@ class DataPrepSpec extends SparkSpec {
     // exactly n_docs - 1 per pack
     val clones = (1L to 40L).map(i => (i, "s" + (i % 2), "identical text body here"))
       .toDF("doc_id", "source", "text")
-    val rows = graft.TrainingData.packHygiene(clones)
+    val rows = DataPrep.packHygiene(clones)
       .select("n_docs", "dup_excess").as[(Long, Long)].collect()
     assert(rows.map(_._1).sum === 40L)
     rows.foreach { case (n, d) => assert(d === n - 1) }
     // all-distinct corpus: zero dup excess anywhere
     val distinctDocs = (1L to 40L).map(i => (i, "s0", s"unique words for document number $i only"))
       .toDF("doc_id", "source", "text")
-    val clean = graft.TrainingData.packHygiene(distinctDocs)
+    val clean = DataPrep.packHygiene(distinctDocs)
       .select("dup_excess").as[Long].collect()
     assert(clean.forall(_ === 0L))
   }

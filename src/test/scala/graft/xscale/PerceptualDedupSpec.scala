@@ -149,7 +149,7 @@ class PerceptualDedupSpec extends SparkSpec {
     ).toDF("doc_id", "payload")
     val hf = imageHashFrame(media).collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(hf == Map(1L -> true, 2L -> true, 3L -> true, 4L -> false))
-    val pairs = graft.TrainingData.imageNearDupPairs(media).as[(Long, Long)].collect().toSet
+    val pairs = PerceptualDedup.imageNearDupPairs(media).as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
   }
 
@@ -167,7 +167,7 @@ class PerceptualDedupSpec extends SparkSpec {
     val ham = ba.zip(bb).map { case (p, q) => java.lang.Long.bitCount(p ^ q) }.sum
     assert(ham == 5, s"fixture hamming $ham, expected exactly 5")
     val media = Seq((1L, makeBmp(17, 16, g)), (2L, makeBmp(17, 16, g2))).toDF("doc_id", "payload")
-    assert(graft.TrainingData.imageNearDupPairs(media, wide = true)
+    assert(PerceptualDedup.imageNearDupPairs(media, wide = true)
       .as[(Long, Long)].collect().toSet == Set((1L, 2L)))
     assert(imageNearDupPairs(media, wide = true, maxHamming = MaxHamming)
       .as[(Long, Long)].collect().isEmpty)
@@ -184,7 +184,7 @@ class PerceptualDedupSpec extends SparkSpec {
       (3L, fixtureWav(3L)), // distinct content
       (4L, Array[Byte](1, 2, 3))
     ).toDF("doc_id", "payload")
-    val pairs = graft.TrainingData.audioNearDupPairs(media).as[(Long, Long)].collect().toSet
+    val pairs = PerceptualDedup.audioNearDupPairs(media).as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
   }
 
@@ -230,7 +230,7 @@ class PerceptualDedupSpec extends SparkSpec {
       (2L, wav(0, 10)), // re-gain twin: hamming 0 wide
       (3L, wav(7, 0))   // distinct content
     ).toDF("doc_id", "payload")
-    assert(graft.TrainingData.audioNearDupPairs(media, wide = true)
+    assert(PerceptualDedup.audioNearDupPairs(media, wide = true)
       .as[(Long, Long)].collect().toSet == Set((1L, 2L)))
     // pigeonhole guard holds per width
     intercept[IllegalArgumentException](
@@ -253,7 +253,7 @@ class PerceptualDedupSpec extends SparkSpec {
     assert(hf(5L)._1 == false)
     // pairs form WITHIN a modality only — even if an image band value
     // happened to collide with an audio one, `mod` keys them apart
-    val pairs = graft.TrainingData.mediaNearDupPairs(media)
+    val pairs = PerceptualDedup.mediaNearDupPairs(media)
       .as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L), (3L, 4L)))
   }
@@ -383,7 +383,7 @@ class PerceptualDedupSpec extends SparkSpec {
       (3L, fixtureAvi(3L)),   // distinct content
       (4L, Array[Byte](9, 9, 9))
     ).toDF("doc_id", "payload")
-    val pairs = graft.TrainingData.videoNearDupPairs(media).as[(Long, Long)].collect().toSet
+    val pairs = PerceptualDedup.videoNearDupPairs(media).as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
     intercept[IllegalArgumentException](videoNearDupPairs(media, maxHamming = 4))
   }
@@ -403,7 +403,7 @@ class PerceptualDedupSpec extends SparkSpec {
     assert(hf(1L)._2 == "img" && hf(2L)._2 == "aud" && !hf(5L)._1)
     // video pairs form within the vid space only; img/aud rows of the
     // same closed-form content family never pair with it
-    val pairs = graft.TrainingData.mediaNearDupPairs(media)
+    val pairs = PerceptualDedup.mediaNearDupPairs(media)
       .as[(Long, Long)].collect().toSet
     assert(pairs == Set((3L, 4L)))
     // under wide, a 65-frame clip can't fill the 257-window grid and
@@ -429,7 +429,7 @@ class PerceptualDedupSpec extends SparkSpec {
     // containment sees the exact trim in BOTH directions (54/54 and
     // 54/64), not the brightened one (every fingerprint moved) and not
     // the unrelated clip
-    val pairs = graft.TrainingData.videoContainmentPairs(media)
+    val pairs = PerceptualDedup.videoContainmentPairs(media)
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(pairs == Set((2L, 1L, 54L, 54L), (1L, 2L, 54L, 64L)), pairs)
     // the complementarity claim, pinned from the other side: the temporal
@@ -440,9 +440,9 @@ class PerceptualDedupSpec extends SparkSpec {
       (2L, avi(0L, 10, 55)),       // trim: invisible to the hash
       (6L, avi(0L, 0, 65, 10))     // +10 brightness: invisible to containment
     ).toDF("doc_id", "payload")
-    assert(graft.TrainingData.videoNearDupPairs(media2)
+    assert(PerceptualDedup.videoNearDupPairs(media2)
       .as[(Long, Long)].collect().toSet == Set((1L, 6L)))
-    assert(graft.TrainingData.videoContainmentPairs(media2)
+    assert(PerceptualDedup.videoContainmentPairs(media2)
       .as[(Long, Long, Long, Long)].collect().map(p => (p._1, p._2)).toSet ==
       Set((2L, 1L), (1L, 2L)))
     intercept[IllegalArgumentException](videoContainmentPairs(media, num = 6, den = 5))
@@ -485,7 +485,7 @@ class PerceptualDedupSpec extends SparkSpec {
       // undecodable bytes are skipped, not errors
       (102L, "not media".getBytes)
     ).toDF("doc_id", "payload")
-    val m = graft.TrainingData.thumbnailMatches(images, videos)
+    val m = PerceptualDedup.thumbnailMatches(images, videos)
       .as[(Long, Long, Long)].collect().toSet
     assert(m == Set((100L, 10L, 48L)), m)
   }
@@ -694,7 +694,7 @@ class PerceptualDedupSpec extends SparkSpec {
       (4L, avi(15L, 0, 65)),       // unrelated
       (5L, "junk".getBytes)
     ).toDF("doc_id", "payload")
-    val exact = graft.TrainingData.videoContainmentPairs(media)
+    val exact = PerceptualDedup.videoContainmentPairs(media)
       .as[(Long, Long, Long, Long)].collect().toSet
     val lsh = PerceptualDedup.videoContainmentPairsLsh(media)
       .as[(Long, Long, Long, Long)].collect().toSet

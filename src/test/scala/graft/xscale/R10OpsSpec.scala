@@ -167,7 +167,7 @@ class R10OpsSpec extends SparkSpec {
     // (c) the joint form still dedups: survivors + dropped == corpus
     val docs = graft.query.Registry.table(spark, sf, "documents")
       .select("doc_id", "source", "text")
-    val jd = graft.TrainingData.jointDedupImi(docs, emb)
+    val jd = Dedup.jointDedupImi(docs, emb)
     val n = docs.count()
     assert(jd.count() <= n && jd.count() > 0)
     assert(jd.select("doc_id").distinct().count() == jd.count())

@@ -431,7 +431,7 @@ class XScaleSpec extends SparkSpec {
     val vOrtho = Array.tabulate(8)(i => if (i == 0) 1.0f else 0.0f)
     val vSame = Array.tabulate(8)(i => if (i == 1) 1.0f else 0.0f)
     val emb = Seq((1L, vOrtho), (2L, vSame), (3L, vSame)).toDF("vec_id", "embedding")
-    val survivors = graft.TrainingData.jointDedup(docs, emb)
+    val survivors = Dedup.jointDedup(docs, emb)
       .select("doc_id").as[Long].collect().toSet
     assert(survivors === Set(1L))
     // either signal alone would keep two docs
@@ -473,10 +473,10 @@ class XScaleSpec extends SparkSpec {
     // first Some(dir) caller in the shared test JVM wins, so assert the
     // posture, not the specific path)
     assert(spark.sparkContext.getCheckpointDir.nonEmpty)
-    // facade path end-to-end with both knobs: same survivors as default
-    val sDefault = graft.TrainingData.jointDedup(docs, emb)
+    // jointDedup end-to-end with both knobs: same survivors as default
+    val sDefault = Dedup.jointDedup(docs, emb)
       .select("doc_id").as[Long].collect().toSet
-    val sKnobs = graft.TrainingData.jointDedup(docs, emb,
+    val sKnobs = Dedup.jointDedup(docs, emb,
       trainSample = 0.5, checkpointDir = Some(ckptDir))
       .select("doc_id").as[Long].collect().toSet
     assert(sKnobs === sDefault)
