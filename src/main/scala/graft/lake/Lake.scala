@@ -3,6 +3,7 @@ package graft.lake
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.model.{FileOutcome, IngestStats, SyncLog, Transaction}
 
@@ -18,6 +19,13 @@ import graft.model.{FileOutcome, IngestStats, SyncLog, Transaction}
   * collection-per-source, mongo_repository.go:55) with DYNAMIC partition
   * overwrite so a merge only rewrites the sources present in the batch,
   * never the whole lake.
+  *
+  * Every read the lake makes of its own files passes a known schema
+  * ([[lakeSchema]], [[deltaSchema]]): the schema is fixed by
+  * [[Transaction.schema]] and the layout the first write chose, so no read
+  * pays a parquet footer-inference job, and a sidecar holding no data files
+  * reads as empty instead of failing. The layout itself comes from the
+  * directory tree ([[monthlyLayout]]), never from a Spark job.
   */
 object Lake {
 
@@ -94,6 +102,63 @@ object Lake {
       (System.currentTimeMillis() << 20) | (ProcessHandle.current().pid() & 0xFFFFFL))
   }
 
+  /** Per-lake monthly-layout memo: a lake's layout is fixed at first write
+    * (the on-disk-layout-wins rule in [[upsertIntoLake]]), so it is probed
+    * once per lakePath per JVM, not on every insert or read;
+    * [[upsertIntoLake]] primes it on first write. Process-local like
+    * [[nextDeltaSeq]] (same single-writer-per-lake assumption);
+    * `layoutProbes` is the spec seam counting actual probes.
+    */
+  private val layoutCache = scala.collection.concurrent.TrieMap.empty[String, Boolean]
+  private[graft] val layoutProbes = new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] def forgetLayout(lakePath: String): Unit = layoutCache.remove(lakePath)
+
+  /** Whether the lake at `lakePath` is month-partitioned, read from the
+    * directory tree with no Spark job: does the first `data_source=*` dir
+    * hold `posting_month=*` dirs? A path with no partition dir yet (absent,
+    * or an empty first write) reads as flat and is not memoised, so the
+    * first real write still decides.
+    */
+  private[graft] def monthlyLayout(spark: SparkSession, lakePath: String): Boolean =
+    layoutCache.get(lakePath).getOrElse {
+      import org.apache.hadoop.fs.Path
+      layoutProbes.incrementAndGet()
+      val root = new Path(lakePath)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def partDirs(dir: Path, partCol: String) =
+        fs.listStatus(dir).iterator.filter(st => st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
+      val source = if (fs.exists(root)) partDirs(root, "data_source").nextOption() else None
+      source.fold(false) { src =>
+        val monthly = partDirs(src.getPath, "posting_month").hasNext
+        layoutCache.put(lakePath, monthly)
+        monthly
+      }
+    }
+
+  private val postingMonthField = StructField("posting_month", StringType)
+
+  /** The base lake's schema as `spark.read.parquet` would infer it: the
+    * [[Transaction]] data columns in file order, then the hive partition
+    * columns (`data_source`, plus `posting_month` when monthly).
+    */
+  private def lakeSchema(monthly: Boolean): StructType = {
+    val (parts, data) = Transaction.schema.partition(_.name == "data_source")
+    StructType(data ++ parts ++ (if (monthly) Seq(postingMonthField) else Nil))
+  }
+
+  /** The `_delta` sidecar's schema as [[insertFast]] writes it: the
+    * [[Transaction]] columns, `posting_month` when monthly, then `_seq`.
+    */
+  private[graft] def deltaSchema(monthly: Boolean): StructType =
+    StructType(Transaction.schema ++ (if (monthly) Seq(postingMonthField) else Nil) :+
+      StructField("_seq", LongType))
+
+  private def readBase(spark: SparkSession, monthly: Boolean, paths: String*): DataFrame =
+    spark.read.schema(lakeSchema(monthly)).parquet(paths: _*)
+
+  private def readDelta(spark: SparkSession, lakePath: String, monthly: Boolean): DataFrame =
+    spark.read.schema(deltaSchema(monthly)).parquet(deltaDir(lakePath))
+
   /** LSM-style single-row insert (the API's `PUT /history/transaction`
     * path): append ONE small parquet file to the `_delta` sidecar instead
     * of merging + rewriting the row's whole partition. At 100 TB a
@@ -107,24 +172,6 @@ object Lake {
     * Falls back to the merge path when the lake doesn't exist yet (the
     * first write defines the layout).
     */
-  /** Per-lake monthly-layout memo for the point-insert hot path: a lake's
-    * layout is fixed at first write (the on-disk-layout-wins rule below),
-    * so probing `spark.read.parquet(lakePath).schema` on EVERY insert —
-    * a file listing + parquet footer read per point insert — pays real
-    * latency for an answer that cannot change. First probe per lakePath
-    * per JVM; [[upsertIntoLake]] primes it on first write. Process-local
-    * like [[nextDeltaSeq]] (same single-writer-per-lake assumption);
-    * `layoutProbes` is the spec seam counting actual base-lake reads.
-    */
-  private val layoutCache = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  private[graft] val layoutProbes = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] def forgetLayout(lakePath: String): Unit = layoutCache.remove(lakePath)
-  private def monthlyLayout(spark: SparkSession, lakePath: String): Boolean =
-    layoutCache.getOrElseUpdate(lakePath, {
-      layoutProbes.incrementAndGet()
-      spark.read.parquet(lakePath).schema.fieldNames.contains("posting_month")
-    })
-
   def insertFast(spark: SparkSession, t: Transaction, lakePath: String): Unit = {
     import spark.implicits._
     val hPath = new org.apache.hadoop.fs.Path(lakePath)
@@ -139,25 +186,42 @@ object Lake {
       .write.mode(SaveMode.Append).parquet(dPath.toString)
   }
 
-  /** Keep-latest-by-`_seq` collapse of raw delta rows, `_seq` dropped. */
+  /** Keep-latest-by-`_seq` collapse of raw delta rows, `_seq` dropped.
+    * The window runs in ONE task over `delta.coalesce(1)`: a single
+    * partition already satisfies the window's key distribution, so there
+    * is no hash exchange and no extra AQE stage. Size bound: the sidecar
+    * must fit one task — it does by design (compaction cadence bounds it,
+    * and [[readLake]] broadcasts this frame, which needs the same).
+    */
   private def deltaLatest(delta: DataFrame): DataFrame = {
     val w = Window.partitionBy(Transaction.mergeKey.map(col): _*).orderBy(col("_seq").desc)
-    delta.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn", "_seq")
+    delta.coalesce(1)
+      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn", "_seq")
   }
 
   /** Delta-consistent view of the lake: base rows shadowed by any pending
-    * delta inserts on the same merge key (latest `_seq` wins). The anti-join
-    * side is the delta — small by construction (bounded by compaction
-    * cadence) — so Catalyst broadcasts it and the base never shuffles.
+    * delta inserts on the same merge key (latest `_seq` wins). Both sides
+    * are read with the lake's known schema (no inference job), and
+    * building the view submits no Spark job once the layout is memoised;
+    * its columns are the base's, in [[lakeSchema]] order, whether or not
+    * a sidecar is pending.
+    * The sidecar fold is one task with no exchange ([[deltaLatest]]); its
+    * result is the anti-join's build side, broadcast to the base scan, so
+    * the base never shuffles either. Size bound: the pending sidecar must
+    * fit one task and one broadcast — compaction cadence keeps it there.
     */
   def readLake(spark: SparkSession, lakePath: String): DataFrame = {
-    val base = spark.read.parquet(lakePath)
+    val monthly = monthlyLayout(spark, lakePath)
+    val base = readBase(spark, monthly, lakePath)
     val dPath = new org.apache.hadoop.fs.Path(deltaDir(lakePath))
     val fs = dPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dPath)) base
     else {
-      val latest = deltaLatest(spark.read.parquet(dPath.toString))
-      base.join(latest, Transaction.mergeKey, "left_anti").unionByName(latest)
+      val latest = deltaLatest(readDelta(spark, lakePath, monthly))
+      // the USING join puts the key columns first; keep the base's order
+      base.join(latest, Transaction.mergeKey, "left_anti")
+        .select(base.columns.map(col).toSeq: _*)
+        .unionByName(latest)
     }
   }
 
@@ -202,7 +266,7 @@ object Lake {
       // First write: no self-reference, write the deduped batch directly.
       dedupKeepFirst(batchP, Transaction.mergeKey, Transaction.tieBreak)
         .write.mode(SaveMode.Overwrite).partitionBy(parts: _*).parquet(lakePath)
-      spark.read.parquet(lakePath).count()
+      readBase(spark, effectiveMonthly, lakePath).count()
     } else {
       // Only partitions the batch touches enter the merge: filter the
       // existing side by the batch's sources AND (when month-partitioned)
@@ -216,13 +280,13 @@ object Lake {
           bySource && col("posting_month").isin(months.toSeq.map(x => x: Any): _*)
         } else bySource
       }
-      val base = spark.read.parquet(lakePath).filter(touchedPred)
+      val base = readBase(spark, effectiveMonthly, lakePath).filter(touchedPred)
       // Pending fast-insert delta rows for the touched partitions fold into
       // this merge (delta wins over base, then the batch wins over both —
       // same precedence readLake shows); rows for untouched partitions stay
       // in the sidecar.
       val dPath = new org.apache.hadoop.fs.Path(deltaDir(lakePath))
-      val deltaAll = if (fs.exists(dPath)) Some(spark.read.parquet(dPath.toString)) else None
+      val deltaAll = if (fs.exists(dPath)) Some(readDelta(spark, lakePath, effectiveMonthly)) else None
       val existing = deltaAll match {
         case Some(d) => merge(base, deltaLatest(d).filter(touchedPred))
         case None    => base
@@ -252,11 +316,12 @@ object Lake {
   /** Move every hive partition directory under `staged` over its twin in
     * `lake` (delete-old + rename-new per leaf dir), delete the staging
     * root, and return the row count of the swapped-in data (a parquet
-    * footer-metadata read, not a rewrite). Every batch write above funnels
-    * through this so merged bytes land exactly once. The per-partition
-    * swap is not transactional across partitions — neither was dynamic
-    * partition overwrite; crash-consistency across partitions is a table
-    * format's job (Delta/Iceberg), out of scope for a plain-parquet lake.
+    * footer-metadata read with the known schema, not a rewrite). Every
+    * batch write above funnels through this so merged bytes land exactly
+    * once. The per-partition swap is not transactional across partitions —
+    * neither was dynamic partition overwrite; crash-consistency across
+    * partitions is a table format's job (Delta/Iceberg), out of scope for a
+    * plain-parquet lake.
     */
   private def swapStagedPartitions(
       spark: SparkSession,
@@ -287,7 +352,7 @@ object Lake {
     }
     fs.delete(stagedPath, true)
     if (swappedTargets.isEmpty) 0L
-    else spark.read.parquet(swappedTargets.map(_.toString): _*).count()
+    else readBase(spark, depth == 2, swappedTargets.map(_.toString): _*).count()
   }
 
   /** Compact a lake: collapse every hive partition to ONE parquet file.

@@ -13,6 +13,12 @@ import graft.model.Transaction
   * query shapes (echo, point lookup, time-range history search) are
   * filters over it.
   *
+  * Reads go through [[Lake.readLake]], which reads the lake with the schema
+  * it already has (no footer-inference job) and folds the `_delta` sidecar
+  * in one task with no exchange: with a sidecar pending, a point lookup or
+  * a range search over it runs 2 Spark jobs (the sidecar broadcast and the
+  * scan) and no shuffle.
+  *
   * Scale posture: [[historySearch]] filters on the derived epoch column —
   * at 100 TB the lake would additionally be partitioned/z-ordered by a
   * date-derived column so this becomes partition pruning instead of a scan;

@@ -221,19 +221,14 @@ object Synthetic {
     * a plain partitioned APPEND — the reference's InsertMany does not upsert,
     * so neither does this; use [[graft.lake.Lake.upsertIntoLake]] when merge
     * semantics are wanted. Like the upsert path, the lake's ON-DISK layout
-    * wins: appending into a month-partitioned lake adds `posting_month`, so
-    * leaf files never land at mixed directory depths (which would break
-    * every later `spark.read.parquet(lakePath)` with
-    * conflicting-directory-structures).
+    * wins (one rule, `Lake.monthlyLayout`'s directory probe): appending into
+    * a month-partitioned lake adds `posting_month`, so leaf files never land
+    * at mixed directory depths (which would break every later read of the
+    * lake with conflicting-directory-structures).
     */
   def persistToLake(df: DataFrame, lakePath: String): Unit = {
-    val spark = df.sparkSession
-    val hPath = new org.apache.hadoop.fs.Path(lakePath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val monthly = fs.exists(hPath) &&
-      spark.read.parquet(lakePath).schema.fieldNames.contains("posting_month")
     val (out, parts) =
-      if (monthly)
+      if (graft.lake.Lake.monthlyLayout(df.sparkSession, lakePath))
         (df.withColumn("posting_month", graft.lake.Lake.postingMonth(col("posting_date"))),
           Seq("data_source", "posting_month"))
       else (df, Seq("data_source"))

@@ -223,6 +223,34 @@ class LakeSpec extends SparkSpec {
       === Set(tx(amount = 1.0), tx(desc = "delta", amount = 2.0)))
   }
 
+  test("a crashed insertFast (sidecar holds only _temporary) reads as no pending rows; upsert and compact clean it up") {
+    val lake = new java.io.File(tmpDir("lakeCrash"), "lake").getPath
+    Lake.upsertIntoLake(spark, Seq(tx(amount = 1.0), tx(desc = "other", amount = 5.0)).toDF(), lake)
+    // a writer killed mid-commit leaves its attempt dir and nothing else;
+    // Spark hides `_temporary`, so the sidecar holds no readable file
+    def crashedInsert(): Unit = {
+      val attempt = new java.io.File(lake, "_delta/_temporary/0/_temporary/attempt_0")
+      assert(attempt.mkdirs())
+      java.nio.file.Files.write(new java.io.File(attempt, "part-00000.parquet").toPath, "torn".getBytes)
+    }
+    val cols = Seq("details", "posting_date", "description", "amount", "balance",
+      "category", "txn_type", "check_or_slip_num", "data_source", "account_id")
+    def view(): Set[Transaction] = asSet(Lake.readLake(spark, lake).select(cols.head, cols.tail: _*))
+
+    crashedInsert()
+    Lake.forgetLayout(lake) // a restarted process
+    assert(view() === Set(tx(amount = 1.0), tx(desc = "other", amount = 5.0)))
+
+    Lake.upsertIntoLake(spark, Seq(tx(desc = "new", amount = 3.0)).toDF(), lake)
+    assert(!new java.io.File(lake, "_delta").exists(), "the next upsert removes the torn sidecar")
+    assert(view() === Set(tx(amount = 1.0), tx(desc = "other", amount = 5.0), tx(desc = "new", amount = 3.0)))
+
+    crashedInsert()
+    assert(Lake.compact(spark, lake, parallelism = 4) === 3L)
+    assert(!new java.io.File(lake, "_delta").exists(), "compaction removes the torn sidecar")
+    assert(view() === Set(tx(amount = 1.0), tx(desc = "other", amount = 5.0), tx(desc = "new", amount = 3.0)))
+  }
+
   test("compact(sortBy) clusters each rewritten file by the sort key; rows unchanged") {
     val lake = new java.io.File(tmpDir("lakeZ"), "lake").getPath
     val rnd = new scala.util.Random(7)
