@@ -497,32 +497,26 @@ object Cli {
             (f.psigsDir.isEmpty || f.pmediaPath.isDefined) &&
             (!f.ptrim || f.pmediaPath.isDefined)) =>
       val flags = parseAdmitFlags(rest).get
-      import org.apache.spark.sql.SaveMode
+      import org.apache.spark.sql.{DataFrame, SaveMode}
       import org.apache.spark.sql.functions.{col, count, expr, lit}
       import xscale.{Admission, DedupClusters, PerceptualDedup, Similarity}
       val batch = spark.read.parquet(batchPath)
-      val sidecar0 = flags.sigsDir.filter(d => hfsExists(spark, d))
+      // --compact reconciles a state table with the LIVE corpus ids in
+      // place: Lake.replace writes the compacted rows in full before the
+      // old dir goes, so the plan may read the very dir it replaces
+      def reconcile(path: String)(compact: DataFrame => DataFrame): Unit =
+        graft.lake.Lake.replace(spark, compact(spark.read.parquet(path)), path)
+      def liveVecIds = spark.read.parquet(corpusPath).select(col("doc_id").as("vec_id"))
+      val sidecar = flags.sigsDir.filter(d => hfsExists(spark, d))
       // --compact: reconcile the sidecar with the LIVE corpus before
       // classifying — a later re-filter/re-dedup that removed docs leaves
       // stale signatures behind, and stale state POISONS admission
       // (tomorrow's copy of deleted content classifies as a dup of docs
       // the corpus no longer has); retried appends double rows. The
       // corpus contributes only its doc_id column (x74_sigs_compact's
-      // oracle pins the membership rule). The rewrite reads the sidecar,
-      // materializes through ckpt, then Overwrites the same path — pass
-      // --ckpt in production so the cut is storage-backed: a
-      // localCheckpoint lost to executor failure mid-rewrite would lose
-      // the state (the same non-atomic two-write caveat as the lake swap).
-      val sidecar = sidecar0.map { d =>
-        if (flags.compact) {
-          val compacted = DedupClusters.ckpt(
-            xscale.Dedup.compactSignatures(
-              spark.read.parquet(d),
-              spark.read.parquet(corpusPath).select("doc_id")),
-            flags.ckptDir)
-          compacted.write.mode(SaveMode.Overwrite).parquet(d)
-        }
-        d
+      // oracle pins the membership rule).
+      if (flags.compact) sidecar.foreach { d =>
+        reconcile(d)(xscale.Dedup.compactSignatures(_, spark.read.parquet(corpusPath).select("doc_id")))
       }
       // bootstrap BEFORE classifying: one corpus text pass writes the
       // sidecar, and classification then reads the parquet back — the
@@ -563,16 +557,9 @@ object Cli {
             // compaction above (stale vectors poison admission the same
             // way: a rewording of deleted content keeps flagging
             // near_dup_corpus_emb); corpus contributes ID PROJECTION
-            // only, centroids stay frozen. Same non-atomic-rewrite
-            // caveat — pass --ckpt so the cut is storage-backed.
-            if (flags.compact && bootstrapped) {
-              val compacted = DedupClusters.ckpt(
-                Similarity.compactEmbAssign(
-                  spark.read.parquet(s"$d/assign"),
-                  spark.read.parquet(corpusPath).select(col("doc_id").as("vec_id"))),
-                flags.ckptDir)
-              compacted.write.mode(SaveMode.Overwrite).parquet(s"$d/assign")
-            }
+            // only, centroids stay frozen.
+            if (flags.compact && bootstrapped)
+              reconcile(s"$d/assign")(Similarity.compactEmbAssign(_, liveVecIds))
             // bootstrap flavor auto-chosen by corpus size (flat coarse
             // cells within Similarity.FlatEmbBoundary, IMI product cells
             // past it — the bootstrap that survives 100x); the state
@@ -632,14 +619,8 @@ object Cli {
             val bandsPath = s"$d/bands"
             val metaPath = s"$d/meta"
             val bootstrapped = hfsExists(spark, bandsPath)
-            if (flags.compact && bootstrapped) {
-              val compacted = DedupClusters.ckpt(
-                PerceptualDedup.compactMediaBands(
-                  spark.read.parquet(bandsPath),
-                  spark.read.parquet(corpusPath).select(col("doc_id").as("vec_id"))),
-                flags.ckptDir)
-              compacted.write.mode(SaveMode.Overwrite).parquet(bandsPath)
-            }
+            if (flags.compact && bootstrapped)
+              reconcile(bandsPath)(PerceptualDedup.compactMediaBands(_, liveVecIds))
             if (!bootstrapped) {
               val w = corpusWide()
               // meta BEFORE bands: the bootstrap probe is on the bands
@@ -702,14 +683,8 @@ object Cli {
           case Some(d) =>
             val shPath = s"$d/shingles"
             val bootstrapped = hfsExists(spark, shPath)
-            if (flags.compact && bootstrapped) {
-              val compacted = DedupClusters.ckpt(
-                PerceptualDedup.compactTrimShingles(
-                  spark.read.parquet(shPath),
-                  spark.read.parquet(corpusPath).select(col("doc_id").as("vec_id"))),
-                flags.ckptDir)
-              compacted.write.mode(SaveMode.Overwrite).parquet(shPath)
-            }
+            if (flags.compact && bootstrapped)
+              reconcile(shPath)(PerceptualDedup.compactTrimShingles(_, liveVecIds))
             if (!bootstrapped) {
               // meta BEFORE shingles (the band-meta crash rule): the
               // bootstrap probe is on the shingles path, so a crash

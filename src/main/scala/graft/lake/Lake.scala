@@ -1,5 +1,6 @@
 package graft.lake
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,16 +17,17 @@ import graft.model.{FileOutcome, IngestStats, SyncLog, Transaction}
   * composite key + union — Catalyst picks broadcast-hash when the incoming
   * batch is small (the common ingest case) and AQE handles skewed keys. The
   * lake is hive-partitioned by `data_source` (replacing the reference's
-  * collection-per-source, mongo_repository.go:55) with DYNAMIC partition
-  * overwrite so a merge only rewrites the sources present in the batch,
-  * never the whole lake.
+  * collection-per-source, mongo_repository.go:55), and every write — the
+  * first one, an upsert, a compaction, the `_delta` settle — commits
+  * through one stage-and-swap routine ([[replace]]) that swaps in only the
+  * partitions the new rows cover, never the whole lake.
   *
   * Every read the lake makes of its own files passes a known schema
   * ([[lakeSchema]], [[deltaSchema]]): the schema is fixed by
   * [[Transaction.schema]] and the layout the first write chose, so no read
   * pays a parquet footer-inference job, and a sidecar holding no data files
   * reads as empty instead of failing. The layout itself comes from the
-  * directory tree ([[monthlyLayout]]), never from a Spark job.
+  * directory tree ([[layout]]), never from a Spark job.
   */
 object Lake {
 
@@ -109,31 +111,44 @@ object Lake {
     * [[nextDeltaSeq]] (same single-writer-per-lake assumption);
     * `layoutProbes` is the spec seam counting actual probes.
     */
-  private val layoutCache = scala.collection.concurrent.TrieMap.empty[String, Boolean]
+  private val layoutCache = scala.collection.concurrent.TrieMap.empty[String, Layout]
   private[graft] val layoutProbes = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] def forgetLayout(lakePath: String): Unit = layoutCache.remove(lakePath)
 
-  /** Whether the lake at `lakePath` is month-partitioned, read from the
-    * directory tree with no Spark job: does the first `data_source=*` dir
-    * hold `posting_month=*` dirs? A path with no partition dir yet (absent,
+  /** The lake's partition layout, fixed by its first write: `data_source`,
+    * then a derived `posting_month` level when monthly. A call takes it once
+    * ([[layout]]) and every write and read of that call uses its partition
+    * columns and its `posting_month` derivation.
+    */
+  private[graft] final case class Layout(monthly: Boolean) {
+    val partCols: Seq[String] = "data_source" +: (if (monthly) Seq("posting_month") else Nil)
+    def derive(df: DataFrame): DataFrame =
+      if (monthly) df.withColumn("posting_month", postingMonth(col("posting_date"))) else df
+  }
+
+  /** The layout of the lake at `lakePath`, read from the directory tree
+    * with no Spark job: it is monthly when the first `data_source=*` dir
+    * holds `posting_month=*` dirs. A path with no partition dir yet (absent,
     * or an empty first write) reads as flat and is not memoised, so the
     * first real write still decides.
     */
-  private[graft] def monthlyLayout(spark: SparkSession, lakePath: String): Boolean =
+  private[graft] def layout(spark: SparkSession, lakePath: String): Layout =
     layoutCache.get(lakePath).getOrElse {
-      import org.apache.hadoop.fs.Path
       layoutProbes.incrementAndGet()
       val root = new Path(lakePath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = hfs(spark, root)
       def partDirs(dir: Path, partCol: String) =
         fs.listStatus(dir).iterator.filter(st => st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
       val source = if (fs.exists(root)) partDirs(root, "data_source").nextOption() else None
-      source.fold(false) { src =>
-        val monthly = partDirs(src.getPath, "posting_month").hasNext
-        layoutCache.put(lakePath, monthly)
-        monthly
+      source.fold(Layout(monthly = false)) { src =>
+        val lay = Layout(partDirs(src.getPath, "posting_month").hasNext)
+        layoutCache.put(lakePath, lay)
+        lay
       }
     }
+
+  private def hfs(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val postingMonthField = StructField("posting_month", StringType)
 
@@ -153,11 +168,90 @@ object Lake {
     StructType(Transaction.schema ++ (if (monthly) Seq(postingMonthField) else Nil) :+
       StructField("_seq", LongType))
 
-  private def readBase(spark: SparkSession, monthly: Boolean, paths: String*): DataFrame =
-    spark.read.schema(lakeSchema(monthly)).parquet(paths: _*)
+  private def readBase(spark: SparkSession, layout: Layout, paths: String*): DataFrame =
+    spark.read.schema(lakeSchema(layout.monthly)).parquet(paths: _*)
 
-  private def readDelta(spark: SparkSession, lakePath: String, monthly: Boolean): DataFrame =
-    spark.read.schema(deltaSchema(monthly)).parquet(deltaDir(lakePath))
+  private def readDelta(spark: SparkSession, lakePath: String, layout: Layout): DataFrame =
+    spark.read.schema(deltaSchema(layout.monthly)).parquet(deltaDir(lakePath))
+
+  private def deltaExists(spark: SparkSession, lakePath: String): Boolean = {
+    val dPath = new Path(deltaDir(lakePath))
+    hfs(spark, dPath).exists(dPath)
+  }
+
+  /** Replace the contents of `target` with `rows`, the one stage-and-swap
+    * routine for every directory the program rewrites. The rows are
+    * written once to `<target>.staging`, a sibling of `target` (never
+    * inside it, however `target` is spelled); then each leaf dir of it
+    * (`partCols.length` partition levels deep; with no partition columns,
+    * the whole dir) is swapped into `target` by delete and rename, and the
+    * staging dir is deleted. Leaves of `target` the rows do not cover are
+    * left as they are. The rows are fully written before the first delete,
+    * so `rows` may read `target` itself and no caller cuts its plan first.
+    * Renames are metadata operations on HDFS/local (on an object store a
+    * rename is a copy). The swap is not transactional across leaves: a
+    * crash between a leaf's delete and its rename loses that leaf, which is
+    * a table format's job (Delta/Iceberg), out of scope for plain parquet.
+    * A delete or rename the file system refuses throws before the staging
+    * dir is dropped, so the staged rows are never the copy that is lost.
+    * Returns the swapped-in leaf dirs.
+    */
+  private[graft] def replace(
+      spark: SparkSession,
+      rows: DataFrame,
+      target: String,
+      partCols: Seq[String] = Nil): Seq[String] = {
+    val targetPath = new Path(target)
+    val staged = targetPath.suffix(".staging")
+    val fs = hfs(spark, staged)
+    rows.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*).parquet(staged.toString)
+
+    def leafDirs(root: Path, d: Int): Seq[Path] =
+      if (d == 0) Seq(root)
+      else
+        fs.listStatus(root)
+          .toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+          .flatMap(st => leafDirs(st.getPath, d - 1))
+
+    val swapped = leafDirs(staged, partCols.length).map { src =>
+      // partition-relative path, e.g. data_source=chase/posting_month=2024-01
+      val rel = src.toUri.getPath.stripPrefix(staged.toUri.getPath).stripPrefix("/")
+      val leaf = if (rel.isEmpty) targetPath else new Path(targetPath, rel)
+      if (fs.exists(leaf) && !fs.delete(leaf, true))
+        throw new java.io.IOException(s"replace: could not delete $leaf (staged rows kept at $src)")
+      fs.mkdirs(leaf.getParent)
+      if (!fs.rename(src, leaf))
+        throw new java.io.IOException(s"replace: could not rename $src to $leaf")
+      leaf.toString
+    }
+    fs.mkdirs(targetPath) // rows covering no leaf still leave the target dir
+    fs.delete(staged, true)
+    swapped
+  }
+
+  /** The lake's one commit: [[replace]] the partitions `rows` covers, then
+    * settle the `_delta` sidecar — delete it when no `pending` row remains
+    * (or none is given), else [[replace]] it with the pending rows. Returns
+    * the row count of the swapped-in partitions (a parquet footer-metadata
+    * read with the known schema, not a rewrite).
+    */
+  private def commit(
+      spark: SparkSession,
+      lakePath: String,
+      layout: Layout,
+      rows: DataFrame,
+      pending: Option[DataFrame]): Long = {
+    val leaves = replace(spark, rows, lakePath, layout.partCols)
+    val written = if (leaves.isEmpty) 0L else readBase(spark, layout, leaves: _*).count()
+    if (deltaExists(spark, lakePath)) pending.filterNot(_.isEmpty) match {
+      case Some(rest) => replace(spark, rest.coalesce(1), deltaDir(lakePath))
+      case None =>
+        val dPath = new Path(deltaDir(lakePath))
+        hfs(spark, dPath).delete(dPath, true)
+    }
+    written
+  }
 
   /** LSM-style single-row insert (the API's `PUT /history/transaction`
     * path): append ONE small parquet file to the `_delta` sidecar instead
@@ -174,16 +268,12 @@ object Lake {
     */
   def insertFast(spark: SparkSession, t: Transaction, lakePath: String): Unit = {
     import spark.implicits._
-    val hPath = new org.apache.hadoop.fs.Path(lakePath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) { upsertIntoLake(spark, Seq(t).toDF(), lakePath); return }
-    val monthly = monthlyLayout(spark, lakePath)
-    val dPath = new org.apache.hadoop.fs.Path(deltaDir(lakePath))
-    val row0 = Seq(t).toDF()
-    val row = if (monthly) row0.withColumn("posting_month", postingMonth(col("posting_date"))) else row0
-    row.withColumn("_seq", lit(nextDeltaSeq()))
+    val hPath = new Path(lakePath)
+    if (!hfs(spark, hPath).exists(hPath)) { upsertIntoLake(spark, Seq(t).toDF(), lakePath); return }
+    layout(spark, lakePath).derive(Seq(t).toDF())
+      .withColumn("_seq", lit(nextDeltaSeq()))
       .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(dPath.toString)
+      .write.mode(SaveMode.Append).parquet(deltaDir(lakePath))
   }
 
   /** Keep-latest-by-`_seq` collapse of raw delta rows, `_seq` dropped.
@@ -210,14 +300,14 @@ object Lake {
     * the base never shuffles either. Size bound: the pending sidecar must
     * fit one task and one broadcast — compaction cadence keeps it there.
     */
-  def readLake(spark: SparkSession, lakePath: String): DataFrame = {
-    val monthly = monthlyLayout(spark, lakePath)
-    val base = readBase(spark, monthly, lakePath)
-    val dPath = new org.apache.hadoop.fs.Path(deltaDir(lakePath))
-    val fs = dPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dPath)) base
+  def readLake(spark: SparkSession, lakePath: String): DataFrame =
+    readView(spark, lakePath, layout(spark, lakePath))
+
+  private def readView(spark: SparkSession, lakePath: String, layout: Layout): DataFrame = {
+    val base = readBase(spark, layout, lakePath)
+    if (!deltaExists(spark, lakePath)) base
     else {
-      val latest = deltaLatest(readDelta(spark, lakePath, monthly))
+      val latest = deltaLatest(readDelta(spark, lakePath, layout))
       // the USING join puts the key columns first; keep the base's order
       base.join(latest, Transaction.mergeKey, "left_anti")
         .select(base.columns.map(col).toSeq: _*)
@@ -234,160 +324,82 @@ object Lake {
     *
     * Only partitions the batch touches are affected: existing rows from
     * OTHER sources (and months) never enter the merge, so at 100 TB a
-    * small ingest batch rewrites O(batch partitions), not the lake.
-    * Spark can't overwrite a parquet path it is lazily reading, so the
-    * merged rows are written ONCE to a staging dir and then swapped into
-    * the lake partition-directory-by-partition-directory with filesystem
-    * renames — a metadata operation on HDFS/local (on true object stores
-    * rename is copy; a manifest table format like Delta/Iceberg MERGE is
-    * the real fix there). Data is written exactly once per touched
-    * partition — the previous re-read + dynamic-overwrite pass paid 2×
-    * write amplification. Returns the number of rows written.
+    * small ingest batch rewrites O(batch partitions), not the lake. The
+    * merged rows commit through [[replace]]: written ONCE to a staging dir,
+    * then swapped into the lake partition dir by partition dir (a manifest
+    * table format like Delta/Iceberg MERGE is the real fix on object
+    * stores). The first write commits the same way. Returns the number of
+    * rows written.
     */
   def upsertIntoLake(
       spark: SparkSession,
       batch: DataFrame,
       lakePath: String,
       monthPartitioned: Boolean = false): Long = {
-    val hPath = new org.apache.hadoop.fs.Path(lakePath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(hPath)
+    val hPath = new Path(lakePath)
+    val exists = hfs(spark, hPath).exists(hPath)
     // The lake's ON-DISK layout wins over the flag once it exists — a
     // single-row API insert or a streaming batch must not need to know how
     // the lake was created (and a mismatched union would throw).
-    val effectiveMonthly =
-      if (exists) monthlyLayout(spark, lakePath)
-      else { layoutCache.put(lakePath, monthPartitioned); monthPartitioned }
-    val parts = if (effectiveMonthly) Seq("data_source", "posting_month") else Seq("data_source")
-    val batchP =
-      if (effectiveMonthly) batch.withColumn("posting_month", postingMonth(col("posting_date")))
-      else batch
-    if (!exists) {
-      // First write: no self-reference, write the deduped batch directly.
-      dedupKeepFirst(batchP, Transaction.mergeKey, Transaction.tieBreak)
-        .write.mode(SaveMode.Overwrite).partitionBy(parts: _*).parquet(lakePath)
-      readBase(spark, effectiveMonthly, lakePath).count()
-    } else {
-      // Only partitions the batch touches enter the merge: filter the
-      // existing side by the batch's sources AND (when month-partitioned)
-      // its months, so a daily batch re-reads O(days' partitions), not
-      // years of history.
-      val sources = batch.select("data_source").distinct().collect().map(_.getString(0))
-      val touchedPred = {
-        val bySource = col("data_source").isin(sources.toSeq.map(x => x: Any): _*)
-        if (effectiveMonthly) {
-          val months = batchP.select("posting_month").distinct().collect().map(_.getString(0))
-          bySource && col("posting_month").isin(months.toSeq.map(x => x: Any): _*)
-        } else bySource
-      }
-      val base = readBase(spark, effectiveMonthly, lakePath).filter(touchedPred)
-      // Pending fast-insert delta rows for the touched partitions fold into
-      // this merge (delta wins over base, then the batch wins over both —
-      // same precedence readLake shows); rows for untouched partitions stay
-      // in the sidecar.
-      val dPath = new org.apache.hadoop.fs.Path(deltaDir(lakePath))
-      val deltaAll = if (fs.exists(dPath)) Some(readDelta(spark, lakePath, effectiveMonthly)) else None
-      val existing = deltaAll match {
-        case Some(d) => merge(base, deltaLatest(d).filter(touchedPred))
-        case None    => base
-      }
-      val merged = merge(existing, batchP)
-      val staged = lakePath + ".staging"
-      merged.write.mode(SaveMode.Overwrite).partitionBy(parts: _*).parquet(staged)
-      val written = swapStagedPartitions(spark, staged, lakePath, parts.length)
-      // Folded delta rows are now in base; rewrite the sidecar with only the
-      // untouched-partition survivors (delta is small — bounded by
-      // compaction cadence — so this rewrite is cheap).
-      deltaAll.foreach { d =>
-        val remaining = d.filter(!touchedPred)
-        val stagedDelta = new org.apache.hadoop.fs.Path(lakePath + "/_delta_staging")
-        if (remaining.isEmpty) {
-          fs.delete(dPath, true)
-        } else {
-          remaining.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stagedDelta.toString)
-          fs.delete(dPath, true)
-          fs.rename(stagedDelta, dPath)
+    val lay =
+      if (exists) layout(spark, lakePath)
+      else { val l = Layout(monthPartitioned); layoutCache.put(lakePath, l); l }
+    val batchP = lay.derive(batch)
+    val (rows, pending) =
+      if (!exists) (dedupKeepFirst(batchP, Transaction.mergeKey, Transaction.tieBreak), None)
+      else {
+        // Only partitions the batch touches enter the merge: filter the
+        // existing side by the batch's sources AND (when month-partitioned)
+        // its months, so a daily batch re-reads O(days' partitions), not
+        // years of history.
+        val sources = batch.select("data_source").distinct().collect().map(_.getString(0))
+        val touchedPred = {
+          val bySource = col("data_source").isin(sources.toSeq.map(x => x: Any): _*)
+          if (lay.monthly) {
+            val months = batchP.select("posting_month").distinct().collect().map(_.getString(0))
+            bySource && col("posting_month").isin(months.toSeq.map(x => x: Any): _*)
+          } else bySource
         }
+        val base = readBase(spark, lay, lakePath).filter(touchedPred)
+        // Pending fast-insert delta rows for the touched partitions fold into
+        // this merge (delta wins over base, then the batch wins over both —
+        // same precedence readLake shows); rows for untouched partitions stay
+        // in the sidecar (delta is small — bounded by compaction cadence — so
+        // rewriting it is cheap).
+        val deltaAll = if (deltaExists(spark, lakePath)) Some(readDelta(spark, lakePath, lay)) else None
+        val existing = deltaAll.fold(base)(d => merge(base, deltaLatest(d).filter(touchedPred)))
+        (merge(existing, batchP), deltaAll.map(_.filter(!touchedPred)))
       }
-      written
-    }
-  }
-
-  /** Move every hive partition directory under `staged` over its twin in
-    * `lake` (delete-old + rename-new per leaf dir), delete the staging
-    * root, and return the row count of the swapped-in data (a parquet
-    * footer-metadata read with the known schema, not a rewrite). Every
-    * batch write above funnels through this so merged bytes land exactly
-    * once. The per-partition swap is not transactional across partitions —
-    * neither was dynamic partition overwrite; crash-consistency across
-    * partitions is a table format's job (Delta/Iceberg), out of scope for a
-    * plain-parquet lake.
-    */
-  private def swapStagedPartitions(
-      spark: SparkSession,
-      staged: String,
-      lake: String,
-      depth: Int): Long = {
-    import org.apache.hadoop.fs.Path
-    val stagedPath = new Path(staged)
-    val lakePath = new Path(lake)
-    val fs = stagedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    def leafDirs(root: Path, d: Int): Seq[Path] =
-      if (d == 0) Seq(root)
-      else
-        fs.listStatus(root)
-          .toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-          .flatMap(st => leafDirs(st.getPath, d - 1))
-
-    val swappedTargets = leafDirs(stagedPath, depth).map { src =>
-      // partition-relative path, e.g. data_source=chase/posting_month=2024-01
-      val rel = src.toUri.getPath.stripPrefix(stagedPath.toUri.getPath).stripPrefix("/")
-      val target = new Path(lakePath, rel)
-      if (fs.exists(target)) fs.delete(target, true)
-      fs.mkdirs(target.getParent)
-      fs.rename(src, target)
-      target
-    }
-    fs.delete(stagedPath, true)
-    if (swappedTargets.isEmpty) 0L
-    else readBase(spark, depth == 2, swappedTargets.map(_.toString): _*).count()
+    commit(spark, lakePath, lay, rows, pending)
   }
 
   /** Compact a lake: collapse every hive partition to ONE parquet file.
     * Merge-heavy ingest accretes small files (every upsert rewrites touched
     * partitions with the writer's task count); at 100 TB the file count —
     * not the byte count — is what kills scan planning and open() overhead.
-    * `parallelism` is the shuffle task count (hash on the partition cols
-    * sends each partition's rows to exactly one task ⇒ one output file per
-    * partition; partitions bigger than one task should handle, salt-split
-    * instead). Run as a periodic maintenance job; layout-only, never rows
-    * (spec-checked).
+    * Hashing on the partition columns sends each partition's rows to
+    * exactly one shuffle task (the session's shuffle partitions, which AQE
+    * may coalesce) ⇒ one output file per partition; partitions bigger than
+    * one task should handle, salt-split instead. Pending fast-insert delta
+    * rows fold in and the sidecar goes. Run as a periodic maintenance job;
+    * layout-only, never rows (spec-checked).
     */
   def compact(
       spark: SparkSession,
       lakePath: String,
-      parallelism: Int = 32,
       sortBy: Seq[String] = Nil): Long = {
-    val df = readLake(spark, lakePath) // folds any pending fast-insert delta
-    val partCols = df.schema.fieldNames.filter(Seq("data_source", "posting_month").contains)
-    val staged = lakePath + ".compacting"
+    val lay = layout(spark, lakePath)
+    val parts = lay.partCols.map(col)
     // `sortBy` clusters rows inside each rewritten file so parquet's
     // row-group min/max stats become selective: a date-range scan over a
     // posting_date-sorted partition skips every row group outside the
     // window instead of reading the partition end to end — the poor man's
     // z-order, and at 100 TB the difference between a range query reading
     // gigabytes and reading row-group headers.
-    val clustered = df.repartition(parallelism, partCols.toSeq.map(col): _*)
-    (if (sortBy.isEmpty) clustered
-     else clustered.sortWithinPartitions((partCols.toSeq ++ sortBy).map(col): _*))
-      .write.mode(SaveMode.Overwrite).partitionBy(partCols.toSeq: _*).parquet(staged)
-    val written = swapStagedPartitions(spark, staged, lakePath, partCols.length)
-    val dPath = new org.apache.hadoop.fs.Path(deltaDir(lakePath))
-    val fs = dPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dPath)) fs.delete(dPath, true) // folded above
-    written
+    val clustered = readView(spark, lakePath, lay).repartition(parts: _*)
+    commit(spark, lakePath, lay,
+      if (sortBy.isEmpty) clustered else clustered.sortWithinPartitions(parts ++ sortBy.map(col): _*),
+      None)
   }
 
   /** Sync-log audit append (K3, reference storage/mongo_repository.go:63-72):
@@ -408,25 +420,16 @@ object Lake {
   }
 
   /** Stats aggregation (A2, reference datalake/stats.go:9-44): per-file
-    * outcomes → counters + failure map.
+    * outcomes → counters + failure map, folded locally from one
+    * collect (one outcome row per input file).
     */
   def stats(outcomes: Dataset[FileOutcome]): IngestStats = {
-    val agg = outcomes
-      .groupBy(col("outcome"))
-      .count()
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .toMap
-    val failures = outcomes
-      .filter(col("outcome") === "failed")
-      .collect()
-      .map(o => o.file -> o.reason)
-      .toMap
+    val all = outcomes.collect()
     IngestStats(
-      total_files = agg.values.sum,
-      processed_files = agg.getOrElse("processed", 0L),
-      failed_files = agg.getOrElse("failed", 0L),
-      failures = failures)
+      total_files = all.length.toLong,
+      processed_files = all.count(_.outcome == "processed").toLong,
+      failed_files = all.count(_.outcome == "failed").toLong,
+      failures = all.filter(_.outcome == "failed").map(o => o.file -> o.reason).toMap)
   }
 
   /** End-to-end ingest (reference `ingest` command, main.go:64-91 +
@@ -499,11 +502,15 @@ object Lake {
     // raw rows vs valid rows per FILE; >0 raw && 0 valid ⇒ file failure
     // "no valid transactions" (P10, reference datalake.go:200-204). Keying
     // valid counts by _file (not data_source/account_id) keeps two files of
-    // the same account from cross-contaminating each other's outcome.
+    // the same account from cross-contaminating each other's outcome. One
+    // (file, source) aggregate of the valid rows gives both the per-file
+    // valid counts and the per-source upload counts of the sync log.
     val rawCounts = raw.groupBy(col("_file")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val validCounts = validDf.groupBy(col("_file")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val validGroups = validDf.groupBy(col("_file"), col("data_source")).count()
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val validCounts = validGroups.groupMapReduce(_._1)(_._3)(_ + _)
+    val uploaded = validGroups.groupMapReduce(_._2)(_._3)(_ + _).toSeq
 
     val outcomes = goodFiles.map { f =>
       val key = f.name.toLowerCase
@@ -518,18 +525,10 @@ object Lake {
       case (name, reason) => FileOutcome(name, "failed", reason, 0L)
     }
 
-    val uploaded: Seq[(String, Long)] =
-      if (validDf.isEmpty) Seq.empty
-      else {
-        upsertIntoLake(spark, validDf.drop("_file"), lakePath)
-        validDf
-          .groupBy(col("data_source"))
-          .count()
-          .collect()
-          .map(r => r.getString(0) -> r.getLong(1))
-          .toSeq
-      }
-    if (uploaded.nonEmpty) appendSyncLog(spark, syncLogPath, uploaded)
+    if (uploaded.nonEmpty) {
+      upsertIntoLake(spark, validDf.drop("_file"), lakePath)
+      appendSyncLog(spark, syncLogPath, uploaded)
+    }
 
     // Move-to-processed (K6, reference datalake.go:274-318): driver-side
     // rename after a successful write, only for successfully processed
@@ -537,12 +536,12 @@ object Lake {
     // HDFS, or an object store (where rename is copy+delete — still the
     // reference's semantics, not its syscall).
     processedDir.foreach { pd =>
-      val pdPath = new org.apache.hadoop.fs.Path(pd)
-      val fs = pdPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val pdPath = new Path(pd)
+      val fs = hfs(spark, pdPath)
       if (!fs.exists(pdPath)) fs.mkdirs(pdPath)
       outcomes.filter(_.outcome == "processed").foreach { o =>
-        val src = new org.apache.hadoop.fs.Path(unprocessedDir, o.file)
-        if (fs.exists(src)) fs.rename(src, new org.apache.hadoop.fs.Path(pdPath, o.file))
+        val src = new Path(unprocessedDir, o.file)
+        if (fs.exists(src)) fs.rename(src, new Path(pdPath, o.file))
       }
     }
 

@@ -221,20 +221,16 @@ object Synthetic {
     * a plain partitioned APPEND — the reference's InsertMany does not upsert,
     * so neither does this; use [[graft.lake.Lake.upsertIntoLake]] when merge
     * semantics are wanted. Like the upsert path, the lake's ON-DISK layout
-    * wins (one rule, `Lake.monthlyLayout`'s directory probe): appending into
+    * wins (one rule, `Lake.layout`'s directory probe): appending into
     * a month-partitioned lake adds `posting_month`, so leaf files never land
     * at mixed directory depths (which would break every later read of the
     * lake with conflicting-directory-structures).
     */
   def persistToLake(df: DataFrame, lakePath: String): Unit = {
-    val (out, parts) =
-      if (graft.lake.Lake.monthlyLayout(df.sparkSession, lakePath))
-        (df.withColumn("posting_month", graft.lake.Lake.postingMonth(col("posting_date"))),
-          Seq("data_source", "posting_month"))
-      else (df, Seq("data_source"))
-    out.write
+    val layout = graft.lake.Lake.layout(df.sparkSession, lakePath)
+    layout.derive(df).write
       .mode("append")
-      .partitionBy(parts: _*)
+      .partitionBy(layout.partCols: _*)
       .parquet(lakePath)
   }
 }

@@ -102,11 +102,11 @@ object StreamingIngest {
         // Unknown sources (null data_source) can't be routed to a partition;
         // they correspond to the reference's per-file extraction failure.
         val routed = valid.drop("_file").filter(col("data_source").isNotNull)
-        if (!routed.isEmpty) {
+        val counts = routed
+          .groupBy(col("data_source")).count()
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+        if (counts.nonEmpty) {
           Lake.upsertIntoLake(spark, routed, lakePath)
-          val counts = routed
-            .groupBy(col("data_source")).count()
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
           Lake.appendSyncLog(spark, syncLogPath, counts)
         }
         ()

@@ -2349,7 +2349,7 @@ object PerceptualDedup {
     * media twin of `compactSignatures`/`compactEmbAssign`, closing the
     * same two drift modes (stale rows of since-removed docs keep voting
     * near_dup_corpus_img; retried appends double rows). Same identity
-    * model, same non-atomic-rewrite caveat as the siblings.
+    * model as the siblings.
     */
   def compactMediaBands(bands: DataFrame, live: DataFrame): DataFrame =
     graft.lake.Lake.dedupKeepFirst(

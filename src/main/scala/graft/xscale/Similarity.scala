@@ -1105,10 +1105,8 @@ object Similarity {
     * still in `live` (column `vec_id` — an ID projection of the live
     * corpus, never its embeddings). Same identity model as the text
     * sidecar (ids name immutable content; revision = remove + re-admit
-    * under a new id) and the same non-atomic-rewrite caveat: the caller
-    * Overwrites the assign path, so make the cut storage-backed (ckpt
-    * with a dir) in production. Centroids/halves are untouched —
-    * compaction never retrains (x79's add-vs-train rule).
+    * under a new id). Centroids/halves are untouched — compaction never
+    * retrains (x79's add-vs-train rule).
     */
   def compactEmbAssign(assign: DataFrame, live: DataFrame): DataFrame =
     graft.lake.Lake.dedupKeepFirst(

@@ -29,6 +29,17 @@ class LakeSpec extends SparkSpec {
   private def asSet(df: org.apache.spark.sql.DataFrame): Set[Transaction] =
     df.as[Transaction].collect().toSet
 
+  /** After a lake write: no staging dir of any name is left beside or
+    * inside the lake, and the delta-consistent view is key-unique.
+    */
+  private def assertCommitted(lake: String, step: String): Unit = {
+    val leftovers = Seq(lake + ".staging", lake + ".compacting", lake + "/_delta_staging",
+      lake + "/_delta.staging").filter(new java.io.File(_).exists())
+    assert(leftovers.isEmpty, s"$step left $leftovers")
+    val keys = Lake.readLake(spark, lake).select(Transaction.mergeKey.head, Transaction.mergeKey.tail: _*)
+    assert(keys.count() === keys.distinct().count(), s"$step: merge key repeats")
+  }
+
   test("matched key: incoming replaces existing ($set upsert, mongo_repository.go:52)") {
     val existing = Seq(tx(amount = 1.0), tx(desc = "other", amount = 5.0)).toDF()
     val incoming = Seq(tx(amount = 9.9)).toDF()
@@ -194,11 +205,13 @@ class LakeSpec extends SparkSpec {
     val lake = new java.io.File(tmpDir("lakeDF"), "lake").getPath
     Lake.upsertIntoLake(
       spark, Seq(tx(source = "chase"), tx(source = "synthetic", acct = "0000")).toDF(), lake)
+    assertCommitted(lake, "first write")
     Lake.insertFast(spark, tx(source = "chase", desc = "dc", amount = 1.0), lake)
     Lake.insertFast(spark, tx(source = "synthetic", acct = "0000", desc = "ds", amount = 1.0), lake)
 
     // batch touches chase only and updates the same key as the chase delta row
     Lake.upsertIntoLake(spark, Seq(tx(source = "chase", desc = "dc", amount = 7.0)).toDF(), lake)
+    assertCommitted(lake, "merge leaving untouched-source delta")
 
     val base = spark.read.parquet(lake) // no delta fold
     assert(base.filter($"description" === "dc").select("amount").as[Double].collect().toSeq
@@ -208,14 +221,21 @@ class LakeSpec extends SparkSpec {
     val view = Lake.readLake(spark, lake)
     assert(view.filter($"description" === "ds").count() === 1L)
     assert(view.count() === 4L)
+
+    // a batch touching synthetic folds the last pending row: the sidecar goes
+    Lake.upsertIntoLake(spark, Seq(tx(source = "synthetic", acct = "0000", desc = "new")).toDF(), lake)
+    assertCommitted(lake, "merge folding every pending row")
+    assert(!new java.io.File(lake, "_delta").exists())
+    assert(Lake.readLake(spark, lake).count() === 5L)
   }
 
   test("compact folds pending delta into base and removes the sidecar") {
     val lake = new java.io.File(tmpDir("lakeDC"), "lake").getPath
     Lake.upsertIntoLake(spark, Seq(tx(amount = 1.0)).toDF(), lake)
     Lake.insertFast(spark, tx(desc = "delta", amount = 2.0), lake)
-    val n = Lake.compact(spark, lake, parallelism = 4)
+    val n = Lake.compact(spark, lake)
     assert(n === 2L)
+    assertCommitted(lake, "compaction")
     assert(!new java.io.File(lake, "_delta").exists())
     assert(asSet(spark.read.parquet(lake)
       .select("details", "posting_date", "description", "amount", "balance",
@@ -246,7 +266,7 @@ class LakeSpec extends SparkSpec {
     assert(view() === Set(tx(amount = 1.0), tx(desc = "other", amount = 5.0), tx(desc = "new", amount = 3.0)))
 
     crashedInsert()
-    assert(Lake.compact(spark, lake, parallelism = 4) === 3L)
+    assert(Lake.compact(spark, lake) === 3L)
     assert(!new java.io.File(lake, "_delta").exists(), "compaction removes the torn sidecar")
     assert(view() === Set(tx(amount = 1.0), tx(desc = "other", amount = 5.0), tx(desc = "new", amount = 3.0)))
   }
@@ -258,7 +278,7 @@ class LakeSpec extends SparkSpec {
       .map(d => tx(date = f"01/$d%02d/2024", desc = s"d$d", amount = d.toDouble))
     Lake.upsertIntoLake(spark, batch.toDF(), lake)
 
-    Lake.compact(spark, lake, parallelism = 4, sortBy = Seq("posting_date"))
+    Lake.compact(spark, lake, sortBy = Seq("posting_date"))
     val files = new java.io.File(lake, "data_source=chase").listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(files.length === 1) // compaction: one file per partition
@@ -283,5 +303,26 @@ class LakeSpec extends SparkSpec {
       .select("details", "posting_date", "description", "amount", "balance",
         "category", "txn_type", "check_or_slip_num", "data_source", "account_id"))
     assert(all === Set(tx(source = "chase", amount = 2.0), tx(source = "synthetic", acct = "0000")))
+  }
+
+  test("replace at depth 0 rewrites a dir from a plan that reads that dir, with no checkpoint") {
+    val dir = new java.io.File(tmpDir("replace0"), "state").getPath
+    (1 to 6).map(i => (i.toLong, s"v$i")).toDF("id", "v").write.parquet(dir)
+    // the reconcile shape: the new rows are a plan over the target itself
+    val leaves = Lake.replace(spark, spark.read.parquet(dir).filter($"id" % 2 === 0), dir)
+    assert(leaves === Seq(dir), "depth 0 swaps the whole dir")
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet
+      === Set((2L, "v2"), (4L, "v4"), (6L, "v6")))
+    assert(!new java.io.File(dir + ".staging").exists())
+  }
+
+  test("replace stages beside a target spelled with a trailing slash, never inside it") {
+    val dir = new java.io.File(tmpDir("replaceSlash"), "state").getPath
+    (1 to 4).map(i => (i.toLong, s"v$i")).toDF("id", "v").write.parquet(dir)
+    // a staging dir inside the target would go with the target's delete
+    val leaves = Lake.replace(spark, spark.read.parquet(dir).filter($"id" > 2), dir + "/")
+    assert(leaves === Seq(dir))
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet === Set((3L, "v3"), (4L, "v4")))
+    assert(!new java.io.File(dir + ".staging").exists() && !new java.io.File(dir, ".staging").exists())
   }
 }
