@@ -446,10 +446,6 @@ object Lake {
       processedDir: Option[String] = None,
       quarantinePath: Option[String] = None,
       log: graft.LogCtx = graft.LogCtx.default): IngestStats = {
-    import spark.implicits._
-    import graft.source.CsvIngest
-    import graft.transform.Canonicalize
-
     // readCsvDir needs CSV parser column pruning off for plan-independent
     // ragged-row detection; every action on `raw` happens inside this
     // method, so scope the session mutation here and restore on exit.

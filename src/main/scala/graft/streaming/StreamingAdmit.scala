@@ -57,10 +57,15 @@ import graft.xscale.{Admission, PerceptualDedup, Similarity}
   *
   * Scale posture (100 TB): sig state carries ~144 bytes/doc and is only
   * ever read two ways — an 8-byte key projection (exact leg) and a banded
-  * sig join whose batch side is broadcast (near leg); emb state is read as
-  * a keyed cell scan with the batch side broadcast; the corpus TEXT and
-  * EMBEDDINGS are never touched. Per micro-batch the decision is
-  * O(batch + candidates); state appends are admitted-docs-only.
+  * sig join (near leg). Nothing broadcasts that join's batch side: every
+  * micro-batch hash-shuffles the state's band rows from its file scan (a
+  * 5k-row state writes ~51 KB of shuffle per batch), so the near leg's
+  * cost grows with the state, not with the batch. Picking the join side
+  * from measured sizes is ROADMAP Direction 6; a hint here would also bind
+  * `Cli admit`, whose batch can be far larger than the state. Emb state is
+  * read as a keyed cell scan with the batch side broadcast; the corpus
+  * TEXT and EMBEDDINGS are never touched. State appends are
+  * admitted-docs-only.
   *
   * Write order (crash semantics): the report, then `outPath`, then the
   * kernel's state appends with the SIG state LAST — see [[Admission]] for
@@ -111,19 +116,17 @@ object StreamingAdmit {
     // the shingle state's SPACES govern which containment spaces the batch
     // decodes, compares and appends — meta-first (geometry validated, loud
     // failure on mismatch), layout fallback for meta-less states
+    val stateShingles = if (!ptrim) None else psigsPath.map(d => spark.read.parquet(s"$d/shingles"))
     val trimSpaces: Option[Seq[String]] =
-      if (!ptrim) None
-      else psigsPath.map(d =>
-        PerceptualDedup.stateShingleSpaces(
-          spark, s"$d/shmeta", spark.read.parquet(s"$d/shingles")))
+      for (d <- psigsPath; sh <- stateShingles)
+        yield PerceptualDedup.stateShingleSpaces(spark, s"$d/shmeta", sh)
     val mediaLeg = for (d <- psigsPath; bm <- batchMedia) yield {
       val stateBands = spark.read.parquet(s"$d/bands")
       Admission.mediaLeg(stateBands, PerceptualDedup.stateWide(spark, s"$d/meta", stateBands),
         bm, trimSpaces, checkpointDir)
     }
-    val trimLeg = for (spaces <- trimSpaces; d <- psigsPath; bm <- batchMedia)
-      yield Admission.trimLeg(
-        spark.read.parquet(s"$d/shingles"), spaces, bm, mediaLeg, checkpointDir)
+    val trimLeg = for (spaces <- trimSpaces; sh <- stateShingles; bm <- batchMedia)
+      yield Admission.trimLeg(sh, spaces, bm, mediaLeg, checkpointDir)
     val legs = Admission.legs(batch, embFrame, mediaLeg, trimLeg, checkpointDir)
     val stateSigs =
       if (fs.exists(sPath)) spark.read.parquet(statePath)

@@ -24,11 +24,17 @@ import org.apache.spark.sql.functions._
   * still-admitted docs, so within the corpus legs the containment leg
   * follows the band leg: a full near-dup keeps its stronger status.
   *
-  * Checkpoints: every leg frame is cut once (it feeds the fold, a strict
-  * pass and an append), and the final status frame is cut once, before
-  * any write — its lazy plan reads the state dirs, and an append landing
-  * first would make recomputation see the new files. No cut follows a
-  * single restatus. Pass `checkpointDir` in production so the cuts are
+  * Checkpoints: a frame that two or more queries read is cut once, and a
+  * frame that one query reads is not cut. With AQE a query runs its
+  * exchanges when it is planned, so an uncut frame with several consumers
+  * re-runs its state scans once per consumer. So every leg frame is cut
+  * once (it feeds the fold, a strict pass and an append); under `strict`
+  * the corpus-leg status is cut once (the text CC, the emb pass and the
+  * final cut all read it, and each would otherwise redo the exact key
+  * join, the banded near join and every corpus restatus); and the final
+  * status frame is cut once, before any write — its lazy plan reads the
+  * state dirs, and an append landing first would make recomputation see
+  * the new files. Pass `checkpointDir` in production so the cuts are
   * storage-backed: the default localCheckpoint recomputes on executor
   * loss, which for the status cut would re-read state the appends advance.
   *
@@ -213,15 +219,17 @@ object Admission {
       st0, f.filter(col("near_emb")).select(col("vec_id").as("doc_id")), "near_dup_corpus_emb"))
     val stMed = legs.media.fold(stEmb)(m =>
       byModality(stEmb, m.frame.filter(col("near_med")), _.corpusStatus))
-    val stC = legs.trim.fold(stMed)(t => bySpace(
+    val stCorpus = legs.trim.fold(stMed)(t => bySpace(
       stMed, t.frame.filter(col("near_trim")), _.corpusStatus, PerceptualDedup.RcropCorpusStatus))
     val st =
-      if (!strict) stC
+      if (!strict) stCorpus
       else {
         // the strict passes close the leak the corpus legs cannot see: two
         // near-dups arriving TOGETHER both clear them. Each is a CC over
         // the still-admitted docs' already-computed leg rows (zero extra
-        // text, embedding or media access); losers re-status near_dup_batch*
+        // text, embedding or media access); losers re-status near_dup_batch*.
+        // Three queries read the corpus-leg status, so it is cut once
+        val stC = DedupClusters.ckpt(stCorpus, checkpointDir)
         val stS0 = Dedup.admitStrict(stC, legs.sigs, checkpointDir = checkpointDir)
         val stS1 = legs.emb.fold(stS0) { f =>
           val losers = Similarity.admitEmbStrictLosers(

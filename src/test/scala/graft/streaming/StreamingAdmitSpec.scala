@@ -772,4 +772,62 @@ class StreamingAdmitSpec extends SparkSpec {
       "admitted" -> 4L, "dup_exact_corpus" -> 1L,
       "near_dup_corpus" -> 1L, "near_dup_batch" -> 1L))
   }
+
+  test("a strict batch reads the sig state once: the strict passes reuse the corpus-leg status") {
+    // every record a stage reads comes from a state (the batch is an
+    // in-memory frame) or from a cut of the call's own batch-sized frames.
+    // One classification scans the sig state twice (the exact leg's key
+    // projection and the near leg's band rows); if the strict passes
+    // rebuilt the corpus-leg status each would scan it twice more
+    val base = tmpDir("stream-admit-reads")
+    val stateRows = 3000L
+    val corpus = graft.source.Synthetic.powerlawDocs(spark, stateRows).select("doc_id", "text", "source")
+    val statePath = new java.io.File(base, "state").getPath
+    graft.xscale.Dedup.dedupSignatures(corpus).write.parquet(statePath)
+    val corpusEmb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .filter(col("vec_id") < 100)
+    val esigs = new java.io.File(base, "esigs").getPath
+    graft.xscale.Similarity.admitEmbeddingBootstrapAuto(corpusEmb, esigs, trainSample = 0.1)
+    val embRows = spark.read.parquet(s"$esigs/assign").count()
+    val texts = corpus.filter(col("doc_id") < 4).select("text").as[String].collect()
+    // exact re-arrivals of four state docs, an intra-batch near pair and
+    // two fresh docs; 5000001/5000002 share one vector (an emb pair)
+    val batch = (texts.zipWithIndex.map { case (t, i) => (5000010L + i, t, "s") } ++ Seq(
+      (5000001L, novel1, "s"), (5000002L, novel1 + " zq", "s"),
+      (5000003L, novel2, "s"), (5000004L, novel3, "s"))).toSeq.toDF("doc_id", "text", "source")
+    val batchEmb = corpusEmb.filter(col("vec_id") === 3L)
+      .select(expr("transform(embedding, x -> -x)").as("embedding"))
+      .crossJoin(Seq(5000001L, 5000003L).toDF("vec_id"))
+      .select("vec_id", "embedding")
+
+    val read = new java.util.concurrent.atomic.AtomicLong()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        Option(e.stageInfo.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "marker"))
+          done.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val admitted = try {
+      val out = StreamingAdmit.admit(spark, batch, statePath, strict = true,
+        esigsPath = Some(esigs), batchEmb = Some(batchEmb))
+        .select("doc_id").as[Long].collect().toSet
+      // the listener bus delivers in order: every stage of the call
+      // completes before this marker job starts
+      spark.sparkContext.setJobDescription("marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(done.await(10, java.util.concurrent.TimeUnit.SECONDS), "marker job never arrived")
+      out
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(admitted === Set(5000001L, 5000004L))
+    val records = read.get()
+    val once = 2 * stateRows + embRows
+    info(s"records read: $records (sig state $stateRows rows, emb assign $embRows rows)")
+    assert(records >= once, s"read $records records, fewer than one pass over the states ($once)")
+    assert(records < once + stateRows,
+      s"read $records records: the sig state is scanned more than once per classification")
+  }
 }
