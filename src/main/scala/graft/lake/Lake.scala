@@ -20,7 +20,11 @@ import graft.model.{FileOutcome, IngestStats, SyncLog, Transaction}
   * collection-per-source, mongo_repository.go:55), and every write — the
   * first one, an upsert, a compaction, the `_delta` settle — commits
   * through one stage-and-swap routine ([[replace]]) that swaps in only the
-  * partitions the new rows cover, never the whole lake.
+  * partitions the new rows cover, never the whole lake. Two writes append
+  * in place instead and rewrite nothing: [[insertFast]]'s one-file
+  * `_delta` append, and `Synthetic.persistToLake`
+  * (`generate-synthetic-data --persist`), a partitioned append kept for
+  * parity with the reference's InsertMany.
   *
   * Every read the lake makes of its own files passes a known schema
   * ([[lakeSchema]], [[deltaSchema]]): the schema is fixed by
@@ -446,9 +450,10 @@ object Lake {
       processedDir: Option[String] = None,
       quarantinePath: Option[String] = None,
       log: graft.LogCtx = graft.LogCtx.default): IngestStats = {
-    // readCsvDir needs CSV parser column pruning off for plan-independent
-    // ragged-row detection; every action on `raw` happens inside this
-    // method, so scope the session mutation here and restore on exit.
+    // The CSV parse (`CsvIngest.parse`) turns CSV parser column pruning off
+    // for plan-independent ragged-row detection; every action on the parsed
+    // rows happens inside this method, so scope the session mutation here
+    // and restore on exit.
     val pruneKey = "spark.sql.csv.parser.columnPruning.enabled"
     val prevPrune = spark.conf.getOption(pruneKey)
     try {
@@ -463,6 +468,53 @@ object Lake {
     }
   }
 
+  /** The per-batch ingest core, shared by [[ingestDirectory]] and
+    * `StreamingIngest`: canonicalize `raw` (the parsed CSV rows with
+    * `_file`/source lineage), write the rejected rows to `quarantinePath`
+    * when given, merge the valid rows into the lake and append the sync
+    * log. The annotated frame is persisted, so the CSV is parsed once: one
+    * aggregate over it gives the per-file counts and the per-source upload
+    * counts, and the quarantine and the upsert read it too. Persisting all
+    * of its columns keeps the ragged-row drop independent of what a later
+    * plan projects. Rows with no `data_source` (a file name that yields no
+    * source) are not routed. Returns (raw rows, valid rows) per lowercased
+    * `_file`.
+    */
+  private[graft] def ingestBatch(
+      spark: SparkSession,
+      raw: DataFrame,
+      lakePath: String,
+      syncLogPath: String,
+      quarantinePath: Option[String]): Map[String, (Long, Long)] = {
+    import graft.transform.Canonicalize
+    val ann = Canonicalize.annotate(raw).persist()
+    try {
+      // (file, source, (raw rows, valid rows)); a file's source comes from
+      // its name, so each file is one group
+      val groups = ann.groupBy(col("_file"), col("data_source"))
+        .agg(count(lit(1)), count_if(col("_reject_reason").isNull))
+        .collect().map(r => (r.getString(0), Option(r.getString(1)), (r.getLong(2), r.getLong(3))))
+
+      // Rejected rows (the reference logs-and-skips, datalake.go:220-239) go
+      // to a quarantine table when configured — at scale, silently dropping
+      // rows is how a lake rots; (file, reason) lineage makes skips auditable.
+      quarantinePath.foreach { qp =>
+        Canonicalize.rejectedRows(ann)
+          .withColumn("quarantined_at", current_timestamp())
+          .write.mode(SaveMode.Append).parquet(qp)
+      }
+
+      val uploaded = groups.collect { case (_, Some(ds), (_, validN)) => ds -> validN }
+        .groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 > 0L).toSeq
+      if (uploaded.nonEmpty) {
+        val routed = Canonicalize.validRows(ann).filter(col("data_source").isNotNull)
+        upsertIntoLake(spark, routed.drop("_file"), lakePath)
+        appendSyncLog(spark, syncLogPath, uploaded)
+      }
+      groups.map { case (file, _, n) => file -> n }.toMap
+    } finally ann.unpersist()
+  }
+
   private def ingestDirectoryInner(
       spark: SparkSession,
       unprocessedDir: String,
@@ -473,7 +525,6 @@ object Lake {
       log: graft.LogCtx): IngestStats = {
     import spark.implicits._
     import graft.source.CsvIngest
-    import graft.transform.Canonicalize
 
     // Listing + strict-quote validation run once here; quote-corrupt files
     // are whole-file failures like the reference (csv/csv.go:75-79 →
@@ -481,37 +532,16 @@ object Lake {
     val files = CsvIngest.listCsvFiles(spark, unprocessedDir)
     val quoteFailed = CsvIngest.quoteErrors(spark, files)
     val goodFiles = files.filterNot(f => quoteFailed.contains(f.name))
-    val raw = CsvIngest.readCsvFiles(spark, goodFiles)
-    val (validWithFile, rejected) = Canonicalize.split(spark, raw)
-    val validDf = validWithFile.cache()
+    val counts = ingestBatch(
+      spark, CsvIngest.readCsvFiles(spark, goodFiles), lakePath, syncLogPath, quarantinePath)
 
-    // Rejected rows (the reference logs-and-skips, datalake.go:220-239) go
-    // to a quarantine table when configured — at scale, silently dropping
-    // rows is how a lake rots; (file, reason) lineage makes skips auditable.
-    quarantinePath.foreach { qp =>
-      rejected
-        .withColumn("quarantined_at", current_timestamp())
-        .write.mode(SaveMode.Append).parquet(qp)
-    }
-
-    // Per-file accounting, both sides keyed by the `_file` lineage column:
-    // raw rows vs valid rows per FILE; >0 raw && 0 valid ⇒ file failure
-    // "no valid transactions" (P10, reference datalake.go:200-204). Keying
-    // valid counts by _file (not data_source/account_id) keeps two files of
-    // the same account from cross-contaminating each other's outcome. One
-    // (file, source) aggregate of the valid rows gives both the per-file
-    // valid counts and the per-source upload counts of the sync log.
-    val rawCounts = raw.groupBy(col("_file")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val validGroups = validDf.groupBy(col("_file"), col("data_source")).count()
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val validCounts = validGroups.groupMapReduce(_._1)(_._3)(_ + _)
-    val uploaded = validGroups.groupMapReduce(_._2)(_._3)(_ + _).toSeq
-
+    // Per-file outcomes, keyed by the `_file` lineage column: >0 raw && 0
+    // valid ⇒ file failure "no valid transactions" (P10, reference
+    // datalake.go:200-204). Keying by _file (not data_source/account_id)
+    // keeps two files of the same account from cross-contaminating each
+    // other's outcome.
     val outcomes = goodFiles.map { f =>
-      val key = f.name.toLowerCase
-      val rawN = rawCounts.getOrElse(key, 0L)
-      val validN = validCounts.getOrElse(key, 0L)
+      val (rawN, validN) = counts.getOrElse(f.name.toLowerCase, (0L, 0L))
       if (rawN > 0L && validN == 0L)
         FileOutcome(f.name, "failed", "no valid transactions", 0L)
       else FileOutcome(f.name, "processed", "", validN)
@@ -519,11 +549,6 @@ object Lake {
       case (name, reason) => FileOutcome(name, "failed", reason, 0L)
     } ++ CsvIngest.skippedFiles(spark, unprocessedDir).map {
       case (name, reason) => FileOutcome(name, "failed", reason, 0L)
-    }
-
-    if (uploaded.nonEmpty) {
-      upsertIntoLake(spark, validDf.drop("_file"), lakePath)
-      appendSyncLog(spark, syncLogPath, uploaded)
     }
 
     // Move-to-processed (K6, reference datalake.go:274-318): driver-side
@@ -552,7 +577,6 @@ object Lake {
     log.info(
       s"ingest done total=${st.total_files} processed=${st.processed_files} " +
         s"failed=${st.failed_files}")
-    validDf.unpersist()
     st
   }
 

@@ -3,7 +3,6 @@ package graft.source
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -65,7 +64,7 @@ object CsvIngest {
     * scan (SURVEY §2.1 S5). Unknown sources yield null data_source and are
     * routed to failure stats, mirroring ErrUnableToExtractInfo.
     */
-  def withSourceInfo(df: DataFrame): DataFrame = {
+  private def withSourceInfo(df: DataFrame): DataFrame = {
     val fname = fileNameCol
     val chaseAcct = regexp_extract(fname, "chase(\\d{4})", 1)
     df.withColumn("_file", fname)
@@ -227,23 +226,47 @@ object CsvIngest {
     * [[quoteErrors]] themselves and use [[readCsvFiles]] (as
     * `Lake.ingestDirectory` does, so the validation scan runs once).
     */
-  def readCsvDir(spark: SparkSession, dir: String, multiLine: Boolean = true): DataFrame = {
+  def readCsvDir(spark: SparkSession, dir: String): DataFrame = {
     val files = listCsvFiles(spark, dir)
     val bad = quoteErrors(spark, files)
-    readCsvFiles(spark, files.filterNot(f => bad.contains(f.name)), multiLine)
+    readCsvFiles(spark, files.filterNot(f => bad.contains(f.name)))
   }
 
-  /** The grouped distributed parse over pre-listed (and pre-validated) files.
+  /** The grouped distributed parse over pre-listed (and pre-validated)
+    * files: one [[parse]] per distinct header, unioned by name.
+    */
+  def readCsvFiles(spark: SparkSession, files: Seq[CsvFile]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val groups: Map[Seq[String], Seq[CsvFile]] =
+      files
+        .flatMap { f =>
+          val p = new Path(f.path)
+          readHeader(p.getFileSystem(conf), p).map(h => (h, f))
+        }
+        .groupBy(_._1)
+        .map { case (h, fs) => (h, fs.map(_._2)) }
+    val parts = groups.toSeq.map { case (header, fs) =>
+      parse(spark, header) { (options, schema) =>
+        spark.read.options(options).schema(schema).csv(fs.map(_.path): _*)
+      }
+    }
+    if (parts.isEmpty) emptyRaw(spark)
+    else parts.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** The one CSV parse, shared by the batch reader ([[readCsvFiles]]) and
+    * the stream reader (`StreamingIngest.readCsvStream`): `load` opens the
+    * files with the given reader options and schema, and the result gets
+    * the ragged-row filter and the `_file`/source lineage columns.
     *
     * Semantics replicated from the reference:
-    *  - header lowercased (csv/csv.go:64-67)
+    *  - header lowercased (csv/csv.go:64-67); duplicate names deduped as
+    *    in [[dedupHeader]]
     *  - quoted fields may contain embedded newlines (RFC 4180 — Go's
-    *    `encoding/csv` default). `multiLine = true` (the parity default)
-    *    makes Spark parse them as one record; the trade-off is that a
-    *    multiLine file is read by a single task (no intra-file splits).
-    *    Bank exports are many small files, so parallelism across files is
-    *    what matters; pass `multiLine = false` for newline-free corpora
-    *    where intra-file splitting is worth more.
+    *    `encoding/csv` default), so `multiLine` is on; the trade-off is
+    *    that a file is read by a single task (no intra-file splits). Bank
+    *    exports are many small files, so parallelism across files is what
+    *    matters.
     *  - ragged rows (fewer fields than header) DROPPED, rows with EXTRA
     *    fields KEPT with the extras ignored — the reference reads with
     *    `FieldsPerRecord = -1` (csv/csv.go:53) and only skips
@@ -257,10 +280,8 @@ object CsvIngest {
     *  - schema never inferred: all columns string (csv parser emits
     *    map[string]string, csv/parser.go:6-13)
     */
-  def readCsvFiles(
-      spark: SparkSession,
-      files: Seq[CsvFile],
-      multiLine: Boolean = true): DataFrame = {
+  private[graft] def parse(spark: SparkSession, header: Seq[String])(
+      load: (Map[String, String], StructType) => DataFrame): DataFrame = {
     // With CSV column pruning (default on), univocity parses only the
     // indexes a plan needs, so a ragged row is only *detected* when the
     // pruned subset happens to include a missing index — `count()`-shaped
@@ -268,46 +289,30 @@ object CsvIngest {
     // (per-file valid/raw accounting) needs one answer, so pin pruning off
     // for this session; ingest projects nearly every column anyway.
     spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val groups: Map[Seq[String], Seq[CsvFile]] =
-      files
-        .flatMap { f =>
-          val p = new Path(f.path)
-          readHeader(p.getFileSystem(conf), p).map(h => (h, f))
-        }
-        .groupBy(_._1)
-        .map { case (h, fs) => (h, fs.map(_._2)) }
-    val parts = groups.toSeq.map { case (header, fs) =>
-      val cols = dedupHeader(header)
-      val schema = StructType(
-        (cols :+ "_corrupt_record").map(StructField(_, StringType)))
-      val df = spark.read
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .option("multiLine", multiLine.toString)
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(schema)
-        .csv(fs.map(_.path): _*)
-        // reference semantics (csv/csv.go:82-84 with FieldsPerRecord=-1):
-        // drop only rows SHORTER than the header; keep extra-field rows,
-        // extras ignored. A null tail column can't distinguish "missing
-        // field" from "empty field" (both parse to null), so the raw
-        // corrupt line's fields are counted with a CSV-aware expression.
-        // The last disjunct is always false; it exists so aggressive
-        // column pruning (e.g. a bare count()) still references a real
-        // data column — Spark rejects scans whose only referenced column
-        // is the corrupt-record column [QUERY_ONLY_CORRUPT_RECORD_COLUMN],
-        // and the optimizer can't eliminate a length() on live data.
-        .filter(
-          col("_corrupt_record").isNull ||
-            org.apache.spark.sql.graftnative.api
-              .csvFieldCount(col("_corrupt_record")) >= cols.size.toLong ||
-            length(coalesce(col(cols.head), lit(""))) < 0)
-        .drop("_corrupt_record")
-      withSourceInfo(df)
-    }
-    if (parts.isEmpty) emptyRaw(spark)
-    else parts.reduce(_.unionByName(_, allowMissingColumns = true))
+    val cols = dedupHeader(header)
+    val options = Map(
+      "header" -> "true",
+      "mode" -> "PERMISSIVE",
+      "multiLine" -> "true",
+      "columnNameOfCorruptRecord" -> "_corrupt_record")
+    val df = load(options, StructType((cols :+ "_corrupt_record").map(StructField(_, StringType))))
+      // reference semantics (csv/csv.go:82-84 with FieldsPerRecord=-1):
+      // drop only rows SHORTER than the header; keep extra-field rows,
+      // extras ignored. A null tail column can't distinguish "missing
+      // field" from "empty field" (both parse to null), so the raw
+      // corrupt line's fields are counted with a CSV-aware expression.
+      // The last disjunct is always false; it exists so aggressive
+      // column pruning (e.g. a bare count()) still references a real
+      // data column — Spark rejects scans whose only referenced column
+      // is the corrupt-record column [QUERY_ONLY_CORRUPT_RECORD_COLUMN],
+      // and the optimizer can't eliminate a length() on live data.
+      .filter(
+        col("_corrupt_record").isNull ||
+          org.apache.spark.sql.graftnative.api
+            .csvFieldCount(col("_corrupt_record")) >= cols.size.toLong ||
+          length(coalesce(col(cols.head), lit(""))) < 0)
+      .drop("_corrupt_record")
+    withSourceInfo(df)
   }
 
   /** Duplicate lowercased header names: last occurrence wins in the

@@ -220,7 +220,9 @@ object Synthetic {
     * GenerateAndPersistSyntheticData → InsertMany, synthetic/data.go:66-105):
     * a plain partitioned APPEND — the reference's InsertMany does not upsert,
     * so neither does this; use [[graft.lake.Lake.upsertIntoLake]] when merge
-    * semantics are wanted. Like the upsert path, the lake's ON-DISK layout
+    * semantics are wanted. It appends in place, outside the lake's
+    * stage-and-swap commit (`Lake.replace`), which every rewrite of the
+    * lake goes through. Like the upsert path, the lake's ON-DISK layout
     * wins (one rule, `Lake.layout`'s directory probe): appending into
     * a month-partitioned lake adds `posting_month`, so leaf files never land
     * at mixed directory depths (which would break every later read of the

@@ -1,18 +1,20 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.lake.Lake
 import graft.source.CsvIngest
-import graft.transform.Canonicalize
 
 /** Incremental variant of the ingest pipeline (SURVEY §1.4, §7.2 step 7):
   * the reference's batch directory scan + move-to-processed
   * (datalake/client.go:33-79, datalake/datalake.go:274-318) re-expressed as
-  * file-source Structured Streaming, where:
+  * file-source Structured Streaming. It shares the batch path's CSV parse
+  * (`CsvIngest.parse`: reader options, `multiLine`, ragged-row filter,
+  * source lineage) and its per-batch core (`Lake.ingestBatch`: canonicalize,
+  * merge-upsert, sync-log append), so a file ingests the same rows batch or
+  * streamed. It differs only in how files are found and archived, and in
+  * taking its header up front:
   *
   *  - new CSV files landing in the unprocessed dir are discovered by the
   *    stream source (no external scheduler re-running a batch job),
@@ -23,17 +25,17 @@ import graft.transform.Canonicalize
   *    (and therefore archives) batch N's files when batch N+1 starts, so
   *    archival lags one micro-batch; the checkpoint's file log already
   *    prevents re-reads in the meantime,
-  *  - the merge-upsert + sync-log append run per micro-batch via
-  *    `foreachBatch` (MERGE isn't expressible as a pure streaming sink).
+  *  - unlike the batch path (which probes each file's header), a stream
+  *    needs ONE schema up front: callers pass the expected lowercased
+  *    header columns (defaults to the reference's canonical export header).
+  *
+  * Rejected rows are dropped (the stream keeps no quarantine), and rows of
+  * a file whose name yields no source are not routed.
   *
   * Scale posture: the streaming source lists incrementally and checkpoints
   * consumed files, so a 100 TB backlog is worked through in bounded
-  * micro-batches (`maxFilesPerTrigger`) instead of one giant job; state is
-  * only the file log, no aggregation state grows unboundedly.
-  *
-  * Unlike the batch path (which probes each file's header), a stream needs
-  * ONE schema up front: callers pass the expected lowercased header columns
-  * (defaults to the reference's canonical export header).
+  * micro-batches (at most 1000 files each) instead of one giant job;
+  * state is only the file log, no aggregation state grows unboundedly.
   */
 object StreamingIngest {
 
@@ -52,35 +54,22 @@ object StreamingIngest {
       spark: SparkSession,
       unprocessedDir: String,
       archiveDir: String,
-      header: Seq[String] = defaultHeader,
-      maxFilesPerTrigger: Int = 1000): DataFrame = {
-    // same ragged-row semantics as the batch path (csv.go:82-84 via
-    // PERMISSIVE + corrupt-line field count): short rows drop, extra-field
-    // rows keep — a file must ingest identically batch or streamed
-    spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
-    val schema = StructType((header :+ "_corrupt_record").map(StructField(_, StringType)))
-    val raw = spark.readStream
-      .option("header", "true")
-      .option("pathGlobFilter", "*.{csv,CSV}") // S3 file-type predicate
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("cleanSource", "archive")
-      .option("sourceArchiveDir", archiveDir)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(schema)
-      .csv(unprocessedDir)
-      .filter(
-        col("_corrupt_record").isNull ||
-          org.apache.spark.sql.graftnative.api
-            .csvFieldCount(col("_corrupt_record")) >= header.size.toLong ||
-          length(coalesce(col(header.head), lit(""))) < 0)
-      .drop("_corrupt_record")
-    CsvIngest.withSourceInfo(raw)
-  }
+      header: Seq[String] = defaultHeader): DataFrame =
+    CsvIngest.parse(spark, header) { (options, schema) =>
+      spark.readStream
+        .options(options)
+        .option("pathGlobFilter", "*.{csv,CSV}") // S3 file-type predicate
+        .option("maxFilesPerTrigger", 1000)
+        .option("cleanSource", "archive")
+        .option("sourceArchiveDir", archiveDir)
+        .schema(schema)
+        .csv(unprocessedDir)
+    }
 
-  /** Full incremental pipeline: stream → canonicalize → per-micro-batch
-    * merge into the lake + sync-log append. Returns the running query;
-    * callers own its lifecycle (`processAllAvailable`/`awaitTermination`).
+  /** Full incremental pipeline: stream → per-micro-batch ingest core
+    * (canonicalize, merge into the lake, sync-log append). Returns the
+    * running query; callers own its lifecycle
+    * (`processAllAvailable`/`awaitTermination`).
     */
   def run(
       spark: SparkSession,
@@ -90,27 +79,13 @@ object StreamingIngest {
       syncLogPath: String,
       checkpointDir: String,
       header: Seq[String] = defaultHeader,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val stream = readCsvStream(spark, unprocessedDir, archiveDir, header)
-    stream.writeStream
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    readCsvStream(spark, unprocessedDir, archiveDir, header).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Canonicalize inside foreachBatch: `batch` is a plain DataFrame,
-        // so the whole batch-path algebra (P4-P10) is reused verbatim.
-        val (valid, _) = Canonicalize.split(spark, batch)
-        // Unknown sources (null data_source) can't be routed to a partition;
-        // they correspond to the reference's per-file extraction failure.
-        val routed = valid.drop("_file").filter(col("data_source").isNotNull)
-        val counts = routed
-          .groupBy(col("data_source")).count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-        if (counts.nonEmpty) {
-          Lake.upsertIntoLake(spark, routed, lakePath)
-          Lake.appendSyncLog(spark, syncLogPath, counts)
-        }
+        Lake.ingestBatch(spark, batch, lakePath, syncLogPath, quarantinePath = None)
         ()
       }
       .start()
-  }
 }

@@ -83,26 +83,36 @@ object Canonicalize {
       col("account_id")) ++ extra: _*)
   }
 
-  /** Full canonicalization: returns (valid rows with `_file` lineage kept
-    * for per-file accounting, rejected rows with reason + file lineage for
-    * the quarantine/stats path — the reference logs-and-skips,
-    * datalake.go:220-239). The valid side carries the canonical Transaction
-    * columns plus `_file`; drop `_file` before writing to the lake.
+  /** Valid side of an [[annotate]]d frame: the canonical Transaction
+    * columns plus `_file` lineage for per-file accounting; drop `_file`
+    * before writing to the lake.
     */
-  def split(spark: SparkSession, raw: DataFrame): (DataFrame, DataFrame) = {
-    val ann = annotate(raw)
-    val validAnn = ann.filter(col("_reject_reason").isNull)
-    val valid = project(validAnn, Seq(col("_file")))
-    // the rejected side carries the WHOLE raw row as JSON (schema varies per
-    // header group, so serialize) — a quarantine that only counts skips
-    // can't be audited or re-ingested after a fix
-    val rawCols = raw.columns.filterNot(_.startsWith("_")).toSeq
-    val rejected = ann
+  def validRows(annotated: DataFrame): DataFrame =
+    project(annotated.filter(col("_reject_reason").isNull), Seq(col("_file")))
+
+  /** Rejected side of an [[annotate]]d frame, with reason + file lineage
+    * for the quarantine/stats path (the reference logs-and-skips,
+    * datalake.go:220-239). It carries the WHOLE raw row as JSON (schema
+    * varies per header group, so serialize) — a quarantine that only
+    * counts skips can't be audited or re-ingested after a fix.
+    */
+  def rejectedRows(annotated: DataFrame): DataFrame = {
+    // every column annotate adds, and every lineage column, starts with `_`
+    val rawCols = annotated.columns.filterNot(_.startsWith("_")).toSeq
+    annotated
       .filter(col("_reject_reason").isNotNull)
       .select(
         col("_file"),
         col("_reject_reason").as("reason"),
         to_json(struct(rawCols.map(col): _*)).as("raw_row"))
-    (valid, rejected)
+  }
+
+  /** Full canonicalization: ([[validRows]], [[rejectedRows]]) of one
+    * [[annotate]]. Both sides are lazy over `raw`; a caller that runs both
+    * persists the annotated frame instead (as `Lake.ingestBatch` does).
+    */
+  def split(spark: SparkSession, raw: DataFrame): (DataFrame, DataFrame) = {
+    val ann = annotate(raw)
+    (validRows(ann), rejectedRows(ann))
   }
 }

@@ -1100,10 +1100,17 @@ object DataPrep {
     * context window — wasted compute + memorization risk).
     */
   def packHygiene(docs: DataFrame, budget: Int = PackBudget,
+      shards: Int = PackShards): DataFrame =
+    packHygieneOrd(docs.withColumn("ord", ordCol), budget, shards)
+
+  /** [[packHygiene]] with a caller-supplied `ord` column (docs must carry
+    * doc_id, source, text, ord), the way [[packAssignmentsOrd]] takes one.
+    */
+  def packHygieneOrd(docs: DataFrame, budget: Int = PackBudget,
       shards: Int = PackShards): DataFrame = {
     val keyed = docs.select(col("doc_id"), col("source"),
       h60(Dedup.normText(col("text"))).as("key"))
-    packAssignments(docs, budget, shards)
+    packAssignmentsOrd(docs, budget, shards)
       .join(keyed, "doc_id")
       .groupBy("shard", "pack")
       .agg(
@@ -2728,17 +2735,7 @@ object DataPrep {
         .unionByName(docs.filter(col("doc_id") % 31 === 0).select(
           (col("doc_id") + 2000000L).as("doc_id"),
           lit("mirror").as("source"), col("text"), ordCol.as("ord")))
-      val keyed = aug.select(
-        col("doc_id"), col("source"),
-        XHash.h60(Dedup.normText(col("text"))).as("key"))
-      packAssignmentsOrd(aug)
-        .join(keyed, "doc_id")
-        .groupBy("shard", "pack")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          countDistinct("source").as("n_sources"),
-          (count(lit(1)) - countDistinct("key")).as("dup_excess"))
-        .orderBy("shard", "pack")
+      packHygieneOrd(aug).orderBy("shard", "pack")
     },
 
     // ----- x69: pack repair (the remediation x66's audit calls for) -----

@@ -109,6 +109,64 @@ class IngestDirectorySpec extends SparkSpec {
     assert(rows.map(_.description).toSeq === Seq("MEMO line1\nline2"))
   }
 
+  test("ingestDirectory parses each CSV once: quarantine, accounting and upsert read one persisted parse") {
+    // R data rows in F files into an empty lake, quarantine on. Records
+    // read: the quote check reads one record per file (F), the parse reads
+    // R, and the commit counts the rows it wrote (one per valid row).
+    // Each extra parse of the CSVs would read R more
+    val root = tmpDir("ingestOnce")
+    val in = new java.io.File(root, "in"); in.mkdirs()
+    val lake = new java.io.File(root, "lake").getPath
+    val sync = new java.io.File(root, "sync").getPath
+    val quarantine = new java.io.File(root, "quarantine").getPath
+    val perFile = 500
+    val acct = Seq(1001, 1002, 1003)
+    for (a <- acct) {
+      // every 10th row has an invalid date and goes to the quarantine
+      val rows = (0 until perFile).map { i =>
+        val date = if (i % 10 == 0) "notadate" else f"01/${i % 28 + 1}%02d/2024"
+        s"DEBIT,$date,ROW $a-$i,-$i.00,ACH_DEBIT,0.00,"
+      }
+      writeFile(in, s"chase${a}_jan.csv",
+        ("Details,Posting Date,Description,Amount,Type,Balance,Check or Slip #" +: rows).mkString("\n"))
+    }
+    val files = acct.size.toLong
+    val rawRows = files * perFile
+    val validRows = files * (perFile - perFile / 10)
+
+    val read = new java.util.concurrent.atomic.AtomicLong()
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        Option(e.stageInfo.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "marker")) done.countDown()
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val stats = try {
+      val st = Lake.ingestDirectory(spark, in.getPath, lake, sync, quarantinePath = Some(quarantine))
+      // the listener bus delivers in order: every stage of the call
+      // completes before this marker job starts
+      spark.sparkContext.setJobDescription("marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(done.await(10, java.util.concurrent.TimeUnit.SECONDS), "marker job never arrived")
+      st
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    assert(stats.processed_files === files && stats.failed_files === 0)
+    assert(spark.read.parquet(lake).count() === validRows)
+    assert(spark.read.parquet(quarantine).count() === rawRows - validRows)
+    val records = read.get()
+    val once = rawRows + files + validRows
+    info(s"records read $records (one parse: $once), jobs ${jobs.get()}")
+    assert(records >= once, s"read $records records")
+    // a second parse would read R more; cached-block reads add a handful
+    assert(records < once + rawRows / 2, s"read $records records: the CSVs were parsed more than once")
+  }
+
   test("compact: collapses partitions to one file each; rows unchanged") {
     val lake = new java.io.File(tmpDir("cmp"), "lake").getPath
     // three upserts -> several small files per partition

@@ -1,6 +1,9 @@
 package graft.streaming
 
+import org.apache.spark.sql.functions.sum
+
 import graft.SparkSpec
+import graft.lake.Lake
 import graft.model.Transaction
 
 /** End-to-end streaming ingest: files stream in, get canonicalized, merged
@@ -69,5 +72,46 @@ class StreamingIngestSpec extends SparkSpec {
     val syncRows = spark.read.parquet(sync).collect()
     assert(syncRows.length === 2)
     assert(syncRows.forall(_.getAs[String]("collection_name") == "transactions_chase"))
+  }
+
+  test("batch and stream ingest the same files to the same lake rows and upload counts") {
+    val root = tmpDir("streamParity")
+    val files = Seq(
+      // a quoted memo with an embedded newline, a ragged row (valid except
+      // for its missing fields) and an invalid date
+      "chase4444_jan.csv" ->
+        ("Details,Posting Date,Description,Amount,Type,Balance,Check or Slip #\n" +
+          "DEBIT,01/15/2024,\"MEMO line1\nline2\",-4.50,ACH_DEBIT,995.50,\n" +
+          "CREDIT,01/16/2024,PAYROLL,2000.00,ACH_CREDIT,2995.50,\n" +
+          "DEBIT,01/17/2024,SHORT,-1.00\n" +
+          "DEBIT,notadate,BAD DATE,-2.00,ACH_DEBIT,1.00,"),
+      "chase5555_jan.csv" ->
+        ("Details,Posting Date,Description,Amount,Type,Balance,Check or Slip #\n" +
+          "DEBIT,01/18/2024,GROCER,-30.25,ACH_DEBIT,70.00,\n" +
+          "DEBIT,01/19/2024,\"SPLIT, WITH COMMA\",-5.00,ACH_DEBIT,65.00,"))
+    def setUp(name: String): (String, String, String) = {
+      val in = new java.io.File(root, s"$name-in"); in.mkdirs()
+      files.foreach { case (f, body) => writeFile(in, f, body) }
+      (in.getPath, new java.io.File(root, s"$name-lake").getPath, new java.io.File(root, s"$name-sync").getPath)
+    }
+
+    val (batchIn, batchLake, batchSync) = setUp("batch")
+    Lake.ingestDirectory(spark, batchIn, batchLake, batchSync)
+    val (streamIn, streamLake, streamSync) = setUp("stream")
+    val q = StreamingIngest.run(spark, streamIn, new java.io.File(root, "archive").getPath,
+      streamLake, streamSync, new java.io.File(root, "ckpt").getPath)
+    q.processAllAvailable()
+    q.stop()
+
+    def lakeRows(lake: String) = spark.read.parquet(lake).as[Transaction].collect().toSet
+    def uploaded(sync: String) = spark.read.parquet(sync)
+      .groupBy("collection_name").agg(sum("records_uploaded"))
+      .as[(String, Long)].collect().toMap
+    val batchRows = lakeRows(batchLake)
+    assert(batchRows.map(_.description) ===
+      Set("MEMO line1\nline2", "PAYROLL", "GROCER", "SPLIT, WITH COMMA"))
+    assert(lakeRows(streamLake) === batchRows)
+    assert(uploaded(batchSync) === Map("transactions_chase" -> 4L))
+    assert(uploaded(streamSync) === uploaded(batchSync))
   }
 }
