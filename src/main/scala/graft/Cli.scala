@@ -525,14 +525,18 @@ object Cli {
       // join, bootstrap write = up to three text scans at 100 TB). A
       // crash after this write retries into the sidecar-present branch
       // with identical statuses — the sidecar IS the corpus state.
+      // the sidecar is read with the schema it was written with (the batch
+      // sigs'), so the read runs no footer-inference job
+      def readSidecar(d: String) =
+        spark.read.schema(xscale.Dedup.dedupSignatures(batch).schema).parquet(d)
       val corpusSigs = (sidecar, flags.sigsDir) match {
         // sidecar present: the corpus is NOT touched at all (the path may
         // even have been retired — only the state matters)
-        case (Some(d), _) => spark.read.parquet(d)
+        case (Some(d), _) => readSidecar(d)
         case (None, Some(d)) =>
           xscale.Dedup.dedupSignatures(spark.read.parquet(corpusPath))
             .write.mode(SaveMode.Overwrite).parquet(d)
-          spark.read.parquet(d)
+          readSidecar(d)
         case _ => xscale.Dedup.dedupSignatures(spark.read.parquet(corpusPath))
       }
       // --emb/--bemb: the EMBEDDING leg (vec_id == doc_id, the corpus
@@ -546,7 +550,10 @@ object Cli {
       // corpus assignment under the dir, later runs classify with ZERO
       // corpus-embedding access (the --emb path may be retired) and the
       // finally-admitted vectors' state rows append after classification.
-      val embFrame = for (ce <- flags.embPath; be <- flags.bembPath) yield {
+      // Each leg resolves here to a BUILD the kernel runs later, on its leg
+      // thread; the state rewrites and bootstraps stay here, serial, before
+      // any leg is built.
+      val embBuild = for (ce <- flags.embPath; be <- flags.bembPath) yield {
         val bEmb = spark.read.parquet(be)
         flags.esigsDir match {
           case Some(d) =>
@@ -568,9 +575,9 @@ object Cli {
               Similarity.admitEmbeddingBootstrapAuto(
                 spark.read.parquet(ce), d,
                 trainSample = 0.1, checkpointDir = flags.ckptDir)
-            Similarity.admitEmbeddingSigs(spark, d, bEmb, checkpointDir = flags.ckptDir)
+            () => Similarity.admitEmbeddingSigs(spark, d, bEmb, checkpointDir = flags.ckptDir)
           case None =>
-            Similarity.admitEmbeddingFrame(
+            () => Similarity.admitEmbeddingFrame(
               spark.read.parquet(ce), bEmb,
               trainSample = 0.1, checkpointDir = flags.ckptDir)
         }
@@ -609,12 +616,14 @@ object Cli {
           case _ => PerceptualDedup.AdmitShingleSpaces
         })
       val bMedia = flags.bmediaPath.map(spark.read.parquet(_))
-      val media = for (cm <- flags.pmediaPath; bm <- bMedia) yield {
+      val mediaBuild = for (cm <- flags.pmediaPath; bm <- bMedia) yield {
         def corpusHash(wide: Boolean) = PerceptualDedup
           .mediaHashFrame(spark.read.parquet(cm), wide).filter(col("decoded"))
           .select(col("doc_id").as("cv_id"), col("mod"), col("bands"))
         def corpusWide() = PerceptualDedup.mediaWideFor(spark.read.parquet(cm).count())
-        val (corpusBands, wide) = flags.psigsDir match {
+        def build(corpusBands: DataFrame, wide: Boolean) =
+          Admission.mediaLeg(corpusBands, wide, bm, trimSpaces, flags.ckptDir)
+        flags.psigsDir match {
           case Some(d) =>
             val bandsPath = s"$d/bands"
             val metaPath = s"$d/meta"
@@ -631,16 +640,19 @@ object Cli {
               PerceptualDedup.writeBandMeta(spark, metaPath, w)
               corpusHash(w).write.mode(SaveMode.Overwrite).parquet(bandsPath)
             }
-            val st = spark.read.parquet(bandsPath)
-            (st, PerceptualDedup.stateWide(spark, metaPath, st))
+            () => {
+              val st = spark.read.parquet(bandsPath)
+              build(st, PerceptualDedup.stateWide(spark, metaPath, st))
+            }
           case None =>
             // cut ONCE: admitMediaCompare references the frame twice
             // (candidate + verify sides) — uncut, the full corpus media
             // would be decoded twice per run
-            val w = corpusWide()
-            (DedupClusters.ckpt(corpusHash(w), flags.ckptDir), w)
+            () => {
+              val w = corpusWide()
+              build(DedupClusters.ckpt(corpusHash(w), flags.ckptDir), w)
+            }
         }
-        Admission.mediaLeg(corpusBands, wide, bm, trimSpaces, flags.ckptDir)
       }
       // --ptrim: the CONTAINMENT leg — the blind spot the band leg leaves
       // open by design, on all FOUR shingle spaces: a re-cut/excerpt of
@@ -671,7 +683,7 @@ object Cli {
       // classic and wide band states unchanged; --compact reconciles it
       // (left_semi on live ids + DISTINCT — shingle rows are pure
       // values, exact duplicates are always append replays).
-      val trim = for (spaces <- trimSpaces; cm <- flags.pmediaPath; bm <- bMedia) yield {
+      val trimBuild = for (spaces <- trimSpaces; cm <- flags.pmediaPath; bm <- bMedia) yield {
         // the scan emits exactly the spaces the state records (a new
         // bootstrap: AdmitShingleSpaces incl. the rescale spaces --
         // SCALED img fingerprints under rs<k>, the x156 state role)
@@ -694,33 +706,34 @@ object Cli {
               PerceptualDedup.writeShingleMeta(spark, s"$d/shmeta")
               corpusShingleScan().write.mode(SaveMode.Overwrite).parquet(shPath)
             }
-            spark.read.parquet(shPath)
+            () => spark.read.parquet(shPath)
           case None =>
-            DedupClusters.ckpt(corpusShingleScan(), flags.ckptDir)
+            () => DedupClusters.ckpt(corpusShingleScan(), flags.ckptDir)
         }
-        Admission.trimLeg(corpusSh, spaces, bm, media, flags.ckptDir)
+        (media: Option[Admission.MediaLeg]) =>
+          Admission.trimLeg(corpusSh(), spaces, bm, media, flags.ckptDir)
       }
-      // the batch side of every leg, the status fold and the state
-      // appends are the admission kernel's (shared with StreamingAdmit)
-      val legs = Admission.legs(batch, embFrame, media, trim, flags.ckptDir)
-      val st = Admission.classify(corpusSigs, legs, flags.strict, flags.ckptDir)
-      st.groupBy("status")
-        .agg(count(lit(1)).as("n_docs"), expr("bit_xor(key)").as("checksum"))
-        .orderBy("status")
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/report")
+      // the batch side of every leg, the status fold and the writes are
+      // the admission kernel's (shared with StreamingAdmit)
+      val legs = Admission.legs(corpusSigs, batch, embBuild, mediaBuild, trimBuild, flags.ckptDir)
+      val st = Admission.classify(legs, flags.strict, flags.ckptDir)
       val admittedIds = st.filter(col("status") === "admitted").select("doc_id")
-      batch.join(admittedIds, "doc_id")
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/admitted")
-      // sidecar updates: append ONLY the admitted docs' state, in the
-      // kernel's crash order (the bootstrap already wrote the corpus state
-      // above, pre-classify). A retry after a crash re-runs the whole
-      // admit, and the classification is idempotent against the
-      // already-appended state: re-admitted docs classify
-      // dup_exact_corpus and append nothing.
-      Admission.appendState(admittedIds, legs, flags.sigsDir, flags.esigsDir, flags.psigsDir)
+      // the report, the admitted rows and the sidecar updates (ONLY the
+      // admitted docs' state), in the kernel's crash order (the bootstrap
+      // already wrote the corpus state above, pre-classify). A retry after
+      // a crash re-runs the whole admit, and the classification is
+      // idempotent against the already-appended state: re-admitted docs
+      // classify dup_exact_corpus and append nothing.
+      Admission.appendState(admittedIds, legs, flags.sigsDir, flags.esigsDir, flags.psigsDir, Seq(
+        () => st.groupBy("status")
+          .agg(count(lit(1)).as("n_docs"), expr("bit_xor(key)").as("checksum"))
+          .orderBy("status")
+          .coalesce(1)
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$outDir/report"),
+        () => batch.join(admittedIds, "doc_id")
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$outDir/admitted")))
       val byStatus = spark.read.parquet(s"$outDir/report").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       def n(s: String): Long = byStatus.getOrElse(s, 0L)

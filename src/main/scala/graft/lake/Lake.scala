@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.model.{FileOutcome, IngestStats, SyncLog, Transaction}
+import graft.source.CsvIngest
 
 /** The datalake write path: composite-key merge-upsert, per-source
   * partitioned tables, sync-log audit append and job stats — the reference's
@@ -452,19 +453,11 @@ object Lake {
       log: graft.LogCtx = graft.LogCtx.default): IngestStats = {
     // The CSV parse (`CsvIngest.parse`) turns CSV parser column pruning off
     // for plan-independent ragged-row detection; every action on the parsed
-    // rows happens inside this method, so scope the session mutation here
-    // and restore on exit.
-    val pruneKey = "spark.sql.csv.parser.columnPruning.enabled"
-    val prevPrune = spark.conf.getOption(pruneKey)
-    try {
+    // rows happens inside this method, so scope the session change here.
+    CsvIngest.restoringColumnPruning(spark) {
       ingestDirectoryInner(
         spark, unprocessedDir, lakePath, syncLogPath, processedDir, quarantinePath,
         log.withField("dir", unprocessedDir))
-    } finally {
-      prevPrune match {
-        case Some(v) => spark.conf.set(pruneKey, v)
-        case None    => spark.conf.unset(pruneKey)
-      }
     }
   }
 
@@ -524,7 +517,6 @@ object Lake {
       quarantinePath: Option[String],
       log: graft.LogCtx): IngestStats = {
     import spark.implicits._
-    import graft.source.CsvIngest
 
     // Listing + strict-quote validation run once here; quote-corrupt files
     // are whole-file failures like the reference (csv/csv.go:75-79 →

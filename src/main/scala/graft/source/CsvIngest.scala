@@ -225,6 +225,9 @@ object CsvIngest {
     * are EXCLUDED — callers needing their failure reasons run
     * [[quoteErrors]] themselves and use [[readCsvFiles]] (as
     * `Lake.ingestDirectory` does, so the validation scan runs once).
+    * The frame is lazy and [[parse]] turns CSV column pruning off on the
+    * session; keep it off until the frame's last action has run (see
+    * [[restoringColumnPruning]]).
     */
   def readCsvDir(spark: SparkSession, dir: String): DataFrame = {
     val files = listCsvFiles(spark, dir)
@@ -233,7 +236,9 @@ object CsvIngest {
   }
 
   /** The grouped distributed parse over pre-listed (and pre-validated)
-    * files: one [[parse]] per distinct header, unioned by name.
+    * files: one [[parse]] per distinct header, unioned by name. Lazy, like
+    * [[readCsvDir]]: the session's CSV column pruning must stay off while
+    * the frame runs.
     */
   def readCsvFiles(spark: SparkSession, files: Seq[CsvFile]): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -252,6 +257,23 @@ object CsvIngest {
     }
     if (parts.isEmpty) emptyRaw(spark)
     else parts.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  private val ColumnPruningKey = "spark.sql.csv.parser.columnPruning.enabled"
+
+  /** Run `body`, then put the session's CSV column-pruning setting back as
+    * it was before: [[parse]] turns pruning off on the session, so a
+    * caller whose parsed frames have all run (or been handed to a stream
+    * that cloned the session) by the end of `body` scopes that change with
+    * this.
+    */
+  private[graft] def restoringColumnPruning[T](spark: SparkSession)(body: => T): T = {
+    val prev = spark.conf.getOption(ColumnPruningKey)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(ColumnPruningKey, v)
+      case None    => spark.conf.unset(ColumnPruningKey)
+    }
   }
 
   /** The one CSV parse, shared by the batch reader ([[readCsvFiles]]) and
@@ -288,7 +310,7 @@ object CsvIngest {
     // plans would keep rows that full scans drop. Ingest correctness
     // (per-file valid/raw accounting) needs one answer, so pin pruning off
     // for this session; ingest projects nearly every column anyway.
-    spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
+    spark.conf.set(ColumnPruningKey, "false")
     val cols = dedupHeader(header)
     val options = Map(
       "header" -> "true",

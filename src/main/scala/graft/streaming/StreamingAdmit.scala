@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.xscale.{Admission, PerceptualDedup, Similarity}
+import graft.xscale.{Admission, Dedup, PerceptualDedup, Similarity}
 
 /** Streaming ADMISSION — x74's four-status decision rule (plus the strict
   * intra-batch near-dup refinement) as a continuous ingest path: each
@@ -67,19 +67,21 @@ import graft.xscale.{Admission, PerceptualDedup, Similarity}
   * TEXT and EMBEDDINGS are never touched. State appends are
   * admitted-docs-only.
   *
-  * Write order (crash semantics): the report, then `outPath`, then the
-  * kernel's state appends with the SIG state LAST — see [[Admission]] for
-  * why a crash in any window replays into duplication, never loss
-  * (fault-injection-pinned in the spec).
+  * Write order (crash semantics): the report first and alone (the output
+  * when there is no report), then `outPath` and the kernel's other state
+  * appends at once, and the SIG state LAST, after all of them have
+  * succeeded — see [[Admission]] for why a crash in any window replays
+  * into duplication, never loss (fault-injection-pinned in the spec), and
+  * for what else of one call runs at once.
   */
 object StreamingAdmit {
 
   /** Classify one (micro-)batch against the signature state at `statePath`
     * (and the emb/media/containment states when their paths are set) and
-    * return the admitted rows (original columns). Writes, in order: the
-    * per-status (batch_id, status, n_docs, checksum) report rows (when
-    * `reportPath` is set), the admitted rows to `outPath` (when set), then
-    * the admitted docs' state rows ([[Admission.appendState]]). `batchEmb`
+    * return the admitted rows (original columns). Writes the per-status
+    * (batch_id, status, n_docs, checksum) report rows (when `reportPath`
+    * is set), the admitted rows to `outPath` (when set) and the admitted
+    * docs' state rows, in [[Admission.appendState]]'s order. `batchEmb`
     * carries the batch's vectors (vec_id == doc_id, the admit convention);
     * docs without a vector pass the emb leg unflagged. Doc ids must be
     * GLOBALLY UNIQUE across the stream AND disjoint from the state's
@@ -111,8 +113,8 @@ object StreamingAdmit {
     require(!ptrim || (psigsPath.isDefined && batchMedia.isDefined),
       "ptrim = true requires psigsPath and batchMedia — without them every " +
         "re-cut video would be admitted unflagged (silent zero recall)")
-    val embFrame = for (d <- esigsPath; be <- batchEmb)
-      yield Similarity.admitEmbeddingSigs(spark, d, be, checkpointDir = checkpointDir)
+    val embBuild = for (d <- esigsPath; be <- batchEmb)
+      yield () => Similarity.admitEmbeddingSigs(spark, d, be, checkpointDir = checkpointDir)
     // the shingle state's SPACES govern which containment spaces the batch
     // decodes, compares and appends — meta-first (geometry validated, loud
     // failure on mismatch), layout fallback for meta-less states
@@ -120,30 +122,32 @@ object StreamingAdmit {
     val trimSpaces: Option[Seq[String]] =
       for (d <- psigsPath; sh <- stateShingles)
         yield PerceptualDedup.stateShingleSpaces(spark, s"$d/shmeta", sh)
-    val mediaLeg = for (d <- psigsPath; bm <- batchMedia) yield {
+    val mediaBuild = for (d <- psigsPath; bm <- batchMedia) yield () => {
       val stateBands = spark.read.parquet(s"$d/bands")
       Admission.mediaLeg(stateBands, PerceptualDedup.stateWide(spark, s"$d/meta", stateBands),
         bm, trimSpaces, checkpointDir)
     }
-    val trimLeg = for (spaces <- trimSpaces; sh <- stateShingles; bm <- batchMedia)
-      yield Admission.trimLeg(sh, spaces, bm, mediaLeg, checkpointDir)
-    val legs = Admission.legs(batch, embFrame, mediaLeg, trimLeg, checkpointDir)
-    val stateSigs =
-      if (fs.exists(sPath)) spark.read.parquet(statePath)
-      else legs.sigs.limit(0)
-    val st = Admission.classify(stateSigs, legs, strict, checkpointDir)
-    reportPath.foreach { p =>
+    val trimBuild = for (spaces <- trimSpaces; sh <- stateShingles; bm <- batchMedia)
+      yield (media: Option[Admission.MediaLeg]) =>
+        Admission.trimLeg(sh, spaces, bm, media, checkpointDir)
+    // the state's own schema (the batch sigs'): no footer-inference job
+    val stateSigs = Dedup.dedupSignatures(batch)
+    val legs = Admission.legs(
+      if (fs.exists(sPath)) spark.read.schema(stateSigs.schema).parquet(statePath)
+      else stateSigs.limit(0),
+      batch, embBuild, mediaBuild, trimBuild, checkpointDir)
+    val st = Admission.classify(legs, strict, checkpointDir)
+    val admittedIds = st.filter(col("status") === "admitted").select("doc_id")
+    val admitted = batch.join(admittedIds, "doc_id")
+    val report = reportPath.map(p => () =>
       st.groupBy("status")
         .agg(count(lit(1)).as("n_docs"), expr("bit_xor(key)").as("checksum"))
         .withColumn("batch_id", lit(batchId))
         .select("batch_id", "status", "n_docs", "checksum")
-        .write.mode(SaveMode.Append).parquet(p)
-    }
-    val admittedIds = st.filter(col("status") === "admitted").select("doc_id")
-    val admitted = batch.join(admittedIds, "doc_id")
-    // output FIRST, then the kernel's state appends (sig state last)
-    outPath.foreach(p => admitted.write.mode(SaveMode.Append).parquet(p))
-    Admission.appendState(admittedIds, legs, Some(statePath), esigsPath, psigsPath)
+        .write.mode(SaveMode.Append).parquet(p))
+    val output = outPath.map(p => () => admitted.write.mode(SaveMode.Append).parquet(p))
+    Admission.appendState(admittedIds, legs, Some(statePath), esigsPath, psigsPath,
+      (report ++ output).toSeq)
     admitted
   }
 

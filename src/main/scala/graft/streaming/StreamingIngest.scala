@@ -69,7 +69,10 @@ object StreamingIngest {
   /** Full incremental pipeline: stream → per-micro-batch ingest core
     * (canonicalize, merge into the lake, sync-log append). Returns the
     * running query; callers own its lifecycle
-    * (`processAllAvailable`/`awaitTermination`).
+    * (`processAllAvailable`/`awaitTermination`). The parse's CSV
+    * column-pruning setting is put back on `spark` once the query has
+    * started: the query runs on its own clone of the session, taken at
+    * start, which keeps pruning off.
     */
   def run(
       spark: SparkSession,
@@ -80,12 +83,14 @@ object StreamingIngest {
       checkpointDir: String,
       header: Seq[String] = defaultHeader,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    readCsvStream(spark, unprocessedDir, archiveDir, header).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Lake.ingestBatch(spark, batch, lakePath, syncLogPath, quarantinePath = None)
-        ()
-      }
-      .start()
+    CsvIngest.restoringColumnPruning(spark) {
+      readCsvStream(spark, unprocessedDir, archiveDir, header).writeStream
+        .option("checkpointLocation", checkpointDir)
+        .trigger(trigger)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          Lake.ingestBatch(spark, batch, lakePath, syncLogPath, quarantinePath = None)
+          ()
+        }
+        .start()
+    }
 }

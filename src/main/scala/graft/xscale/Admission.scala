@@ -1,6 +1,12 @@
 package graft.xscale
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.{Failure, Try}
+
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** The ADMISSION kernel — x74's decision rule, written once. `Cli admit`
@@ -8,8 +14,9 @@ import org.apache.spark.sql.functions._
   * micro-batch) are its two callers. Each resolves the CORPUS side of the
   * legs its own way (the verb: sidecar read, `--compact` rewrite,
   * bootstrap or live scan; the stream: already-bootstrapped states) and
-  * hands the kernel frames; the kernel builds the batch side of every leg,
-  * folds the statuses and appends the state. The report-checksum parity
+  * hands the kernel the corpus sig frame and one build per other leg; the
+  * kernel runs the builds, folds the statuses and runs the caller's writes
+  * and the state appends. The report-checksum parity
   * specs pin the two callers against each other.
   *
   * Leg order: ALL corpus-vs-batch legs (text, emb, media bands,
@@ -28,7 +35,9 @@ import org.apache.spark.sql.functions._
   * frame that one query reads is not cut. With AQE a query runs its
   * exchanges when it is planned, so an uncut frame with several consumers
   * re-runs its state scans once per consumer. So every leg frame is cut
-  * once (it feeds the fold, a strict pass and an append); under `strict`
+  * once (it feeds the fold, a strict pass and an append), the text corpus
+  * leg's status too (the cut runs its sig-state scans while the other
+  * legs build, see Concurrency); under `strict`
   * the corpus-leg status is cut once (the text CC, the emb pass and the
   * final cut all read it, and each would otherwise redo the exact key
   * join, the banded near join and every corpus restatus); and the final
@@ -38,20 +47,39 @@ import org.apache.spark.sql.functions._
   * storage-backed: the default localCheckpoint recomputes on executor
   * loss, which for the status cut would re-read state the appends advance.
   *
-  * Write order (crash semantics): the caller's own output (the verb's
-  * admitted table, the stream's `outPath`) lands first; [[appendState]]
-  * then writes the emb assign rows, the media bands, the containment
-  * shingles, and the SIG state LAST. The sig append is the write that
-  * flips a replayed batch to dup_exact_corpus (admitted set empty), so
-  * every write that must still happen on replay has to precede it: a
-  * crash anywhere before the sig append replays into duplicated output
-  * rows and duplicated value-identical state rows (detectable by doc_id,
-  * collapsed by `--compact`). The reverse order is silent LOSS — output
-  * rows that never land, or a state permanently missing the batch's rows,
-  * so later re-posts of that content are never flagged (fault-injection
-  * pinned in `StreamingAdmitSpec`). Report, output and state are still
-  * separate writes — exactly-once across all of them needs a
-  * transactional table format underneath (the lake-swap caveat).
+  * Concurrency: the kernel overlaps work that shares nothing, and no
+  * caller creates threads. [[legs]] cuts the text corpus leg (the sig
+  * state's key and band scans) on the caller's thread while the batch side
+  * of every other leg builds at once on its own leg thread (the emb leg;
+  * the media leg, then the containment leg on the same thread, since it
+  * reuses the media leg's batch shingles), and joins them all before
+  * [[classify]] folds any status, so the fold order, the strict waterfall
+  * and every status are what a serial run gives. [[appendState]] runs the
+  * FIRST write alone: it materializes the final status cut before any
+  * append can change the state files its lazy plan reads. Every other
+  * write before the sig append then runs at once, and the sig append
+  * starts only after all of them have succeeded. Leg and write threads
+  * carry the caller's Spark local properties (job group, description) and
+  * active session, so cancelling the caller's job group cancels their
+  * jobs too; a failure surfaces as its own exception only after every
+  * sibling has finished, and no kernel thread outlives the call.
+  *
+  * Write order (crash semantics): the caller's own tables (the verb's
+  * report and admitted table, the stream's report and `outPath`) and the
+  * emb assign rows, the media bands and the containment shingles all land
+  * before the SIG state, which is appended LAST, on its own. The sig
+  * append is the write that flips a replayed batch to dup_exact_corpus
+  * (admitted set empty), so every write that must still happen on replay
+  * has to precede it: a crash anywhere before the sig append replays into
+  * duplicated output rows and duplicated value-identical state rows
+  * (detectable by doc_id, collapsed by `--compact`). The reverse order is
+  * silent LOSS — output rows that never land, or a state permanently
+  * missing the batch's rows, so later re-posts of that content are never
+  * flagged (fault-injection pinned in `StreamingAdmitSpec` and
+  * `AdmissionSpec`). The writes before the sig append are unordered
+  * among themselves: each is one a replay repeats. Report, output and
+  * state are still separate writes — exactly-once across all of them
+  * needs a transactional table format underneath (the lake-swap caveat).
   */
 object Admission {
 
@@ -79,29 +107,47 @@ object Admission {
       batchShingles: DataFrame,
       legacy: Boolean)
 
-  /** One batch's legs: its dedup signatures (the text leg — they feed the
-    * classification, the strict pass and the sig append) and the optional
-    * emb, media and containment frames.
+  /** One batch's built legs: its dedup signatures (they feed the text
+    * leg, the strict pass and the sig append), the text corpus leg's
+    * (doc_id, key, status) frame ([[Dedup.incrementalDedupSigs]] against
+    * the corpus sigs) and the optional emb, media and containment legs.
     */
   final case class Legs(
       sigs: DataFrame,
+      text: DataFrame,
       emb: Option[DataFrame],
       media: Option[MediaLeg],
       trim: Option[TrimLeg])
 
-  /** Cut the batch signatures and the emb frame (`vec_id == doc_id`, from
-    * [[Similarity.admitEmbeddingSigs]] or [[Similarity.admitEmbeddingFrame]])
-    * and bundle them with the media and containment legs.
+  /** Build every leg of `batch`, overlapped as documented on this object:
+    * the text corpus leg against `corpusSigs` is cut on the caller's
+    * thread while the leg builds run on leg threads — `emb` (a frame with
+    * `vec_id == doc_id`, from [[Similarity.admitEmbeddingSigs]] or
+    * [[Similarity.admitEmbeddingFrame]]; cut here), `media` ([[mediaLeg]])
+    * and then `trim` ([[trimLeg]], handed the built media leg). Returns
+    * when every build has finished. A build must not write: the callers'
+    * bootstraps and state rewrites happen before this call.
     */
   def legs(
+      corpusSigs: DataFrame,
       batch: DataFrame,
-      emb: Option[DataFrame],
-      media: Option[MediaLeg],
-      trim: Option[TrimLeg],
-      checkpointDir: Option[String]): Legs =
-    Legs(
-      DedupClusters.ckpt(Dedup.dedupSignatures(batch), checkpointDir),
-      emb.map(DedupClusters.ckpt(_, checkpointDir)), media, trim)
+      emb: Option[() => DataFrame],
+      media: Option[() => MediaLeg],
+      trim: Option[Option[MediaLeg] => TrimLeg],
+      checkpointDir: Option[String]): Legs = {
+    def cut(df: DataFrame) = DedupClusters.ckpt(df, checkpointDir)
+    // lazy vals are initialized once, under a lock, on whichever thread
+    // forces them first; `together` forces each on its own thread
+    lazy val sigs = cut(Dedup.dedupSignatures(batch))
+    lazy val text = cut(Dedup.incrementalDedupSigs(corpusSigs, sigs))
+    lazy val embFrame = emb.map(b => cut(b()))
+    lazy val mediaLeg = media.map(_())
+    lazy val trimLeg = trim.map(_(mediaLeg))
+    together(batch.sparkSession, Seq(() => text) ++
+      emb.map(_ => () => embFrame) ++
+      (if (media.isDefined || trim.isDefined) Some(() => (mediaLeg, trimLeg)) else None))
+    Legs(sigs, text, embFrame, mediaLeg, trimLeg)
+  }
 
   /** The batch side of the media leg against `corpusBands` (cv_id,
     * [mod,] bands): payloads hashed once (real decode, modality-detected;
@@ -184,14 +230,13 @@ object Admission {
       batchSh, legacy)
   }
 
-  /** Classify the batch against `corpusSigs` — the four-status cascade
-    * ([[Dedup.incrementalDedupSigs]]), then each corpus leg, then (under
+  /** Classify the batch from its built [[legs]] — the text leg's
+    * four-status cascade, then each other corpus leg, then (under
     * `strict`) the text, emb, media and containment intra-batch passes,
     * in the leg order documented on this object. Returns the final
     * (doc_id, key, status) frame, cut once.
     */
   def classify(
-      corpusSigs: DataFrame,
       legs: Legs,
       strict: Boolean,
       checkpointDir: Option[String]): DataFrame = {
@@ -214,7 +259,7 @@ object Admission {
         },
         hits.filter(col("mod").startsWith("rs")).select("doc_id").distinct(), rcrop)
 
-    val st0 = Dedup.incrementalDedupSigs(corpusSigs, legs.sigs)
+    val st0 = legs.text
     val stEmb = legs.emb.fold(st0)(f => Dedup.restatus(
       st0, f.filter(col("near_emb")).select(col("vec_id").as("doc_id")), "near_dup_corpus_emb"))
     val stMed = legs.media.fold(stEmb)(m =>
@@ -261,37 +306,73 @@ object Admission {
     DedupClusters.ckpt(st, checkpointDir)
   }
 
-  /** Append the admitted docs' rows to every state the caller keeps, in
-    * the crash order documented on this object: emb assign (`esigsDir`),
-    * media bands and containment shingles (`psigsDir`), then the sig
-    * state (`sigsDir`) LAST. Each append conforms to its state's layout —
-    * legacy states keep their original columns, since mixed schemas in
-    * one parquet dir would read layout-dependent. Centroids never change
-    * on append (retraining is a re-bootstrap, x79's add-vs-train rule).
+  /** Write the caller's own tables (`writes`, in the caller's order: the
+    * report, then the admitted rows) and append the admitted docs' rows to
+    * every state the caller keeps, in the order documented on this object:
+    * the first write alone (it materializes the status cut), then every
+    * other write at once — the rest of `writes`, the emb assign rows
+    * (`esigsDir`), the media bands and the containment shingles
+    * (`psigsDir`) — and the sig state (`sigsDir`) LAST, once they have all
+    * succeeded. Each append conforms to its state's layout — legacy states
+    * keep their original columns, since mixed schemas in one parquet dir
+    * would read layout-dependent. Centroids never change on append
+    * (retraining is a re-bootstrap, x79's add-vs-train rule).
     */
   def appendState(
       admittedIds: DataFrame,
       legs: Legs,
       sigsDir: Option[String],
       esigsDir: Option[String],
-      psigsDir: Option[String]): Unit = {
-    def append(df: DataFrame, path: String): Unit =
-      df.write.mode(SaveMode.Append).parquet(path)
-    for (f <- legs.emb; d <- esigsDir)
-      append(f.join(admittedIds, col("vec_id") === col("doc_id"))
-        .select(col("vec_id").as("cv_id"), col("cid"), col("cv"), col("cn")), s"$d/assign")
-    for (m <- legs.media; d <- psigsDir)
-      append(m.frame.join(admittedIds, "doc_id").select(
-        col("doc_id").as("cv_id") +:
-          (if (m.legacy) Seq(col("bands")) else Seq(col("mod"), col("bands"))): _*),
-        s"$d/bands")
-    for (t <- legs.trim; d <- psigsDir)
-      append(t.batchShingles.join(admittedIds, "doc_id").select(
-        col("doc_id").as("cv_id") +:
-          ((if (t.legacy) Nil else Seq(col("mod"))) ++
-            Seq(col("s1"), col("q1"), col("s2"), col("q2"))): _*),
-        s"$d/shingles")
+      psigsDir: Option[String],
+      writes: Seq[() => Unit]): Unit = {
+    def append(df: DataFrame, path: String): () => Unit =
+      () => df.write.mode(SaveMode.Append).parquet(path)
+    val beforeSigs = writes ++
+      (for (f <- legs.emb; d <- esigsDir)
+        yield append(f.join(admittedIds, col("vec_id") === col("doc_id"))
+          .select(col("vec_id").as("cv_id"), col("cid"), col("cv"), col("cn")), s"$d/assign")) ++
+      (for (m <- legs.media; d <- psigsDir)
+        yield append(m.frame.join(admittedIds, "doc_id").select(
+          col("doc_id").as("cv_id") +:
+            (if (m.legacy) Seq(col("bands")) else Seq(col("mod"), col("bands"))): _*),
+          s"$d/bands")) ++
+      (for (t <- legs.trim; d <- psigsDir)
+        yield append(t.batchShingles.join(admittedIds, "doc_id").select(
+          col("doc_id").as("cv_id") +:
+            ((if (t.legacy) Nil else Seq(col("mod"))) ++
+              Seq(col("s1"), col("q1"), col("s2"), col("q2"))): _*),
+          s"$d/shingles"))
+    beforeSigs.headOption.foreach(_())
+    together(admittedIds.sparkSession, beforeSigs.drop(1))
     for (d <- sigsDir)
-      append(legs.sigs.join(admittedIds, "doc_id"), d)
+      append(legs.sigs.join(admittedIds, "doc_id"), d)()
   }
+
+  /** Run `thunks` at once and return when every one has finished: the
+    * first on the caller's thread, each other on its own `graft-admit-<i>`
+    * thread that carries the caller's Spark local properties and active
+    * session. When any fails, the first failure (in `thunks` order) is
+    * rethrown as itself, after the rest have finished.
+    */
+  private def together(spark: SparkSession, thunks: Seq[() => Any]): Unit =
+    if (thunks.size <= 1) thunks.foreach(_())
+    else {
+      val n = new AtomicInteger
+      val pool = Executors.newFixedThreadPool(thunks.size - 1, (r: Runnable) => {
+        val t = new Thread(r, s"graft-admit-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+      try {
+        val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        val others = thunks.tail.map(t => SQLExecution.withThreadLocalCaptured(session, pool)(Try(t())))
+        val first = Try(thunks.head())
+        (first +: others.map(f =>
+          try f.get() catch { case e: ExecutionException => Failure(e.getCause) }))
+          .foreach(_.get)
+      } finally {
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
+    }
 }

@@ -3,6 +3,7 @@ package graft.xscale
 import org.apache.spark.sql.{Column, DataFrame, graftnative}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 
 import graft.query.Q
 import graft.query.Registry.table
@@ -1123,7 +1124,8 @@ object Similarity {
     * `dir/assign`, keeping tomorrow's rewording of today's admission
     * visible — append-only like the text sidecar; the codebooks stay
     * frozen (retrain = re-bootstrap, the add-vs-train distinction x79
-    * audits).
+    * audits). Every state table is read with the schema its bootstrap
+    * wrote, so no read runs a footer-inference job.
     */
   def admitEmbeddingSigs(
       spark: org.apache.spark.sql.SparkSession,
@@ -1131,7 +1133,8 @@ object Similarity {
       batchEmb: DataFrame,
       tau: Double = SEMDEDUP_TAU,
       checkpointDir: Option[String] = None): DataFrame = {
-    val casg = spark.read.parquet(s"$dir/assign")
+    def read(name: String, schema: StructType) = spark.read.schema(schema).parquet(s"$dir/$name")
+    val casg = read("assign", embAssignSchema(batchEmb.schema("vec_id").dataType))
     // layout self-description probe through Hadoop FileSystem (NOT
     // java.io.File): on HDFS/S3 a local-file probe always answers false,
     // mis-detecting an IMI state as flat and dying on the missing
@@ -1139,8 +1142,8 @@ object Similarity {
     val halvesPath = new org.apache.hadoop.fs.Path(s"$dir/halves")
     val hfs = halvesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (hfs.exists(halvesPath)) {
-      val nc = spark.read.parquet(s"$dir/meta").collect()(0).getLong(0).toInt
-      val halves = spark.read.parquet(s"$dir/halves").collect()
+      val nc = read("meta", EmbMetaSchema).collect()(0).getLong(0).toInt
+      val halves = read("halves", EmbHalvesSchema).collect()
         .map(r => (r.getLong(0).toInt, r.getLong(1), r.getSeq[Long](2).toSeq))
         .groupBy(_._1).toSeq.sortBy(_._1)
         .map { case (s, rows) => (s, rows.map(r => (r._2, r._3)).toSeq.sortBy(_._1)) }
@@ -1153,11 +1156,23 @@ object Similarity {
         checkpointDir)
       admitEmbCompare(casg, basg, tau)
     } else {
-      val cents = spark.read.parquet(s"$dir/centroids").collect()
+      val cents = read("centroids", EmbCentroidsSchema).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq.sortBy(_._1)
       admitEmbDecide(casg, cents, batchEmb, tau, checkpointDir)
     }
   }
+
+  /** The schemas of the emb-admission state's tables as the bootstraps
+    * write them: `assign` (its `cv_id` has the type of the corpus vec ids,
+    * the batch's too), the flat state's `centroids`, and the IMI state's
+    * `meta` and `halves`.
+    */
+  private[graft] def embAssignSchema(idType: DataType): StructType =
+    StructType(Seq(StructField("cv_id", idType), StructField("cid", LongType),
+      StructField("cv", ArrayType(DoubleType)), StructField("cn", DoubleType)))
+  private[graft] val EmbCentroidsSchema = StructType.fromDDL("cid BIGINT, ci ARRAY<BIGINT>")
+  private[graft] val EmbMetaSchema = StructType.fromDDL("nc BIGINT")
+  private[graft] val EmbHalvesSchema = StructType.fromDDL("m BIGINT, code BIGINT, ci ARRAY<BIGINT>")
 
   /** x85 core: label-RETRIEVAL evaluation of the embedding space — the
     * metric an embedding (or a quantization of it) is judged by before an

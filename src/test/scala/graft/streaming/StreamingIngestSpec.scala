@@ -114,4 +114,30 @@ class StreamingIngestSpec extends SparkSpec {
     assert(uploaded(batchSync) === Map("transactions_chase" -> 4L))
     assert(uploaded(streamSync) === uploaded(batchSync))
   }
+
+  test("StreamingIngest.run leaves the session's CSV column-pruning setting as it found it") {
+    // the parse turns pruning off on the session it is given; the query
+    // runs on its own clone of the session, so the caller's setting goes
+    // back once the query has started
+    val key = "spark.sql.csv.parser.columnPruning.enabled"
+    val prev = spark.conf.getOption(key)
+    val root = tmpDir("streamPrune")
+    val in = new java.io.File(root, "in"); in.mkdirs()
+    writeFile(in, "chase1234_jan.csv", goldenCsv)
+    val lake = new java.io.File(root, "lake").getPath
+    try {
+      spark.conf.set(key, "true")
+      val q = StreamingIngest.run(spark, in.getPath, new java.io.File(root, "archive").getPath,
+        lake, new java.io.File(root, "sync").getPath, new java.io.File(root, "ckpt").getPath)
+      assert(spark.conf.get(key) === "true", "restored once the query has started")
+      q.processAllAvailable()
+      q.stop()
+      assert(spark.conf.get(key) === "true")
+      // the ragged row still drops and the invalid date is rejected
+      assert(spark.read.parquet(lake).count() === 2)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
 }
