@@ -715,8 +715,9 @@ object Cli {
       }
       // the batch side of every leg, the status fold and the writes are
       // the admission kernel's (shared with StreamingAdmit)
-      val legs = Admission.legs(corpusSigs, batch, embBuild, mediaBuild, trimBuild, flags.ckptDir)
-      val st = Admission.classify(legs, flags.strict, flags.ckptDir)
+      val legs = Admission.legs(
+        corpusSigs, batch, embBuild, mediaBuild, trimBuild, flags.strict, flags.ckptDir)
+      val st = Admission.classify(legs, flags.ckptDir)
       val admittedIds = st.filter(col("status") === "admitted").select("doc_id")
       // the report, the admitted rows and the sidecar updates (ONLY the
       // admitted docs' state), in the kernel's crash order (the bootstrap

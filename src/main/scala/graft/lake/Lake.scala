@@ -441,7 +441,10 @@ object Lake {
     * datalake/client.go:33-79): scan dir → canonicalize → merge into lake →
     * sync log → stats. The per-file sequential loop collapses into one
     * distributed job; per-file outcomes are recovered from `_file` lineage
-    * (O1 fault isolation via outcome rows instead of try/catch).
+    * (O1 fault isolation via outcome rows instead of try/catch). The
+    * `quarantinePath` dir exists only once an ingest has rejected a row:
+    * a clean ingest writes no quarantine file, so a reader of that path
+    * must treat a missing dir as an empty quarantine.
     */
   def ingestDirectory(
       spark: SparkSession,
@@ -491,7 +494,9 @@ object Lake {
       // Rejected rows (the reference logs-and-skips, datalake.go:220-239) go
       // to a quarantine table when configured — at scale, silently dropping
       // rows is how a lake rots; (file, reason) lineage makes skips auditable.
-      quarantinePath.foreach { qp =>
+      // A batch the aggregate shows no rejected row for writes nothing.
+      val rejected = groups.exists { case (_, _, (rawN, validN)) => rawN > validN }
+      quarantinePath.filter(_ => rejected).foreach { qp =>
         Canonicalize.rejectedRows(ann)
           .withColumn("quarantined_at", current_timestamp())
           .write.mode(SaveMode.Append).parquet(qp)

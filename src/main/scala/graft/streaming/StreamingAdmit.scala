@@ -135,8 +135,8 @@ object StreamingAdmit {
     val legs = Admission.legs(
       if (fs.exists(sPath)) spark.read.schema(stateSigs.schema).parquet(statePath)
       else stateSigs.limit(0),
-      batch, embBuild, mediaBuild, trimBuild, checkpointDir)
-    val st = Admission.classify(legs, strict, checkpointDir)
+      batch, embBuild, mediaBuild, trimBuild, strict, checkpointDir)
+    val st = Admission.classify(legs, checkpointDir)
     val admittedIds = st.filter(col("status") === "admitted").select("doc_id")
     val admitted = batch.join(admittedIds, "doc_id")
     val report = reportPath.map(p => () =>

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.{Failure, Try}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
@@ -31,16 +31,26 @@ import org.apache.spark.sql.functions._
   * still-admitted docs, so within the corpus legs the containment leg
   * follows the band leg: a full near-dup keeps its stronger status.
   *
+  * The strict passes' edge lists are built WITH the legs, not after them.
+  * A strict edge qualifies on its two docs alone (two sigs, two vectors,
+  * two band rows, two shingle sets), and a pass only ever demotes
+  * admitted docs. So the edges among the docs still admitted at a pass's
+  * turn are exactly the whole batch's edges with both ends in that set:
+  * [[legs]] builds each list over the whole batch, and [[classify]] runs
+  * each pass as restrict-then-CC over small id sets, in the order above.
+  *
   * Checkpoints: a frame that two or more queries read is cut once, and a
   * frame that one query reads is not cut. With AQE a query runs its
   * exchanges when it is planned, so an uncut frame with several consumers
   * re-runs its state scans once per consumer. So every leg frame is cut
-  * once (it feeds the fold, a strict pass and an append), the text corpus
-  * leg's status too (the cut runs its sig-state scans while the other
-  * legs build, see Concurrency); under `strict`
-  * the corpus-leg status is cut once (the text CC, the emb pass and the
-  * final cut all read it, and each would otherwise redo the exact key
-  * join, the banded near join and every corpus restatus); and the final
+  * once (it feeds the fold, a strict edge list and an append), the text
+  * corpus leg's status too (the cut runs its sig-state scans while the
+  * other legs build, see Concurrency), and every strict edge list; under
+  * `strict` the corpus-leg status is cut once (the first pass's doc set
+  * and the final restatus both read it, and each would otherwise redo the
+  * exact key join, the banded near join and every corpus restatus), and
+  * so is each pass's demoted set (the next pass's doc set and the final
+  * restatus read it); and the final
   * status frame is cut once, before any write — its lazy plan reads the
   * state dirs, and an append landing first would make recomputation see
   * the new files. Pass `checkpointDir` in production so the cuts are
@@ -50,11 +60,15 @@ import org.apache.spark.sql.functions._
   * Concurrency: the kernel overlaps work that shares nothing, and no
   * caller creates threads. [[legs]] cuts the text corpus leg (the sig
   * state's key and band scans) on the caller's thread while the batch side
-  * of every other leg builds at once on its own leg thread (the emb leg;
-  * the media leg, then the containment leg on the same thread, since it
-  * reuses the media leg's batch shingles), and joins them all before
-  * [[classify]] folds any status, so the fold order, the strict waterfall
-  * and every status are what a serial run gives. [[appendState]] runs the
+  * of every other leg builds at once on its own leg thread: under `strict`
+  * the text edges from the cut batch sigs; the emb leg, then its edges;
+  * the media leg, its edges, then the containment leg and its edges on
+  * the same thread, since it reuses the media leg's batch shingles. No
+  * edge list depends on a corpus leg, so none waits for one. [[legs]]
+  * joins them all before [[classify]] folds any status; the waterfall
+  * then restricts each pass's edges to the docs still admitted, so the
+  * fold order, the strict waterfall and every status are what a serial
+  * run over the admitted docs' leg rows gives. [[appendState]] runs the
   * FIRST write alone: it materializes the final status cut before any
   * append can change the state files its lazy plan reads. Every other
   * write before the sig append then runs at once, and the sig append
@@ -108,24 +122,38 @@ object Admission {
       legacy: Boolean)
 
   /** One batch's built legs: its dedup signatures (they feed the text
-    * leg, the strict pass and the sig append), the text corpus leg's
+    * leg, the text strict edges and the sig append), the text corpus leg's
     * (doc_id, key, status) frame ([[Dedup.incrementalDedupSigs]] against
-    * the corpus sigs) and the optional emb, media and containment legs.
+    * the corpus sigs), the optional emb, media and containment legs, and —
+    * under `strict` — each strict pass's edge list over the WHOLE batch:
+    * `textEdges` ([[Dedup.admitStrictEdges]] of `sigs`), `embEdges`
+    * ([[Similarity.admitEmbStrictEdges]] of `emb`), `mediaEdges`
+    * ([[PerceptualDedup.admitMediaStrictEdges]] of the media leg's bands)
+    * and `trimEdges` ([[PerceptualDedup.admitTrimStrictEdges]] of the
+    * containment leg's batch shingles), each cut and materialized. An edge
+    * list is None when its leg is off, the batch is not strict, or the
+    * list is empty (the pass then demotes nobody).
     */
   final case class Legs(
       sigs: DataFrame,
       text: DataFrame,
       emb: Option[DataFrame],
       media: Option[MediaLeg],
-      trim: Option[TrimLeg])
+      trim: Option[TrimLeg],
+      textEdges: Option[DataFrame],
+      embEdges: Option[DataFrame],
+      mediaEdges: Option[DataFrame],
+      trimEdges: Option[PerceptualDedup.TrimStrictEdges])
 
   /** Build every leg of `batch`, overlapped as documented on this object:
     * the text corpus leg against `corpusSigs` is cut on the caller's
-    * thread while the leg builds run on leg threads — `emb` (a frame with
-    * `vec_id == doc_id`, from [[Similarity.admitEmbeddingSigs]] or
-    * [[Similarity.admitEmbeddingFrame]]; cut here), `media` ([[mediaLeg]])
-    * and then `trim` ([[trimLeg]], handed the built media leg). Returns
-    * when every build has finished. A build must not write: the callers'
+    * thread while the leg builds run on leg threads — under `strict` the
+    * text edges; `emb` (a frame with `vec_id == doc_id`, from
+    * [[Similarity.admitEmbeddingSigs]] or
+    * [[Similarity.admitEmbeddingFrame]]; cut here), then its edges;
+    * `media` ([[mediaLeg]]), its edges, then `trim` ([[trimLeg]], handed
+    * the built media leg) and its edges. Returns when
+    * every build has finished. A build must not write: the callers'
     * bootstraps and state rewrites happen before this call.
     */
   def legs(
@@ -134,19 +162,38 @@ object Admission {
       emb: Option[() => DataFrame],
       media: Option[() => MediaLeg],
       trim: Option[Option[MediaLeg] => TrimLeg],
+      strict: Boolean,
       checkpointDir: Option[String]): Legs = {
     def cut(df: DataFrame) = DedupClusters.ckpt(df, checkpointDir)
+    // a strict pass's edge list, cut and materialized on the leg thread
+    // that builds it; an empty list is dropped
+    def edges(df: DataFrame): Option[DataFrame] =
+      if (!strict) None else Some(cut(df)).filter(_.count() > 0)
     // lazy vals are initialized once, under a lock, on whichever thread
     // forces them first; `together` forces each on its own thread
     lazy val sigs = cut(Dedup.dedupSignatures(batch))
     lazy val text = cut(Dedup.incrementalDedupSigs(corpusSigs, sigs))
+    lazy val textEdges = edges(Dedup.admitStrictEdges(sigs))
     lazy val embFrame = emb.map(b => cut(b()))
+    lazy val embEdges = embFrame.flatMap(f => edges(Similarity.admitEmbStrictEdges(f)))
     lazy val mediaLeg = media.map(_())
+    lazy val mediaEdges = mediaLeg.flatMap(m => edges(PerceptualDedup.admitMediaStrictEdges(
+      m.frame.select("doc_id", "mod", "bands"),
+      PerceptualDedup.widthThreshold(m.wide), PerceptualDedup.widthBands(m.wide))))
     lazy val trimLeg = trim.map(_(mediaLeg))
+    lazy val trimEdges = trimLeg.flatMap { t =>
+      val e = PerceptualDedup.admitTrimStrictEdges(t.batchShingles)
+      edges(e.links).map { links =>
+        val sizes = cut(e.sizes)
+        sizes.count()
+        PerceptualDedup.TrimStrictEdges(links, sizes)
+      }
+    }
     together(batch.sparkSession, Seq(() => text) ++
-      emb.map(_ => () => embFrame) ++
-      (if (media.isDefined || trim.isDefined) Some(() => (mediaLeg, trimLeg)) else None))
-    Legs(sigs, text, embFrame, mediaLeg, trimLeg)
+      (if (strict) Some(() => textEdges) else None) ++
+      emb.map(_ => () => embEdges) ++
+      (if (media.isDefined || trim.isDefined) Some(() => (mediaEdges, trimEdges)) else None))
+    Legs(sigs, text, embFrame, mediaLeg, trimLeg, textEdges, embEdges, mediaEdges, trimEdges)
   }
 
   /** The batch side of the media leg against `corpusBands` (cv_id,
@@ -231,79 +278,86 @@ object Admission {
   }
 
   /** Classify the batch from its built [[legs]] — the text leg's
-    * four-status cascade, then each other corpus leg, then (under
-    * `strict`) the text, emb, media and containment intra-batch passes,
-    * in the leg order documented on this object. Returns the final
+    * four-status cascade, then each other corpus leg, then (when the legs
+    * were built `strict`) the text, emb, media and containment intra-batch
+    * passes, in the leg order documented on this object. Returns the final
     * (doc_id, key, status) frame, cut once.
     */
-  def classify(
-      legs: Legs,
-      strict: Boolean,
-      checkpointDir: Option[String]): DataFrame = {
-    def admittedIn(st: DataFrame) = st.filter(col("status") === "admitted")
-    // one restatus per modality: startsWith folds the width-suffixed
+  def classify(legs: Legs, checkpointDir: Option[String]): DataFrame = {
+    def cut(df: DataFrame) = DedupClusters.ckpt(df, checkpointDir)
+    // (doc_id, status) for each doc with a `hits` row matching a rule,
+    // the status of the first rule it matches: the fold of one restatus
+    // per rule, in rule order, over the docs `hits` names
+    def firstStatus(hits: DataFrame, rules: Seq[(Column, String)]): DataFrame = {
+      val rank = rules.zipWithIndex.tail.foldLeft(when(rules.head._1, 0)) {
+        case (c, ((p, _), i)) => c.when(p, i)
+      }
+      hits.select(col("doc_id"), rank.as("_r")).filter(col("_r").isNotNull)
+        .groupBy("doc_id").agg(min("_r").as("_r"))
+        .select(col("doc_id"), element_at(typedLit(rules.map(_._2)), col("_r") + 1).as("status"))
+    }
+    // one rule per modality: startsWith folds the width-suffixed
     // img16/aud16/vid16 small-media rows into their modality's status —
     // the modality table (PerceptualDedup.Modalities) IS the wiring
-    def byModality(st: DataFrame, hits: DataFrame, status: PerceptualDedup.Modality => String) =
-      PerceptualDedup.Modalities.foldLeft(st) { (s, m) =>
-        Dedup.restatus(s, hits.filter(col("mod").startsWith(m.prefix)).select("doc_id"), status(m))
-      }
-    // one restatus per shingle space (exact mod match; a doc flagged in
+    def byModality(status: PerceptualDedup.Modality => String) =
+      PerceptualDedup.Modalities.map(m => col("mod").startsWith(m.prefix) -> status(m))
+    // one rule per shingle space (exact mod match; a doc flagged in
     // several spaces takes the first in Modalities order); the rescale
     // spaces fold to ONE status — "resized crop", whatever scale saw it
-    def bySpace(st: DataFrame, hits: DataFrame,
-        status: PerceptualDedup.ContainSpace => String, rcrop: String) =
-      Dedup.restatus(
-        PerceptualDedup.ShingleSpaces.foldLeft(st) { (s, cs) =>
-          Dedup.restatus(s, hits.filter(col("mod") === cs.space).select("doc_id"), status(cs))
-        },
-        hits.filter(col("mod").startsWith("rs")).select("doc_id").distinct(), rcrop)
+    def bySpace(status: PerceptualDedup.ContainSpace => String, rcrop: String) =
+      PerceptualDedup.ShingleSpaces.map(cs => (col("mod") === cs.space) -> status(cs)) :+
+        (col("mod").startsWith("rs") -> rcrop)
+    def as(status: String)(ids: DataFrame) = ids.withColumn("status", lit(status))
 
-    val st0 = legs.text
-    val stEmb = legs.emb.fold(st0)(f => Dedup.restatus(
-      st0, f.filter(col("near_emb")).select(col("vec_id").as("doc_id")), "near_dup_corpus_emb"))
-    val stMed = legs.media.fold(stEmb)(m =>
-      byModality(stEmb, m.frame.filter(col("near_med")), _.corpusStatus))
-    val stCorpus = legs.trim.fold(stMed)(t => bySpace(
-      stMed, t.frame.filter(col("near_trim")), _.corpusStatus, PerceptualDedup.RcropCorpusStatus))
-    val st =
-      if (!strict) stCorpus
-      else {
-        // the strict passes close the leak the corpus legs cannot see: two
-        // near-dups arriving TOGETHER both clear them. Each is a CC over
-        // the still-admitted docs' already-computed leg rows (zero extra
-        // text, embedding or media access); losers re-status near_dup_batch*.
-        // Three queries read the corpus-leg status, so it is cut once
-        val stC = DedupClusters.ckpt(stCorpus, checkpointDir)
-        val stS0 = Dedup.admitStrict(stC, legs.sigs, checkpointDir = checkpointDir)
-        val stS1 = legs.emb.fold(stS0) { f =>
-          val losers = Similarity.admitEmbStrictLosers(
-            f.join(admittedIn(stS0).select(col("doc_id").as("vec_id")), "vec_id")
-              .select("vec_id", "cid", "cv", "cn"),
-            checkpointDir = checkpointDir)
-          Dedup.restatus(stS0, losers.select(col("vec_id").as("doc_id")), "near_dup_batch_emb")
-        }
-        val stS2 = legs.media.fold(stS1) { m =>
-          val losers = PerceptualDedup.admitMediaStrictLosers(
-            m.frame.join(admittedIn(stS1).select("doc_id"), "doc_id")
-              .select("doc_id", "mod", "bands"),
-            maxHamming = PerceptualDedup.widthThreshold(m.wide),
-            checkpointDir = checkpointDir,
-            nBands = PerceptualDedup.widthBands(m.wide))
-          byModality(stS1, losers, _.strictStatus)
-        }
-        // containment keeps the BEST doc per CC by shingle count (the
-        // longer clip / larger image is the source), not the min id
-        legs.trim.fold(stS2) { t =>
-          val losers = DedupClusters.ckpt(
-            PerceptualDedup.admitTrimStrictLosers(
-              t.batchShingles.join(admittedIn(stS2).select("doc_id"), "doc_id"),
-              checkpointDir = checkpointDir),
-            checkpointDir)
-          bySpace(stS2, losers, _.strictStatus, PerceptualDedup.RcropStrictStatus)
-        }
+    val stCorpus = Seq(
+      legs.emb.map(f => as("near_dup_corpus_emb")(
+        f.filter(col("near_emb")).select(col("vec_id").as("doc_id")).distinct())),
+      legs.media.map(m =>
+        firstStatus(m.frame.filter(col("near_med")), byModality(_.corpusStatus))),
+      legs.trim.map(t => firstStatus(t.frame.filter(col("near_trim")),
+        bySpace(_.corpusStatus, PerceptualDedup.RcropCorpusStatus)))
+    ).flatten.foldLeft(legs.text)(Dedup.restatus)
+    // the strict passes close the leak the corpus legs cannot see: two
+    // near-dups arriving TOGETHER both clear them. Each pass maps the docs
+    // still admitted at its turn to the ones it demotes (doc_id, status):
+    // a CC over its batch edges restricted to those docs — a strict pass
+    // only demotes admitted docs, and an edge qualifies on its two docs
+    // alone, so these are exactly the edges a CC over the still-admitted
+    // docs' leg rows would find. Doc sets are batch-bounded, so broadcast
+    // (one broadcast serves both ends)
+    def among(edges: DataFrame, docs: DataFrame) = {
+      val d = broadcast(docs)
+      edges.join(d, col("a") === col("doc_id"), "left_semi")
+        .join(d, col("b") === col("doc_id"), "left_semi")
+    }
+    val passes: Seq[DataFrame => DataFrame] = Seq(
+      legs.textEdges.map(e => (docs: DataFrame) =>
+        as("near_dup_batch")(DedupClusters.minIdLosers(among(e, docs), checkpointDir))),
+      legs.embEdges.map(e => (docs: DataFrame) =>
+        as("near_dup_batch_emb")(DedupClusters.minIdLosers(among(e, docs), checkpointDir))),
+      for (e <- legs.mediaEdges; m <- legs.media) yield (docs: DataFrame) =>
+        firstStatus(
+          PerceptualDedup.admitMediaStrictLosersOf(among(e, docs), m.frame, checkpointDir),
+          byModality(_.strictStatus)),
+      // containment keeps the BEST doc per CC by shingle count (the
+      // longer clip / larger image is the source), not the min id
+      legs.trimEdges.map(e => (docs: DataFrame) =>
+        firstStatus(PerceptualDedup.admitTrimStrictLosersOf(e.copy(links = among(e.links, docs)),
+          checkpointDir), bySpace(_.strictStatus, PerceptualDedup.RcropStrictStatus)))
+    ).flatten
+    if (passes.isEmpty) cut(stCorpus)
+    else {
+      // the passes and the final restatus read the corpus-leg status
+      val stC = cut(stCorpus)
+      val (demoted, _) = passes.foldLeft(
+        (Seq.empty[DataFrame], stC.filter(col("status") === "admitted").select("doc_id"))) {
+        case ((out, docs), pass) =>
+          val d = cut(pass(docs))
+          (out :+ d, docs.join(broadcast(d), Seq("doc_id"), "left_anti"))
       }
-    DedupClusters.ckpt(st, checkpointDir)
+      // the passes' doc sets are disjoint, so one restatus applies them
+      cut(Dedup.restatus(stC, demoted.reduce(_ unionByName _)))
+    }
   }
 
   /** Write the caller's own tables (`writes`, in the caller's order: the

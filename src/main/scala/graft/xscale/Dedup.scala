@@ -518,21 +518,22 @@ object Dedup {
   }
 
   /** The admission status OVERLAY shared by every signal leg on both the
-    * batch verb and StreamingAdmit: docs in `hits` (one `doc_id` column)
-    * that are STILL 'admitted' in `st` re-status to `status`; every other
-    * row is untouched. One definition so the two surfaces can never
+    * batch verb and StreamingAdmit: docs in `demoted` (doc_id, status; one
+    * row per doc) that are STILL 'admitted' in `st` take its status; every
+    * other row is untouched. One definition so the two surfaces can never
     * diverge on the overlay semantics (the admitted-only guard is what
-    * makes the legs a waterfall, not a vote).
+    * makes the legs a waterfall, not a vote). `demoted` names batch docs
+    * only, so it is broadcast (the batch-bounded rationale of the emb
+    * compare's batch side).
     */
-  def restatus(st: DataFrame, hits: DataFrame, status: String): DataFrame =
-    st.join(
-      hits.select(col("doc_id")).distinct().withColumn("_hit", lit(true)),
+  def restatus(st: DataFrame, demoted: DataFrame): DataFrame =
+    st.join(broadcast(demoted.select(col("doc_id"), col("status").as("_to"))),
       Seq("doc_id"), "left")
       .withColumn(
         "status",
-        when(col("status") === "admitted" && coalesce(col("_hit"), lit(false)), status)
+        when(col("status") === "admitted" && col("_to").isNotNull, col("_to"))
           .otherwise(col("status")))
-      .drop("_hit")
+      .drop("_to")
 
   /** LSH band keys derived from a [[dedupSignatures]] sig ARRAY — the same
     * md5(concat_ws) currency as [[withSignature]]'s sig0..sigK columns
@@ -553,6 +554,8 @@ object Dedup {
     * hierarchy; shared by `Cli admit --strict`, the registered
     * `x74_admit_strict` query and [[graft.streaming.StreamingAdmit]].
     * Batch-sized work: pairs and CC touch only the admitted docs' sigs.
+    * The composition of its two halves: [[admitStrictEdges]] over the
+    * admitted docs' sigs, then [[DedupClusters.minIdLosers]].
     */
   def admitStrict(
       st: DataFrame,
@@ -561,20 +564,17 @@ object Dedup {
       checkpointDir: Option[String] = None): DataFrame = {
     val admSigs = batchSigs
       .join(st.filter(col("status") === "admitted").select("doc_id"), "doc_id")
-    val pairs = minhashPairsSigs(admSigs, minMatch)
-      .select(col("doc_id_a").as("a"), col("doc_id_b").as("b"))
-    val losers = DedupClusters
-      .connectedComponents(pairs, checkpointDir = checkpointDir)
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as("doc_id"), lit(true).as("near_batch"))
-    st.join(losers, Seq("doc_id"), "left")
-      .withColumn(
-        "status",
-        when(
-          col("status") === "admitted" && coalesce(col("near_batch"), lit(false)),
-          "near_dup_batch").otherwise(col("status")))
-      .drop("near_batch")
+    val losers = DedupClusters.minIdLosers(admitStrictEdges(admSigs, minMatch), checkpointDir)
+    restatus(st, losers.withColumn("status", lit("near_dup_batch")))
   }
+
+  /** The edge half of [[admitStrict]]: the near-dup pairs `(a, b)`, a < b,
+    * of [[minhashPairsSigs]] over `sigs`. A pair qualifies on its two
+    * signatures alone, so the edges among any subset of `sigs` are exactly
+    * these edges with both ends in that subset.
+    */
+  def admitStrictEdges(sigs: DataFrame, minMatch: Int = K / 2): DataFrame =
+    minhashPairsSigs(sigs, minMatch).select(col("doc_id_a").as("a"), col("doc_id_b").as("b"))
 
   /** Sidecar COMPACTION — reconcile a persisted [[dedupSignatures]] frame
     * with the live corpus: keep one signature row per doc_id that still

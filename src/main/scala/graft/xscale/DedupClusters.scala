@@ -143,6 +143,16 @@ object DedupClusters {
     labels
   }
 
+  /** The min-id keep-one rule over an undirected pair list `(a, b)`: the
+    * LOSERS — every node that is not its component's minimum id — as one
+    * `doc_id` column. The survivor rule of the text, emb and media strict
+    * admission passes.
+    */
+  def minIdLosers(pairs: DataFrame, checkpointDir: Option[String] = None): DataFrame =
+    connectedComponents(pairs, checkpointDir = checkpointDir)
+      .filter(col("id") =!= col("component"))
+      .select(col("id").as("doc_id"))
+
   /** Exact connected components of a SINGLE-PARTITION symmetric edge list
     * by union–find (path halving + union by smaller root id), emitting the
     * same `(id, component = min reachable id)` labeling the distributed

@@ -1846,15 +1846,31 @@ object PerceptualDedup {
     * plus the rescale table). Zero extra decode —
     * `admShingles` is the already-cut batch shingle frame filtered to
     * still-admitted docs; a frame without `mod` is all-video (pre-mod
-    * contract).
+    * contract). The composition of [[admitTrimStrictEdges]] and
+    * [[admitTrimStrictLosersOf]].
     */
   def admitTrimStrictLosers(
       admShingles: DataFrame,
       num: Int = 4,
       den: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame =
+    admitTrimStrictLosersOf(admitTrimStrictEdges(admShingles, num, den), checkpointDir)
+
+  /** The containment strict pass's edges: `links` (a, b, mod), a < b —
+    * the pairs qualifying in a shingle space, the rescale spaces'
+    * bipartite links included — and `sizes` (doc_id, n_tot), each doc's
+    * shingle count across all its spaces (the keep-best rank).
+    */
+  final case class TrimStrictEdges(links: DataFrame, sizes: DataFrame)
+
+  /** The edge half of [[admitTrimStrictLosers]] over `shingles`. A link
+    * qualifies on its two docs' shingles alone and a size is one doc's
+    * own, so the edges among any subset of the docs are exactly these
+    * links with both ends in that subset, with the same sizes.
+    */
+  def admitTrimStrictEdges(shingles: DataFrame, num: Int = 4, den: Int = 5): TrimStrictEdges = {
     require(num > 0 && den >= num, s"containment threshold $num/$den must be in (0, 1]")
-    val sh = withShMod(admShingles)
+    val sh = withShMod(shingles)
     val keys = Seq("mod", "s1", "q1", "s2", "q2")
     val cols = Seq("mod", "s1", "q1", "s2", "q2")
     // PER-SPACE qualification (the admitTrimCompare rule on the strict
@@ -1904,7 +1920,16 @@ object PerceptualDedup {
       .filter(col("i") * den >= col("na") * num)
       .select(least(col("na_id"), col("sc_id")).as("a"),
         greatest(col("na_id"), col("sc_id")).as("b"), col("mod"))
-    val qualC = DedupClusters.ckpt(qual.unionByName(qualRs), checkpointDir)
+    TrimStrictEdges(qual.unionByName(qualRs), sh.groupBy("doc_id").agg(count(lit(1)).as("n_tot")))
+  }
+
+  /** The rule half of [[admitTrimStrictLosers]]: the losers (doc_id, mod)
+    * of `edges`, labelled by the space(s) that linked them.
+    */
+  def admitTrimStrictLosersOf(
+      edges: TrimStrictEdges,
+      checkpointDir: Option[String] = None): DataFrame = {
+    val qualC = DedupClusters.ckpt(edges.links, checkpointDir)
     // ONE undirected CC over pairs qualifying in ANY space (spaces only
     // ever link docs of one modality); keep the doc with the most
     // fingerprints across ALL its spaces — the larger canvas / longer
@@ -1913,7 +1938,8 @@ object PerceptualDedup {
     // per-doc rank replaces).
     val comp = DedupClusters.connectedComponents(
       qualC.select("a", "b").distinct(), checkpointDir = checkpointDir)
-    val szDoc = broadcast(sh.groupBy("doc_id").agg(count(lit(1)).as("n_tot")))
+    // doc-level and batch-bounded, like szMod
+    val szDoc = broadcast(edges.sizes)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("component").orderBy(col("n_tot").desc, col("doc_id"))
     val losers = comp.join(szDoc, comp("id") === szDoc("doc_id"))
@@ -2326,22 +2352,42 @@ object PerceptualDedup {
     * public pair entries carry holds here too — a `maxHamming` ≥ the band
     * count would silently MISS qualifying intra-batch pairs instead of
     * throwing (mixed-width frames are additionally clamped per row inside
-    * [[bandNearDupPairs]]).
+    * [[bandNearDupPairs]]). The composition of [[admitMediaStrictEdges]]
+    * and [[admitMediaStrictLosersOf]].
     */
   def admitMediaStrictLosers(
       admBands: DataFrame,
       maxHamming: Int = MaxHamming,
       checkpointDir: Option[String] = None,
+      nBands: Int = Bands): DataFrame =
+    admitMediaStrictLosersOf(
+      admitMediaStrictEdges(admBands, maxHamming, nBands), admBands, checkpointDir)
+
+  /** The edge half of [[admitMediaStrictLosers]]: the [[bandNearDupPairs]]
+    * `(a, b)` of `bands` (doc_id, [mod,] bands), behind the pigeonhole
+    * guard. A pair qualifies on its two docs' rows alone, so the edges
+    * among any subset of the docs are exactly these edges with both ends
+    * in that subset.
+    */
+  def admitMediaStrictEdges(
+      bands: DataFrame,
+      maxHamming: Int = MaxHamming,
       nBands: Int = Bands): DataFrame = {
     require(maxHamming < nBands,
       s"maxHamming=$maxHamming with $nBands bands breaks the pigeonhole guarantee " +
         "(a qualifying pair can differ in every band and never become a candidate)")
-    val losers = DedupClusters.connectedComponents(
-      bandNearDupPairs(admBands, maxHamming), checkpointDir = checkpointDir)
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as("doc_id"))
-    if (admBands.columns.contains("mod"))
-      losers.join(admBands.select("doc_id", "mod"), "doc_id")
+    bandNearDupPairs(bands, maxHamming)
+  }
+
+  /** The rule half of [[admitMediaStrictLosers]]: the min-id losers of
+    * `edges`, with their `mod` from `bands` when it carries one.
+    */
+  def admitMediaStrictLosersOf(
+      edges: DataFrame,
+      bands: DataFrame,
+      checkpointDir: Option[String] = None): DataFrame = {
+    val losers = DedupClusters.minIdLosers(edges, checkpointDir)
+    if (bands.columns.contains("mod")) losers.join(bands.select("doc_id", "mod"), "doc_id")
     else losers
   }
 

@@ -903,24 +903,32 @@ object Similarity {
     * single-probe IVF trade as the corpus leg (x13's pricing); batch-side
     * multi-probe raises recall by nprobe × batch, never corpus. Scale:
     * batch-sized self-join bucketed by cell + CC on the (tiny) pair graph.
+    * The composition of [[admitEmbStrictEdges]] and
+    * [[DedupClusters.minIdLosers]].
     */
   def admitEmbStrictLosers(
       admFrame: DataFrame,
       tau: Double = SEMDEDUP_TAU,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val a = admFrame.select(
+      checkpointDir: Option[String] = None): DataFrame =
+    DedupClusters.minIdLosers(admitEmbStrictEdges(admFrame, tau), checkpointDir)
+      .select(col("doc_id").as("vec_id"))
+
+  /** The edge half of [[admitEmbStrictLosers]]: the within-cell pairs
+    * `(a, b)`, a < b, of `frame` (vec_id, cid, cv, cn) at cosine ≥ `tau`.
+    * A pair qualifies on its two rows alone, so the edges among any subset
+    * of the vectors are exactly these edges with both ends in that subset.
+    */
+  def admitEmbStrictEdges(frame: DataFrame, tau: Double = SEMDEDUP_TAU): DataFrame = {
+    val a = frame.select(
       col("vec_id").as("va"), col("cid"), col("cv").as("qa"), col("cn").as("na"))
-    val b = admFrame.select(
+    val b = frame.select(
       col("vec_id").as("vb"), col("cid"), col("cv").as("qb"), col("cn").as("nb"))
-    val pairs = a.join(b, Seq("cid"))
+    a.join(b, Seq("cid"))
       .filter(col("va") < col("vb"))
       .withColumn("cos", dot(col("qa"), col("qb")) / (col("na") * col("nb")))
       .filter(col("cos") >= tau)
       .select(col("va").as("a"), col("vb").as("b"))
       .distinct()
-    DedupClusters.connectedComponents(pairs, checkpointDir = checkpointDir)
-      .filter(col("id") =!= col("component"))
-      .select(col("id").as("vec_id"))
   }
 
   /** The decision core shared by [[admitEmbedding]] (live corpus) and

@@ -167,6 +167,42 @@ class IngestDirectorySpec extends SparkSpec {
     assert(records < once + rawRows / 2, s"read $records records: the CSVs were parsed more than once")
   }
 
+  test("a clean ingest with quarantine on writes no quarantine file and runs no quarantine job") {
+    // the same clean file into two empty lakes, quarantine on and off: the
+    // aggregate shows no rejected row, so the quarantine write is skipped
+    // and both calls run the same jobs
+    val root = tmpDir("ingestClean")
+    def jobsOf(quarantine: Option[String], name: String): Long = {
+      val in = new java.io.File(root, s"in-$name"); in.mkdirs()
+      writeFile(in, "chase1234_jan.csv",
+        """Details,Posting Date,Description,Amount,Type,Balance,Check or Slip #
+          |DEBIT,01/15/2024,COFFEE SHOP,-4.50,ACH_DEBIT,995.50,
+          |CREDIT,01/16/2024,PAYROLL,2000.00,ACH_CREDIT,2995.50,""".stripMargin)
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicLong()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        val st = Lake.ingestDirectory(spark, in.getPath,
+          new java.io.File(root, s"lake-$name").getPath,
+          new java.io.File(root, s"sync-$name").getPath, quarantinePath = quarantine)
+        assert(st.processed_files === 1 && st.failed_files === 0)
+        org.apache.spark.ListenerBusDrain(sc)
+      } finally sc.removeSparkListener(listener)
+      jobs.get()
+    }
+    val quarantine = new java.io.File(root, "quarantine")
+    val withQ = jobsOf(Some(quarantine.getPath), "q")
+    val withoutQ = jobsOf(None, "noq")
+    info(s"jobs: quarantine on $withQ, off $withoutQ")
+    assert(!quarantine.exists(), "a clean ingest wrote a quarantine file")
+    assert(withQ === withoutQ)
+  }
+
   test("compact: collapses partitions to one file each; rows unchanged") {
     val lake = new java.io.File(tmpDir("cmp"), "lake").getPath
     // three upserts -> several small files per partition

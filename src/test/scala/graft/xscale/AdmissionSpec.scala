@@ -110,6 +110,19 @@ class AdmissionSpec extends SparkSpec {
 
   private def sigRows(st: States): Long = spark.read.parquet(st.sigs).count()
 
+  /** The legs of a text+emb admission of `batch` (vectors `batchEmb`)
+    * against `st`'s states, as [[StreamingAdmit.admit]] builds them.
+    */
+  private def textEmbLegs(
+      st: States, batch: DataFrame, batchEmb: DataFrame, strict: Boolean): Admission.Legs =
+    Admission.legs(
+      spark.read.schema(Dedup.dedupSignatures(batch).schema).parquet(st.sigs), batch,
+      Some(() => Similarity.admitEmbeddingSigs(spark, st.esigs, batchEmb)), None, None,
+      strict, None)
+
+  private def statuses(st: DataFrame): Map[Long, String] =
+    st.select("doc_id", "status").as[(Long, String)].collect().toMap
+
   test("emb bootstrap fails named, before any state write, when every corpus id is >= nc") {
     val rnd = new scala.util.Random(7)
     // k-means seeds from vec_id < nc; ids offset by 1e9 leave it no seed
@@ -228,5 +241,66 @@ class AdmissionSpec extends SparkSpec {
     assert(jobs.forall(_.end.exists(_ <= returned)), s"jobs ran on after the call: $jobs")
     assert(sigRows(st) === rows)
     assert(!new java.io.File(s"$base/out").exists())
+  }
+
+  test("strict passes over edges restricted to the still-admitted docs equal the serial passes") {
+    val st = new States(tmpDir("admit-restrict"), "flat")
+    val corpusText = st.corpus.filter(col("doc_id") === 0).select("text").as[String].head()
+    val batch = Seq(
+      6000000L -> corpusText, // dup_exact_corpus, emb edge to 6000007
+      6000001L -> novel1, // text pair with 6000002: survives
+      6000002L -> (novel1 + " zq"), // loses the text pass, emb edge to 6000005
+      6000003L -> novel2, // emb pair with 6000004: survives
+      6000004L -> novel3, // loses the emb pass
+      6000005L -> "tally sheets for the ferry crossings kept at the lower landing stage",
+      6000007L -> "an inventory of slate roofing pegs held in the quarry office loft"
+    ).toDF("doc_id", "text").withColumn("source", lit("s"))
+    // three vectors far from the corpus; docs sharing one form an emb edge
+    val vec = st.corpusEmb.select(
+      col("vec_id").as("v"), expr("transform(embedding, x -> -x)").as("embedding"))
+    val batchEmb = Seq(6000000L -> 7L, 6000007L -> 7L, 6000002L -> 3L, 6000005L -> 3L,
+      6000003L -> 5L, 6000004L -> 5L).toDF("vec_id", "v")
+      .join(vec, "v").select("vec_id", "embedding")
+
+    val corpusSt = Admission.classify(textEmbLegs(st, batch, batchEmb, strict = false), None)
+    val legs = textEmbLegs(st, batch, batchEmb, strict = true)
+    val got = Admission.classify(legs, None)
+    // the serial composition: each pass's one-call form over the docs the
+    // earlier passes left admitted
+    def admittedIn(s: DataFrame) = s.filter(col("status") === "admitted")
+    val s0 = Dedup.admitStrict(corpusSt, legs.sigs)
+    val embLosers = Similarity.admitEmbStrictLosers(
+      legs.emb.get.join(admittedIn(s0).select(col("doc_id").as("vec_id")), "vec_id")
+        .select("vec_id", "cid", "cv", "cn"))
+    val serial = Dedup.restatus(s0,
+      embLosers.select(col("vec_id").as("doc_id"), lit("near_dup_batch_emb").as("status")))
+
+    assert(got.select("doc_id", "key", "status").collect().toSet ===
+      serial.select("doc_id", "key", "status").collect().toSet)
+    assert(statuses(got) === Map(
+      6000000L -> "dup_exact_corpus", 6000001L -> "admitted", 6000002L -> "near_dup_batch",
+      6000003L -> "admitted", 6000004L -> "near_dup_batch_emb", 6000005L -> "admitted",
+      6000007L -> "admitted"))
+    // the unrestricted emb edges would demote two admitted docs
+    val unrestricted = DedupClusters.minIdLosers(legs.embEdges.get).as[Long].collect().toSet
+    assert(Set(6000005L, 6000007L).subsetOf(unrestricted), unrestricted)
+  }
+
+  test("a strict admit builds its pair lists with the legs: few jobs start after legs returns") {
+    val st = new States(tmpDir("admit-tail"), "flat")
+    val out = new java.io.File(st.base, "out").getPath
+    val (legs, _, legJobs) = jobsOf(textEmbLegs(st, st.batch, st.batchEmb, strict = true))
+    val (admitted, _, tail) = jobsOf {
+      val s = Admission.classify(legs.get, None)
+      val ids = s.filter(col("status") === "admitted").select("doc_id")
+      Admission.appendState(ids, legs.get, Some(st.sigs), Some(st.esigs), None,
+        Seq(() => st.batch.join(ids, "doc_id").write.parquet(out)))
+      ids.as[Long].collect().toSet
+    }
+    assert(admitted.get === st.admits)
+    info(s"${legJobs.size} jobs until legs returned, ${tail.size} after")
+    // the serial passes over the admitted docs' sigs and vectors started
+    // 30 jobs here; over the built edge lists they start 17-18
+    assert(tail.size <= 20, s"${tail.size} jobs after legs returned")
   }
 }
