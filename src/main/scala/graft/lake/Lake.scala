@@ -33,6 +33,14 @@ import graft.source.CsvIngest
   * pays a parquet footer-inference job, and a sidecar holding no data files
   * reads as empty instead of failing. The layout itself comes from the
   * directory tree ([[layout]]), never from a Spark job.
+  *
+  * The sidecar is folded once per insert, not once per read: the process
+  * that appended every pending insert keeps their latest row per merge key
+  * in memory (`DeltaMemo`) with the sidecar listing it covers, and a read
+  * whose listing matches takes the pending rows from there instead of
+  * reading and folding `_delta`. Any other sidecar state (an upsert's
+  * partial fold, a compaction, another process's file, a restarted
+  * writer) is read and folded from its files.
   */
 object Lake {
 
@@ -79,7 +87,7 @@ object Lake {
   private def deltaDir(lakePath: String): String = lakePath + "/_delta"
 
   /** Process-local strictly-increasing `_seq` source for [[insertFast]]:
-    * O(1) per insert, never touching the sidecar. Time-anchored — epoch
+    * O(1) per insert, with no sidecar read. Time-anchored — epoch
     * millis shifted left 20 bits, OR'd with a pid salt in the low bits —
     * so a RESTARTED writer resumes above everything any earlier process
     * wrote (including pre-existing small integer seqs: millis<<20 ≈ 2^60
@@ -118,7 +126,27 @@ object Lake {
     */
   private val layoutCache = scala.collection.concurrent.TrieMap.empty[String, Layout]
   private[graft] val layoutProbes = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] def forgetLayout(lakePath: String): Unit = layoutCache.remove(lakePath)
+
+  /** Forget what this process memoised about the lake at `lakePath` (its
+    * layout and its folded sidecar), as a restarted process would.
+    */
+  private[graft] def forgetLayout(lakePath: String): Unit = {
+    layoutCache.remove(lakePath)
+    deltaMemo.remove(lakePath)
+  }
+
+  /** The folded `_delta` sidecar of a lake whose every pending insert this
+    * process wrote: `files`, the visible data-file listing ([[deltaFiles]])
+    * the fold covers, and `rows`, the latest inserted row per merge key —
+    * what [[deltaLatest]] would compute from those files, with no job.
+    * [[insertFast]] extends it by the row it appends; [[readView]] uses it
+    * only while the sidecar's listing still equals `files`, so any other
+    * change to the sidecar (an upsert's fold, a compaction, another
+    * writer's file) makes it miss and the read folds the files instead.
+    * Process-local, like [[layoutCache]].
+    */
+  private final case class DeltaMemo(files: Map[String, Long], rows: Map[Seq[Any], Transaction])
+  private val deltaMemo = scala.collection.concurrent.TrieMap.empty[String, DeltaMemo]
 
   /** The lake's partition layout, fixed by its first write: `data_source`,
     * then a derived `posting_month` level when monthly. A call takes it once
@@ -182,6 +210,30 @@ object Lake {
   private def deltaExists(spark: SparkSession, lakePath: String): Boolean = {
     val dPath = new Path(deltaDir(lakePath))
     hfs(spark, dPath).exists(dPath)
+  }
+
+  /** The sidecar's data files as a read of it sees them: path under
+    * `_delta` → length, skipping every file and dir whose name starts with
+    * `_` or `.` (Spark's file index hides them: `_SUCCESS`, a crashed
+    * write's `_temporary`). Empty when there is no sidecar. A listing, no
+    * Spark job.
+    */
+  private def deltaFiles(spark: SparkSession, lakePath: String): Map[String, Long] = {
+    val root = new Path(deltaDir(lakePath))
+    val fs = hfs(spark, root)
+    def walk(dir: Path, rel: String): Iterator[(String, Long)] =
+      fs.listStatus(dir).iterator
+        .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+        .flatMap { st =>
+          val name = rel + st.getPath.getName
+          if (st.isDirectory) walk(st.getPath, name + "/") else Iterator(name -> st.getLen)
+        }
+    if (fs.exists(root)) walk(root, "").toMap else Map.empty
+  }
+
+  private def mergeKeyOf(t: Transaction): Seq[Any] = {
+    val fields = t.productElementNames.zip(t.productIterator).toMap
+    Transaction.mergeKey.map(fields)
   }
 
   /** Replace the contents of `target` with `rows`, the one stage-and-swap
@@ -263,10 +315,16 @@ object Lake {
     * of merging + rewriting the row's whole partition. At 100 TB a
     * partition is GBs — per-row partition rewrites are the difference
     * between an insert being milliseconds and minutes. Delta rows carry a
-    * monotonic `_seq` ([[nextDeltaSeq]] — O(1), no sidecar read) so later
-    * inserts win on read; [[readLake]] folds
-    * them lazily, [[upsertIntoLake]] folds touched ones on the next batch,
-    * and [[compact]] folds everything back to base.
+    * monotonic `_seq` ([[nextDeltaSeq]]) so later inserts win on read;
+    * [[readLake]] folds them, [[upsertIntoLake]] folds touched ones on the
+    * next batch, and [[compact]] folds everything back to base.
+    *
+    * O(1) in the sidecar's content: it lists the sidecar before and after
+    * its append, and never reads it. When the append added exactly one
+    * file to the listing the memo holds (or to a sidecar with no data file
+    * yet), the row joins the memo's fold ([[DeltaMemo]]), replacing the
+    * memo row with its merge key: every memo row carries an earlier `_seq`
+    * of this process. Otherwise the memo goes, and reads fold the files.
     *
     * Falls back to the merge path when the lake doesn't exist yet (the
     * first write defines the layout).
@@ -275,10 +333,23 @@ object Lake {
     import spark.implicits._
     val hPath = new Path(lakePath)
     if (!hfs(spark, hPath).exists(hPath)) { upsertIntoLake(spark, Seq(t).toDF(), lakePath); return }
+    val before = deltaFiles(spark, lakePath)
     layout(spark, lakePath).derive(Seq(t).toDF())
       .withColumn("_seq", lit(nextDeltaSeq()))
       .coalesce(1)
       .write.mode(SaveMode.Append).parquet(deltaDir(lakePath))
+    val after = deltaFiles(spark, lakePath)
+    val oneMore = after.size == before.size + 1 &&
+      before.forall { case (f, n) => after.get(f).contains(n) }
+    deltaMemo.synchronized {
+      val prior =
+        if (before.isEmpty) Some(DeltaMemo(Map.empty, Map.empty))
+        else deltaMemo.get(lakePath).filter(_.files == before)
+      prior.filter(_ => oneMore) match {
+        case Some(m) => deltaMemo.put(lakePath, DeltaMemo(after, m.rows.updated(mergeKeyOf(t), t)))
+        case None => deltaMemo.remove(lakePath)
+      }
+    }
   }
 
   /** Keep-latest-by-`_seq` collapse of raw delta rows, `_seq` dropped.
@@ -295,24 +366,33 @@ object Lake {
   }
 
   /** Delta-consistent view of the lake: base rows shadowed by any pending
-    * delta inserts on the same merge key (latest `_seq` wins). Both sides
-    * are read with the lake's known schema (no inference job), and
-    * building the view submits no Spark job once the layout is memoised;
-    * its columns are the base's, in [[lakeSchema]] order, whether or not
-    * a sidecar is pending.
-    * The sidecar fold is one task with no exchange ([[deltaLatest]]); its
-    * result is the anti-join's build side, broadcast to the base scan, so
-    * the base never shuffles either. Size bound: the pending sidecar must
-    * fit one task and one broadcast — compaction cadence keeps it there.
+    * delta inserts on the same merge key (latest `_seq` wins). The base is
+    * read with the lake's known schema (no inference job), and building
+    * the view lists the sidecar and submits no Spark job once the layout
+    * is memoised; its columns are the base's, in [[lakeSchema]] order,
+    * whether or not a sidecar is pending.
+    * When the sidecar's listing is the one this process's inserts folded
+    * ([[DeltaMemo]]), the pending rows come from that fold as local rows
+    * and no job reads `_delta`; otherwise the sidecar is read and folded
+    * in one task with no exchange ([[deltaLatest]]). Either way the
+    * pending rows are the anti-join's build side, broadcast to the base
+    * scan, so the base never shuffles. Size bound: the pending sidecar
+    * must fit one task and one broadcast (a driver collect) — compaction
+    * cadence keeps it there.
     */
   def readLake(spark: SparkSession, lakePath: String): DataFrame =
     readView(spark, lakePath, layout(spark, lakePath))
 
   private def readView(spark: SparkSession, lakePath: String, layout: Layout): DataFrame = {
+    import spark.implicits._
     val base = readBase(spark, layout, lakePath)
-    if (!deltaExists(spark, lakePath)) base
+    val files = deltaFiles(spark, lakePath)
+    if (files.isEmpty) base
     else {
-      val latest = deltaLatest(readDelta(spark, lakePath, layout))
+      val latest = deltaMemo.get(lakePath).filter(_.files == files) match {
+        case Some(m) => layout.derive(m.rows.values.toSeq.toDF())
+        case None => deltaLatest(readDelta(spark, lakePath, layout))
+      }
       // the USING join puts the key columns first; keep the base's order
       base.join(latest, Transaction.mergeKey, "left_anti")
         .select(base.columns.map(col).toSeq: _*)
@@ -400,10 +480,18 @@ object Lake {
     // posting_date-sorted partition skips every row group outside the
     // window instead of reading the partition end to end — the poor man's
     // z-order, and at 100 TB the difference between a range query reading
-    // gigabytes and reading row-group headers.
+    // gigabytes and reading row-group headers. `posting_date` sorts by
+    // the date it spells: its MM/dd/yyyy string order is month-major, so
+    // 01/01/2024 would sort before 12/31/2023. The date is a column of its
+    // own, parsed once per row: a sort key expression is evaluated again
+    // in every comparison the sort's prefix does not settle.
     val clustered = readView(spark, lakePath, lay).repartition(parts: _*)
+    val key = (c: String) => if (c == "posting_date") "_posting_day" else c
     commit(spark, lakePath, lay,
-      if (sortBy.isEmpty) clustered else clustered.sortWithinPartitions(parts ++ sortBy.map(col): _*),
+      if (sortBy.isEmpty) clustered
+      else clustered.withColumn("_posting_day", try_to_date(col("posting_date"), "MM/dd/yyyy"))
+        .sortWithinPartitions(parts ++ sortBy.map(c => col(key(c))): _*)
+        .drop("_posting_day"),
       None)
   }
 

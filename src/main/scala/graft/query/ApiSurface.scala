@@ -14,10 +14,13 @@ import graft.model.Transaction
   * filters over it.
   *
   * Reads go through [[Lake.readLake]], which reads the lake with the schema
-  * it already has (no footer-inference job) and folds the `_delta` sidecar
-  * in one task with no exchange: with a sidecar pending, a point lookup or
-  * a range search over it runs 2 Spark jobs (the sidecar broadcast and the
-  * scan) and no shuffle.
+  * it already has (no footer-inference job) and shadows base rows by the
+  * pending `_delta` inserts: with a sidecar pending, a point lookup or a
+  * range search over it runs 2 Spark jobs (the broadcast of the pending
+  * rows and the base scan) and no shuffle. When this process wrote every
+  * pending insert, the pending rows are the fold it keeps in memory, so
+  * neither job reads `_delta`; otherwise the broadcast job reads and folds
+  * the sidecar's files in one task.
   *
   * Scale posture: [[historySearch]] filters on the derived epoch column —
   * at 100 TB the lake would additionally be partitioned/z-ordered by a

@@ -76,7 +76,11 @@ import org.apache.spark.sql.functions._
   * carry the caller's Spark local properties (job group, description) and
   * active session, so cancelling the caller's job group cancels their
   * jobs too; a failure surfaces as its own exception only after every
-  * sibling has finished, and no kernel thread outlives the call.
+  * sibling has finished, and no kernel thread outlives the call. Every
+  * job of [[legs]], [[classify]] and [[appendState]] is named after its
+  * step (`Admission.legs`, ...) in listeners and the Spark UI; Spark's
+  * exchange and result-stage threads would otherwise name it
+  * `$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:1768`.
   *
   * Write order (crash semantics): the caller's own tables (the verb's
   * report and admitted table, the stream's report and `outPath`) and the
@@ -132,7 +136,10 @@ object Admission {
     * and `trimEdges` ([[PerceptualDedup.admitTrimStrictEdges]] of the
     * containment leg's batch shingles), each cut and materialized. An edge
     * list is None when its leg is off, the batch is not strict, or the
-    * list is empty (the pass then demotes nobody).
+    * list is empty (the pass then demotes nobody). `edgesAtMost` is the
+    * most rows any of them holds (0 when none): it bounds every list a
+    * strict pass restricts them to, so [[classify]] knows which CC path
+    * each pass takes without counting.
     */
   final case class Legs(
       sigs: DataFrame,
@@ -143,7 +150,8 @@ object Admission {
       textEdges: Option[DataFrame],
       embEdges: Option[DataFrame],
       mediaEdges: Option[DataFrame],
-      trimEdges: Option[PerceptualDedup.TrimStrictEdges])
+      trimEdges: Option[PerceptualDedup.TrimStrictEdges],
+      edgesAtMost: Long)
 
   /** Build every leg of `batch`, overlapped as documented on this object:
     * the text corpus leg against `corpusSigs` is cut on the caller's
@@ -163,12 +171,12 @@ object Admission {
       media: Option[() => MediaLeg],
       trim: Option[Option[MediaLeg] => TrimLeg],
       strict: Boolean,
-      checkpointDir: Option[String]): Legs = {
+      checkpointDir: Option[String]): Legs = withCallSite(batch.sparkSession, "Admission.legs") {
     def cut(df: DataFrame) = DedupClusters.ckpt(df, checkpointDir)
-    // a strict pass's edge list, cut and materialized on the leg thread
-    // that builds it; an empty list is dropped
-    def edges(df: DataFrame): Option[DataFrame] =
-      if (!strict) None else Some(cut(df)).filter(_.count() > 0)
+    // a strict pass's edge list, cut and counted on the leg thread that
+    // builds it; an empty list is dropped
+    def edges(df: DataFrame): Option[(DataFrame, Long)] =
+      if (!strict) None else { val e = cut(df); Some(e -> e.count()).filter(_._2 > 0) }
     // lazy vals are initialized once, under a lock, on whichever thread
     // forces them first; `together` forces each on its own thread
     lazy val sigs = cut(Dedup.dedupSignatures(batch))
@@ -183,17 +191,19 @@ object Admission {
     lazy val trimLeg = trim.map(_(mediaLeg))
     lazy val trimEdges = trimLeg.flatMap { t =>
       val e = PerceptualDedup.admitTrimStrictEdges(t.batchShingles)
-      edges(e.links).map { links =>
+      edges(e.links).map { case (links, n) =>
         val sizes = cut(e.sizes)
         sizes.count()
-        PerceptualDedup.TrimStrictEdges(links, sizes)
+        (PerceptualDedup.TrimStrictEdges(links, sizes), n)
       }
     }
     together(batch.sparkSession, Seq(() => text) ++
       (if (strict) Some(() => textEdges) else None) ++
       emb.map(_ => () => embEdges) ++
       (if (media.isDefined || trim.isDefined) Some(() => (mediaEdges, trimEdges)) else None))
-    Legs(sigs, text, embFrame, mediaLeg, trimLeg, textEdges, embEdges, mediaEdges, trimEdges)
+    Legs(sigs, text, embFrame, mediaLeg, trimLeg, textEdges.map(_._1), embEdges.map(_._1),
+      mediaEdges.map(_._1), trimEdges.map(_._1),
+      Seq(textEdges, embEdges, mediaEdges, trimEdges).flatMap(_.map(_._2)).maxOption.getOrElse(0L))
   }
 
   /** The batch side of the media leg against `corpusBands` (cv_id,
@@ -283,7 +293,8 @@ object Admission {
     * passes, in the leg order documented on this object. Returns the final
     * (doc_id, key, status) frame, cut once.
     */
-  def classify(legs: Legs, checkpointDir: Option[String]): DataFrame = {
+  def classify(legs: Legs, checkpointDir: Option[String]): DataFrame = withCallSite(
+      legs.sigs.sparkSession, "Admission.classify") {
     def cut(df: DataFrame) = DedupClusters.ckpt(df, checkpointDir)
     // (doc_id, status) for each doc with a `hits` row matching a rule,
     // the status of the first rule it matches: the fold of one restatus
@@ -324,7 +335,10 @@ object Admission {
     // only demotes admitted docs, and an edge qualifies on its two docs
     // alone, so these are exactly the edges a CC over the still-admitted
     // docs' leg rows would find. Doc sets are batch-bounded, so broadcast
-    // (one broadcast serves both ends)
+    // (one broadcast serves both ends). A restricted list has at most the
+    // rows of its whole list, so `cc` takes the one-task CC path without a
+    // count job whenever the largest list fits one task
+    val cc = DedupClusters.componentsAtMost(legs.edgesAtMost, checkpointDir)
     def among(edges: DataFrame, docs: DataFrame) = {
       val d = broadcast(docs)
       edges.join(d, col("a") === col("doc_id"), "left_semi")
@@ -332,18 +346,18 @@ object Admission {
     }
     val passes: Seq[DataFrame => DataFrame] = Seq(
       legs.textEdges.map(e => (docs: DataFrame) =>
-        as("near_dup_batch")(DedupClusters.minIdLosers(among(e, docs), checkpointDir))),
+        as("near_dup_batch")(DedupClusters.minIdLosersBy(among(e, docs), cc))),
       legs.embEdges.map(e => (docs: DataFrame) =>
-        as("near_dup_batch_emb")(DedupClusters.minIdLosers(among(e, docs), checkpointDir))),
+        as("near_dup_batch_emb")(DedupClusters.minIdLosersBy(among(e, docs), cc))),
       for (e <- legs.mediaEdges; m <- legs.media) yield (docs: DataFrame) =>
         firstStatus(
-          PerceptualDedup.admitMediaStrictLosersOf(among(e, docs), m.frame, checkpointDir),
+          PerceptualDedup.admitMediaStrictLosersBy(among(e, docs), m.frame, cc),
           byModality(_.strictStatus)),
       // containment keeps the BEST doc per CC by shingle count (the
       // longer clip / larger image is the source), not the min id
       legs.trimEdges.map(e => (docs: DataFrame) =>
-        firstStatus(PerceptualDedup.admitTrimStrictLosersOf(e.copy(links = among(e.links, docs)),
-          checkpointDir), bySpace(_.strictStatus, PerceptualDedup.RcropStrictStatus)))
+        firstStatus(PerceptualDedup.admitTrimStrictLosersBy(e.copy(links = among(e.links, docs)),
+          cc, checkpointDir), bySpace(_.strictStatus, PerceptualDedup.RcropStrictStatus)))
     ).flatten
     if (passes.isEmpty) cut(stCorpus)
     else {
@@ -378,7 +392,7 @@ object Admission {
       sigsDir: Option[String],
       esigsDir: Option[String],
       psigsDir: Option[String],
-      writes: Seq[() => Unit]): Unit = {
+      writes: Seq[() => Unit]): Unit = withCallSite(admittedIds.sparkSession, "Admission.appendState") {
     def append(df: DataFrame, path: String): () => Unit =
       () => df.write.mode(SaveMode.Append).parquet(path)
     val beforeSigs = writes ++
@@ -401,6 +415,29 @@ object Admission {
     for (d <- sigsDir)
       append(legs.sigs.join(admittedIds, "doc_id"), d)()
   }
+
+  /** Run `body` with `site` as the Spark call site of every job it starts,
+    * restoring the caller's after. Spark runs a query's exchanges and its
+    * result stage through `SQLExecution.withThreadLocalCaptured` on pools
+    * of its own (shuffle and broadcast exchanges, the result query stage),
+    * so a job of any query with an exchange takes its call site from a
+    * pool thread's stack, which holds no program frame:
+    * `$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:1768`,
+    * whichever thread ran the action. Those pools copy the acting thread's
+    * local properties, as the leg and write threads do, so the call-site
+    * property set here names each such job after the kernel step it
+    * belongs to.
+    */
+  private def withCallSite[T](spark: SparkSession, site: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty(CallSiteShort)
+    sc.setLocalProperty(CallSiteShort, site)
+    try body finally sc.setLocalProperty(CallSiteShort, prior)
+  }
+
+  // the local property Spark reads a job's short call site from
+  // (`org.apache.spark.util.CallSite.SHORT_FORM`, private to Spark)
+  private val CallSiteShort = "callSite.short"
 
   /** Run `thunks` at once and return when every one has finished: the
     * first on the caller's thread, each other on its own `graft-admit-<i>`

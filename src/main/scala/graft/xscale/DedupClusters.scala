@@ -67,12 +67,7 @@ object DedupClusters {
       maxIter: Int = 20,
       checkpointDir: Option[String] = None,
       salts: Int = 1): DataFrame = {
-    // pairs are unique undirected edges (callers emit a<b), so the
-    // symmetric union is already duplicate-free — no distinct shuffle
-    val edges0 = ckpt(
-      pairs.select(col("a"), col("b"))
-        .union(pairs.select(col("b").as("a"), col("a").as("b"))),
-      checkpointDir)
+    val edges0 = ckpt(symmetric(pairs), checkpointDir)
     // Adaptive algorithm choice for the iterative tail: a near-dup pair
     // graph is usually TINY next to the corpus (thousands of edges from
     // millions of docs), yet every label-prop round is a full
@@ -85,7 +80,7 @@ object DedupClusters {
     // min-id labeling), while big graphs keep the full distributed loop
     // below. Same spirit as a broadcast join's small-side threshold,
     // applied to an iterative algorithm.
-    if (edges0.count() <= 200000)
+    if (edges0.count() <= OneTaskEdges)
       return ckpt(unionFindOneTask(edges0.coalesce(1)), checkpointDir)
     val edges = edges0
     // seed labels at min(id, min neighbor) instead of id: for the dense
@@ -143,13 +138,40 @@ object DedupClusters {
     labels
   }
 
+  /** The largest symmetric edge list (both directions of every pair)
+    * [[connectedComponents]] solves in one union–find task, ≈ 3 MB.
+    */
+  private[graft] val OneTaskEdges = 200000L
+
+  // pairs are unique undirected edges (callers emit a<b), so the
+  // symmetric union is already duplicate-free — no distinct shuffle
+  private def symmetric(pairs: DataFrame): DataFrame =
+    pairs.select(col("a"), col("b")).union(pairs.select(col("b").as("a"), col("a").as("b")))
+
+  /** [[connectedComponents]] for a caller that already knows `pairs` holds
+    * at most `pairsAtMost` pairs: when their symmetric list is within
+    * [[OneTaskEdges]] it goes straight to the one-task union–find, with no
+    * count job and no cut of the edge list (it has one reader); otherwise
+    * it is [[connectedComponents]]. Same labeling either way.
+    */
+  private[graft] def componentsAtMost(
+      pairsAtMost: Long,
+      checkpointDir: Option[String]): DataFrame => DataFrame = pairs =>
+    if (2L * pairsAtMost <= OneTaskEdges)
+      ckpt(unionFindOneTask(symmetric(pairs).coalesce(1)), checkpointDir)
+    else connectedComponents(pairs, checkpointDir = checkpointDir)
+
   /** The min-id keep-one rule over an undirected pair list `(a, b)`: the
     * LOSERS — every node that is not its component's minimum id — as one
     * `doc_id` column. The survivor rule of the text, emb and media strict
     * admission passes.
     */
   def minIdLosers(pairs: DataFrame, checkpointDir: Option[String] = None): DataFrame =
-    connectedComponents(pairs, checkpointDir = checkpointDir)
+    minIdLosersBy(pairs, connectedComponents(_, checkpointDir = checkpointDir))
+
+  /** [[minIdLosers]] with the components of `pairs` taken by `components`. */
+  private[graft] def minIdLosersBy(pairs: DataFrame, components: DataFrame => DataFrame): DataFrame =
+    components(pairs)
       .filter(col("id") =!= col("component"))
       .select(col("id").as("doc_id"))
 

@@ -1928,7 +1928,17 @@ object PerceptualDedup {
     */
   def admitTrimStrictLosersOf(
       edges: TrimStrictEdges,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame =
+    admitTrimStrictLosersBy(edges,
+      DedupClusters.connectedComponents(_, checkpointDir = checkpointDir), checkpointDir)
+
+  /** [[admitTrimStrictLosersOf]] with the components of the links taken by
+    * `components`.
+    */
+  private[graft] def admitTrimStrictLosersBy(
+      edges: TrimStrictEdges,
+      components: DataFrame => DataFrame,
+      checkpointDir: Option[String]): DataFrame = {
     val qualC = DedupClusters.ckpt(edges.links, checkpointDir)
     // ONE undirected CC over pairs qualifying in ANY space (spaces only
     // ever link docs of one modality); keep the doc with the most
@@ -1936,8 +1946,7 @@ object PerceptualDedup {
     // clip carries more in every space, and a per-space rank would emit
     // the WINNER's other-space row as a loser (the two-space bug this
     // per-doc rank replaces).
-    val comp = DedupClusters.connectedComponents(
-      qualC.select("a", "b").distinct(), checkpointDir = checkpointDir)
+    val comp = components(qualC.select("a", "b").distinct())
     // doc-level and batch-bounded, like szMod
     val szDoc = broadcast(edges.sizes)
     val w = org.apache.spark.sql.expressions.Window
@@ -2385,8 +2394,17 @@ object PerceptualDedup {
   def admitMediaStrictLosersOf(
       edges: DataFrame,
       bands: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val losers = DedupClusters.minIdLosers(edges, checkpointDir)
+      checkpointDir: Option[String] = None): DataFrame =
+    admitMediaStrictLosersBy(edges, bands, DedupClusters.connectedComponents(_, checkpointDir = checkpointDir))
+
+  /** [[admitMediaStrictLosersOf]] with the components of `edges` taken by
+    * `components`.
+    */
+  private[graft] def admitMediaStrictLosersBy(
+      edges: DataFrame,
+      bands: DataFrame,
+      components: DataFrame => DataFrame): DataFrame = {
+    val losers = DedupClusters.minIdLosersBy(edges, components)
     if (bands.columns.contains("mod")) losers.join(bands.select("doc_id", "mod"), "doc_id")
     else losers
   }

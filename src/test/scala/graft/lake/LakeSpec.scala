@@ -1,5 +1,6 @@
 package graft.lake
 
+import org.apache.spark.sql.functions.lit
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -324,5 +325,107 @@ class LakeSpec extends SparkSpec {
     assert(leaves === Seq(dir))
     assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet === Set((3L, "v3"), (4L, "v4")))
     assert(!new java.io.File(dir + ".staging").exists() && !new java.io.File(dir, ".staging").exists())
+  }
+
+  test("compact(sortBy = posting_date) orders rows by date across a year boundary") {
+    val lake = new java.io.File(tmpDir("lakeZY"), "lake").getPath
+    val dates = Seq("01/01/2024", "12/31/2023", "02/15/2024", "11/30/2023")
+    Lake.upsertIntoLake(spark, dates.map(d => tx(date = d, desc = s"d$d")).toDF(), lake)
+    Lake.compact(spark, lake, sortBy = Seq("posting_date"))
+    val files = new java.io.File(lake, "data_source=chase").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.length === 1)
+    val got = spark.read.parquet(files.head.getPath).select("posting_date").as[String].collect().toSeq
+    assert(got === Seq("11/30/2023", "12/31/2023", "01/01/2024", "02/15/2024"))
+  }
+
+  /** The lake's rows as this process reads them now, then as a fresh
+    * process (no memoised layout or sidecar fold) folds them from the
+    * files: they must be the same rows. Leaves the process with no memo.
+    */
+  private def assertMatchesFold(lake: String, step: String): Seq[String] = {
+    def rows() = Lake.readLake(spark, lake).collect().map(_.toString).toSeq.sorted
+    val now = rows()
+    Lake.forgetLayout(lake)
+    assert(now === rows(), step)
+    now
+  }
+
+  /** A lake of two sources with three pending inserts this process wrote
+    * (one of them shadowing a base row), flat or monthly.
+    */
+  private def memoLake(prefix: String, monthly: Boolean): String = {
+    val lake = new java.io.File(tmpDir(prefix), "lake").getPath
+    Lake.upsertIntoLake(spark,
+      Seq(tx(amount = 1.0), tx(desc = "other", amount = 5.0), tx(source = "synthetic", acct = "0000")).toDF(),
+      lake, monthPartitioned = monthly)
+    Lake.insertFast(spark, tx(amount = 2.0), lake)
+    Lake.insertFast(spark, tx(desc = "new", date = "02/03/2024", amount = 3.0), lake)
+    Lake.insertFast(spark, tx(source = "synthetic", acct = "0000", desc = "s", amount = 4.0), lake)
+    lake
+  }
+
+  test("a sidecar file another writer appends behind the memo is read: readLake equals the fold") {
+    for (monthly <- Seq(false, true)) {
+      val lake = memoLake(s"lakeMemoOther$monthly", monthly)
+      // another writer's insert of an existing key, with a later _seq
+      val other = spark.read.parquet(lake + "/_delta").filter($"amount" === 2.0)
+        .withColumn("amount", lit(8.0)).withColumn("_seq", $"_seq" + 1L)
+      other.coalesce(1).write.mode("append").parquet(lake + "/_delta")
+      val now = assertMatchesFold(lake, s"monthly=$monthly")
+      assert(now.exists(_.contains(",8.0,")) && !now.exists(_.contains(",2.0,")), now.mkString("\n"))
+    }
+  }
+
+  test("an upsert that folds part of the sidecar: readLake equals the fold, before and after more inserts") {
+    for (monthly <- Seq(false, true)) {
+      val lake = memoLake(s"lakeMemoUpsert$monthly", monthly)
+      // touches chase only, and overwrites a pending chase insert: the
+      // synthetic insert stays pending
+      Lake.upsertIntoLake(spark, Seq(tx(amount = 6.0), tx(desc = "batch", amount = 6.0)).toDF(), lake)
+      Lake.insertFast(spark, tx(desc = "after", amount = 7.0), lake)
+      val now = assertMatchesFold(lake, s"monthly=$monthly")
+      assert(now.size === 7 && !now.exists(_.contains(",2.0,")), now.mkString("\n"))
+    }
+  }
+
+  test("compact folds the memoised sidecar away; inserts after it read as the fold") {
+    for (monthly <- Seq(false, true)) {
+      val lake = memoLake(s"lakeMemoCompact$monthly", monthly)
+      assert(Lake.compact(spark, lake) === 5L)
+      Lake.insertFast(spark, tx(desc = "after", amount = 7.0), lake)
+      Lake.insertFast(spark, tx(desc = "after", amount = 9.0), lake)
+      val now = assertMatchesFold(lake, s"monthly=$monthly")
+      assert(now.size === 6 && now.exists(_.contains(",9.0,")) && !now.exists(_.contains(",7.0,")),
+        now.mkString("\n"))
+    }
+  }
+
+  test("a crashed insert's _temporary beside the memoised sidecar: readLake equals the fold") {
+    for (monthly <- Seq(false, true)) {
+      val lake = memoLake(s"lakeMemoCrash$monthly", monthly)
+      val attempt = new java.io.File(lake, "_delta/_temporary/0/_temporary/attempt_0")
+      assert(attempt.mkdirs())
+      java.nio.file.Files.write(new java.io.File(attempt, "part-00000.parquet").toPath, "torn".getBytes)
+      assertMatchesFold(lake, s"monthly=$monthly, torn attempt")
+      val fresh = memoLake(s"lakeMemoCrash2$monthly", monthly)
+      val attempt2 = new java.io.File(fresh, "_delta/_temporary/0/_temporary/attempt_0")
+      assert(attempt2.mkdirs())
+      java.nio.file.Files.write(new java.io.File(attempt2, "part-00000.parquet").toPath, "torn".getBytes)
+      Lake.insertFast(spark, tx(desc = "after", amount = 7.0), fresh)
+      val now = assertMatchesFold(fresh, s"monthly=$monthly, insert after a torn attempt")
+      assert(now.size === 6, now.mkString("\n"))
+    }
+  }
+
+  test("a fresh process with a pending sidecar: readLake equals the fold, before and after more inserts") {
+    for (monthly <- Seq(false, true)) {
+      val lake = memoLake(s"lakeMemoFresh$monthly", monthly)
+      Lake.forgetLayout(lake) // a restarted process
+      Lake.insertFast(spark, tx(amount = 11.0), lake)
+      Lake.insertFast(spark, tx(desc = "after", amount = 7.0), lake)
+      val now = assertMatchesFold(lake, s"monthly=$monthly")
+      assert(now.size === 6 && now.exists(_.contains(",11.0,")), now.mkString("\n"))
+    }
   }
 }

@@ -303,4 +303,33 @@ class AdmissionSpec extends SparkSpec {
     // 30 jobs here; over the built edge lists they start 17-18
     assert(tail.size <= 20, s"${tail.size} jobs after legs returned")
   }
+
+  test("every job of a strict admit is named after its kernel step, none after a Spark pool's stack") {
+    val st = new States(tmpDir("admit-site"), "flat")
+    val base = st.base.getPath
+    val sc = spark.sparkContext
+    // job id -> (the job's call site, its stages' names)
+    val sites = TrieMap.empty[Int, (String, Seq[String])]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites(e.jobId) = (Option(e.properties).map(_.getProperty("callSite.short")).orNull,
+          e.stageInfos.map(_.name))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      StreamingAdmit.admit(spark, st.batch, st.sigs, strict = true, reportPath = Some(s"$base/report"),
+        esigsPath = Some(st.esigs), batchEmb = Some(st.batchEmb), outPath = Some(s"$base/out"))
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    val jobs = sites.toSeq.sortBy(_._1).map(_._2)
+    assert(jobs.nonEmpty)
+    val pooled = jobs.filter { case (site, stages) => (Option(site) ++ stages).exists(_.contains("CompletableFuture")) }
+    assert(pooled.size === 0, s"of ${jobs.size} jobs named after a pool thread, e.g. ${pooled.take(2)}")
+    val steps = jobs.map(_._1).toSet
+    assert(steps.subsetOf(Set("Admission.legs", "Admission.classify", "Admission.appendState")), steps)
+    assert(steps.contains("Admission.legs") && steps.contains("Admission.appendState"), steps)
+    assert(sc.getLocalProperty("callSite.short") === null, "the caller's call site is restored")
+    assert(spark.read.parquet(s"$base/out").select("doc_id").as[Long].collect().toSet === st.admits)
+  }
 }

@@ -20,6 +20,36 @@ class DedupClustersSpec extends SparkSpec {
     assert(Seq(20L, 21L, 22L).forall(comp(_) == 20L), comp.toString)
   }
 
+  test("componentsAtMost: a known small bound skips the edge count and labels as connectedComponents does") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L))
+      .toDF("a", "b")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def run(cc: => org.apache.spark.sql.DataFrame): (Map[Long, Long], Int) = {
+      org.apache.spark.ListenerBusDrain(sc)
+      jobs.set(0)
+      val comp = cc.as[(Long, Long)].collect().toMap
+      org.apache.spark.ListenerBusDrain(sc)
+      (comp, jobs.get)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (counted, countedJobs) = run(DedupClusters.connectedComponents(pairs))
+      val (bounded, boundedJobs) = run(DedupClusters.componentsAtMost(7L, None)(pairs))
+      assert(bounded === counted)
+      // the counted path counts (and cuts) the edge list before the
+      // union-find job; the bounded path runs the union-find job alone
+      assert(boundedJobs === 1 && countedJobs > boundedJobs, s"counted: $countedJobs jobs, bounded: $boundedJobs")
+      // a bound past the one-task threshold takes the counted path
+      val (big, _) = run(DedupClusters.componentsAtMost(DedupClusters.OneTaskEdges, None)(pairs))
+      assert(big === counted)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("connectedComponentsStar: chains, bridges, cliques match label propagation") {
     // long chain (diameter >> star rounds), a bridge joining two V-shapes
     // whose min-neighbor edges would NOT span it, a clique, and a pair
