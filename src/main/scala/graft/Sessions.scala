@@ -27,4 +27,27 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+
+  /** Run `body` with `site` as the Spark call site of every job it starts,
+    * restoring the caller's after. Spark runs a query's exchanges and its
+    * result stage through `SQLExecution.withThreadLocalCaptured` on pools
+    * of its own (shuffle and broadcast exchanges, the result query stage),
+    * so a job of any query with an exchange takes its call site from a
+    * pool thread's stack, which holds no program frame:
+    * `$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:1768`,
+    * whichever thread ran the action. Those pools copy the acting thread's
+    * local properties, so the call-site property set here names each such
+    * job after the program step it belongs to (`Admission.legs`,
+    * `Lake.compact`, ...).
+    */
+  def withCallSite[T](spark: SparkSession, site: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty(CallSiteShort)
+    sc.setLocalProperty(CallSiteShort, site)
+    try body finally sc.setLocalProperty(CallSiteShort, prior)
+  }
+
+  // the local property Spark reads a job's short call site from
+  // (`org.apache.spark.util.CallSite.SHORT_FORM`, private to Spark)
+  private val CallSiteShort = "callSite.short"
 }

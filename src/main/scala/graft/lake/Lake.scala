@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.Sessions.withCallSite
 import graft.model.{FileOutcome, IngestStats, SyncLog, Transaction}
 import graft.source.CsvIngest
 
@@ -329,10 +330,16 @@ object Lake {
     * Falls back to the merge path when the lake doesn't exist yet (the
     * first write defines the layout).
     */
-  def insertFast(spark: SparkSession, t: Transaction, lakePath: String): Unit = {
+  def insertFast(spark: SparkSession, t: Transaction, lakePath: String): Unit =
+    withCallSite(spark, "Lake.insertFast") {
+      import spark.implicits._
+      val hPath = new Path(lakePath)
+      if (!hfs(spark, hPath).exists(hPath)) upsertIntoLake(spark, Seq(t).toDF(), lakePath)
+      else insertDelta(spark, t, lakePath)
+    }
+
+  private def insertDelta(spark: SparkSession, t: Transaction, lakePath: String): Unit = {
     import spark.implicits._
-    val hPath = new Path(lakePath)
-    if (!hfs(spark, hPath).exists(hPath)) { upsertIntoLake(spark, Seq(t).toDF(), lakePath); return }
     val before = deltaFiles(spark, lakePath)
     layout(spark, lakePath).derive(Seq(t).toDF())
       .withColumn("_seq", lit(nextDeltaSeq()))
@@ -420,7 +427,7 @@ object Lake {
       spark: SparkSession,
       batch: DataFrame,
       lakePath: String,
-      monthPartitioned: Boolean = false): Long = {
+      monthPartitioned: Boolean = false): Long = withCallSite(spark, "Lake.upsertIntoLake") {
     val hPath = new Path(lakePath)
     val exists = hfs(spark, hPath).exists(hPath)
     // The lake's ON-DISK layout wins over the flag once it exists — a
@@ -472,7 +479,7 @@ object Lake {
   def compact(
       spark: SparkSession,
       lakePath: String,
-      sortBy: Seq[String] = Nil): Long = {
+      sortBy: Seq[String] = Nil): Long = withCallSite(spark, "Lake.compact") {
     val lay = layout(spark, lakePath)
     val parts = lay.partCols.map(col)
     // `sortBy` clusters rows inside each rewritten file so parquet's
@@ -546,9 +553,11 @@ object Lake {
     // for plan-independent ragged-row detection; every action on the parsed
     // rows happens inside this method, so scope the session change here.
     CsvIngest.restoringColumnPruning(spark) {
-      ingestDirectoryInner(
-        spark, unprocessedDir, lakePath, syncLogPath, processedDir, quarantinePath,
-        log.withField("dir", unprocessedDir))
+      withCallSite(spark, "Lake.ingestDirectory") {
+        ingestDirectoryInner(
+          spark, unprocessedDir, lakePath, syncLogPath, processedDir, quarantinePath,
+          log.withField("dir", unprocessedDir))
+      }
     }
   }
 
@@ -569,7 +578,7 @@ object Lake {
       raw: DataFrame,
       lakePath: String,
       syncLogPath: String,
-      quarantinePath: Option[String]): Map[String, (Long, Long)] = {
+      quarantinePath: Option[String]): Map[String, (Long, Long)] = withCallSite(spark, "Lake.ingestBatch") {
     import graft.transform.Canonicalize
     val ann = Canonicalize.annotate(raw).persist()
     try {

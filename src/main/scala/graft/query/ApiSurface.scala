@@ -22,6 +22,12 @@ import graft.model.Transaction
   * neither job reads `_delta`; otherwise the broadcast job reads and folds
   * the sidecar's files in one task.
   *
+  * Job names: the lake's own writes (ingest, upsert, compaction, and
+  * [[addTransaction]]'s [[Lake.insertFast]]) name their jobs after the
+  * `Lake` entry point ([[graft.Sessions.withCallSite]]). A lookup or range search
+  * returns a lazy frame whose actions run in the caller, so its jobs keep
+  * the caller's call site.
+  *
   * Scale posture: [[historySearch]] filters on the derived epoch column —
   * at 100 TB the lake would additionally be partitioned/z-ordered by a
   * date-derived column so this becomes partition pruning instead of a scan;

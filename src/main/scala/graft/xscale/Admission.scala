@@ -9,6 +9,8 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
+import graft.Sessions.withCallSite
+
 /** The ADMISSION kernel — x74's decision rule, written once. `Cli admit`
   * (the batch verb) and [[graft.streaming.StreamingAdmit.admit]] (one
   * micro-batch) are its two callers. Each resolves the CORPUS side of the
@@ -415,29 +417,6 @@ object Admission {
     for (d <- sigsDir)
       append(legs.sigs.join(admittedIds, "doc_id"), d)()
   }
-
-  /** Run `body` with `site` as the Spark call site of every job it starts,
-    * restoring the caller's after. Spark runs a query's exchanges and its
-    * result stage through `SQLExecution.withThreadLocalCaptured` on pools
-    * of its own (shuffle and broadcast exchanges, the result query stage),
-    * so a job of any query with an exchange takes its call site from a
-    * pool thread's stack, which holds no program frame:
-    * `$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java:1768`,
-    * whichever thread ran the action. Those pools copy the acting thread's
-    * local properties, as the leg and write threads do, so the call-site
-    * property set here names each such job after the kernel step it
-    * belongs to.
-    */
-  private def withCallSite[T](spark: SparkSession, site: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prior = sc.getLocalProperty(CallSiteShort)
-    sc.setLocalProperty(CallSiteShort, site)
-    try body finally sc.setLocalProperty(CallSiteShort, prior)
-  }
-
-  // the local property Spark reads a job's short call site from
-  // (`org.apache.spark.util.CallSite.SHORT_FORM`, private to Spark)
-  private val CallSiteShort = "callSite.short"
 
   /** Run `thunks` at once and return when every one has finished: the
     * first on the caller's thread, each other on its own `graft-admit-<i>`

@@ -24,13 +24,14 @@ object Dedup {
 
   /** MinHash parameters: K permutations in B bands of R rows.
     * h_i(s) = (a_i * (h60(s) mod P) + b_i) mod P stays < 2^62, so int64
-    * arithmetic is identical in Spark and DuckDB.
+    * arithmetic is identical in Spark and DuckDB; `As`/`Bs` are the
+    * family's ([[XHash.minhashA]]/[[XHash.minhashB]]) first K coefficients.
     */
   val K = 16
   val B = 4
   val R = 4
-  val As: Seq[Long] = (0 until K).map(i => 2L * i + 1)
-  val Bs: Seq[Long] = (0 until K).map(i => (104729L * (i + 1)) % P)
+  val As: Seq[Long] = (0 until K).map(XHash.minhashA)
+  val Bs: Seq[Long] = (0 until K).map(XHash.minhashB)
 
   /** Partition width for candidate-generating joins: the session's own
     * shuffle width or the cluster's core count, whichever is larger —
@@ -498,13 +499,10 @@ object Dedup {
       .select(col("doc_id"), col("key"), ord.as("ord"))
       .withColumn("rn", row_number().over(Window.partitionBy("key").orderBy("ord", "doc_id")))
       .join(ckeys, Seq("key"), "left")
-    val cb = sigBands(corpusSigs).select(col("band"), col("bk"), col("sig").as("sb"))
-    val nMatch = aggregate(
-      zip_with(col("sig"), col("sb"), (x, y) => when(x === y, 1L).otherwise(0L)),
-      lit(0L),
-      (acc, x) => acc + x)
-    val near = sigBands(batchSigs).join(cb, Seq("band", "bk"))
-      .select(col("doc_id"), nMatch.as("nm"))
+    // the near leg: the cross form of the band join, batch x corpus
+    val cb = Lsh.bandRows(corpusSigs, Lsh.minhashBandKeys(col("sig")), col("sig").as("sb"))
+    val near = Lsh.crossPairs(sigBands(batchSigs), cb,
+      Seq(col("doc_id"), Lsh.nMatch(col("sig"), col("sb")).as("nm")))
       .groupBy("doc_id").agg(max("nm").as("nm"))
       .filter(col("nm") >= minMatch)
       .select(col("doc_id")).withColumn("near", lit(true))
@@ -535,16 +533,11 @@ object Dedup {
           .otherwise(col("status")))
       .drop("_to")
 
-  /** LSH band keys derived from a [[dedupSignatures]] sig ARRAY — the same
-    * md5(concat_ws) currency as [[withSignature]]'s sig0..sigK columns
-    * (element_at is 1-based). Columns (doc_id, sig, band, bk).
+  /** The [[Lsh.bandRows]] of a (doc_id, sig) frame under
+    * [[Lsh.minhashBandKeys]]. Columns (doc_id, sig, band, key).
     */
-  private def sigBands(sigs: DataFrame): DataFrame = {
-    val bandKeys = (0 until B).map(b =>
-      md5(concat_ws(",", (0 until R).map(r => element_at(col("sig"), b * R + r + 1)): _*)))
-    sigs.select(col("doc_id"), col("sig"), posexplode(array(bandKeys: _*)))
-      .toDF("doc_id", "sig", "band", "bk")
-  }
+  private def sigBands(sigs: DataFrame): DataFrame =
+    Lsh.bandRows(sigs, Lsh.minhashBandKeys(col("sig")), col("doc_id"), col("sig"))
 
   /** The x74-STRICT refinement: near-dup CC WITHIN the admitted set over
     * precomputed signatures — the one case the batch-vs-corpus rule is
@@ -605,24 +598,22 @@ object Dedup {
     * within-set near-dup pair stream with zero text access, for callers
     * that already hold signatures (`Cli admit --strict` runs it on the
     * admitted docs' sigs to catch near-dup pairs arriving TOGETHER in one
-    * batch, which the batch-vs-corpus decision rule cannot see). Columns
-    * (doc_id_a, doc_id_b, n_match); decision threshold as [[minhashPairs]].
+    * batch, which the batch-vs-corpus decision rule cannot see): [[Lsh]]'s
+    * self form over the signatures' band rows. Columns (doc_id_a,
+    * doc_id_b, n_match); decision threshold as [[minhashPairs]].
     */
   def minhashPairsSigs(sigs: DataFrame, minMatch: Int = K / 2): DataFrame = {
-    val bands = sigBands(sigs)
-    val a = bands.select(col("band"), col("bk"), col("doc_id").as("da"), col("sig").as("sa"))
-    val b = bands.select(col("band"), col("bk"), col("doc_id").as("db"), col("sig").as("sb"))
-    val nMatch = aggregate(
-      zip_with(col("sa"), col("sb"), (x, y) => when(x === y, 1L).otherwise(0L)),
-      lit(0L),
-      (acc, x) => acc + x)
-    a.join(b, Seq("band", "bk"))
-      .filter(col("da") < col("db"))
-      .select(col("da"), col("db"), nMatch.as("n_match"))
-      .distinct()
-      .filter(col("n_match") >= minMatch)
-      .select(col("da").as("doc_id_a"), col("db").as("doc_id_b"), col("n_match"))
+    val (a, b) = Lsh.sides(sigBands(sigs), "doc_id", "sig")
+    minhashSelfPairs(a, b).filter(col("n_match") >= minMatch)
   }
+
+  /** The text MinHash self form: [[Lsh.selfPairs]] over [[Lsh.sides]] of
+    * [[sigBands]], scored by [[Lsh.nMatch]]. Columns (doc_id_a, doc_id_b,
+    * n_match).
+    */
+  private def minhashSelfPairs(a: DataFrame, b: DataFrame): DataFrame =
+    Lsh.selfPairs(a, b, col("a").as("doc_id_a"), col("b").as("doc_id_b"),
+      Lsh.nMatch(col("sig_a"), col("sig_b")).as("n_match"))
 
   /** Exact dedup: one survivor (min tie-break) per normalized-text group. */
   def dedupExact(docs: DataFrame): DataFrame =
@@ -799,38 +790,24 @@ object Dedup {
     minhashCandidates(docs, minWords)
       .filter(col("n_match") >= minMatch)
 
-  /** ALL MinHash band-collision candidates with their signature agreement
-    * count, BEFORE the `minMatch` decision threshold — the raw candidate
-    * stream [[minhashPairs]] filters and the x121 fidelity audit scores.
-    * Columns (doc_id_a, doc_id_b, n_match).
+  /** ALL MinHash band-collision candidates ([[Lsh]]'s self form) with
+    * their signature agreement count, BEFORE the `minMatch` decision
+    * threshold — the raw candidate stream [[minhashPairs]] filters and the
+    * x121 fidelity audit scores. Columns (doc_id_a, doc_id_b, n_match).
     */
   private[xscale] def minhashCandidates(docs: DataFrame, minWords: Int = 0): DataFrame = {
     val in =
       if (minWords <= 0) docs
       else docs.filter(size(XText.words(col("text"))) >= minWords)
-    val sig = withSignature(in)
-      .withColumn("sig", array((0 until K).map(i => col(s"sig$i")): _*))
-    val bandKeys = (0 until B).map(b =>
-      md5(concat_ws(",", (0 until R).map(r => col(s"sig${b * R + r}")): _*)))
-    val bands = sig.select(col("doc_id"), col("sig"), posexplode(array(bandKeys: _*)))
-      .toDF("doc_id", "sig", "band", "key")
+    val bands = sigBands(shingleHashes(in).select(col("doc_id"),
+      graftnative.api.minhashSig(col("hs"), K).as("sig")))
+    val (a, b) = Lsh.sides(bands, "doc_id", "sig")
     // probe side re-keyed by the band key (the simhash-block rule): the
     // collision fan-out must not run at scan parallelism. Explicit count
     // on purpose — the count-free form was measured and rejected (AQE
     // coalesces the byte-tiny exchange and re-serializes the fan-out; see
     // candidatesFromFingerprints).
-    val a = bands.select(col("band"), col("key"), col("doc_id").as("da"), col("sig").as("sa"))
-      .repartition(candidateParallelism(bands), col("band"), col("key"))
-    val b = bands.select(col("band"), col("key"), col("doc_id").as("db"), col("sig").as("sb"))
-    val nMatch = aggregate(
-      zip_with(col("sa"), col("sb"), (x, y) => when(x === y, 1L).otherwise(0L)),
-      lit(0L),
-      (acc, x) => acc + x)
-    a.join(b, Seq("band", "key"))
-      .filter(col("da") < col("db"))
-      .select(col("da"), col("db"), nMatch.as("n_match"))
-      .distinct()
-      .select(col("da").as("doc_id_a"), col("db").as("doc_id_b"), col("n_match"))
+    minhashSelfPairs(a.repartition(candidateParallelism(bands), col("band"), col("key")), b)
   }
 
   /** Exact Jaccard >= num/den over distinct word-k-gram sets, in integer
@@ -1025,12 +1002,10 @@ object Dedup {
     * pre-filtered corpus — the identity the Spark-side knob is pinned to.
     */
   private def fidelitySql(src: String): String = {
-    val bandKey = (1 to R).map(r => s"sig[band * $R + $r]").mkString(", ")
     s"WITH ${sigSqlCtesFor(src, "")}, " +
-      s"bk AS (SELECT doc_id, sig, band, md5(concat_ws(',', $bandKey)) AS key " +
-      s"FROM (SELECT doc_id, sig, unnest(generate_series(0, ${B - 1})) AS band FROM sig)), " +
+      s"${Lsh.minhashBandsSql("bk", "sig")}, " +
       "cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db, " +
-      s"len(list_filter(generate_series(1, $K), i -> a.sig[i] = b.sig[i])) AS n_match " +
+      s"${Lsh.nMatchSql("a", "b")} AS n_match " +
       "FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id), " +
       "shd AS (SELECT doc_id, unnest(hl) AS sgl FROM hs), " +
       "sz AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY 1), " +
@@ -1383,11 +1358,6 @@ object Dedup {
     Q(
       "x74_incremental_dedup",
       Some {
-        val bandKey = (1 to R).map(r => s"sig[band * $R + $r]").mkString(", ")
-        def bandsCte(name: String, sigCte: String) =
-          s"$name AS (SELECT doc_id, sig, band, md5(concat_ws(',', $bandKey)) AS bkey " +
-            s"FROM (SELECT doc_id, sig, unnest(generate_series(0, ${B - 1})) AS band " +
-            s"FROM $sigCte))"
         // batch fixture = every 3rd doc PLUS mirror re-arrivals of every
         // 31st doc (x47's pattern) — mirrors of corpus docs exercise
         // dup_exact_corpus, mirrors of batch docs exercise dup_exact_batch,
@@ -1401,10 +1371,11 @@ object Dedup {
           "rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY key ORDER BY ord, doc_id) " +
           "AS rn FROM bkk), " +
           s"${sigSqlCtesFor("b0", "_b")}, ${sigSqlCtesFor("c0", "_c")}, " +
-          s"${bandsCte("bb", "sig_b")}, ${bandsCte("cbn", "sig_c")}, " +
+          s"${Lsh.minhashBandsSql("bb", "sig_b", "bkey")}, " +
+          s"${Lsh.minhashBandsSql("cbn", "sig_c", "bkey")}, " +
           "near AS (SELECT DISTINCT a.doc_id FROM bb a JOIN cbn b " +
           "ON a.band = b.band AND a.bkey = b.bkey " +
-          s"WHERE len(list_filter(generate_series(1, $K), i -> a.sig[i] = b.sig[i])) " +
+          s"WHERE ${Lsh.nMatchSql("a", "b")} " +
           s">= ${K / 2}), " +
           "st AS (SELECT r.doc_id, r.key, " +
           "CASE WHEN ck.key IS NOT NULL THEN 'dup_exact_corpus' " +
@@ -1440,11 +1411,6 @@ object Dedup {
     Q(
       "x74_admit_strict",
       Some {
-        val bandKey = (1 to R).map(r => s"sig[band * $R + $r]").mkString(", ")
-        def bandsCte(name: String, sigCte: String) =
-          s"$name AS (SELECT doc_id, sig, band, md5(concat_ws(',', $bandKey)) AS bkey " +
-            s"FROM (SELECT doc_id, sig, unnest(generate_series(0, ${B - 1})) AS band " +
-            s"FROM $sigCte))"
         // x74's fixture + NEAR re-arrivals of every 51st doc (51 = 3*17, so
         // the original is IN the batch): original and variant are near-dups
         // of EACH OTHER, invisible to the batch-vs-corpus rule — the
@@ -1459,10 +1425,11 @@ object Dedup {
           "rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY key ORDER BY ord, doc_id) " +
           "AS rn FROM bkk), " +
           s"${sigSqlCtesFor("b0", "_b")}, ${sigSqlCtesFor("c0", "_c")}, " +
-          s"${bandsCte("bb", "sig_b")}, ${bandsCte("cbn", "sig_c")}, " +
+          s"${Lsh.minhashBandsSql("bb", "sig_b", "bkey")}, " +
+          s"${Lsh.minhashBandsSql("cbn", "sig_c", "bkey")}, " +
           "near AS (SELECT DISTINCT a.doc_id FROM bb a JOIN cbn b " +
           "ON a.band = b.band AND a.bkey = b.bkey " +
-          s"WHERE len(list_filter(generate_series(1, $K), i -> a.sig[i] = b.sig[i])) " +
+          s"WHERE ${Lsh.nMatchSql("a", "b")} " +
           s">= ${K / 2}), " +
           "st AS (SELECT r.doc_id, r.key, " +
           "CASE WHEN ck.key IS NOT NULL THEN 'dup_exact_corpus' " +
@@ -1474,7 +1441,7 @@ object Dedup {
           "pp AS (SELECT DISTINCT a.doc_id AS pa, b.doc_id AS pb FROM bb a " +
           "JOIN bb b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id " +
           "JOIN adm x ON x.doc_id = a.doc_id JOIN adm y ON y.doc_id = b.doc_id " +
-          s"WHERE len(list_filter(generate_series(1, $K), i -> a.sig[i] = b.sig[i])) " +
+          s"WHERE ${Lsh.nMatchSql("a", "b")} " +
           s">= ${K / 2}), " +
           "e AS (SELECT pa, pb FROM pp UNION SELECT pb, pa FROM pp), " +
           "reach AS (SELECT pa AS id, pa AS comp FROM e " +
@@ -1561,12 +1528,10 @@ object Dedup {
     Q(
       "x02_dedup_minhash",
       Some {
-        val bandKey = (1 to R).map(r => s"sig[band * $R + $r]").mkString(", ")
         s"WITH $sigSqlCtes, " +
-          s"bk AS (SELECT doc_id, sig, band, md5(concat_ws(',', $bandKey)) AS key " +
-          s"FROM (SELECT doc_id, sig, unnest(generate_series(0, ${B - 1})) AS band FROM sig)), " +
+          s"${Lsh.minhashBandsSql("bk", "sig")}, " +
           "cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db, " +
-          s"len(list_filter(generate_series(1, $K), i -> a.sig[i] = b.sig[i])) AS n_match " +
+          s"${Lsh.nMatchSql("a", "b")} AS n_match " +
           "FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id) " +
           s"SELECT da AS doc_id_a, db AS doc_id_b, n_match FROM cand WHERE n_match >= ${K / 2} " +
           "ORDER BY doc_id_a, doc_id_b"
@@ -1741,16 +1706,14 @@ object Dedup {
     Q(
       "x99_cascade_minhash",
       Some {
-        val bandKey = (1 to R).map(r => s"sig[band * $R + $r]").mkString(", ")
         s"WITH RECURSIVE ex AS (SELECT doc_id, source, text, " +
           s"ROW_NUMBER() OVER (PARTITION BY $normSql ORDER BY doc_id) AS rn FROM documents), " +
           "sv AS (SELECT doc_id, source, text FROM ex WHERE rn = 1), " +
           s"${sigSqlCtesFor("sv", "")}, " +
-          s"bk AS (SELECT doc_id, sig, band, md5(concat_ws(',', $bandKey)) AS key " +
-          s"FROM (SELECT doc_id, sig, unnest(generate_series(0, ${B - 1})) AS band FROM sig)), " +
+          s"${Lsh.minhashBandsSql("bk", "sig")}, " +
           "p AS (SELECT DISTINCT a.doc_id AS pa, b.doc_id AS pb " +
           "FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id " +
-          s"WHERE len(list_filter(generate_series(1, $K), i -> a.sig[i] = b.sig[i])) >= ${K / 2}), " +
+          s"WHERE ${Lsh.nMatchSql("a", "b")} >= ${K / 2}), " +
           "e AS (SELECT pa, pb FROM p UNION SELECT pb, pa FROM p), " +
           "reach AS (SELECT pa AS id, pa AS comp FROM e " +
           "UNION SELECT e.pa AS id, r.comp FROM e JOIN reach r ON e.pb = r.id), " +
@@ -1939,12 +1902,10 @@ object Dedup {
     Q(
       "x28_minhash_calibration",
       Some {
-        val bandKey = (1 to R).map(r => s"sig[band * $R + $r]").mkString(", ")
         s"WITH $sigSqlCtes, " +
-          s"bk AS (SELECT doc_id, sig, band, md5(concat_ws(',', $bandKey)) AS key " +
-          s"FROM (SELECT doc_id, sig, unnest(generate_series(0, ${B - 1})) AS band FROM sig)), " +
+          s"${Lsh.minhashBandsSql("bk", "sig")}, " +
           "cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db, " +
-          s"len(list_filter(generate_series(1, $K), i -> a.sig[i] = b.sig[i])) AS n_match " +
+          s"${Lsh.nMatchSql("a", "b")} AS n_match " +
           "FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id), " +
           "shd AS (SELECT doc_id, unnest(hl) AS sgl FROM hs), " +
           "sz AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY 1), " +
@@ -2006,7 +1967,7 @@ object Dedup {
           s"p AS (SELECT source, h % $P AS hp FROM sh), " +
           s"sig AS (SELECT source, [$sigExprs] AS sig FROM p GROUP BY source) " +
           "SELECT a.source AS source_a, b.source AS source_b, " +
-          s"CAST(len(list_filter(generate_series(1, $K), i -> a.sig[i] = b.sig[i])) AS BIGINT) " +
+          s"CAST(${Lsh.nMatchSql("a", "b")} AS BIGINT) " +
           "AS n_match FROM sig a JOIN sig b ON a.source < b.source " +
           "ORDER BY source_a, source_b"
       },
@@ -2184,13 +2145,11 @@ object Dedup {
     Q(
       "x50_joint_minhash",
       Some {
-        val bandKey = (1 to R).map(r => s"sig[band * $R + $r]").mkString(", ")
         s"WITH RECURSIVE $sigSqlCtes, " +
-          s"bkm AS (SELECT doc_id, sig, band, md5(concat_ws(',', $bandKey)) AS key " +
-          s"FROM (SELECT doc_id, sig, unnest(generate_series(0, ${B - 1})) AS band FROM sig)), " +
+          s"${Lsh.minhashBandsSql("bkm", "sig")}, " +
           "pt AS (SELECT DISTINCT a.doc_id AS pa, b.doc_id AS pb " +
           "FROM bkm a JOIN bkm b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id " +
-          s"WHERE len(list_filter(generate_series(1, $K), i -> a.sig[i] = b.sig[i])) >= ${K / 2}), " +
+          s"WHERE ${Lsh.nMatchSql("a", "b")} >= ${K / 2}), " +
           // embedding leg: identical to x50_joint_imi (IMI product cells)
           s"${Similarity.normCtes}, " +
           s"vi0 AS (SELECT vec_id, list_transform(v, x -> CAST(floor(x * ${Similarity.VSCALE}) AS BIGINT)) " +

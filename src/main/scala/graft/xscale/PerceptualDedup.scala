@@ -531,12 +531,12 @@ object PerceptualDedup {
   // ---------------------------------------------------------------------
 
   /** Near-dup pairs (a, b), a < b, hamming ≤ `maxHamming` over a hashed
-    * frame (doc_id, bands array<long>). One keyed self-join on (band
-    * index, band value) — the pigeonhole guarantees every qualifying pair
-    * surfaces — then the exact hamming verify over the pair's full band
-    * vectors. Scale: the join shuffles on 16-byte keys, never payloads;
-    * candidate mass is the bucket formula in the object scaladoc (swap to
-    * the wide bands past [[BandBoundary]]).
+    * frame (doc_id, bands array<long>): [[Lsh]]'s self form over the
+    * bands (the pigeonhole guarantees every qualifying pair surfaces),
+    * then [[Lsh.hamming]] over the pair's full band vectors. Scale: the
+    * join shuffles on 16-byte keys, never payloads; candidate mass is the
+    * bucket formula in the object scaladoc (swap to the wide bands past
+    * [[BandBoundary]]).
     *
     * CONTRACT: the pigeonhole is sound only for `maxHamming` < the number
     * of bands in the frame (a pair can otherwise differ in every band and
@@ -553,16 +553,8 @@ object PerceptualDedup {
     // signals — a 16-bit band collision across them is pure noise, so the
     // candidate key includes `mod` and cross-modal pairs never form
     val modCols = if (hashed.columns.contains("mod")) Seq(col("mod")) else Nil
-    val bands = hashed.select(
-      col("doc_id") +: modCols :+ posexplode(col("bands")).as(Seq("j", "bv")): _*)
-    val keyNames = modCols.map(_ => "mod") ++ Seq("j", "bv")
-    val cand = bands.withColumnRenamed("doc_id", "a")
-      .join(bands.withColumnRenamed("doc_id", "b"), keyNames)
-      .filter(col("a") < col("b"))
-      .select("a", "b")
-      .distinct()
-    val ham = expr(
-      "aggregate(zip_with(ba, bb, (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)")
+    val (a, b) = Lsh.sides(Lsh.bandRows(hashed, col("bands"), col("doc_id") +: modCols: _*), "doc_id")
+    val cand = Lsh.selfPairs(a, b, col("a"), col("b"))
     // per-row threshold clamp to size(bands) − 1: in a MIXED-width frame
     // (the small-media classic fallback rows beside wide rows) the
     // caller's wide threshold would both break the pigeonhole for the
@@ -573,7 +565,7 @@ object PerceptualDedup {
     cand
       .join(hashed.select(col("doc_id").as("a"), col("bands").as("ba")), "a")
       .join(hashed.select(col("doc_id").as("b"), col("bands").as("bb")), "b")
-      .filter(ham <= least(lit(maxHamming), size(col("ba")) - 1))
+      .filter(Lsh.hamming(col("ba"), col("bb")) <= least(lit(maxHamming), size(col("ba")) - 1))
       .select("a", "b")
   }
 
@@ -1189,16 +1181,15 @@ object PerceptualDedup {
   }
 
   /** The resized-crop SCALE path — the bipartite LSH recipe
-    * ([[thumbnailContainmentPairsLsh]]) across scale levels: minhash
-    * each doc's NATIVE set AND each (doc, k) SCALED set through the same
-    * md5 h60 + inlined affine permutation literals (oracle-keyable),
-    * band-join native-vs-scaled only, exact directional verify on
-    * candidates. Geometry defaults RECALL-leaning (16 minhashes in 8
-    * bands of 2, J² — the dedup-stage rationale: a missed resized
-    * thumbnail ships forever). Scale: candidate mass follows band
-    * collisions; joins shuffle 16-byte band keys and 32-byte
-    * fingerprints, never payloads; each image is decoded once for ALL
-    * scale levels.
+    * ([[thumbnailContainmentPairsLsh]]) across scale levels:
+    * [[Lsh.containmentBands]] of each doc's NATIVE set AND each (doc, k)
+    * SCALED set, [[Lsh]]'s cross form native-vs-scaled (a doc never
+    * pairs with itself), exact directional verify on candidates.
+    * Geometry defaults RECALL-leaning (16 minhashes in 8 bands of 2, J² —
+    * the dedup-stage rationale: a missed resized thumbnail ships forever).
+    * Scale: candidate mass follows band collisions; joins shuffle 16-byte
+    * band keys and 32-byte fingerprints, never payloads; each image is
+    * decoded once for ALL scale levels.
     */
   def resizedCropContainmentPairsLsh(
       media: DataFrame,
@@ -1215,34 +1206,15 @@ object PerceptualDedup {
       imageMultiScaleTileShingles(media, tile, scales), checkpointDir)
     val nat = sh.filter(col("scale") === 1).drop("scale")
     val scl = sh.filter(col("scale") =!= 1)
-    val rows = k / bands
-    def mh(i: Int) =
-      min((lit(containmentLshA(i)) * (col("hk") % XHash.P) + lit(containmentLshB(i)))
-        % XHash.P)
-    def bandKeys(keyed: DataFrame, group: Seq[String]): DataFrame = {
-      val mins = keyed.groupBy(group.map(col): _*).agg(
-        mh(0).as("m0"), (1 until k).map(i => mh(i).as(s"m$i")): _*)
-      mins.select(group.map(col) :+
-        posexplode(array((0 until bands).map { b =>
-          XHash.h60(concat_ws("^",
-            (b * rows until (b + 1) * rows).map(i => col(s"m$i")): _*))
-        }: _*)).as(Seq("bj", "bk")): _*)
-    }
-    val hk = XHash.h60(concat_ws("^", col("s1"), col("q1"), col("s2"), col("q2"))).as("hk")
-    val nb = bandKeys(nat.select(col("doc_id"), hk), Seq("doc_id"))
-    val sb = bandKeys(
-      scl.select(col("doc_id").as("src_id"), col("scale"), hk), Seq("src_id", "scale"))
-    val cand = nb.join(sb, Seq("bj", "bk"))
-      .filter(col("doc_id") =!= col("src_id"))
-      .select("doc_id", "src_id", "scale").distinct()
-    val keys = Seq("s1", "q1", "s2", "q2")
+    val nb = Lsh.containmentBands(nat, Seq(col("doc_id")), k, bands)
+    val sb = Lsh.containmentBands(scl, Seq(col("doc_id").as("src_id"), col("scale")), k, bands)
+    val cand = Lsh.crossPairs(nb, sb, Seq(col("doc_id"), col("src_id"), col("scale")),
+      differ = Some("doc_id" -> "src_id"))
     val sz = nat.groupBy("doc_id").agg(count(lit(1)).as("n_a")).hint("merge")
-    cand
-      .join(nat, "doc_id")
-      .join(scl.toDF(Seq("src_id", "scale") ++ keys: _*), Seq("src_id", "scale") ++ keys)
-      .groupBy("doc_id", "src_id", "scale").agg(count(lit(1)).as("n_inter"))
+    Lsh.intersections(cand, nat, Seq("doc_id"),
+      scl.toDF(Seq("src_id", "scale") ++ Lsh.Fingerprint: _*), Seq("src_id", "scale"))
       .join(sz, "doc_id")
-      .filter(col("n_inter") * den >= col("n_a") * num)
+      .filter(Lsh.contained(col("n_inter"), col("n_a"), num, den))
       .select("doc_id", "src_id", "scale", "n_inter", "n_a")
   }
 
@@ -1982,10 +1954,11 @@ object PerceptualDedup {
     * [[dhashBands]] hashes frames and images through the SAME real
     * javax.imageio decode (one hash function ⇒ one candidate space — the
     * opposite of the modality-disjoint dedup rule, on purpose: a
-    * thumbnail IS an image of the frame), and a bipartite banded join +
-    * hamming verify yields (doc_id, vid_id, frame_idx) matches. Catches
-    * the brightened/re-encoded thumbnail byte equality cannot see; a
-    * thumbnail at a DIFFERENT resolution matches when the scale is
+    * thumbnail IS an image of the frame), and [[Lsh]]'s cross form +
+    * [[Lsh.hamming]] yield (doc_id, vid_id, frame_idx) matches
+    * (`maxHamming` < [[Bands]], the pigeonhole contract of
+    * [[bandNearDupPairs]]). Catches the brightened/re-encoded thumbnail
+    * byte equality cannot see; a thumbnail at a DIFFERENT resolution matches when the scale is
     * integral (the x142 invariance) — arbitrary rescales are the
     * documented limit, and a CROPPED thumbnail moves every dHash block
     * boundary and evades this form BY DESIGN — that re-post mode is
@@ -2001,6 +1974,9 @@ object PerceptualDedup {
       every: Int = 16,
       maxHamming: Int = MaxHamming,
       checkpointDir: Option[String] = None): DataFrame = {
+    require(maxHamming < Bands,
+      s"maxHamming=$maxHamming with $Bands bands breaks the pigeonhole guarantee " +
+        "(a qualifying pair can differ in every band and never become a candidate)")
     val spark = images.sparkSession
     import spark.implicits._
     val fh = DedupClusters.ckpt(
@@ -2017,15 +1993,12 @@ object PerceptualDedup {
       imageHashFrame(images).filter(col("decoded"))
         .select(col("doc_id"), col("bands").as("ibands")),
       checkpointDir)
-    val ib = ih.select(col("doc_id"), posexplode(col("ibands")).as(Seq("j", "bv")))
-    val fb = fh.select(col("vid_id"), col("frame_idx"),
-      posexplode(col("fbands")).as(Seq("j", "bv")))
-    val cand = ib.join(fb, Seq("j", "bv"))
-      .select("doc_id", "vid_id", "frame_idx").distinct()
-    val ham = expr(
-      "aggregate(zip_with(ibands, fbands, (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)")
+    val cand = Lsh.crossPairs(
+      Lsh.bandRows(ih, col("ibands"), col("doc_id")),
+      Lsh.bandRows(fh, col("fbands"), col("vid_id"), col("frame_idx")),
+      Seq(col("doc_id"), col("vid_id"), col("frame_idx")))
     cand.join(ih, "doc_id").join(fh, Seq("vid_id", "frame_idx"))
-      .filter(ham <= maxHamming)
+      .filter(Lsh.hamming(col("ibands"), col("fbands")) <= maxHamming)
       .select("doc_id", "vid_id", "frame_idx")
   }
 
@@ -2078,15 +2051,15 @@ object PerceptualDedup {
   }
 
   /** The thumbnail-provenance SCALE path — the x147 LSH recipe made
-    * bipartite: minhash each image's fingerprint set AND each (video,
-    * frame)'s set through the SAME md5 h60 + affine permutation literals
-    * (so the DuckDB oracle recomputes the identical candidate set —
-    * x155_thumb_containment_lsh is oracle-keyed), band-join ACROSS the
-    * two sides only, exact directional verify on candidate (image,
-    * frame) pairs. Geometry defaults RECALL-leaning (16 minhashes in 8
-    * bands of 2, band match probability J² — the `--pcontain` dedup-
-    * stage rationale: a missed thumbnail ships a leaked frame forever,
-    * and the extra bands double band-key rows, never verify cost). A
+    * bipartite: [[Lsh.containmentBands]] of each image's fingerprint set
+    * AND each (video, frame)'s set (the same literals the DuckDB oracle
+    * inlines — x155_thumb_containment_lsh is oracle-keyed), [[Lsh]]'s
+    * cross form between the two sides, and the exact directional verify
+    * ([[Lsh.intersections]]) on candidate (image, frame) pairs. Geometry
+    * defaults RECALL-leaning (16 minhashes in 8 bands of 2, band match
+    * probability J² — the `--pcontain` dedup-stage rationale: a missed
+    * thumbnail ships a leaked frame forever, and the extra bands double
+    * band-key rows, never verify cost). A
     * tile-aligned crop of a frame has J = |A|/|F| (subset), mid-curve
     * at typical crop ratios — found or not is a fixed deterministic
     * fact both engines agree on; extreme crops need the exact form
@@ -2108,35 +2081,15 @@ object PerceptualDedup {
     val imgSh = DedupClusters.ckpt(imageTileShingles(images, tile), checkpointDir)
     val frameSh =
       DedupClusters.ckpt(videoFrameTileShinglesByFrame(videos, tile), checkpointDir)
-    val rows = k / bands
-    def mh(i: Int) =
-      min((lit(containmentLshA(i)) * (col("hk") % XHash.P) + lit(containmentLshB(i)))
-        % XHash.P)
-    def bandKeys(keyed: DataFrame, group: Seq[String]): DataFrame = {
-      val mins = keyed.groupBy(group.map(col): _*).agg(
-        mh(0).as("m0"), (1 until k).map(i => mh(i).as(s"m$i")): _*)
-      mins.select(group.map(col) :+
-        posexplode(array((0 until bands).map { b =>
-          XHash.h60(concat_ws("^",
-            (b * rows until (b + 1) * rows).map(i => col(s"m$i")): _*))
-        }: _*)).as(Seq("bj", "bk")): _*)
-    }
-    val hk = XHash.h60(concat_ws("^", col("s1"), col("q1"), col("s2"), col("q2"))).as("hk")
-    val ib = bandKeys(imgSh.select(col("doc_id"), hk), Seq("doc_id"))
-    val fb = bandKeys(
-      frameSh.select(col("doc_id").as("vid_id"), col("frame_idx"), hk),
-      Seq("vid_id", "frame_idx"))
-    val cand = ib.join(fb, Seq("bj", "bk"))
-      .select("doc_id", "vid_id", "frame_idx").distinct()
-    val keys = Seq("s1", "q1", "s2", "q2")
+    val ib = Lsh.containmentBands(imgSh, Seq(col("doc_id")), k, bands)
+    val fb = Lsh.containmentBands(
+      frameSh, Seq(col("doc_id").as("vid_id"), col("frame_idx")), k, bands)
+    val cand = Lsh.crossPairs(ib, fb, Seq(col("doc_id"), col("vid_id"), col("frame_idx")))
     val sz = imgSh.groupBy("doc_id").agg(count(lit(1)).as("n_a")).hint("merge")
-    cand
-      .join(imgSh, "doc_id")
-      .join(frameSh.toDF(Seq("vid_id", "frame_idx") ++ keys: _*),
-        Seq("vid_id", "frame_idx") ++ keys)
-      .groupBy("doc_id", "vid_id", "frame_idx").agg(count(lit(1)).as("n_inter"))
+    Lsh.intersections(cand, imgSh, Seq("doc_id"),
+      frameSh.toDF(Seq("vid_id", "frame_idx") ++ Lsh.Fingerprint: _*), Seq("vid_id", "frame_idx"))
       .join(sz, "doc_id")
-      .filter(col("n_inter") * den >= col("n_a") * num)
+      .filter(Lsh.contained(col("n_inter"), col("n_a"), num, den))
       .select("doc_id", "vid_id", "frame_idx", "n_inter", "n_a")
   }
 
@@ -2183,8 +2136,9 @@ object PerceptualDedup {
       videoFrameShingles(media), num, den, k, bands, checkpointDir)
 
   /** The LSH containment engine shared by the video and image forms —
-    * [[containmentPairsFromShingles]]'s scale twin; see
-    * [[videoContainmentPairsLsh]] for the full contract.
+    * [[containmentPairsFromShingles]]'s scale twin: [[Lsh.containmentBands]],
+    * [[Lsh]]'s self form, then [[Lsh.intersections]] in both directions;
+    * see [[videoContainmentPairsLsh]] for the full contract.
     */
   private[xscale] def containmentPairsLshFromShingles(
       shingles: DataFrame,
@@ -2200,27 +2154,14 @@ object PerceptualDedup {
     require(!shingles.columns.contains("mod"),
       "containment engine takes a single-modality shingle frame — split by mod first")
     val sh = DedupClusters.ckpt(shingles, checkpointDir)
-    val rows = k / bands
-    val keyed = sh.select(col("doc_id"),
-      XHash.h60(concat_ws("^", col("s1"), col("q1"), col("s2"), col("q2"))).as("hk"))
-    def mh(i: Int) =
-      min((lit(containmentLshA(i)) * (col("hk") % XHash.P) + lit(containmentLshB(i)))
-        % XHash.P)
-    val mins = keyed.groupBy("doc_id").agg(
-      mh(0).as("m0"), (1 until k).map(i => mh(i).as(s"m$i")): _*)
     // ALL band keys in one projection + posexplode — a per-band union of
-    // selects over `mins` would re-run the minhash aggregation once per
+    // selects over the minhashes would re-run their aggregation once per
     // band (4x the shuffles for the same rows); the cut stops the band
     // SELF-join below from running it twice more
-    val banded = DedupClusters.ckpt(mins.select(col("doc_id"),
-      posexplode(array((0 until bands).map { b =>
-        XHash.h60(concat_ws("^",
-          (b * rows until (b + 1) * rows).map(i => col(s"m$i")): _*))
-      }: _*)).as(Seq("bj", "bk"))), checkpointDir)
-    val cand = banded.toDF("a", "bj", "bk")
-      .join(banded.toDF("b", "bj", "bk"), Seq("bj", "bk"))
-      .filter(col("a") < col("b"))
-      .select("a", "b").distinct()
+    val banded = DedupClusters.ckpt(
+      Lsh.containmentBands(sh, Seq(col("doc_id")), k, bands), checkpointDir)
+    val (a, b) = Lsh.sides(banded, "doc_id")
+    val cand = Lsh.selfPairs(a, b, col("a"), col("b"))
     // exact verify on candidates only: intersection via the fingerprint
     // join RESTRICTED to candidate pairs, then x25's directional rule in
     // BOTH orientations. `sz` is CORPUS-sized (one row per doc) and its
@@ -2230,20 +2171,15 @@ object PerceptualDedup {
     // frame). The merge hint keeps the per-doc aggregate a shuffle join
     // at every scale; the candidate-side joins keep their broadcast
     // freedom (candidates are collision-bounded, never corpus-sized).
-    val keys = Seq("s1", "q1", "s2", "q2")
     val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n")).hint("merge")
-    val inter = cand
-      .join(sh.toDF("a", "s1", "q1", "s2", "q2"), "a")
-      .join(sh.toDF("b", "s1", "q1", "s2", "q2"), Seq("b") ++ keys)
-      .groupBy("a", "b").agg(count(lit(1)).as("i"))
+    val inter = Lsh.intersections(cand, sh.toDF("a" +: Lsh.Fingerprint: _*), Seq("a"),
+      sh.toDF("b" +: Lsh.Fingerprint: _*), Seq("b"))
       .join(sz.select(col("doc_id").as("a"), col("n").as("na")), "a")
       .join(sz.select(col("doc_id").as("b"), col("n").as("nb")), "b")
-    inter.filter(col("i") * den >= col("na") * num)
-      .select(col("a").as("doc_id_a"), col("b").as("doc_id_b"),
-        col("i").as("n_inter"), col("na").as("n_a"))
-      .unionByName(inter.filter(col("i") * den >= col("nb") * num)
-        .select(col("b").as("doc_id_a"), col("a").as("doc_id_b"),
-          col("i").as("n_inter"), col("nb").as("n_a")))
+    def direction(from: String, to: String, n: String) =
+      inter.filter(Lsh.contained(col("n_inter"), col(n), num, den))
+        .select(col(from).as("doc_id_a"), col(to).as("doc_id_b"), col("n_inter"), col(n).as("n_a"))
+    direction("a", "b", "na").unionByName(direction("b", "a", "nb"))
   }
 
   /** The video twin of [[imageNearDupPairs]]/[[audioNearDupPairs]] — same
@@ -2274,10 +2210,10 @@ object PerceptualDedup {
   /** Batch-vs-corpus perceptual compare — the media analog of
     * `Similarity.admitEmbCompare`: returns the state-shaped frame
     * (doc_id, mod, near_med, bands) for every batch row, `near_med` =
-    * some corpus hash OF THE SAME MODALITY within `maxHamming` (banded
-    * pigeonhole + exact verify, never all-pairs). `corpusBands` is
-    * (cv_id, [mod,] bands) — the persisted `--psigs` state or a one-off
-    * corpus hash pass; `batchBands` is (doc_id, [mod,] bands); a side
+    * some corpus hash OF THE SAME MODALITY within `maxHamming` ([[Lsh]]'s
+    * cross form keyed by `mod` + [[Lsh.hamming]], never all-pairs).
+    * `corpusBands` is (cv_id, [mod,] bands) — the persisted `--psigs`
+    * state or a one-off corpus hash pass; `batchBands` is (doc_id, [mod,] bands); a side
     * without a `mod` column is treated as all-image (the pre-audio state
     * layout). Rows the caller couldn't decode should be absent on both
     * sides (they pass the leg unflagged upstream). Scale: the join
@@ -2306,8 +2242,6 @@ object PerceptualDedup {
       maxHamming: Int = MaxHamming): DataFrame = {
     val cbf = withMod(corpusBands)
     val bbf = withMod(batchBands)
-    val cb = cbf.select(col("cv_id"), col("mod"), posexplode(col("bands")).as(Seq("j", "bv")))
-    val bb = bbf.select(col("doc_id"), col("mod"), posexplode(col("bands")).as(Seq("j", "bv")))
     // cv_id =!= doc_id: a doc must never flag against its OWN state row —
     // a crash-window RETRY (bands appended, sig append lost) otherwise
     // finds the doc's own band at hamming 0 and re-statuses it
@@ -2316,9 +2250,10 @@ object PerceptualDedup {
     // precondition above); excluding self-ids restores replay idempotence
     // at zero normal-path cost (the emb leg's admitEmbCompare applies the
     // same rule).
-    val cand = bb.join(cb, Seq("mod", "j", "bv"))
-      .filter(col("cv_id") =!= col("doc_id"))
-      .select("doc_id", "cv_id").distinct()
+    val cand = Lsh.crossPairs(
+      Lsh.bandRows(bbf, col("bands"), col("doc_id"), col("mod")),
+      Lsh.bandRows(cbf, col("bands"), col("cv_id"), col("mod")),
+      Seq(col("doc_id"), col("cv_id")), differ = Some("doc_id" -> "cv_id"))
     // REJECT LOUDLY on a band-width mismatch: zip_with pads the shorter
     // side with nulls, which would make the hamming sum null and the pair
     // silently non-near — a 4-band batch against an 8-band state must be
@@ -2332,8 +2267,7 @@ object PerceptualDedup {
         size(col("bb_")).cast("string"), lit(" bands, state hash has "),
         size(col("cb_")).cast("string"),
         lit(" (hash the batch at the state's width; see --psigs meta)"))))
-      .otherwise(expr(
-        "aggregate(zip_with(bb_, cb_, (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)"))
+      .otherwise(Lsh.hamming(col("bb_"), col("cb_")))
     // per-row clamp to size − 1, like bandNearDupPairs: small-media
     // classic-fallback rows in a wide run verify at THEIR width's
     // threshold (a no-op on uniform frames — both defaults are bands − 1)
@@ -3053,22 +2987,12 @@ object PerceptualDedup {
   private def lshContainSql(sMul: Long, qMul: Long): String = {
     val k = 16
     val bands = 4
-    val rows = k / bands
-    val p = XHash.P
     val hkInner =
       s"CAST($sMul * g1 AS VARCHAR) || '^' || CAST($qMul * g1 * g1 AS VARCHAR) " +
         s"|| '^' || CAST($sMul * g2 AS VARCHAR) || '^' || CAST($qMul * g2 * g2 AS VARCHAR)"
-    val minCols = (0 until k).map(i =>
-      s"min((${containmentLshA(i)} * (hk % $p) + ${containmentLshB(i)}) % $p) AS m$i")
-      .mkString(", ")
-    val bandSel = (0 until bands).map { b =>
-      val inner = (b * rows until (b + 1) * rows)
-        .map(i => s"CAST(m$i AS VARCHAR)").mkString(" || '^' || ")
-      s"SELECT doc_id, $b AS bj, ${XHash.h60Sql(inner)} AS bk FROM mins"
-    }.mkString(" UNION ALL ")
     s"hk AS (SELECT doc_id, ${XHash.h60Sql(hkInner)} AS hk FROM bg), " +
-      s"mins AS (SELECT doc_id, $minCols FROM hk GROUP BY doc_id), " +
-      s"bnd AS ($bandSel), " +
+      s"mins AS (SELECT doc_id, ${Lsh.containmentMinsSql(k)} FROM hk GROUP BY doc_id), " +
+      s"bnd AS (${Lsh.containmentBandsSql("mins", "doc_id", k, bands)}), " +
       "cand AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b FROM bnd a " +
       "JOIN bnd b ON a.bj = b.bj AND a.bk = b.bk AND a.doc_id < b.doc_id), " +
       "icv AS (SELECT c.a, c.b, count(*) AS i FROM cand c " +
@@ -3405,19 +3329,11 @@ object PerceptualDedup {
   private def lshThumbSql(sMul: Long, qMul: Long): String = {
     val k = 16
     val bands = 8
-    val rows = k / bands
-    val p = XHash.P
     def hkInner(g1: String, g2: String) =
       s"CAST($sMul * $g1 AS VARCHAR) || '^' || CAST($qMul * $g1 * $g1 AS VARCHAR) " +
         s"|| '^' || CAST($sMul * $g2 AS VARCHAR) || '^' || CAST($qMul * $g2 * $g2 AS VARCHAR)"
-    val minCols = (0 until k).map(i =>
-      s"min((${containmentLshA(i)} * (hk % $p) + ${containmentLshB(i)}) % $p) AS m$i")
-      .mkString(", ")
-    def bandSel(src: String, group: String) = (0 until bands).map { b =>
-      val inner = (b * rows until (b + 1) * rows)
-        .map(i => s"CAST(m$i AS VARCHAR)").mkString(" || '^' || ")
-      s"SELECT $group, $b AS bj, ${XHash.h60Sql(inner)} AS bk FROM $src"
-    }.mkString(" UNION ALL ")
+    val minCols = Lsh.containmentMinsSql(k)
+    def bandSel(src: String, group: String) = Lsh.containmentBandsSql(src, group, k, bands)
     s"thk AS (SELECT img_id, ${XHash.h60Sql(hkInner("g1", "g2"))} AS hk FROM tbg), " +
       s"tmins AS (SELECT img_id, $minCols FROM thk GROUP BY img_id), " +
       s"tbnd AS (${bandSel("tmins", "img_id")}), " +
@@ -3644,19 +3560,11 @@ object PerceptualDedup {
   private def x156LshTailSql: String = {
     val k = 16
     val bands = 8
-    val rows = k / bands
-    val p = XHash.P
     val hkInner =
       "CAST(s1 AS VARCHAR) || '^' || CAST(q1 AS VARCHAR) || '^' || " +
         "CAST(s2 AS VARCHAR) || '^' || CAST(q2 AS VARCHAR)"
-    val minCols = (0 until k).map(i =>
-      s"min((${containmentLshA(i)} * (hk % $p) + ${containmentLshB(i)}) % $p) AS m$i")
-      .mkString(", ")
-    def bandSel(src: String, group: String) = (0 until bands).map { b =>
-      val inner = (b * rows until (b + 1) * rows)
-        .map(i => s"CAST(m$i AS VARCHAR)").mkString(" || '^' || ")
-      s"SELECT $group, $b AS bj, ${XHash.h60Sql(inner)} AS bk FROM $src"
-    }.mkString(" UNION ALL ")
+    val minCols = Lsh.containmentMinsSql(k)
+    def bandSel(src: String, group: String) = Lsh.containmentBandsSql(src, group, k, bands)
     s"nhk AS (SELECT doc_id, ${XHash.h60Sql(hkInner)} AS hk FROM rsh WHERE scale = 1), " +
       s"nmins AS (SELECT doc_id, $minCols FROM nhk GROUP BY doc_id), " +
       s"nbnd AS (${bandSel("nmins", "doc_id")}), " +

@@ -21,9 +21,18 @@ object XHash {
 
   /** Modulus for MinHash permutations: 2^31 - 1 (prime). Keeps
     * `a * (h % P) + b` below 2^62 so int64 arithmetic never overflows in
-    * either engine.
+    * either engine. A constant, so the native signature loops divide by a
+    * literal.
     */
-  val P: Long = 2147483647L
+  final val P = 2147483647L
+
+  /** The text MinHash permutation family, h_i(x) = (a_i·(x mod P) + b_i)
+    * mod P: the one definition the native signature loops
+    * (`MinHashSig`, `MinHashAgg`) and the oracle SQL literals
+    * (`Dedup.As`/`Bs`) read.
+    */
+  def minhashA(i: Int): Long = 2L * i + 1
+  def minhashB(i: Int): Long = 104729L * (i + 1) % P
 
   /** 60-bit positive hash of a string column. */
   def h60(c: Column): Column =

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType}
 
-import graft.xscale.XHash.P
+import graft.xscale.XHash.{minhashA, minhashB, P}
 
 /** MinHash signature as a GROUP aggregate: element i of the result is
   * `min over rows of (a_i * (h mod P) + b_i) mod P` for the input 60-bit
@@ -51,7 +51,7 @@ case class MinHashAgg(
       val hp = v.asInstanceOf[Long] % P
       var i = 0
       while (i < k) {
-        val x = ((2L * i + 1) * hp + (104729L * (i + 1)) % P) % P
+        val x = (minhashA(i) * hp + minhashB(i)) % P
         if (x < buf(i)) buf(i) = x
         i += 1
       }

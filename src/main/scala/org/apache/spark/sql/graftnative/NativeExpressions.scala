@@ -397,7 +397,7 @@ case class MinHashSig(child: Expression, k: Int)
 }
 
 object MinHashSig {
-  final val P = 2147483647L
+  import graft.xscale.XHash.{minhashA, minhashB, P}
 
   def compute(hs: ArrayData, k: Int): ArrayData = {
     val sig = Array.fill(k)(Long.MaxValue)
@@ -407,7 +407,7 @@ object MinHashSig {
       val hm = hs.getLong(i) % P
       var j = 0
       while (j < k) {
-        val v = ((2L * j + 1) * hm + 104729L * (j + 1) % P) % P
+        val v = (minhashA(j) * hm + minhashB(j)) % P
         if (v < sig(j)) sig(j) = v
         j += 1
       }

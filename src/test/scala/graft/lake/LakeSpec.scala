@@ -1,5 +1,9 @@
 package graft.lake
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.lit
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -427,5 +431,37 @@ class LakeSpec extends SparkSpec {
       val now = assertMatchesFold(lake, s"monthly=$monthly")
       assert(now.size === 6 && now.exists(_.contains(",11.0,")), now.mkString("\n"))
     }
+  }
+
+  test("every job of an ingest, upsert and compaction is named after its Lake entry point, none after a Spark pool's stack") {
+    val root = tmpDir("lake-site")
+    val in = new java.io.File(root, "in"); in.mkdirs()
+    val lake = new java.io.File(root, "lake").getPath
+    writeFile(in, "chase1234_jan.csv",
+      """Details,Posting Date,Description,Amount,Type,Balance,Check or Slip #
+        |DEBIT,01/15/2024,COFFEE SHOP,-4.50,ACH_DEBIT,995.50,
+        |CREDIT,01/16/2024,PAYROLL,2000.00,ACH_CREDIT,2995.50,""".stripMargin)
+    val sc = spark.sparkContext
+    // job id -> (the job's call site, its stages' names)
+    val sites = TrieMap.empty[Int, (String, Seq[String])]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites(e.jobId) = (Option(e.properties).map(_.getProperty("callSite.short")).orNull,
+          e.stageInfos.map(_.name))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Lake.ingestDirectory(spark, in.getPath, lake, new java.io.File(root, "sync").getPath)
+      Lake.upsertIntoLake(spark, Seq(tx(desc = "day2", amount = 3.0)).toDF(), lake)
+      Lake.compact(spark, lake)
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    val jobs = sites.toSeq.sortBy(_._1).map(_._2)
+    assert(jobs.nonEmpty)
+    val pooled = jobs.filter { case (site, stages) => (Option(site) ++ stages).exists(_.contains("CompletableFuture")) }
+    assert(pooled.size === 0, s"of ${jobs.size} jobs named after a pool thread, e.g. ${pooled.take(2)}")
+    assert(sc.getLocalProperty("callSite.short") === null, "the caller's call site is restored")
+    assert(Lake.readLake(spark, lake).count() === 3)
   }
 }

@@ -490,6 +490,15 @@ class PerceptualDedupSpec extends SparkSpec {
     assert(m == Set((100L, 10L, 48L)), m)
   }
 
+  test("thumbnailMatches rejects maxHamming >= Bands: a frame differing in every band is never a candidate") {
+    import spark.implicits._
+    val videos = Seq((10L, fixtureAviFrames(10L))).toDF("doc_id", "payload")
+    val images = Seq((100L, makeBmp(9, 8, (x, y) => fixtureVidFrameGray(10L, 48, x, y))))
+      .toDF("doc_id", "payload")
+    intercept[IllegalArgumentException](
+      PerceptualDedup.thumbnailMatches(images, videos, maxHamming = Bands))
+  }
+
   test("decodeAviQuality: exact black/frozen counters, inclusive threshold, two-moment rule") {
     // constant-gray frames with hand-chosen levels: black at 5 and at the
     // inclusive 30 edge; frozen at the two exact repeats
