@@ -66,7 +66,21 @@ object Cli {
     * with the shared test session; `main` owns creation/stop). Returns the
     * process exit code.
     */
-  private[graft] def run(spark: SparkSession, args: List[String]): Int = args match {
+  private[graft] def run(spark: SparkSession, args: List[String]): Int = {
+    // --ckpt <dir> (corpus, admit): the whole verb runs under that
+    // checkpoint dir, so every stage-boundary cut is reliable
+    val ckptDir = args match {
+      case "corpus" :: _ :: _ :: rest => parseCorpusFlags(rest).flatMap(_.ckptDir)
+      case "admit" :: _ :: _ :: _ :: rest => parseAdmitFlags(rest).flatMap(_.ckptDir)
+      case _ => None
+    }
+    ckptDir match {
+      case Some(dir) => Sessions.withCheckpointDir(spark, dir)(dispatch(spark, args))
+      case None => dispatch(spark, args)
+    }
+  }
+
+  private def dispatch(spark: SparkSession, args: List[String]): Int = args match {
     // no-arg form: everything from the environment (O2, loadConfig.go) —
     // CSV_DIR, UNPROCESSED_DIR, PROCESSED_DIR, MOVE_PROCESSED_FILES,
     // LAKE_PATH, SYNC_LOG_PATH, QUARANTINE_PATH
@@ -182,13 +196,12 @@ object Cli {
     case "corpus" :: docsPath :: outDir :: rest
         if parseCorpusFlags(rest).isDefined =>
       val flags = parseCorpusFlags(rest).get
-      // --ckpt <dir>: every stage-boundary materialization below becomes a
-      // RELIABLE checkpoint (object-store backed) instead of executor-local
-      // blocks — at 100 TB an executor loss mid-pipeline must not restart
-      // the whole corpus build
-      val ckptDir = flags.ckptDir
+      // --ckpt <dir> (see run): every stage-boundary materialization below
+      // becomes a RELIABLE checkpoint (object-store backed) instead of
+      // executor-local blocks — at 100 TB an executor loss mid-pipeline
+      // must not restart the whole corpus build
       def cut(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-        graft.xscale.DedupClusters.ckpt(df, ckptDir)
+        graft.xscale.DedupClusters.ckpt(df)
       val docs = spark.read.parquet(docsPath)
       val cols = docs.columns.map(org.apache.spark.sql.functions.col).toSeq
       val quality = xscale.TextAnalysis.qualityFilter(docs).select(cols: _*)
@@ -258,12 +271,12 @@ object Cli {
                 Seq("vec_id"), "left_semi")
               xscale.Dedup.jointPairsImi(
                 exactDeduped, emb,
-                trainSample = 0.1, checkpointDir = ckptDir, textLeg = scaleLeg)
+                trainSample = 0.1, textLeg = scaleLeg)
             case None =>
               xscale.Dedup.textLegPairs(exactDeduped, scaleLeg)
           }
           cut(graft.xscale.DedupClusters
-            .dedupByPairs(exactDeduped, pairs, checkpointDir = ckptDir)
+            .dedupByPairs(exactDeduped, pairs)
             .select(cols: _*))
         }
       // --pdedup <mediaParquet>: the PERCEPTUAL dedup stage — a multimodal
@@ -309,8 +322,7 @@ object Cli {
                 .filter(org.apache.spark.sql.functions.col("decoded"))), None)
           val comp = graft.xscale.DedupClusters.connectedComponents(
             xscale.PerceptualDedup.bandNearDupPairs(
-              hf, xscale.PerceptualDedup.widthThreshold(wide)),
-            checkpointDir = ckptDir)
+              hf, xscale.PerceptualDedup.widthThreshold(wide)))
           val scored = dedupedDocs.join(
             hf.select(org.apache.spark.sql.functions.col("doc_id"),
               org.apache.spark.sql.functions.col("nbytes")),
@@ -344,8 +356,7 @@ object Cli {
           // only surviving docs' shingles vote (the shared combined frame
           // was cut on the pre-pdedup survivor set)
           val sh = sh0.join(pdeduped.select("doc_id"), Seq("doc_id"), "left_semi")
-          val losers = xscale.PerceptualDedup.containmentLosersFromShingles(
-            sh, checkpointDir = ckptDir)
+          val losers = xscale.PerceptualDedup.containmentLosersFromShingles(sh)
           cut(pdeduped.join(losers, Seq("doc_id"), "left_anti").select(cols: _*))
         case None => pdeduped
       }
@@ -372,7 +383,7 @@ object Cli {
         case Some(lang) =>
           val c = org.apache.spark.sql.functions.col _
           val sel = xscale.DataPrep
-            .dsirSelectThreshold(deduped, c("lang") === lang, checkpointDir = ckptDir)
+            .dsirSelectThreshold(deduped, c("lang") === lang)
             .filter(c("selected")).select("doc_id")
           deduped.filter(c("lang") === lang)
             .unionByName(deduped.filter(c("lang") =!= lang).join(sel, "doc_id"))
@@ -574,12 +585,12 @@ object Cli {
             if (!bootstrapped)
               Similarity.admitEmbeddingBootstrapAuto(
                 spark.read.parquet(ce), d,
-                trainSample = 0.1, checkpointDir = flags.ckptDir)
-            () => Similarity.admitEmbeddingSigs(spark, d, bEmb, checkpointDir = flags.ckptDir)
+                trainSample = 0.1)
+            () => Similarity.admitEmbeddingSigs(spark, d, bEmb)
           case None =>
             () => Similarity.admitEmbeddingFrame(
               spark.read.parquet(ce), bEmb,
-              trainSample = 0.1, checkpointDir = flags.ckptDir)
+              trainSample = 0.1)
         }
       }
       // --pmedia/--bmedia: the PERCEPTUAL leg (x74_admit_img/_aud's rule)
@@ -622,7 +633,7 @@ object Cli {
           .select(col("doc_id").as("cv_id"), col("mod"), col("bands"))
         def corpusWide() = PerceptualDedup.mediaWideFor(spark.read.parquet(cm).count())
         def build(corpusBands: DataFrame, wide: Boolean) =
-          Admission.mediaLeg(corpusBands, wide, bm, trimSpaces, flags.ckptDir)
+          Admission.mediaLeg(corpusBands, wide, bm, trimSpaces)
         flags.psigsDir match {
           case Some(d) =>
             val bandsPath = s"$d/bands"
@@ -650,7 +661,7 @@ object Cli {
             // would be decoded twice per run
             () => {
               val w = corpusWide()
-              build(DedupClusters.ckpt(corpusHash(w), flags.ckptDir), w)
+              build(DedupClusters.ckpt(corpusHash(w)), w)
             }
         }
       }
@@ -708,16 +719,16 @@ object Cli {
             }
             () => spark.read.parquet(shPath)
           case None =>
-            () => DedupClusters.ckpt(corpusShingleScan(), flags.ckptDir)
+            () => DedupClusters.ckpt(corpusShingleScan())
         }
         (media: Option[Admission.MediaLeg]) =>
-          Admission.trimLeg(corpusSh(), spaces, bm, media, flags.ckptDir)
+          Admission.trimLeg(corpusSh(), spaces, bm, media)
       }
       // the batch side of every leg, the status fold and the writes are
       // the admission kernel's (shared with StreamingAdmit)
       val legs = Admission.legs(
-        corpusSigs, batch, embBuild, mediaBuild, trimBuild, flags.strict, flags.ckptDir)
-      val st = Admission.classify(legs, flags.ckptDir)
+        corpusSigs, batch, embBuild, mediaBuild, trimBuild, flags.strict)
+      val st = Admission.classify(legs)
       val admittedIds = st.filter(col("status") === "admitted").select("doc_id")
       // the report, the admitted rows and the sidecar updates (ONLY the
       // admitted docs' state), in the kernel's crash order (the bootstrap
@@ -797,8 +808,9 @@ object Cli {
       pcontainPath: Option[String] = None,
       mqualityPath: Option[String] = None)
 
-  /** Parsed `admit` flags: `--ckpt` = reliable stage-boundary
-    * checkpoints (the corpus verb's contract); `--sigs` = the persisted
+  /** Parsed `admit` flags: `--ckpt` = run under that checkpoint dir,
+    * i.e. reliable stage-boundary checkpoints (the corpus verb's
+    * contract, see [[run]]); `--sigs` = the persisted
     * dedup-state sidecar (see the admit case).
     */
   private[graft] final case class AdmitFlags(
@@ -922,6 +934,9 @@ object Cli {
         "                 (daily-ingest admission: classify a batch against the corpus without re-shuffling\n" +
         "                 it — x74's rule; writes <outDir>/admitted + <outDir>/report + stats line; --sigs\n" +
         "                 persists the corpus dedup state so later runs never re-read the corpus text)\n" +
+        "       --ckpt <dir> (corpus, admit) runs the verb under that Spark checkpoint dir: every\n" +
+        "                 stage-boundary cut is a reliable (storage-backed) checkpoint instead of an\n" +
+        "                 executor-local one; a context that already has a dir keeps it\n" +
         "env:   CSV_DIR UNPROCESSED_DIR PROCESSED_DIR MOVE_PROCESSED_FILES\n" +
         "       LAKE_PATH SYNC_LOG_PATH QUARANTINE_PATH (no-arg ingest)")
 

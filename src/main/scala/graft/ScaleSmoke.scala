@@ -129,6 +129,13 @@ object ScaleSmoke {
     copies.unionByName(novel)
   }
 
+  /** The heavy legs' posture: every cut `body` makes is a reliable
+    * checkpoint under `<dir>/_checkpoints` (storage-backed, so its blocks
+    * never pin the local-mode heap) instead of a lazy local one.
+    */
+  private def reliable[T](s: SparkSession, dir: String)(body: => T): T =
+    Sessions.withCheckpointDir(s, s"$dir/_checkpoints")(body)
+
   /** 1M-leaf star + 100k disjoint 2-cliques: the clone-heavy dedup graph. */
   private def ccMegastar(s: SparkSession) =
     s.range(1, 1000001L).select(org.apache.spark.sql.functions.lit(0L).as("a"), col("id").as("b"))
@@ -249,10 +256,11 @@ object ScaleSmoke {
     // The smoke times only the day-2 classify.
     if (!new java.io.File(s"$dir/powerlaw_esigs/centroids").exists() &&
       !new java.io.File(s"$dir/powerlaw_esigs/halves").exists()) {
-      xscale.Similarity.admitEmbeddingBootstrapAuto(
-        spark.read.parquet(s"$dir/powerlaw_embeddings.parquet"),
-        s"$dir/powerlaw_esigs", trainSample = 0.1,
-        checkpointDir = Some(s"$dir/_checkpoints"))
+      reliable(spark, dir) {
+        xscale.Similarity.admitEmbeddingBootstrapAuto(
+          spark.read.parquet(s"$dir/powerlaw_embeddings.parquet"),
+          s"$dir/powerlaw_esigs", trainSample = 0.1)
+      }
     }
     // The media-admission bands state (`Cli admit --psigs` steady state):
     // the corpus images hashed ONCE — x74_admit_img_steady times only the
@@ -532,7 +540,7 @@ object ScaleSmoke {
       // bipartite multi-scale LSH — every 15th doc posts the 2x-resized
       // crop, every 45th the 4x one; ONE decode pass per image yields
       // native + scaled fingerprint sets, band join native-vs-scaled only
-      "x156_rcrop_lsh" -> ((s, d) => {
+      "x156_rcrop_lsh" -> ((s, d) => reliable(s, d) {
         import s.implicits._
         val ids = s.read.parquet(s"$d/documents.parquet").select("doc_id")
         val src = ids
@@ -551,9 +559,9 @@ object ScaleSmoke {
         // storage-backed cuts (the heavy-smoke rule): the 100x corpus
         // carries ~110M multi-scale fingerprints
         xscale.PerceptualDedup.resizedCropContainmentPairsLsh(
-          media, checkpointDir = Some(s"$d/_checkpoints"))
+          media)
       }),
-      "x154_vcrop_lsh" -> ((s, d) => {
+      "x154_vcrop_lsh" -> ((s, d) => reliable(s, d) {
         import s.implicits._
         val ids = s.read.parquet(s"$d/documents.parquet").select("doc_id")
         val src = ids
@@ -570,13 +578,13 @@ object ScaleSmoke {
         // corpus carries ~64M vsp fingerprints — local-checkpoint memory
         // blocks for the shingle frame alone exceed the default 8g heap
         xscale.PerceptualDedup.videoSpatialContainmentPairsLsh(
-          media, checkpointDir = Some(s"$d/_checkpoints"))
+          media)
       }),
       // the x155 scale path measured: cropped-thumbnail provenance via
       // the bipartite LSH (every 3rd doc posts a thumbnail of one frame,
       // every 6th cropped) — image decode + per-frame video decode, band
       // join across sides only
-      "x155_thumb_lsh" -> ((s, d) => {
+      "x155_thumb_lsh" -> ((s, d) => reliable(s, d) {
         import s.implicits._
         val ids = s.read.parquet(s"$d/documents.parquet").select("doc_id")
         val vids = ids.as[Long]
@@ -590,7 +598,7 @@ object ScaleSmoke {
           })
           .toDF("doc_id", "payload")
         xscale.PerceptualDedup.thumbnailContainmentPairsLsh(
-          thumbs, vids, checkpointDir = Some(s"$d/_checkpoints"))
+          thumbs, vids)
       }),
       // the spatial-crop leg's steady state: a fixed batch of 200
       // tile-aligned spatial crops of corpus videos + 50 fresh,
@@ -610,7 +618,7 @@ object ScaleSmoke {
           // contract): the broadcast-decision count on a raw decode plan
           // would run the full batch decode one extra time
           state, xscale.DedupClusters.ckpt(
-            xscale.PerceptualDedup.mediaShingles(batch), None))
+            xscale.PerceptualDedup.mediaShingles(batch)))
           .groupBy("near_trim").count()
       }),
       // the excerpt leg's steady state: a fixed batch of 200 pause-cut
@@ -628,7 +636,7 @@ object ScaleSmoke {
           .toDF("doc_id", "payload")
         xscale.PerceptualDedup.admitTrimCompare(
           state, xscale.DedupClusters.ckpt(
-            xscale.PerceptualDedup.mediaShingles(batch), None))
+            xscale.PerceptualDedup.mediaShingles(batch)))
           .groupBy("near_trim").count()
       }),
       // the crop leg's steady state: a fixed batch of 200 tile-aligned
@@ -661,7 +669,7 @@ object ScaleSmoke {
           .toDF("doc_id", "payload")
         xscale.PerceptualDedup.admitTrimCompare(
           state, xscale.DedupClusters.ckpt(
-            xscale.PerceptualDedup.mediaShingles(batch), None))
+            xscale.PerceptualDedup.mediaShingles(batch)))
           .groupBy("near_trim").count()
       }),
       // the resized-crop leg's steady state: a fixed batch of 200
@@ -680,7 +688,7 @@ object ScaleSmoke {
           .toDF("doc_id", "payload")
         val batchSh = xscale.DedupClusters.ckpt(
           xscale.PerceptualDedup.mediaShingles(
-            batch, rscales = xscale.PerceptualDedup.RescaleSet), None)
+            batch, rscales = xscale.PerceptualDedup.RescaleSet))
         // single-branch explode re-tag (the admitRcropLeg rule): a union
         // of filtered branches races the lazy-ckpt blocks on first action
         val compare = batchSh.filter(col("mod") === "img")
@@ -708,7 +716,7 @@ object ScaleSmoke {
           .toDF("doc_id", "payload")
         xscale.PerceptualDedup.admitTrimCompare(
           state, xscale.DedupClusters.ckpt(
-            xscale.PerceptualDedup.videoFrameShingles(batch), None))
+            xscale.PerceptualDedup.videoFrameShingles(batch)))
           .groupBy("near_trim").count()
       }),
       // the `Cli corpus --mquality` gate shape, measured end to end: one
@@ -752,7 +760,7 @@ object ScaleSmoke {
       // (modality by cluster, matching the pdedup fixture's split), one
       // modality-detected shingle pass -> per-mod LSH candidates ->
       // exact verify -> CC -> keep-most-shingles
-      "corpus_pcontain_stage" -> ((s, d) => {
+      "corpus_pcontain_stage" -> ((s, d) => reliable(s, d) {
         import s.implicits._
         val docs = s.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
         val t = xscale.PerceptualDedup.TileSize
@@ -793,7 +801,7 @@ object ScaleSmoke {
         // memory-pinned localCheckpoints would squeeze the runtime
         // broadcasts out of the shared local-mode heap at 100x
         xscale.PerceptualDedup.mediaContainmentLosers(
-          media, checkpointDir = Some(s"$d/_checkpoints"))
+          media)
       }),
       // the `Cli corpus --pdedup` stage shape, measured end to end: one
       // modality-detected decode pass over REAL three-way mixed media —
@@ -829,7 +837,7 @@ object ScaleSmoke {
         // pass, CC on band keys)
         val hf = xscale.DedupClusters.ckpt(
           xscale.PerceptualDedup.mediaHashFrame(media, wide)
-            .filter(col("decoded")), None)
+            .filter(col("decoded")))
         val comp = xscale.DedupClusters.connectedComponents(
           xscale.PerceptualDedup.bandNearDupPairs(
             hf, xscale.PerceptualDedup.widthThreshold(wide)))
@@ -838,22 +846,20 @@ object ScaleSmoke {
           comp,
           coalesce(col("nbytes"), lit(-1L)))
       }),
-      "x50_joint_auto" -> ((s, d) =>
+      "x50_joint_auto" -> ((s, d) => reliable(s, d)(
         xscale.Dedup.jointDedup(
           s.read.parquet(s"$d/documents.parquet"),
           s.read.parquet(s"$d/embeddings.parquet"),
-          trainSample = 0.1,
-          checkpointDir = Some(s"$d/_checkpoints"))),
+          trainSample = 0.1))),
       // x50 with the embedding leg on x138's IMI product cells: the same
       // cell count as auto-nc at O(n·√cells) assignment instead of
       // O(n·nc) — the form whose quantizer survives 100× (measured; the
       // flat auto form's assignment is the named quadratic cap there)
-      "x50_joint_imi" -> ((s, d) =>
+      "x50_joint_imi" -> ((s, d) => reliable(s, d)(
         xscale.Dedup.jointDedupImi(
           s.read.parquet(s"$d/documents.parquet"),
           s.read.parquet(s"$d/embeddings.parquet"),
-          trainSample = 0.1,
-          checkpointDir = Some(s"$d/_checkpoints"))),
+          trainSample = 0.1))),
       // x52/x54 library defaults = corpus-proportional nc + sampled
       // quantizer training (the oracle queries pin nc=NC for the SQL
       // twin's literal)
@@ -868,13 +874,12 @@ object ScaleSmoke {
       // (mean cell ≈ TargetClusterSize vectors, so nprobe/nc keeps the
       // candidate scan near-constant per query as the corpus grows),
       // sampled quantizer training, reliable checkpoints
-      "x68_ivfpq_auto" -> ((s, d) => {
+      "x68_ivfpq_auto" -> ((s, d) => reliable(s, d) {
         val emb = s.read.parquet(s"$d/embeddings.parquet")
         val nc = math.max(xscale.Similarity.NC.toLong,
           emb.count() / xscale.Similarity.TargetClusterSize).toInt
         xscale.Similarity.ivfPqKnn(emb, col("vec_id") < 10,
-          ncCoarse = nc, trainSample = 0.1,
-          checkpointDir = Some(s"$d/_checkpoints"))
+          ncCoarse = nc, trainSample = 0.1)
       }),
       // x51 scale path: sampled-threshold selection, no global window
       "x51_dsir_threshold" -> ((s, d) =>
@@ -886,17 +891,15 @@ object ScaleSmoke {
       // oracle-keyed exactQuantile form, resolved from SparkEntry); this
       // twin measures the library DEFAULT (approx_percentile — the
       // bounded-memory aggregate a 100 TB run ships) on the same corpus.
-      "x57_pipeline_approx" -> ((s, d) =>
+      "x57_pipeline_approx" -> ((s, d) => reliable(s, d)(
         xscale.DataPrep.pipelineThreshold(
-          s.read.parquet(s"$d/documents.parquet"),
-          checkpointDir = Some(s"$d/_checkpoints"))),
+          s.read.parquet(s"$d/documents.parquet")))),
       // x91 in its production posture: sampled quantizer training +
       // reliable checkpoints (the oracle query trains on every chunk)
-      "x91_rag_auto" -> ((s, d) =>
+      "x91_rag_auto" -> ((s, d) => reliable(s, d)(
         xscale.Similarity.ragIndex(
           s.read.parquet(s"$d/documents.parquet"),
-          trainSample = 0.1,
-          checkpointDir = Some(s"$d/_checkpoints"))),
+          trainSample = 0.1))),
       // x88_bm25_capped and x98_hubness_ann are registered queries now
       // (r9) — SparkEntry.queries resolves them, no extra thunk needed.
       // x101 scale posture: sampled-quantile phase cuts, no global window
@@ -917,12 +920,11 @@ object ScaleSmoke {
       // x92 scale posture: seed cap grown with the corpus (10x docs ->
       // 10x cells, keeping per-cell rerank cost flat — the IVF contract;
       // the fixed-cap oracle query's cells fatten linearly instead)
-      "x92_rag_auto" -> ((s, d) =>
+      "x92_rag_auto" -> ((s, d) => reliable(s, d)(
         xscale.Similarity.ragRetrieval(
           s.read.parquet(s"$d/documents.parquet"),
           seedCap = 40000L,
-          trainSample = 0.1,
-          checkpointDir = Some(s"$d/_checkpoints"))),
+          trainSample = 0.1))),
       // x113 scale posture: ground truth stays sample-bounded — the
       // query sample THINS as the corpus grows (mod 1000 here vs the
       // registered mod-20 pin) because recall@k's statistical value
@@ -960,13 +962,12 @@ object ScaleSmoke {
       // ~TargetClusterSize) while per-vector assignment cost grows only
       // as √cells — the measured remediation of x50's flat-assignment
       // named cap (flat at the same cell count would be O(n²/64)).
-      "x138_imi_auto" -> ((s, d) => {
+      "x138_imi_auto" -> ((s, d) => reliable(s, d) {
         val emb = s.read.parquet(s"$d/embeddings.parquet")
         xscale.Similarity.imiCells(
           emb,
           nc = xscale.Similarity.imiAutoNc(emb.count()),
-          trainSample = 0.1,
-          checkpointDir = Some(s"$d/_checkpoints"))
+          trainSample = 0.1)
       }),
       "x98_hubness_ann_auto" -> ((s, d) => {
         val emb = s.read.parquet(s"$d/embeddings.parquet")
@@ -1007,25 +1008,22 @@ object ScaleSmoke {
           docs, xscale.Dedup.textLegPairs(docs, xscale.Dedup.MinhashLeg))
           .groupBy("source").agg(count(lit(1)).as("n_after"))
       }),
-      "x50_joint_imi_powerlaw" -> ((s, d) =>
+      "x50_joint_imi_powerlaw" -> ((s, d) => reliable(s, d)(
+        xscale.Dedup.jointDedupImi(
+          s.read.parquet(s"$d/powerlaw_documents.parquet"),
+          s.read.parquet(s"$d/powerlaw_embeddings.parquet"),
+          trainSample = 0.1))),
+      "x50_joint_imi_powerlaw_minhash" -> ((s, d) => reliable(s, d)(
         xscale.Dedup.jointDedupImi(
           s.read.parquet(s"$d/powerlaw_documents.parquet"),
           s.read.parquet(s"$d/powerlaw_embeddings.parquet"),
           trainSample = 0.1,
-          checkpointDir = Some(s"$d/_checkpoints"))),
-      "x50_joint_imi_powerlaw_minhash" -> ((s, d) =>
-        xscale.Dedup.jointDedupImi(
-          s.read.parquet(s"$d/powerlaw_documents.parquet"),
-          s.read.parquet(s"$d/powerlaw_embeddings.parquet"),
-          trainSample = 0.1,
-          checkpointDir = Some(s"$d/_checkpoints"),
-          textLeg = xscale.Dedup.MinhashLeg)),
+          textLeg = xscale.Dedup.MinhashLeg))),
       // the cascade in its any-size posture: near-dup leg auto-chosen by
       // the exact-survivor count (simhash ≤ 1e5, minhash past it)
-      "x99_cascade_powerlaw_auto" -> ((s, d) =>
+      "x99_cascade_powerlaw_auto" -> ((s, d) => reliable(s, d)(
         xscale.Dedup.dedupCascadeAuto(
-          s.read.parquet(s"$d/powerlaw_documents.parquet"),
-          checkpointDir = Some(s"$d/_checkpoints"))),
+          s.read.parquet(s"$d/powerlaw_documents.parquet")))),
       // The admission posture at scale: a FIXED 250-doc batch against the
       // growing powerlaw corpus. The text form pays one corpus signature
       // pass; the sigs form reads the persisted sidecar instead — the
@@ -1048,18 +1046,16 @@ object ScaleSmoke {
       // centroids collected, corpus touched only through state rows). The
       // fixed batch = 200 copies of corpus vectors (guaranteed flags) +
       // 50 negations (novel direction in the near-isotropic fixture).
-      "x74_admit_emb_powerlaw" -> ((s, d) => {
+      "x74_admit_emb_powerlaw" -> ((s, d) => reliable(s, d) {
         val emb = s.read.parquet(s"$d/powerlaw_embeddings.parquet")
         xscale.Similarity.admitEmbedding(
-          emb, admitEmbBatch(emb), trainSample = 0.1,
-          checkpointDir = Some(s"$d/_checkpoints"))
+          emb, admitEmbBatch(emb), trainSample = 0.1)
           .groupBy("near_emb").agg(count(lit(1)).as("n"))
       }),
-      "x74_admit_esigs_powerlaw" -> ((s, d) => {
+      "x74_admit_esigs_powerlaw" -> ((s, d) => reliable(s, d) {
         val emb = s.read.parquet(s"$d/powerlaw_embeddings.parquet")
         xscale.Similarity.admitEmbeddingSigs(
-          s, s"$d/powerlaw_esigs", admitEmbBatch(emb),
-          checkpointDir = Some(s"$d/_checkpoints"))
+          s, s"$d/powerlaw_esigs", admitEmbBatch(emb))
           .groupBy("near_emb").agg(count(lit(1)).as("n"))
       }),
       // the round-12 admission additions at scale: (a) the strict emb
@@ -1068,14 +1064,12 @@ object ScaleSmoke {
       // must stay FLAT as the corpus grows, the whole point); (b) emb
       // state compaction = left_semi of the corpus-sized assign table on
       // the live ids + keep-one (one keyed shuffle, linear in state)
-      "x74_emb_strict_powerlaw" -> ((s, d) => {
+      "x74_emb_strict_powerlaw" -> ((s, d) => reliable(s, d) {
         val emb = s.read.parquet(s"$d/powerlaw_embeddings.parquet")
         val frame = xscale.Similarity.admitEmbeddingSigs(
-          s, s"$d/powerlaw_esigs", admitEmbBatch(emb),
-          checkpointDir = Some(s"$d/_checkpoints")).localCheckpoint()
+          s, s"$d/powerlaw_esigs", admitEmbBatch(emb)).localCheckpoint()
         val losers = xscale.Similarity.admitEmbStrictLosers(
-          frame.filter(!col("near_emb")).select("vec_id", "cid", "cv", "cn"),
-          checkpointDir = Some(s"$d/_checkpoints"))
+          frame.filter(!col("near_emb")).select("vec_id", "cid", "cv", "cn"))
         losers.agg(count(lit(1)).as("n_losers"))
       }),
       "x74_esigs_compact_powerlaw" -> ((s, d) => {

@@ -47,6 +47,24 @@ object Sessions {
     try body finally sc.setLocalProperty(CallSiteShort, prior)
   }
 
+  /** Run `body` with `dir` as the context's checkpoint dir, so every
+    * [[graft.xscale.DedupClusters.ckpt]] cut inside it is a reliable one
+    * (storage-backed, survives executor loss) instead of a lazy local one.
+    * The dir is a property of the SparkContext, not of a thread: the scope
+    * covers every job the context runs until it ends, and the dir is unset
+    * after `body`, on the throw path too. A context that already has a dir
+    * keeps it: `body` runs under that dir unchanged (an existing setting
+    * wins), so an inner scope never redirects an outer one.
+    */
+  def withCheckpointDir[T](spark: SparkSession, dir: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    if (sc.getCheckpointDir.nonEmpty) body
+    else {
+      sc.setCheckpointDir(dir)
+      try body finally sc.setCheckpointDir(null)
+    }
+  }
+
   // the local property Spark reads a job's short call site from
   // (`org.apache.spark.util.CallSite.SHORT_FORM`, private to Spark)
   private val CallSiteShort = "callSite.short"

@@ -97,7 +97,6 @@ object StreamingAdmit {
       strict: Boolean = true,
       reportPath: Option[String] = None,
       batchId: Long = 0L,
-      checkpointDir: Option[String] = None,
       esigsPath: Option[String] = None,
       batchEmb: Option[DataFrame] = None,
       outPath: Option[String] = None,
@@ -114,7 +113,7 @@ object StreamingAdmit {
       "ptrim = true requires psigsPath and batchMedia — without them every " +
         "re-cut video would be admitted unflagged (silent zero recall)")
     val embBuild = for (d <- esigsPath; be <- batchEmb)
-      yield () => Similarity.admitEmbeddingSigs(spark, d, be, checkpointDir = checkpointDir)
+      yield () => Similarity.admitEmbeddingSigs(spark, d, be)
     // the shingle state's SPACES govern which containment spaces the batch
     // decodes, compares and appends — meta-first (geometry validated, loud
     // failure on mismatch), layout fallback for meta-less states
@@ -125,18 +124,18 @@ object StreamingAdmit {
     val mediaBuild = for (d <- psigsPath; bm <- batchMedia) yield () => {
       val stateBands = spark.read.parquet(s"$d/bands")
       Admission.mediaLeg(stateBands, PerceptualDedup.stateWide(spark, s"$d/meta", stateBands),
-        bm, trimSpaces, checkpointDir)
+        bm, trimSpaces)
     }
     val trimBuild = for (spaces <- trimSpaces; sh <- stateShingles; bm <- batchMedia)
       yield (media: Option[Admission.MediaLeg]) =>
-        Admission.trimLeg(sh, spaces, bm, media, checkpointDir)
+        Admission.trimLeg(sh, spaces, bm, media)
     // the state's own schema (the batch sigs'): no footer-inference job
     val stateSigs = Dedup.dedupSignatures(batch)
     val legs = Admission.legs(
       if (fs.exists(sPath)) spark.read.schema(stateSigs.schema).parquet(statePath)
       else stateSigs.limit(0),
-      batch, embBuild, mediaBuild, trimBuild, strict, checkpointDir)
-    val st = Admission.classify(legs, checkpointDir)
+      batch, embBuild, mediaBuild, trimBuild, strict)
+    val st = Admission.classify(legs)
     val admittedIds = st.filter(col("status") === "admitted").select("doc_id")
     val admitted = batch.join(admittedIds, "doc_id")
     val report = reportPath.map(p => () =>
@@ -157,7 +156,10 @@ object StreamingAdmit {
     * stream must carry an `embedding` column (array of float/double; null
     * for vectorless docs) — the emb leg reads it as the batch vectors.
     * When `psigsPath` is set it must carry a `payload` binary column
-    * (null for media-less docs) — the media leg hashes it.
+    * (null for media-less docs) — the media leg hashes it. The stage
+    * cuts follow the context's checkpoint dir like every other
+    * [[graft.xscale.DedupClusters.ckpt]]: set it on the context for the
+    * query's lifetime for reliable cuts.
     */
   def stream(
       docs: DataFrame,
@@ -166,7 +168,6 @@ object StreamingAdmit {
       checkpointDir: String,
       strict: Boolean = true,
       reportPath: Option[String] = None,
-      stageCkptDir: Option[String] = None,
       esigsPath: Option[String] = None,
       psigsPath: Option[String] = None,
       ptrim: Boolean = false): StreamingQuery =
@@ -182,7 +183,7 @@ object StreamingAdmit {
           esigsPath.map(_ => "embedding"), psigsPath.map(_ => "payload"))
           .flatten.foldLeft(b)(_ drop _)
         admit(b.sparkSession, bDocs, statePath, strict, reportPath, id,
-          stageCkptDir, esigsPath, bEmb, Some(outPath), psigsPath, bMedia, ptrim)
+          esigsPath, bEmb, Some(outPath), psigsPath, bMedia, ptrim)
         ()
       }
       .start()

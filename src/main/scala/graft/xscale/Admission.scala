@@ -55,9 +55,11 @@ import graft.Sessions.withCallSite
   * restatus read it); and the final
   * status frame is cut once, before any write — its lazy plan reads the
   * state dirs, and an append landing first would make recomputation see
-  * the new files. Pass `checkpointDir` in production so the cuts are
-  * storage-backed: the default localCheckpoint recomputes on executor
-  * loss, which for the status cut would re-read state the appends advance.
+  * the new files. In production run under a checkpoint dir
+  * ([[graft.Sessions.withCheckpointDir]], i.e. `Cli admit --ckpt <dir>`)
+  * so the cuts are storage-backed: the default localCheckpoint recomputes
+  * on executor loss, which for the status cut would re-read state the
+  * appends advance.
   *
   * Concurrency: the kernel overlaps work that shares nothing, and no
   * caller creates threads. [[legs]] cuts the text corpus leg (the sig
@@ -172,9 +174,8 @@ object Admission {
       emb: Option[() => DataFrame],
       media: Option[() => MediaLeg],
       trim: Option[Option[MediaLeg] => TrimLeg],
-      strict: Boolean,
-      checkpointDir: Option[String]): Legs = withCallSite(batch.sparkSession, "Admission.legs") {
-    def cut(df: DataFrame) = DedupClusters.ckpt(df, checkpointDir)
+      strict: Boolean): Legs = withCallSite(batch.sparkSession, "Admission.legs") {
+    def cut(df: DataFrame) = DedupClusters.ckpt(df)
     // a strict pass's edge list, cut and counted on the leg thread that
     // builds it; an empty list is dropped
     def edges(df: DataFrame): Option[(DataFrame, Long)] =
@@ -222,9 +223,8 @@ object Admission {
       corpusBands: DataFrame,
       wide: Boolean,
       batchMedia: DataFrame,
-      trimSpaces: Option[Seq[String]],
-      checkpointDir: Option[String]): MediaLeg = {
-    def cut(df: DataFrame) = DedupClusters.ckpt(df, checkpointDir)
+      trimSpaces: Option[Seq[String]]): MediaLeg = {
+    def cut(df: DataFrame) = DedupClusters.ckpt(df)
     val legacy = !corpusBands.columns.contains("mod")
     val (batchBands, batchShingles) =
       if (legacy)
@@ -263,8 +263,7 @@ object Admission {
       corpusShingles: DataFrame,
       spaces: Seq[String],
       batchMedia: DataFrame,
-      media: Option[MediaLeg],
-      checkpointDir: Option[String]): TrimLeg = {
+      media: Option[MediaLeg]): TrimLeg = {
     val legacy = !corpusShingles.columns.contains("mod")
     val batchSh0 = media.flatMap(_.batchShingles).getOrElse(
       DedupClusters.ckpt(
@@ -272,7 +271,7 @@ object Admission {
           PerceptualDedup.videoFrameShingles(batchMedia).withColumn("mod", lit("vid"))
         else PerceptualDedup.mediaShingles(
           batchMedia, vsp = spaces.contains("vsp"),
-          rscales = PerceptualDedup.rescaleScalesOf(spaces)), checkpointDir))
+          rscales = PerceptualDedup.rescaleScalesOf(spaces))))
     val batchSh =
       if (legacy) batchSh0.filter(col("mod") === "vid")
       else batchSh0.filter(col("mod").isin(spaces: _*))
@@ -285,7 +284,7 @@ object Admission {
           .reduce(_ unionByName _))
     TrimLeg(
       DedupClusters.ckpt(
-        PerceptualDedup.admitTrimCompare(corpusShingles, batchCompare), checkpointDir),
+        PerceptualDedup.admitTrimCompare(corpusShingles, batchCompare)),
       batchSh, legacy)
   }
 
@@ -295,9 +294,9 @@ object Admission {
     * passes, in the leg order documented on this object. Returns the final
     * (doc_id, key, status) frame, cut once.
     */
-  def classify(legs: Legs, checkpointDir: Option[String]): DataFrame = withCallSite(
+  def classify(legs: Legs): DataFrame = withCallSite(
       legs.sigs.sparkSession, "Admission.classify") {
-    def cut(df: DataFrame) = DedupClusters.ckpt(df, checkpointDir)
+    def cut(df: DataFrame) = DedupClusters.ckpt(df)
     // (doc_id, status) for each doc with a `hits` row matching a rule,
     // the status of the first rule it matches: the fold of one restatus
     // per rule, in rule order, over the docs `hits` names
@@ -340,7 +339,7 @@ object Admission {
     // (one broadcast serves both ends). A restricted list has at most the
     // rows of its whole list, so `cc` takes the one-task CC path without a
     // count job whenever the largest list fits one task
-    val cc = DedupClusters.componentsAtMost(legs.edgesAtMost, checkpointDir)
+    val cc = DedupClusters.componentsAtMost(legs.edgesAtMost)
     def among(edges: DataFrame, docs: DataFrame) = {
       val d = broadcast(docs)
       edges.join(d, col("a") === col("doc_id"), "left_semi")
@@ -359,7 +358,7 @@ object Admission {
       // longer clip / larger image is the source), not the min id
       legs.trimEdges.map(e => (docs: DataFrame) =>
         firstStatus(PerceptualDedup.admitTrimStrictLosersBy(e.copy(links = among(e.links, docs)),
-          cc, checkpointDir), bySpace(_.strictStatus, PerceptualDedup.RcropStrictStatus)))
+          cc), bySpace(_.strictStatus, PerceptualDedup.RcropStrictStatus)))
     ).flatten
     if (passes.isEmpty) cut(stCorpus)
     else {

@@ -1154,7 +1154,7 @@ object DataPrep {
     // re-derives the normalization + packing cumsum from text — the plan
     // carried 92 exchanges. One materialization, every consumer reads it.
     val p = DedupClusters.ckpt(
-      packAssignmentsOrd(withOrd, budget, shards).join(keyed, "doc_id"), None)
+      packAssignmentsOrd(withOrd, budget, shards).join(keyed, "doc_id"))
     val byOcc = Window.partitionBy("shard", "pack", "key").orderBy("ord", "doc_id")
     val rkx = p.withColumn("rk", row_number().over(byOcc))
     val dirty = rkx.filter(col("rk") >= 2).select("shard", "pack").distinct()
@@ -1550,13 +1550,12 @@ object DataPrep {
       keepFrac: Double = 0.2,
       buckets: Int = DsirBuckets,
       sampleFraction: Double = 0.5,
-      checkpointDir: Option[String] = None,
       exactQuantile: Boolean = false): DataFrame = {
     require(keepFrac > 0 && keepFrac < 1, "keepFrac must be in (0, 1)")
-    // checkpointDir: the scored frame feeds both the driver-side quantile
-    // and the final selection scan; on a real cluster a reliable checkpoint
-    // keeps that reuse recoverable across executor loss.
-    val scored = DedupClusters.ckpt(dsirWeights(docs, isTarget, buckets), checkpointDir)
+    // the scored frame feeds both the driver-side quantile and the final
+    // selection scan; on a real cluster a reliable checkpoint (a session
+    // checkpoint dir) keeps that reuse recoverable across executor loss.
+    val scored = DedupClusters.ckpt(dsirWeights(docs, isTarget, buckets))
     val keep = math.max(1L, math.min(1000L, (sampleFraction * 1000).toLong))
     if (exactQuantile) {
       // The ORACLE-KEYED form (x57_pipeline_threshold): the sample draw is
@@ -1610,23 +1609,20 @@ object DataPrep {
     * without the cut, Catalyst duplicates the whole upstream chain into
     * every consumer (~6 corpus scans; 59 shuffles vs ~17 composed). At
     * 100 TB these are the stage boundaries you would persist between jobs
-    * anyway — pass `checkpointDir` for a reliable (storage-backed) cut.
+    * anyway — run under a checkpoint dir for a reliable (storage-backed) cut.
     */
-  def pipelineCorpus(
-      docs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def pipelineCorpus(docs: DataFrame): DataFrame = {
     // project to the carry columns BEFORE the dedup shuffle (x27 rule)
     val quality = TextAnalysis.qualityFilter(
       docs.select("doc_id", "source", "lang", "text"))
       .select("doc_id", "source", "lang", "text")
-    val deduped = DedupClusters.ckpt(Dedup.dedupExact(quality), checkpointDir)
+    val deduped = DedupClusters.ckpt(Dedup.dedupExact(quality))
     val clean = removeSharedSpans(deduped)
       .filter(col("text_clean") =!= "")
       .select(col("doc_id"), col("text_clean"), col("n_removed"))
     DedupClusters.ckpt(
       deduped.drop("text").join(clean, "doc_id")
-        .withColumnRenamed("text_clean", "text"),
-      checkpointDir)
+        .withColumnRenamed("text_clean", "text"))
   }
 
   /** The x57 pipeline's reporting suffix: deterministic 90/5/5 split
@@ -1661,11 +1657,10 @@ object DataPrep {
   def pipelineThreshold(
       docs: DataFrame,
       keepFrac: Double = 0.2,
-      checkpointDir: Option[String] = None,
       exactQuantile: Boolean = false): DataFrame = {
-    val corpus = pipelineCorpus(docs, checkpointDir)
+    val corpus = pipelineCorpus(docs)
     val sel = dsirSelectThreshold(
-      corpus, col("lang") === "en", keepFrac, checkpointDir = checkpointDir,
+      corpus, col("lang") === "en", keepFrac,
       exactQuantile = exactQuantile)
       .filter(col("selected"))
       .select("doc_id")
@@ -1695,13 +1690,12 @@ object DataPrep {
       docs: DataFrame,
       isTarget: Column,
       target: Long = DsirTopK.toLong,
-      buckets: Int = DsirBuckets,
-      checkpointDir: Option[String] = None): DataFrame = {
+      buckets: Int = DsirBuckets): DataFrame = {
     require(target > 0, "target must be positive")
     // materialize once: the scored frame feeds BOTH the single-row total
     // and the per-row draw — without the cut the whole scoring subtree
     // (feature explode + bucket join) runs twice (plan-audit-visible)
-    val scored = DedupClusters.ckpt(dsirWeights(docs, isTarget, buckets), checkpointDir)
+    val scored = DedupClusters.ckpt(dsirWeights(docs, isTarget, buckets))
     // coalesce: sum over an empty/all-null raw set is NULL, which would
     // poison p_e6 and make `kept` null — callers reading it as Boolean
     // (.as[Boolean]) would NPE. An empty corpus keeps nothing, cleanly.

@@ -236,11 +236,12 @@ object Dedup {
     *
     * 100 TB knobs: `trainSample` < 1 trains the quantizer on a
     * deterministic vec_id hash-sample instead of scanning the full corpus
-    * every k-means round; `checkpointDir` switches the cluster-assignment
-    * materialization (and, passed onward to [[DedupClusters.dedupByPairs]],
-    * every CC iteration) from executor-local blocks to reliable storage —
-    * the difference between a recoverable and an irrecoverable job on
-    * executor loss. Defaults preserve the single-node behavior.
+    * every k-means round; a session checkpoint dir
+    * ([[graft.Sessions.withCheckpointDir]]) switches the cluster-assignment
+    * materialization (and every CC iteration of
+    * [[DedupClusters.dedupByPairs]]) from executor-local blocks to reliable
+    * storage — the difference between a recoverable and an irrecoverable
+    * job on executor loss. Defaults preserve the single-node behavior.
     */
   def jointPairs(
       docs: DataFrame,
@@ -248,12 +249,11 @@ object Dedup {
       hamming: Int = 8,
       tau: Double = 0.45,
       nc: Int = 0,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val tp = simhashPairs(docs)
       .filter(col("hamming") <= hamming)
       .select(col("doc_id_a").as("a"), col("doc_id_b").as("b"))
-    tp.unionByName(embClusterPairs(emb, tau, nc, trainSample, checkpointDir)).distinct()
+    tp.unionByName(embClusterPairs(emb, tau, nc, trainSample)).distinct()
   }
 
   /** x50's embedding-side leg, shared with the x128 agreement audit:
@@ -265,8 +265,7 @@ object Dedup {
       emb: DataFrame,
       tau: Double,
       nc: Int,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val vi = Similarity.fixedPoint(emb)
     val ncEff =
       if (nc > 0) nc
@@ -274,8 +273,7 @@ object Dedup {
     val asg = DedupClusters.ckpt( // feeds both self-join sides (same rule as x30)
       Similarity.quantizerRanked(vi, Similarity.trainQuantizer(vi, ncEff, trainSample))
         .filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid"), col("v"), col("nrm")),
-      checkpointDir)
+        .select(col("vec_id"), col("cid"), col("v"), col("nrm")))
     val ea = asg.select(col("cid"), col("vec_id").as("va"), col("v").as("xa"), col("nrm").as("na"))
     val eb = asg.select(col("cid"), col("vec_id").as("vb"), col("v").as("xb"), col("nrm").as("nb"))
     ea.join(eb, Seq("cid"))
@@ -301,14 +299,13 @@ object Dedup {
       emb: DataFrame,
       tau: Double,
       ncHalf: Int = 0,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val ncEff =
       if (ncHalf > 0) ncHalf
       else Similarity.imiAutoNc(emb.count())
-    val cells = Similarity.imiAssign(emb, ncEff, trainSample, checkpointDir)
+    val cells = Similarity.imiAssign(emb, ncEff, trainSample)
     val asg = DedupClusters.ckpt( // feeds both self-join sides (the x30 rule)
-      cells.join(Similarity.withNorm(emb), "vec_id"), checkpointDir)
+      cells.join(Similarity.withNorm(emb), "vec_id"))
     val ea = asg.select(col("cell"), col("vec_id").as("va"), col("v").as("xa"), col("nrm").as("na"))
     val eb = asg.select(col("cell"), col("vec_id").as("vb"), col("v").as("xb"), col("nrm").as("nb"))
     ea.join(eb, Seq("cell"))
@@ -354,27 +351,22 @@ object Dedup {
       tau: Double = 0.45,
       ncHalf: Int = 0,
       trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None,
       textLeg: TextLeg = SimhashLeg): DataFrame =
     textLegPairs(docs, textLeg, hamming)
-      .unionByName(embImiPairs(emb, tau, ncHalf, trainSample, checkpointDir))
+      .unionByName(embImiPairs(emb, tau, ncHalf, trainSample))
       .distinct()
 
   /** Joint multi-signal dedup (x50): one survivor per connected component
     * of the UNION of text-near-dup (simhash) and embedding-near-dup
     * (cosine) pairs — transitivity works across signals. On a real
-    * cluster pass BOTH scale knobs (see [[jointPairs]]): `checkpointDir`
-    * then covers the cluster assignment AND each CC iteration.
+    * cluster pass `trainSample` and run under a checkpoint dir (see
+    * [[jointPairs]]): the dir then covers the cluster assignment AND each
+    * CC iteration.
     */
   def jointDedup(docs: DataFrame, emb: DataFrame,
       hamming: Int = 8, tau: Double = 0.45,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame =
-    DedupClusters.dedupByPairs(
-      docs,
-      jointPairs(docs, emb, hamming, tau,
-        trainSample = trainSample, checkpointDir = checkpointDir),
-      checkpointDir = checkpointDir)
+      trainSample: Double = 1.0): DataFrame =
+    DedupClusters.dedupByPairs(docs, jointPairs(docs, emb, hamming, tau, trainSample = trainSample))
 
   /** [[jointDedup]] with the embedding leg's candidate cells from the
     * x138 IMI product quantizer instead of flat k-means: the coarse
@@ -387,13 +379,11 @@ object Dedup {
       hamming: Int = 8, tau: Double = 0.45,
       ncHalf: Int = 0,
       trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None,
       textLeg: TextLeg = SimhashLeg): DataFrame =
     DedupClusters.dedupByPairs(
       docs,
       jointPairsImi(docs, emb, hamming, tau, ncHalf,
-        trainSample = trainSample, checkpointDir = checkpointDir, textLeg = textLeg),
-      checkpointDir = checkpointDir)
+        trainSample = trainSample, textLeg = textLeg))
 
   /** x47 core: per unordered source pair, the number of exact-dup groups
     * (normalized-text key) containing docs of both sources. Columns
@@ -553,11 +543,10 @@ object Dedup {
   def admitStrict(
       st: DataFrame,
       batchSigs: DataFrame,
-      minMatch: Int = K / 2,
-      checkpointDir: Option[String] = None): DataFrame = {
+      minMatch: Int = K / 2): DataFrame = {
     val admSigs = batchSigs
       .join(st.filter(col("status") === "admitted").select("doc_id"), "doc_id")
-    val losers = DedupClusters.minIdLosers(admitStrictEdges(admSigs, minMatch), checkpointDir)
+    val losers = DedupClusters.minIdLosers(admitStrictEdges(admSigs, minMatch))
     restatus(st, losers.withColumn("status", lit("near_dup_batch")))
   }
 
@@ -689,13 +678,11 @@ object Dedup {
     * pays anyway, and on a real cluster the survivors are a checkpointed
     * stage boundary, making the count a metadata read).
     */
-  def dedupCascadeAuto(
-      docs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val cut = DedupClusters.ckpt(docs, checkpointDir)
+  def dedupCascadeAuto(docs: DataFrame): DataFrame = {
+    val cut = DedupClusters.ckpt(docs)
     // materialize the exact survivors ONCE: the leg-choosing count and
     // the cascade's three consumers all read the same checkpoint
-    val exact = DedupClusters.ckpt(dedupExact(cut), checkpointDir)
+    val exact = DedupClusters.ckpt(dedupExact(cut))
     cascadeOver(cut, exact, textLegFor(exact.count()))
   }
 
@@ -1203,13 +1190,12 @@ object Dedup {
       hamming: Int = 8,
       tau: Double = 0.45,
       nc: Int = 0,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val dd = docs.join(emb.select(col("vec_id").as("doc_id")), Seq("doc_id"), "left_semi")
     val tp = simhashPairs(dd)
       .filter(col("hamming") <= hamming)
       .select(col("doc_id_a").as("a"), col("doc_id_b").as("b"), lit(1L).as("t"))
-    val ep = embClusterPairs(emb, tau, nc, trainSample, checkpointDir)
+    val ep = embClusterPairs(emb, tau, nc, trainSample)
       .withColumn("e", lit(1L))
     val cells = tp.join(ep, Seq("a", "b"), "full_outer")
       .select(

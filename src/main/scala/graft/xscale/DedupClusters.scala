@@ -13,38 +13,35 @@ import org.apache.spark.sql.functions._
   * neighborhood; converged when no label changes. Rounds needed = graph
   * diameter, and near-dup graphs are piles of small dense cliques, so 2-4
   * rounds in practice. Each round is one shuffle keyed on node id.
-  * `localCheckpoint` cuts the per-iteration lineage so the plan doesn't
+  * A checkpoint ([[ckpt]]) cuts the per-iteration lineage so the plan doesn't
   * grow exponentially (the classic iterative-DataFrame trap).
   */
 object DedupClusters {
 
-  /** Iteration-state materializer. `localCheckpoint` (the default) stores
-    * blocks on executors — fast, but on a real cluster an executor loss
-    * mid-iteration is IRRECOVERABLE because the lineage was truncated.
-    * Passing `checkpointDir` switches every iteration checkpoint to a
-    * reliable one (HDFS/object-store backed): each round persists to
-    * storage that survives executor loss, the production posture for a
-    * 100 TB CC job. The dir is set once per SparkContext; an existing
-    * setting wins so callers can manage it globally.
+  /** Iteration-state materializer. The backend is a property of the
+    * session, not of the call: when the frame's SparkContext has a
+    * checkpoint dir (set for a scope by [[graft.Sessions.withCheckpointDir]],
+    * e.g. `Cli corpus|admit --ckpt <dir>`), every cut is a reliable one
+    * (HDFS/object-store backed) that survives executor loss, the
+    * production posture for a 100 TB CC job. Otherwise it is a
+    * `localCheckpoint`, whose blocks live on executors: fast, but on a
+    * real cluster an executor loss mid-iteration is IRRECOVERABLE because
+    * the lineage was truncated.
     */
-  private[graft] def ckpt(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        df.checkpoint()
-      case None =>
-        // LAZY local checkpoint (eager = false): the blocks materialize
-        // inside the FIRST consumer's job (any partition a short-circuiting
-        // first action skips is completed by the post-job doCheckpoint
-        // pass), so a ckpt chain of k frames costs k fewer full
-        // serial-barrier jobs per query than the eager form — the admit
-        // steady legs run 5 such chains per batch and were job-count-bound
-        // at sf0.1 (r16 VERDICT #1). Multi-consumer reuse (the reason ckpt
-        // exists) is unchanged: after the first action the plan reads
-        // cached blocks, and the truncated lineage still caps iterative
-        // plan growth.
-        df.localCheckpoint(eager = false)
+  private[graft] def ckpt(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.nonEmpty) df.checkpoint()
+    else {
+      // LAZY local checkpoint (eager = false): the blocks materialize
+      // inside the FIRST consumer's job (any partition a short-circuiting
+      // first action skips is completed by the post-job doCheckpoint
+      // pass), so a ckpt chain of k frames costs k fewer full
+      // serial-barrier jobs per query than the eager form — the admit
+      // steady legs run 5 such chains per batch and were job-count-bound
+      // at sf0.1 (r16 VERDICT #1). Multi-consumer reuse (the reason ckpt
+      // exists) is unchanged: after the first action the plan reads
+      // cached blocks, and the truncated lineage still caps iterative
+      // plan growth.
+      df.localCheckpoint(eager = false)
     }
 
   /** Connected components of an undirected pair list `(a, b)` →
@@ -65,9 +62,8 @@ object DedupClusters {
   def connectedComponents(
       pairs: DataFrame,
       maxIter: Int = 20,
-      checkpointDir: Option[String] = None,
       salts: Int = 1): DataFrame = {
-    val edges0 = ckpt(symmetric(pairs), checkpointDir)
+    val edges0 = ckpt(symmetric(pairs))
     // Adaptive algorithm choice for the iterative tail: a near-dup pair
     // graph is usually TINY next to the corpus (thousands of edges from
     // millions of docs), yet every label-prop round is a full
@@ -81,7 +77,7 @@ object DedupClusters {
     // below. Same spirit as a broadcast join's small-side threshold,
     // applied to an iterative algorithm.
     if (edges0.count() <= OneTaskEdges)
-      return ckpt(unionFindOneTask(edges0.coalesce(1)), checkpointDir)
+      return ckpt(unionFindOneTask(edges0.coalesce(1)))
     val edges = edges0
     // seed labels at min(id, min neighbor) instead of id: for the dense
     // little cliques near-dup graphs are made of, that IS the fixed point,
@@ -89,8 +85,7 @@ object DedupClusters {
     // rounds — one fewer shuffle+checkpoint cycle of the iterative tail.
     var labels = ckpt(
       edges.groupBy(col("a").as("id")).agg(min("b").as("_mn"))
-        .select(col("id"), least(col("id"), col("_mn")).as("component")),
-      checkpointDir)
+        .select(col("id"), least(col("id"), col("_mn")).as("component")))
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -122,8 +117,7 @@ object DedupClusters {
             col("id"),
             least(col("component"), coalesce(col("_neighbor_min"), col("component")))
               .as("component"),
-            col("component").as("_old")),
-        checkpointDir)
+            col("component").as("_old")))
       // single scan of the just-materialized result — no extra shuffle
       converged = updated.filter(col("component") =!= col("_old")).isEmpty
       labels = updated.drop("_old")
@@ -154,20 +148,18 @@ object DedupClusters {
     * count job and no cut of the edge list (it has one reader); otherwise
     * it is [[connectedComponents]]. Same labeling either way.
     */
-  private[graft] def componentsAtMost(
-      pairsAtMost: Long,
-      checkpointDir: Option[String]): DataFrame => DataFrame = pairs =>
+  private[graft] def componentsAtMost(pairsAtMost: Long): DataFrame => DataFrame = pairs =>
     if (2L * pairsAtMost <= OneTaskEdges)
-      ckpt(unionFindOneTask(symmetric(pairs).coalesce(1)), checkpointDir)
-    else connectedComponents(pairs, checkpointDir = checkpointDir)
+      ckpt(unionFindOneTask(symmetric(pairs).coalesce(1)))
+    else connectedComponents(pairs)
 
   /** The min-id keep-one rule over an undirected pair list `(a, b)`: the
     * LOSERS — every node that is not its component's minimum id — as one
     * `doc_id` column. The survivor rule of the text, emb and media strict
     * admission passes.
     */
-  def minIdLosers(pairs: DataFrame, checkpointDir: Option[String] = None): DataFrame =
-    minIdLosersBy(pairs, connectedComponents(_, checkpointDir = checkpointDir))
+  def minIdLosers(pairs: DataFrame): DataFrame =
+    minIdLosersBy(pairs, connectedComponents(_))
 
   /** [[minIdLosers]] with the components of `pairs` taken by `components`. */
   private[graft] def minIdLosersBy(pairs: DataFrame, components: DataFrame => DataFrame): DataFrame =
@@ -240,22 +232,19 @@ object DedupClusters {
     */
   def connectedComponentsStar(
       pairs: DataFrame,
-      maxIter: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     var edges = ckpt(
       pairs
         .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
         .filter(col("a") =!= col("b"))
-        .distinct(),
-      checkpointDir)
+        .distinct())
     // nodes of the ORIGINAL graph: star contraction rewrites edges, so the
     // final edge list loses interior nodes — the id universe must be fixed
     // up front to map every input node to its component.
     val nodes = ckpt(
       edges.select(col("a").as("id"))
         .union(edges.select(col("b").as("id")))
-        .distinct(),
-      checkpointDir)
+        .distinct())
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -270,8 +259,7 @@ object DedupClusters {
           .filter(col("v") > col("u"))
           .select(col("m").as("a"), col("v").as("b"))
           .filter(col("a") =!= col("b"))
-          .distinct(),
-        checkpointDir)
+          .distinct())
       // small-star: for each node u, its strictly-smaller neighbors (the a
       // side of canonical edges grouped by b); m = min of them; reconnect
       // u and every such neighbor to m.
@@ -281,8 +269,7 @@ object DedupClusters {
           .select(mSmall("m").as("a"), large("a").as("b"))
           .union(mSmall.select(col("m").as("a"), col("u").as("b")))
           .filter(col("a") =!= col("b"))
-          .distinct(),
-        checkpointDir)
+          .distinct())
       // both sides are distinct sets, so set equality == "no (a,b) group of
       // the union has count 1": exact, and ONE aggregation instead of the
       // two full exceptAll shuffles the naive two-sided check costs
@@ -307,7 +294,8 @@ object DedupClusters {
     * appear in no pair survive untouched; in each connected component only
     * the smallest doc_id survives. `docs` must carry `doc_id`.
     *
-    * Pass `checkpointDir` on a real cluster: iteration state then persists
+    * On a real cluster run under a checkpoint dir
+    * ([[graft.Sessions.withCheckpointDir]]): iteration state then persists
     * to reliable storage and survives executor loss (executor-local
     * checkpoints, the default, are irrecoverable mid-iteration). Pass
     * `salts` > 1 when the pair graph has a mega-component (see
@@ -317,9 +305,8 @@ object DedupClusters {
       docs: DataFrame,
       pairs: DataFrame,
       maxIter: Int = 20,
-      checkpointDir: Option[String] = None,
       salts: Int = 1): DataFrame =
-    dedupByComponents(docs, connectedComponents(pairs, maxIter, checkpointDir, salts))
+    dedupByComponents(docs, connectedComponents(pairs, maxIter, salts))
 
   /** [[dedupByPairs]] from a PRECOMPUTED `(id, component)` labeling — the
     * entry point for callers that apply several survivor rules to one
@@ -346,10 +333,9 @@ object DedupClusters {
       pairs: DataFrame,
       score: Column,
       maxIter: Int = 20,
-      checkpointDir: Option[String] = None,
       salts: Int = 1): DataFrame =
     dedupByComponentsKeepBest(
-      docs, connectedComponents(pairs, maxIter, checkpointDir, salts), score)
+      docs, connectedComponents(pairs, maxIter, salts), score)
 
   /** [[dedupByPairsKeepBest]] from a precomputed labeling — see
     * [[dedupByComponents]] for why the split exists.

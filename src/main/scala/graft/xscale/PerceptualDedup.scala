@@ -883,15 +883,14 @@ object PerceptualDedup {
   def mediaNearDupPairs(
       media: DataFrame,
       wide: Boolean = false,
-      maxHamming: Int = -1,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxHamming: Int = -1): DataFrame = {
     val nBands = widthBands(wide)
     val mh = if (maxHamming < 0) widthThreshold(wide) else maxHamming
     require(mh < nBands,
       s"maxHamming=$mh with $nBands bands breaks the pigeonhole guarantee " +
         "(a qualifying pair can differ in every band and never become a candidate)")
     bandNearDupPairs(
-      DedupClusters.ckpt(mediaHashFrame(media, wide).filter(col("decoded")), checkpointDir),
+      DedupClusters.ckpt(mediaHashFrame(media, wide).filter(col("decoded"))),
       mh)
   }
 
@@ -924,21 +923,20 @@ object PerceptualDedup {
     * must keep the pigeonhole sound (require below). The hashed frame is
     * cut once ([[DedupClusters.ckpt]]) before the pair join references it
     * five ways — without the cut every reference re-decodes the full
-    * corpus' payloads; pass `checkpointDir` on a real cluster so the cut
-    * is storage-backed (the x30/x50 rule).
+    * corpus' payloads; run under a checkpoint dir on a real cluster so the
+    * cut is storage-backed (the x30/x50 rule).
     */
   def imageNearDupPairs(
       media: DataFrame,
       wide: Boolean = false,
-      maxHamming: Int = -1,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxHamming: Int = -1): DataFrame = {
     val nBands = widthBands(wide)
     val mh = if (maxHamming < 0) widthThreshold(wide) else maxHamming
     require(mh < nBands,
       s"maxHamming=$mh with $nBands bands breaks the pigeonhole guarantee " +
         "(a qualifying pair can differ in every band and never become a candidate)")
     bandNearDupPairs(
-      DedupClusters.ckpt(imageHashFrame(media, wide).filter(col("decoded")), checkpointDir),
+      DedupClusters.ckpt(imageHashFrame(media, wide).filter(col("decoded"))),
       mh)
   }
 
@@ -950,15 +948,14 @@ object PerceptualDedup {
   def audioNearDupPairs(
       media: DataFrame,
       wide: Boolean = false,
-      maxHamming: Int = -1,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxHamming: Int = -1): DataFrame = {
     val nBands = widthBands(wide)
     val mh = if (maxHamming < 0) widthThreshold(wide) else maxHamming
     require(mh < nBands,
       s"maxHamming=$mh with $nBands bands breaks the pigeonhole guarantee " +
         "(a qualifying pair can differ in every band and never become a candidate)")
     bandNearDupPairs(
-      DedupClusters.ckpt(audioHashFrame(media, wide).filter(col("decoded")), checkpointDir),
+      DedupClusters.ckpt(audioHashFrame(media, wide).filter(col("decoded"))),
       mh)
   }
 
@@ -1162,11 +1159,10 @@ object PerceptualDedup {
       tile: Int = TileSize,
       scales: Seq[Int] = RescaleSet,
       num: Int = 4,
-      den: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      den: Int = 5): DataFrame = {
     require(num > 0 && den >= num, s"containment threshold $num/$den must be in (0, 1]")
     val sh = DedupClusters.ckpt(
-      imageMultiScaleTileShingles(media, tile, scales), checkpointDir)
+      imageMultiScaleTileShingles(media, tile, scales))
     val nat = sh.filter(col("scale") === 1).drop("scale")
     val scl = sh.filter(col("scale") =!= 1)
     val keys = Seq("s1", "q1", "s2", "q2")
@@ -1198,12 +1194,11 @@ object PerceptualDedup {
       num: Int = 4,
       den: Int = 5,
       k: Int = 16,
-      bands: Int = 8,
-      checkpointDir: Option[String] = None): DataFrame = {
+      bands: Int = 8): DataFrame = {
     require(num > 0 && den >= num, s"containment threshold $num/$den must be in (0, 1]")
     require(k % bands == 0, s"k=$k minhashes must divide into $bands bands")
     val sh = DedupClusters.ckpt(
-      imageMultiScaleTileShingles(media, tile, scales), checkpointDir)
+      imageMultiScaleTileShingles(media, tile, scales))
     val nat = sh.filter(col("scale") === 1).drop("scale")
     val scl = sh.filter(col("scale") =!= 1)
     val nb = Lsh.containmentBands(nat, Seq(col("doc_id")), k, bands)
@@ -1278,9 +1273,8 @@ object PerceptualDedup {
   def audioContainmentPairs(
       media: DataFrame,
       num: Int = 4,
-      den: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame =
-    containmentPairsFromShingles(audioUtteranceShingles(media), num, den, checkpointDir)
+      den: Int = 5): DataFrame =
+    containmentPairsFromShingles(audioUtteranceShingles(media), num, den)
 
   /** The audio-containment SCALE path — the shared LSH engine on
     * [[audioUtteranceShingles]]; same cross-engine md5 minhashes and
@@ -1292,10 +1286,9 @@ object PerceptualDedup {
       num: Int = 4,
       den: Int = 5,
       k: Int = 16,
-      bands: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame =
+      bands: Int = 4): DataFrame =
     containmentPairsLshFromShingles(
-      audioUtteranceShingles(media), num, den, k, bands, checkpointDir)
+      audioUtteranceShingles(media), num, den, k, bands)
 
   /** Per-video SPATIAL-crop containment shingles — the fourth shingle
     * space (`vsp`), closing the one evasion the r14 triad left open: a
@@ -1403,9 +1396,8 @@ object PerceptualDedup {
       media: DataFrame,
       tile: Int = TileSize,
       num: Int = 4,
-      den: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame =
-    containmentPairsFromShingles(videoFrameTileShingles(media, tile), num, den, checkpointDir)
+      den: Int = 5): DataFrame =
+    containmentPairsFromShingles(videoFrameTileShingles(media, tile), num, den)
 
   /** The video spatial-crop SCALE path — the shared LSH engine on
     * [[videoFrameTileShingles]]; same cross-engine md5 minhashes and
@@ -1418,10 +1410,9 @@ object PerceptualDedup {
       num: Int = 4,
       den: Int = 5,
       k: Int = 16,
-      bands: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame =
+      bands: Int = 4): DataFrame =
     containmentPairsLshFromShingles(
-      videoFrameTileShingles(media, tile), num, den, k, bands, checkpointDir)
+      videoFrameTileShingles(media, tile), num, den, k, bands)
 
   /** Modality-detected CONTAINMENT shingles over mixed media — the
     * shingle-space twin of [[mediaHashFrame]], the scan the `--ptrim`
@@ -1524,9 +1515,8 @@ object PerceptualDedup {
       media: DataFrame,
       tile: Int = TileSize,
       num: Int = 4,
-      den: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame =
-    containmentPairsFromShingles(imageTileShingles(media, tile), num, den, checkpointDir)
+      den: Int = 5): DataFrame =
+    containmentPairsFromShingles(imageTileShingles(media, tile), num, den)
 
   /** The image-crop SCALE path — [[videoContainmentPairsLsh]]'s engine on
     * [[imageTileShingles]]: MinHash-LSH candidates over the tile-shingle
@@ -1542,10 +1532,9 @@ object PerceptualDedup {
       num: Int = 4,
       den: Int = 5,
       k: Int = 16,
-      bands: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame =
+      bands: Int = 4): DataFrame =
     containmentPairsLshFromShingles(
-      imageTileShingles(media, tile), num, den, k, bands, checkpointDir)
+      imageTileShingles(media, tile), num, den, k, bands)
 
   /** Corpus-wide containment-dedup LOSERS at production posture — the
     * `Cli corpus --pcontain` stage's core, the build-side twin of the
@@ -1573,8 +1562,7 @@ object PerceptualDedup {
       num: Int = 4,
       den: Int = 5,
       k: Int = 16,
-      bands: Int = 8,
-      checkpointDir: Option[String] = None): DataFrame = {
+      bands: Int = 8): DataFrame = {
     // NO extra full-frame cut here: callers pass an already-materialized
     // frame (`Cli corpus` cuts it; [[mediaContainmentLosers]] wraps one),
     // and the per-modality engine calls cut their own slices — a second
@@ -1597,12 +1585,11 @@ object PerceptualDedup {
     val pairs = activeSpaces.map { m =>
       DedupClusters.ckpt(
         containmentPairsLshFromShingles(
-          sh.filter(col("mod") === m).drop("mod"), num, den, k, bands, checkpointDir)
+          sh.filter(col("mod") === m).drop("mod"), num, den, k, bands)
           .select(least(col("doc_id_a"), col("doc_id_b")).as("a"),
-            greatest(col("doc_id_a"), col("doc_id_b")).as("b")),
-        checkpointDir)
+            greatest(col("doc_id_a"), col("doc_id_b")).as("b")))
     }.reduce(_ unionByName _).distinct()
-    val comp = DedupClusters.connectedComponents(pairs, checkpointDir = checkpointDir)
+    val comp = DedupClusters.connectedComponents(pairs)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("component").orderBy(col("n_sh").desc, col("doc_id"))
     comp.join(sz, comp("id") === sz("doc_id"))
@@ -1621,11 +1608,10 @@ object PerceptualDedup {
       num: Int = 4,
       den: Int = 5,
       k: Int = 16,
-      bands: Int = 8,
-      checkpointDir: Option[String] = None): DataFrame =
+      bands: Int = 8): DataFrame =
     containmentLosersFromShingles(
-      DedupClusters.ckpt(mediaShingles(media), checkpointDir),
-      num, den, k, bands, checkpointDir)
+      DedupClusters.ckpt(mediaShingles(media)),
+      num, den, k, bands)
 
   /** DIRECTIONAL video containment — x25's rule on [[videoFrameShingles]]:
     * pairs (doc_id_a, doc_id_b, n_inter, n_a) where den·|A∩B| ≥
@@ -1644,9 +1630,8 @@ object PerceptualDedup {
   def videoContainmentPairs(
       media: DataFrame,
       num: Int = 4,
-      den: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame =
-    containmentPairsFromShingles(videoFrameShingles(media), num, den, checkpointDir)
+      den: Int = 5): DataFrame =
+    containmentPairsFromShingles(videoFrameShingles(media), num, den)
 
   /** x25's directional rule over ANY (doc_id, s1, q1, s2, q2) shingle
     * frame — the shared exact engine under video TRIM containment
@@ -1660,15 +1645,14 @@ object PerceptualDedup {
   private[xscale] def containmentPairsFromShingles(
       shingles: DataFrame,
       num: Int,
-      den: Int,
-      checkpointDir: Option[String]): DataFrame = {
+      den: Int): DataFrame = {
     require(num > 0 && den >= num, s"containment threshold $num/$den must be in (0, 1]")
     // the pair engines take a SINGLE-modality (doc_id, s1, q1, s2, q2)
     // frame; a mod-tagged mixed frame must be split by mod first — the
     // LSH twin would otherwise silently hash across modalities
     require(!shingles.columns.contains("mod"),
       "containment engine takes a single-modality shingle frame — split by mod first")
-    val sh = DedupClusters.ckpt(shingles, checkpointDir)
+    val sh = DedupClusters.ckpt(shingles)
     val sz = sh.groupBy("doc_id").agg(count(lit(1)).as("n_a"))
     val keys = Seq("s1", "q1", "s2", "q2")
     val inter = sh.toDF("da", "s1", "q1", "s2", "q2")
@@ -1824,9 +1808,8 @@ object PerceptualDedup {
   def admitTrimStrictLosers(
       admShingles: DataFrame,
       num: Int = 4,
-      den: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame =
-    admitTrimStrictLosersOf(admitTrimStrictEdges(admShingles, num, den), checkpointDir)
+      den: Int = 5): DataFrame =
+    admitTrimStrictLosersOf(admitTrimStrictEdges(admShingles, num, den))
 
   /** The containment strict pass's edges: `links` (a, b, mod), a < b —
     * the pairs qualifying in a shingle space, the rescale spaces'
@@ -1898,20 +1881,17 @@ object PerceptualDedup {
   /** The rule half of [[admitTrimStrictLosers]]: the losers (doc_id, mod)
     * of `edges`, labelled by the space(s) that linked them.
     */
-  def admitTrimStrictLosersOf(
-      edges: TrimStrictEdges,
-      checkpointDir: Option[String] = None): DataFrame =
+  def admitTrimStrictLosersOf(edges: TrimStrictEdges): DataFrame =
     admitTrimStrictLosersBy(edges,
-      DedupClusters.connectedComponents(_, checkpointDir = checkpointDir), checkpointDir)
+      DedupClusters.connectedComponents(_))
 
   /** [[admitTrimStrictLosersOf]] with the components of the links taken by
     * `components`.
     */
   private[graft] def admitTrimStrictLosersBy(
       edges: TrimStrictEdges,
-      components: DataFrame => DataFrame,
-      checkpointDir: Option[String]): DataFrame = {
-    val qualC = DedupClusters.ckpt(edges.links, checkpointDir)
+      components: DataFrame => DataFrame): DataFrame = {
+    val qualC = DedupClusters.ckpt(edges.links)
     // ONE undirected CC over pairs qualifying in ANY space (spaces only
     // ever link docs of one modality); keep the doc with the most
     // fingerprints across ALL its spaces — the larger canvas / longer
@@ -1972,8 +1952,7 @@ object PerceptualDedup {
       images: DataFrame,
       videos: DataFrame,
       every: Int = 16,
-      maxHamming: Int = MaxHamming,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxHamming: Int = MaxHamming): DataFrame = {
     require(maxHamming < Bands,
       s"maxHamming=$maxHamming with $Bands bands breaks the pigeonhole guarantee " +
         "(a qualifying pair can differ in every band and never become a candidate)")
@@ -1987,12 +1966,10 @@ object PerceptualDedup {
           it.grouped(Multimodal.decodeBatchSize)
             .flatMap(_.flatMap { case (vid, f, p) => dhashBands(p).map(b => (vid, f, b)) })
         }
-        .toDF("vid_id", "frame_idx", "fbands"),
-      checkpointDir)
+        .toDF("vid_id", "frame_idx", "fbands"))
     val ih = DedupClusters.ckpt(
       imageHashFrame(images).filter(col("decoded"))
-        .select(col("doc_id"), col("bands").as("ibands")),
-      checkpointDir)
+        .select(col("doc_id"), col("bands").as("ibands")))
     val cand = Lsh.crossPairs(
       Lsh.bandRows(ih, col("ibands"), col("doc_id")),
       Lsh.bandRows(fh, col("fbands"), col("vid_id"), col("frame_idx")),
@@ -2035,12 +2012,11 @@ object PerceptualDedup {
       videos: DataFrame,
       tile: Int = TileSize,
       num: Int = 4,
-      den: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
+      den: Int = 5): DataFrame = {
     require(num > 0 && den >= num, s"containment threshold $num/$den must be in (0, 1]")
-    val imgSh = DedupClusters.ckpt(imageTileShingles(images, tile), checkpointDir)
+    val imgSh = DedupClusters.ckpt(imageTileShingles(images, tile))
     val frameSh =
-      DedupClusters.ckpt(videoFrameTileShinglesByFrame(videos, tile), checkpointDir)
+      DedupClusters.ckpt(videoFrameTileShinglesByFrame(videos, tile))
     val sz = imgSh.groupBy("doc_id").agg(count(lit(1)).as("n_a")).hint("merge")
     val keys = Seq("s1", "q1", "s2", "q2")
     imgSh.join(frameSh.withColumnRenamed("doc_id", "vid_id"), keys)
@@ -2074,13 +2050,12 @@ object PerceptualDedup {
       num: Int = 4,
       den: Int = 5,
       k: Int = 16,
-      bands: Int = 8,
-      checkpointDir: Option[String] = None): DataFrame = {
+      bands: Int = 8): DataFrame = {
     require(num > 0 && den >= num, s"containment threshold $num/$den must be in (0, 1]")
     require(k % bands == 0, s"k=$k minhashes must divide into $bands bands")
-    val imgSh = DedupClusters.ckpt(imageTileShingles(images, tile), checkpointDir)
+    val imgSh = DedupClusters.ckpt(imageTileShingles(images, tile))
     val frameSh =
-      DedupClusters.ckpt(videoFrameTileShinglesByFrame(videos, tile), checkpointDir)
+      DedupClusters.ckpt(videoFrameTileShinglesByFrame(videos, tile))
     val ib = Lsh.containmentBands(imgSh, Seq(col("doc_id")), k, bands)
     val fb = Lsh.containmentBands(
       frameSh, Seq(col("doc_id").as("vid_id"), col("frame_idx")), k, bands)
@@ -2130,10 +2105,9 @@ object PerceptualDedup {
       num: Int = 4,
       den: Int = 5,
       k: Int = 16,
-      bands: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame =
+      bands: Int = 4): DataFrame =
     containmentPairsLshFromShingles(
-      videoFrameShingles(media), num, den, k, bands, checkpointDir)
+      videoFrameShingles(media), num, den, k, bands)
 
   /** The LSH containment engine shared by the video and image forms —
     * [[containmentPairsFromShingles]]'s scale twin: [[Lsh.containmentBands]],
@@ -2145,21 +2119,20 @@ object PerceptualDedup {
       num: Int,
       den: Int,
       k: Int,
-      bands: Int,
-      checkpointDir: Option[String]): DataFrame = {
+      bands: Int): DataFrame = {
     require(num > 0 && den >= num, s"containment threshold $num/$den must be in (0, 1]")
     require(k % bands == 0, s"k=$k minhashes must divide into $bands bands")
     // single-modality contract (see containmentPairsFromShingles): the
     // minhash would silently IGNORE a mod column and pair across spaces
     require(!shingles.columns.contains("mod"),
       "containment engine takes a single-modality shingle frame — split by mod first")
-    val sh = DedupClusters.ckpt(shingles, checkpointDir)
+    val sh = DedupClusters.ckpt(shingles)
     // ALL band keys in one projection + posexplode — a per-band union of
     // selects over the minhashes would re-run their aggregation once per
     // band (4x the shuffles for the same rows); the cut stops the band
     // SELF-join below from running it twice more
     val banded = DedupClusters.ckpt(
-      Lsh.containmentBands(sh, Seq(col("doc_id")), k, bands), checkpointDir)
+      Lsh.containmentBands(sh, Seq(col("doc_id")), k, bands))
     val (a, b) = Lsh.sides(banded, "doc_id")
     val cand = Lsh.selfPairs(a, b, col("a"), col("b"))
     // exact verify on candidates only: intersection via the fingerprint
@@ -2191,15 +2164,14 @@ object PerceptualDedup {
   def videoNearDupPairs(
       media: DataFrame,
       wide: Boolean = false,
-      maxHamming: Int = -1,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxHamming: Int = -1): DataFrame = {
     val nBands = widthBands(wide)
     val mh = if (maxHamming < 0) widthThreshold(wide) else maxHamming
     require(mh < nBands,
       s"maxHamming=$mh with $nBands bands breaks the pigeonhole guarantee " +
         "(a qualifying pair can differ in every band and never become a candidate)")
     bandNearDupPairs(
-      DedupClusters.ckpt(videoHashFrame(media, wide).filter(col("decoded")), checkpointDir),
+      DedupClusters.ckpt(videoHashFrame(media, wide).filter(col("decoded"))),
       mh)
   }
 
@@ -2301,10 +2273,9 @@ object PerceptualDedup {
   def admitMediaStrictLosers(
       admBands: DataFrame,
       maxHamming: Int = MaxHamming,
-      checkpointDir: Option[String] = None,
       nBands: Int = Bands): DataFrame =
     admitMediaStrictLosersOf(
-      admitMediaStrictEdges(admBands, maxHamming, nBands), admBands, checkpointDir)
+      admitMediaStrictEdges(admBands, maxHamming, nBands), admBands)
 
   /** The edge half of [[admitMediaStrictLosers]]: the [[bandNearDupPairs]]
     * `(a, b)` of `bands` (doc_id, [mod,] bands), behind the pigeonhole
@@ -2327,9 +2298,8 @@ object PerceptualDedup {
     */
   def admitMediaStrictLosersOf(
       edges: DataFrame,
-      bands: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame =
-    admitMediaStrictLosersBy(edges, bands, DedupClusters.connectedComponents(_, checkpointDir = checkpointDir))
+      bands: DataFrame): DataFrame =
+    admitMediaStrictLosersBy(edges, bands, DedupClusters.connectedComponents(_))
 
   /** [[admitMediaStrictLosersOf]] with the components of `edges` taken by
     * `components`.
@@ -2365,7 +2335,7 @@ object PerceptualDedup {
       maxHamming: Int = MaxHamming): DataFrame = {
     // one hash/decode pass total: the frame feeds the candidate join (×3),
     // the verify join and the status join below
-    val hf = DedupClusters.ckpt(hashed, None)
+    val hf = DedupClusters.ckpt(hashed)
     val comp = DedupClusters.connectedComponents(bandNearDupPairs(hf, maxHamming))
     hf.join(comp, hf("doc_id") === comp("id"), "left")
       .select(
@@ -2728,13 +2698,12 @@ object PerceptualDedup {
         DedupClusters.ckpt(
           hashedShiftFixture(s, corpusSrc, mk, hash,
             sidecarName.map { case (n, d) => (s"${n}_corpus", d) })
-            .select(col("doc_id").as("cv_id"), col("bands")), None),
+            .select(col("doc_id").as("cv_id"), col("bands"))),
         DedupClusters.ckpt(
           hashedShiftFixture(s, batchSrc, mk, hash,
-            sidecarName.map { case (n, d) => (s"${n}_batch", d) }), None)),
-      None)
+            sidecarName.map { case (n, d) => (s"${n}_batch", d) }))))
     val losers = admitMediaStrictLosers(
-      DedupClusters.ckpt(frame.filter(!col("near_med")).select("doc_id", "bands"), None))
+      DedupClusters.ckpt(frame.filter(!col("near_med")).select("doc_id", "bands")))
       .withColumn("lb", lit(true))
     frame.join(losers, Seq("doc_id"), "left")
       .select(
@@ -3995,9 +3964,9 @@ object PerceptualDedup {
           shingle(sidecar(s, s"${key}_corpus", dir)(synth(corpusSrc))))
       else
         DedupClusters.ckpt(
-          shingle(sidecar(s, s"${key}_corpus", dir)(synth(corpusSrc))), None)
+          shingle(sidecar(s, s"${key}_corpus", dir)(synth(corpusSrc))))
     val batchSh = DedupClusters.ckpt(
-      shingle(sidecar(s, s"${key}_batch", dir)(synth(batchSrc))), None)
+      shingle(sidecar(s, s"${key}_batch", dir)(synth(batchSrc))))
     // doc-level fold, NOT a raw filter on the per-space frame (the
     // admitTrimDocVerdicts trap note) — these fixtures are single-space
     // today, but the pattern must survive a multi-space leg. Only the
@@ -4005,7 +3974,7 @@ object PerceptualDedup {
     // exactly one consumer chain, and both downstream reads (the admitted
     // set and the final report) are doc-level.
     val frame = DedupClusters.ckpt(
-      admitTrimDocVerdicts(admitTrimCompare(corpusSh, batchSh)), None)
+      admitTrimDocVerdicts(admitTrimCompare(corpusSh, batchSh)))
     // `adm` and `losers` are doc-level and batch-bounded (≤ the admission
     // batch's doc count — the BroadcastBatchShingleRows contract), but
     // they derive from checkpointed frames whose LogicalRDD statistics
@@ -4128,10 +4097,10 @@ object PerceptualDedup {
         .filter(col("mod").startsWith("rs"))
     val corpusSh =
       if (steady) sidecar(s, "x74rcrop_state", dir)(corpusState)
-      else DedupClusters.ckpt(corpusState, None)
+      else DedupClusters.ckpt(corpusState)
     val batchSh = DedupClusters.ckpt(
       mediaShingles(sidecar(s, "x74rcrop_batch", dir)(synth(batchSrc)),
-        rscales = RescaleSet), None)
+        rscales = RescaleSet))
     // the Cli compare-feed assembly: batch NATIVE img fingerprints
     // re-tagged into each rescale space (the RescaleSpace asymmetry).
     // ONE branch with a per-row explode over the space tags, not a union
@@ -4149,7 +4118,7 @@ object PerceptualDedup {
     // (this fold), so checkpointing both would pay a full extra
     // materialization cycle for nothing.
     val docs = DedupClusters.ckpt(
-      admitTrimDocVerdicts(admitTrimCompare(corpusSh, batchCompare)), None)
+      admitTrimDocVerdicts(admitTrimCompare(corpusSh, batchCompare)))
     // doc-level batch-bounded frames behind checkpoints: broadcast (the
     // admitContainLegQuery rationale)
     val adm = broadcast(docs.filter(!col("near_trim")).select("doc_id"))
@@ -4255,7 +4224,7 @@ object PerceptualDedup {
       val src = crossmodalSrc(table(s, dir, "documents"))
       val pairs = bandNearDupPairs(
         DedupClusters.ckpt(hashedFixture(s, src, fixtureBmp, p => dhashBands(p),
-          Some(("x141img", dir))), None))
+          Some(("x141img", dir)))))
       val idup = pairs.select(col("a").as("doc_id"))
         .union(pairs.select(col("b").as("doc_id")))
         .distinct()
@@ -4306,7 +4275,7 @@ object PerceptualDedup {
       val src = crossmodalSrc(table(s, dir, "documents"))
       val pairs = bandNearDupPairs(
         DedupClusters.ckpt(hashedFixture(s, src, fixtureWav, audioDhashBands,
-          Some(("x141aud", dir))), None))
+          Some(("x141aud", dir)))))
       val adup = pairs.select(col("a").as("doc_id"))
         .union(pairs.select(col("b").as("doc_id")))
         .distinct()
@@ -4357,7 +4326,7 @@ object PerceptualDedup {
       val src = crossmodalSrc(table(s, dir, "documents"))
       val pairs = bandNearDupPairs(
         DedupClusters.ckpt(hashedFixture(s, src, fixtureAvi, videoDhashBands,
-          Some(("x141vid", dir))), None))
+          Some(("x141vid", dir)))))
       val vdup = pairs.select(col("a").as("doc_id"))
         .union(pairs.select(col("b").as("doc_id")))
         .distinct()
@@ -4429,7 +4398,7 @@ object PerceptualDedup {
               s"fixture payload for doc $id failed to decode"))
           (id, if (big) 288L else 72L, b)
       }).toDF("doc_id", "px", "bands")
-      val hf = DedupClusters.ckpt(hashed, None)
+      val hf = DedupClusters.ckpt(hashed)
       val comp = DedupClusters.connectedComponents(
         bandNearDupPairs(hf.select("doc_id", "bands")))
       val clustered = hf.join(comp, hf("doc_id") === comp("id"), "left")

@@ -182,8 +182,7 @@ object Similarity {
   def trainQuantizer(
       vi: DataFrame,
       nc: Int = NC,
-      sampleFraction: Double = 1.0,
-      checkpointDir: Option[String] = None): Seq[(Long, Seq[Long])] = {
+      sampleFraction: Double = 1.0): Seq[(Long, Seq[Long])] = {
     val sp = vi.sparkSession
     import sp.implicits._
     // A coarse quantizer does not need the whole corpus: at 100 TB the
@@ -199,8 +198,7 @@ object Similarity {
         val keep = math.max(1L, (sampleFraction * 1000).toLong)
         DedupClusters.ckpt(
           vi.filter(XHash.h60(col("vec_id").cast("string")) % 1000 < keep)
-            .select("vec_id", "vi"),
-          checkpointDir)
+            .select("vec_id", "vi"))
       }
     def collectCents(df: DataFrame): Seq[(Long, Seq[Long])] =
       df.collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq.sortBy(_._1)
@@ -294,8 +292,7 @@ object Similarity {
       emb: DataFrame,
       tau: Double = SEMDEDUP_TAU,
       nc: Int = 0,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val vi = fixedPoint(emb)
     // nc <= 0 means auto: corpus-proportional cluster count so the mean
     // cluster stays ~TargetClusterSize and the self-join stays linear in
@@ -305,17 +302,16 @@ object Similarity {
     val ncEff =
       if (nc > 0) nc
       else math.max(NC.toLong, emb.count() / TargetClusterSize).toInt
-    val ranked = quantizerRanked(vi, trainQuantizer(vi, ncEff, trainSample, checkpointDir))
+    val ranked = quantizerRanked(vi, trainQuantizer(vi, ncEff, trainSample))
     // materialize the assignment once: it feeds BOTH self-join sides plus
     // the final projection, and Spark re-executes repeated un-cached
     // subtrees — without this the corpus is scanned and re-ranked 3x
     // (plan-audit-visible). The cut also truncates the lineage, same
-    // pattern as DedupClusters' iteration state; reliable when a dir is
-    // given.
+    // pattern as DedupClusters' iteration state; reliable under a session
+    // checkpoint dir.
     val asg = DedupClusters.ckpt(
       ranked.filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid"), col("dist"), col("v"), col("nrm")),
-      checkpointDir)
+        .select(col("vec_id"), col("cid"), col("dist"), col("v"), col("nrm")))
     val a = asg.select(
       col("cid"), col("vec_id").as("va"), col("dist").as("da"),
       col("v").as("av"), col("nrm").as("an"))
@@ -368,8 +364,7 @@ object Similarity {
       vi: DataFrame,
       m: Int = PqM,
       nc: Int = NC,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): Seq[(Int, Seq[(Long, Seq[Long])])] = {
+      trainSample: Double = 1.0): Seq[(Int, Seq[(Long, Seq[Long])])] = {
     require(m > 0 && 64 % m == 0, "m must divide the 64-dim embedding")
     val sub = 64 / m
     val sp = vi.sparkSession
@@ -391,8 +386,7 @@ object Similarity {
         val keep = math.max(1L, (trainSample * 1000).toLong)
         DedupClusters.ckpt(
           vi.filter(XHash.h60(col("vec_id").cast("string")) % 1000 < keep)
-            .select("vec_id", "vi"),
-          checkpointDir)
+            .select("vec_id", "vi"))
       }
     val trainSl = sliced(train)
     def collectCents(df: DataFrame): Seq[(Int, Seq[(Long, Seq[Long])])] = {
@@ -437,14 +431,13 @@ object Similarity {
       emb: DataFrame,
       m: Int = PqM,
       nc: Int = NC,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val sub = 64 / m
     // one materialization feeds m trainings + m assignments (the repeated-
-    // subtree rule — see semDedup's asg); reliable checkpoint when a dir
-    // is given, so a 100 TB code build survives executor loss
-    val vi = DedupClusters.ckpt(fixedPoint(emb).select("vec_id", "vi"), checkpointDir)
-    pqTrain(vi, m, nc, trainSample, checkpointDir).map { case (s, cents) =>
+    // subtree rule — see semDedup's asg); reliable under a session
+    // checkpoint dir, so a 100 TB code build survives executor loss
+    val vi = DedupClusters.ckpt(fixedPoint(emb).select("vec_id", "vi"))
+    pqTrain(vi, m, nc, trainSample).map { case (s, cents) =>
       quantizerRanked(pqSlice(vi, s, sub), cents)
         .filter(col("rn") === 1)
         .select(
@@ -465,10 +458,9 @@ object Similarity {
   def imiAssign(
       emb: DataFrame,
       nc: Int = NC,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val vi = DedupClusters.ckpt(fixedPoint(emb).select("vec_id", "vi"), checkpointDir)
-    imiCellOf(vi, pqTrain(vi, 2, nc, trainSample, checkpointDir), nc)
+      trainSample: Double = 1.0): DataFrame = {
+    val vi = DedupClusters.ckpt(fixedPoint(emb).select("vec_id", "vi"))
+    imiCellOf(vi, pqTrain(vi, 2, nc, trainSample), nc)
   }
 
   /** Assign `vi` (vec_id, vi) to IMI product cells under GIVEN half
@@ -515,9 +507,8 @@ object Similarity {
   def imiCells(
       emb: DataFrame,
       nc: Int = NC,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame =
-    imiAssign(emb, nc, trainSample, checkpointDir)
+      trainSample: Double = 1.0): DataFrame =
+    imiAssign(emb, nc, trainSample)
       .groupBy("cell").agg(count(lit(1)).as("occ"))
       .agg(
         sum("occ").as("n_vecs"),
@@ -554,13 +545,12 @@ object Similarity {
       k: Int = 3,
       m: Int = PqM,
       nc: Int = NC,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val sp = emb.sparkSession
     import sp.implicits._
     val sub = 64 / m
-    val vi = DedupClusters.ckpt(fixedPoint(emb).select("vec_id", "vi"), checkpointDir)
-    val trained = pqTrain(vi, m, nc, trainSample, checkpointDir)
+    val vi = DedupClusters.ckpt(fixedPoint(emb).select("vec_id", "vi"))
+    val trained = pqTrain(vi, m, nc, trainSample)
     val codes = trained.map { case (s, cents) =>
       quantizerRanked(pqSlice(vi, s, sub), cents)
         .filter(col("rn") === 1)
@@ -635,10 +625,9 @@ object Similarity {
       shortlist: Int = 50,
       m: Int = PqM,
       nc: Int = NC,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val vi = fixedPoint(emb).select("vec_id", "vi")
-    val cand = pqAdcKnn(emb, isQuery, shortlist, m, nc, trainSample, checkpointDir)
+    val cand = pqAdcKnn(emb, isQuery, shortlist, m, nc, trainSample)
       .select("query_id", "neighbor_id")
     val w = Window.partitionBy("query_id").orderBy(col("sqdist"), col("neighbor_id"))
     cand
@@ -680,22 +669,20 @@ object Similarity {
       m: Int = PqM,
       ncCoarse: Int = NC,
       ncPq: Int = NC,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val sp = emb.sparkSession
     import sp.implicits._
     val sub = 64 / m
-    val vi = DedupClusters.ckpt(fixedPoint(emb).select("vec_id", "vi"), checkpointDir)
-    val coarse = trainQuantizer(vi, ncCoarse, trainSample, checkpointDir)
+    val vi = DedupClusters.ckpt(fixedPoint(emb).select("vec_id", "vi"))
+    val coarse = trainQuantizer(vi, ncCoarse, trainSample)
     val cr = quantizerRanked(vi, coarse)
     // corpus residuals against the assigned cell's centroid (ci rides on
     // the rn = 1 row from quantizerRanked's broadcast join)
     val res = DedupClusters.ckpt(
       cr.filter(col("rn") === 1)
         .select(col("vec_id"), col("cid"),
-          expr("zip_with(vi, ci, (x, c) -> x - c)").as("vi")),
-      checkpointDir)
-    val trainedR = pqTrain(res.select("vec_id", "vi"), m, ncPq, trainSample, checkpointDir)
+          expr("zip_with(vi, ci, (x, c) -> x - c)").as("vi")))
+    val trainedR = pqTrain(res.select("vec_id", "vi"), m, ncPq, trainSample)
     val codes = trainedR.map { case (s2, cents) =>
       quantizerRanked(pqSlice(res, s2, sub), cents)
         .filter(col("rn") === 1)
@@ -782,18 +769,17 @@ object Similarity {
       m: Int = PqM,
       ncCoarse: Int = NC,
       ncPq: Int = NC,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val sub = 64 / m
-    val vi = DedupClusters.ckpt(fixedPoint(emb).select("vec_id", "vi"), checkpointDir)
-    val coarse = trainQuantizer(vi, ncCoarse, trainSample, checkpointDir)
+    val vi = DedupClusters.ckpt(fixedPoint(emb).select("vec_id", "vi"))
+    val coarse = trainQuantizer(vi, ncCoarse, trainSample)
     def residuals(frame: DataFrame): DataFrame =
       quantizerRanked(frame, coarse)
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("cid"),
           expr("zip_with(vi, ci, (x, c) -> x - c)").as("vi"))
-    val res = DedupClusters.ckpt(residuals(vi), checkpointDir)
-    val trained = pqTrain(res.select("vec_id", "vi"), m, ncPq, trainSample, checkpointDir)
+    val res = DedupClusters.ckpt(residuals(vi))
+    val trained = pqTrain(res.select("vec_id", "vi"), m, ncPq, trainSample)
     val bres = residuals(batch)
     def cellStats(frame: DataFrame, nCol: String, eCol: String): DataFrame =
       frame.join(pqQerr(frame, trained, sub), "vec_id")
@@ -832,9 +818,8 @@ object Similarity {
       batchEmb: DataFrame,
       tau: Double = SEMDEDUP_TAU,
       nc: Int = 0,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame =
-    admitEmbeddingFrame(corpusEmb, batchEmb, tau, nc, trainSample, checkpointDir)
+      trainSample: Double = 1.0): DataFrame =
+    admitEmbeddingFrame(corpusEmb, batchEmb, tau, nc, trainSample)
       .select("vec_id", "near_emb")
 
   /** [[admitEmbedding]] keeping the full state-shaped frame — columns
@@ -854,37 +839,33 @@ object Similarity {
       batchEmb: DataFrame,
       tau: Double = SEMDEDUP_TAU,
       nc: Int = 0,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val n = if (nc > 0) 0L else corpusEmb.count()
     if (nc == 0 && n > FlatEmbBoundary) {
-      val cfp = DedupClusters.ckpt(fixedPoint(corpusEmb), checkpointDir)
+      val cfp = DedupClusters.ckpt(fixedPoint(corpusEmb))
       val ncEff = imiAutoNc(n)
-      val halves = pqTrain(cfp.select("vec_id", "vi"), 2, ncEff, trainSample, checkpointDir)
+      val halves = pqTrain(cfp.select("vec_id", "vi"), 2, ncEff, trainSample)
       val casg = DedupClusters.ckpt(
         imiCellOf(cfp.select("vec_id", "vi"), halves, ncEff)
           .join(cfp.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
           .select(col("vec_id").as("cv_id"), col("cell").as("cid"),
-            col("v").as("cv"), col("nrm").as("cn")),
-        checkpointDir)
-      val bfp = DedupClusters.ckpt(fixedPoint(batchEmb), checkpointDir)
+            col("v").as("cv"), col("nrm").as("cn")))
+      val bfp = DedupClusters.ckpt(fixedPoint(batchEmb))
       val basg = DedupClusters.ckpt(
         imiCellOf(bfp.select("vec_id", "vi"), halves, ncEff)
           .join(bfp.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
           .select(col("vec_id"), col("cell").as("cid"),
-            col("v").as("qv"), col("nrm").as("qn")),
-        checkpointDir)
+            col("v").as("qv"), col("nrm").as("qn")))
       admitEmbCompare(casg, basg, tau)
     } else {
       val cvi = fixedPoint(corpusEmb)
       val ncEff = if (nc > 0) nc else math.max(NC.toLong, n / TargetClusterSize).toInt
-      val cents = trainQuantizer(cvi, ncEff, trainSample, checkpointDir)
+      val cents = trainQuantizer(cvi, ncEff, trainSample)
       val casg = DedupClusters.ckpt(
         quantizerRanked(cvi, cents).filter(col("rn") === 1)
           .select(col("vec_id").as("cv_id"), col("cid"),
-            col("v").as("cv"), col("nrm").as("cn")),
-        checkpointDir)
-      admitEmbDecide(casg, cents, batchEmb, tau, checkpointDir)
+            col("v").as("cv"), col("nrm").as("cn")))
+      admitEmbDecide(casg, cents, batchEmb, tau)
     }
   }
 
@@ -908,9 +889,8 @@ object Similarity {
     */
   def admitEmbStrictLosers(
       admFrame: DataFrame,
-      tau: Double = SEMDEDUP_TAU,
-      checkpointDir: Option[String] = None): DataFrame =
-    DedupClusters.minIdLosers(admitEmbStrictEdges(admFrame, tau), checkpointDir)
+      tau: Double = SEMDEDUP_TAU): DataFrame =
+    DedupClusters.minIdLosers(admitEmbStrictEdges(admFrame, tau))
       .select(col("doc_id").as("vec_id"))
 
   /** The edge half of [[admitEmbStrictLosers]]: the within-cell pairs
@@ -942,12 +922,10 @@ object Similarity {
       casg: DataFrame,
       cents: Seq[(Long, Seq[Long])],
       batchEmb: DataFrame,
-      tau: Double,
-      checkpointDir: Option[String]): DataFrame = {
+      tau: Double): DataFrame = {
     val basg = DedupClusters.ckpt(
       quantizerRanked(fixedPoint(batchEmb), cents).filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid"), col("v").as("qv"), col("nrm").as("qn")),
-      checkpointDir)
+        .select(col("vec_id"), col("cid"), col("v").as("qv"), col("nrm").as("qn")))
     admitEmbCompare(casg, basg, tau)
   }
 
@@ -997,15 +975,14 @@ object Similarity {
       corpusEmb: DataFrame,
       dir: String,
       nc: Int = 0,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): Unit = {
+      trainSample: Double = 1.0): Unit = {
     val sp = corpusEmb.sparkSession
     import sp.implicits._
     val cvi = fixedPoint(corpusEmb)
     val ncEff =
       if (nc > 0) nc
       else math.max(NC.toLong, corpusEmb.count() / TargetClusterSize).toInt
-    val cents = trainQuantizer(cvi, ncEff, trainSample, checkpointDir)
+    val cents = trainQuantizer(cvi, ncEff, trainSample)
     requireSeeded(cents.nonEmpty, ncEff)
     // assign first, centroids LAST: the centroids table is the commit
     // marker callers probe for state existence, so a bootstrap that dies
@@ -1061,13 +1038,12 @@ object Similarity {
       corpusEmb: DataFrame,
       dir: String,
       nc: Int = 0,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): Unit = {
+      trainSample: Double = 1.0): Unit = {
     val sp = corpusEmb.sparkSession
     import sp.implicits._
-    val fp = DedupClusters.ckpt(fixedPoint(corpusEmb), checkpointDir)
+    val fp = DedupClusters.ckpt(fixedPoint(corpusEmb))
     val ncEff = if (nc > 0) nc else imiAutoNc(corpusEmb.count())
-    val halves = pqTrain(fp.select("vec_id", "vi"), 2, ncEff, trainSample, checkpointDir)
+    val halves = pqTrain(fp.select("vec_id", "vi"), 2, ncEff, trainSample)
     requireSeeded(halves.forall(_._2.nonEmpty), ncEff)
     // assign + meta first, halves LAST — the commit-marker order (see
     // admitEmbeddingBootstrap): existence probes key on the halves table
@@ -1094,14 +1070,13 @@ object Similarity {
   def admitEmbeddingBootstrapAuto(
       corpusEmb: DataFrame,
       dir: String,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): Unit =
+      trainSample: Double = 1.0): Unit =
     if (corpusEmb.count() > FlatEmbBoundary)
       admitEmbeddingBootstrapImi(corpusEmb, dir,
-        trainSample = trainSample, checkpointDir = checkpointDir)
+        trainSample = trainSample)
     else
       admitEmbeddingBootstrap(corpusEmb, dir,
-        trainSample = trainSample, checkpointDir = checkpointDir)
+        trainSample = trainSample)
 
   /** Emb-state COMPACTION — the embedding analog of
     * `Dedup.compactSignatures`, closing the same two drift modes for the
@@ -1139,8 +1114,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       batchEmb: DataFrame,
-      tau: Double = SEMDEDUP_TAU,
-      checkpointDir: Option[String] = None): DataFrame = {
+      tau: Double = SEMDEDUP_TAU): DataFrame = {
     def read(name: String, schema: StructType) = spark.read.schema(schema).parquet(s"$dir/$name")
     val casg = read("assign", embAssignSchema(batchEmb.schema("vec_id").dataType))
     // layout self-description probe through Hadoop FileSystem (NOT
@@ -1155,18 +1129,17 @@ object Similarity {
         .map(r => (r.getLong(0).toInt, r.getLong(1), r.getSeq[Long](2).toSeq))
         .groupBy(_._1).toSeq.sortBy(_._1)
         .map { case (s, rows) => (s, rows.map(r => (r._2, r._3)).toSeq.sortBy(_._1)) }
-      val fp = DedupClusters.ckpt(fixedPoint(batchEmb), checkpointDir)
+      val fp = DedupClusters.ckpt(fixedPoint(batchEmb))
       val basg = DedupClusters.ckpt(
         imiCellOf(fp.select("vec_id", "vi"), halves, nc)
           .join(fp.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
           .select(col("vec_id"), col("cell").as("cid"),
-            col("v").as("qv"), col("nrm").as("qn")),
-        checkpointDir)
+            col("v").as("qv"), col("nrm").as("qn")))
       admitEmbCompare(casg, basg, tau)
     } else {
       val cents = read("centroids", EmbCentroidsSchema).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq.sortBy(_._1)
-      admitEmbDecide(casg, cents, batchEmb, tau, checkpointDir)
+      admitEmbDecide(casg, cents, batchEmb, tau)
     }
   }
 
@@ -1239,8 +1212,7 @@ object Similarity {
       emb: DataFrame,
       isQuery: Column,
       dims: Seq[Int] = Seq(8, 16, 32, 64),
-      k: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
+      k: Int = 3): DataFrame = {
     val top = knnBrute(emb, isQuery, k)
     val vn = withNorm(emb).select(col("vec_id"), col("v"))
     // materialize once: every prefix leg reads the same |q|·k joined pairs,
@@ -1249,8 +1221,7 @@ object Similarity {
     val j = DedupClusters.ckpt(
       top
         .join(vn.select(col("vec_id").as("query_id"), col("v").as("qv")), "query_id")
-        .join(vn.select(col("vec_id").as("neighbor_id"), col("v").as("nv")), "neighbor_id"),
-      checkpointDir)
+        .join(vn.select(col("vec_id").as("neighbor_id"), col("v").as("nv")), "neighbor_id"))
     def cos(a: Column, b: Column): Column =
       dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
     val legs = dims.map { d =>
@@ -1691,14 +1662,12 @@ object Similarity {
     * x136's with x113 recall held (spec-pinned on the anisotropic
     * fixture).
     */
-  def lshBucketHealthCentered(
-      emb: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def lshBucketHealthCentered(emb: DataFrame): DataFrame = {
     // one scan feeds the totals and the bucketing leg (the x112 pin rule);
-    // reliable (storage-backed) checkpoint when a dir is given, so the
-    // NL·NP plane dots survive executor loss at 100 TB — the x30/x50
-    // knob, identical semantics either way
-    val d = DedupClusters.ckpt(planeDots(emb), checkpointDir)
+    // reliable (storage-backed) under a session checkpoint dir, so the
+    // NL·NP plane dots survive executor loss at 100 TB — identical
+    // semantics either way
+    val d = DedupClusters.ckpt(planeDots(emb))
     val withTot = d.crossJoin(broadcast(planeDotTotals(d)))
     bucketRollup((0 until NL).map { t =>
       withTot.select(lit(t.toLong).as("tbl"), bucketCenteredT(t).as("bkt"))
@@ -1716,9 +1685,8 @@ object Similarity {
   def knnLshCentered(
       emb: DataFrame,
       isQuery: Column,
-      k: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val d = DedupClusters.ckpt(planeDots(emb), checkpointDir)
+      k: Int = 3): DataFrame = {
+    val d = DedupClusters.ckpt(planeDots(emb))
     val withTot = d.crossJoin(broadcast(planeDotTotals(d)))
     val withB = withTot.select(
       col("vec_id"),
@@ -1844,9 +1812,9 @@ object Similarity {
     // un-materialized, the NL hyperplane projections per vector run twice
     // (once per side — 2× the bucketing cost over the corpus at scale).
     // It is vec-count × NL rows of (vec_id, tbl, bucket) metadata — tiny
-    // at any scale — so one lazy local checkpoint is the §5 trade with no
-    // storage concern.
-    val side = graft.xscale.DedupClusters.ckpt(side0, None)
+    // at any scale — so one cut (the session's kind: lazy local, or
+    // reliable under a checkpoint dir) is the §5 trade.
+    val side = DedupClusters.ckpt(side0)
     // bucket-collision join: quadratic fan-out from metadata-sized inputs —
     // re-key by the bucket key so candidate generation parallelizes
     // regardless of scan width (the simhash-block-join rule, Dedup.scala).
@@ -1904,15 +1872,14 @@ object Similarity {
       docs: DataFrame,
       cap: Int = ClusterCap,
       nc: Int = 0,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val vi = fixedPoint(emb)
     // nc <= 0 means auto (corpus-proportional, the semDedup rule);
     // oracle-pinned queries pass nc = NC so the SQL twin's literal holds
     val ncEff =
       if (nc > 0) nc
       else math.max(NC.toLong, emb.count() / TargetClusterSize).toInt
-    val asg = quantizerRanked(vi, trainQuantizer(vi, ncEff, trainSample, checkpointDir))
+    val asg = quantizerRanked(vi, trainQuantizer(vi, ncEff, trainSample))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("cid"))
     val qd = TextAnalysis.qualityPerDoc(docs)
@@ -1942,15 +1909,14 @@ object Similarity {
   def protoPrune(
       emb: DataFrame,
       nc: Int = 0,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val vi = fixedPoint(emb)
     // nc <= 0 means auto (corpus-proportional, the semDedup rule);
     // oracle-pinned queries pass nc = NC so the SQL twin's literal holds
     val ncEff =
       if (nc > 0) nc
       else math.max(NC.toLong, emb.count() / TargetClusterSize).toInt
-    val asg = quantizerRanked(vi, trainQuantizer(vi, ncEff, trainSample, checkpointDir))
+    val asg = quantizerRanked(vi, trainQuantizer(vi, ncEff, trainSample))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("cid"), col("dist"))
     val byHard = Window.partitionBy("cid").orderBy(col("dist").desc, col("vec_id"))
@@ -2069,14 +2035,13 @@ object Similarity {
   def ragIndex(
       docs: DataFrame,
       seedCap: Long = RagSeedCap,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     // chunk+hash-embed is two shuffles over token-level rows and feeds the
     // seed collect, every training round AND the assignment — materialize
     // it ONCE (the pqCodes repeated-subtree rule) instead of re-deriving
     // it from text per consumer
-    val vi = DedupClusters.ckpt(ragEmbed(docs), checkpointDir)
-    val cents = trainQuantizer(vi, seedCap.toInt, trainSample, checkpointDir)
+    val vi = DedupClusters.ckpt(ragEmbed(docs))
+    val cents = trainQuantizer(vi, seedCap.toInt, trainSample)
     quantizerRanked(vi, cents)
       .filter(col("rn") === 1)
       .groupBy("cid")
@@ -2102,21 +2067,20 @@ object Similarity {
     * candidates shuffle once on the cell id and only probed cells'
     * chunks move; the exact-distance rerank touches |q| x (chunks in
     * NPROBE cells) pairs — the IVF contract. Training rides the same
-    * trainSample/checkpointDir knobs as the index build.
+    * trainSample knob and checkpoint policy as the index build.
     */
   def ragRetrieval(
       docs: DataFrame,
       qMod: Int = TextAnalysis.BmQMod,
       nprobe: Int = NPROBE,
       seedCap: Long = RagSeedCap,
-      trainSample: Double = 1.0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      trainSample: Double = 1.0): DataFrame = {
     val sp = docs.sparkSession
     import sp.implicits._
     // one materialization feeds training, assignment, the per-doc chunk
     // counts and the query frame (the pqCodes repeated-subtree rule)
-    val vi = DedupClusters.ckpt(ragEmbed(docs), checkpointDir)
-    val cents = trainQuantizer(vi, seedCap.toInt, trainSample, checkpointDir)
+    val vi = DedupClusters.ckpt(ragEmbed(docs))
+    val cents = trainQuantizer(vi, seedCap.toInt, trainSample)
     val asg = quantizerRanked(vi, cents).filter(col("rn") === 1)
       .select(col("vec_id"), col("cid"), col("vi"))
     val nChunks = vi.groupBy(expr(s"vec_id div $RagIdStride").as("did"))
@@ -2385,8 +2349,7 @@ object Similarity {
         .unionByName(emb.filter(col("vec_id") % 45 === 0)
           .withColumn("vec_id", col("vec_id") + 2000000L))
       val frame = DedupClusters.ckpt(
-        admitEmbeddingFrame(emb.filter(col("vec_id") % 9 =!= 0), batch, nc = NC),
-        None)
+        admitEmbeddingFrame(emb.filter(col("vec_id") % 9 =!= 0), batch, nc = NC))
       val losers = admitEmbStrictLosers(frame.filter(!col("near_emb")))
         .withColumn("lose", lit(true))
       frame.join(losers, Seq("vec_id"), "left")

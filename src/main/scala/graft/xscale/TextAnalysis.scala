@@ -170,9 +170,8 @@ object TextAnalysis {
     */
   def lmScore(
       docs: org.apache.spark.sql.DataFrame,
-      broadcastModel: Boolean = true,
-      checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame =
-    lmScored(docs, broadcastModel, checkpointDir)
+      broadcastModel: Boolean = true): org.apache.spark.sql.DataFrame =
+    lmScored(docs, broadcastModel)
       .withColumn(
         "bucket",
         ntile(3).over(Window.orderBy(col("score_e6"), col("doc_id"))).cast("long"))
@@ -190,12 +189,11 @@ object TextAnalysis {
   def lmScoreSampled(
       docs: org.apache.spark.sql.DataFrame,
       sampleFraction: Double = 0.1,
-      broadcastModel: Boolean = false,
-      checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
+      broadcastModel: Boolean = false): org.apache.spark.sql.DataFrame = {
     // reliable checkpoint option: the scored frame is read twice (threshold
     // sample + final bucketing), the same recoverability argument as
     // [[DedupClusters.ckpt]].
-    val scored = DedupClusters.ckpt(lmScored(docs, broadcastModel, checkpointDir), checkpointDir)
+    val scored = DedupClusters.ckpt(lmScored(docs, broadcastModel))
     val keep = math.max(1L, math.min(1000L, (sampleFraction * 1000).toLong))
     val pct = "approx_percentile(score_e6, array(0.3333333333, 0.6666666667))"
     def terciles(df: org.apache.spark.sql.DataFrame): Option[Array[Long]] = {
@@ -231,12 +229,11 @@ object TextAnalysis {
     * mean broadcast + a 6-cell aggregate with map-side combine.
     */
   def qualityCalibration(
-      docs: org.apache.spark.sql.DataFrame,
-      checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val g = gopherAnnotate(docs)
       .select(col("doc_id"), col("nw"),
         when(gopherKeep, "pass").otherwise("fail").as("gopher"))
-    val sc = lmScored(docs, broadcastModel = true, checkpointDir)
+    val sc = lmScored(docs, broadcastModel = true)
       .select(col("doc_id"), col("n_big"), col("score_e6"))
     val mrow = sc.filter(col("n_big") > 0)
       .agg(expr("sum(score_e6) div count(*)").as("m"))
@@ -255,8 +252,7 @@ object TextAnalysis {
   /** Shared x33 scoring stage: everything except the bucket column. */
   private def lmScored(
       docs: org.apache.spark.sql.DataFrame,
-      broadcastModel: Boolean,
-      checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
+      broadcastModel: Boolean): org.apache.spark.sql.DataFrame = {
     // bigrams and their prefix words travel as 60-bit hashes from two
     // native single-pass expressions (bh = hash of "w1 w2", ph = hash of
     // w1): every model shuffle/join key is 8 bytes instead of a string
@@ -272,12 +268,12 @@ object TextAnalysis {
     // ONE corpus-scale aggregation builds the bigram model; the prefix
     // counts derive from it (c1 = sum_w2 c12, identical by construction).
     // The model is vocab^2-bounded — tiny next to the corpus — so
-    // materializing it via localCheckpoint is safe and stops Spark from
+    // materializing it with one cut is safe and stops Spark from
     // re-running the corpus explode for each model branch (the corpus is
     // still scanned twice: once for the model, once for the per-doc pairs;
     // at 100 TB you would persist the model table between the two).
     val m12 = DedupClusters.ckpt(
-      p.groupBy("bh", "ph").agg(count(lit(1)).as("c12")), checkpointDir)
+      p.groupBy("bh", "ph").agg(count(lit(1)).as("c12")))
     val m1 = m12.groupBy("ph").agg(sum("c12").as("c1"))
     // The model is bigram-vocabulary-sized: tiny on a test corpus, but it
     // grows with corpus diversity, so forcing broadcast at 100 TB could
@@ -383,19 +379,18 @@ object TextAnalysis {
   def bm25Retrieval(docs: org.apache.spark.sql.DataFrame,
       qMod: Int = BmQMod,
       maxDfPpm: Long = 1000000L): org.apache.spark.sql.DataFrame = {
-    // Materialized ONCE (lazy local checkpoint): the tokenized frame feeds
+    // Materialized ONCE (one cut): the tokenized frame feeds
     // FOUR consumers below (postings, doc lengths, the issued-query set,
     // the per-source query counts), and un-materialized each re-ran the
     // scan + regex word split + widen exchange — the repeated-subtree rule
     // (guide §5, the ragEmbed/packRepair precedent). At corpus scale the
-    // words frame is corpus-sized; the production posture for that is the
-    // reliable-checkpoint variant, and 4× corpus-wide re-tokenization is
+    // words frame is corpus-sized; the production posture for that is a
+    // run under a checkpoint dir, and 4× corpus-wide re-tokenization is
     // the costlier side of the trade everywhere.
     val w = DedupClusters.ckpt(
       Dedup.widenNarrowScan(
         docs.select(col("doc_id"), col("source"), col("text")))
-        .select(col("doc_id"), col("source"), XText.words(col("text")).as("ws")),
-      None)
+        .select(col("doc_id"), col("source"), XText.words(col("text")).as("ws")))
     val tok = w.select(col("doc_id"), explode(col("ws")).as("tk"))
       .groupBy("doc_id", "tk").agg(count(lit(1)).as("tf"))
     val dl = w.select(col("doc_id"), size(col("ws")).cast("long").as("dl"))
@@ -538,7 +533,7 @@ object TextAnalysis {
     *
     * Scale posture (100 TB): the model is ONE aggregation over the train
     * split's 8-byte bigram hashes (vocab²-bounded output, materialized
-    * once — `checkpointDir` for the reliable form); held-out scoring is a
+    * once — reliable under a session checkpoint dir); held-out scoring is a
     * scan + model join (AQE picks broadcast vs shuffle from the model's
     * real size) + two keyed aggregations. Nothing global anywhere.
     */
@@ -546,8 +541,7 @@ object TextAnalysis {
       docs: org.apache.spark.sql.DataFrame,
       isTrain: Column,
       splitCol: Column,
-      broadcastModel: Boolean = true,
-      checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
+      broadcastModel: Boolean = true): org.apache.spark.sql.DataFrame = {
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select(
         col("doc_id"), col("_split"),
@@ -556,8 +550,7 @@ object TextAnalysis {
     val tagged = docs.withColumn("_split", splitCol).withColumn("_is_t", isTrain)
     val m12 = DedupClusters.ckpt(
       pairs(tagged.filter(col("_is_t")))
-        .groupBy("bh", "ph").agg(count(lit(1)).as("c12")),
-      checkpointDir)
+        .groupBy("bh", "ph").agg(count(lit(1)).as("c12")))
     val m1 = m12.groupBy("ph").agg(sum("c12").as("c1"))
     def hint(df: org.apache.spark.sql.DataFrame) =
       if (broadcastModel) broadcast(df) else df
@@ -615,8 +608,7 @@ object TextAnalysis {
     */
   def bpeTrain(
       docs: org.apache.spark.sql.DataFrame,
-      merges: Int = BpeMerges,
-      checkpointDir: Option[String] = None): Seq[(Long, String, String, Long)] = {
+      merges: Int = BpeMerges): Seq[(Long, String, String, Long)] = {
     val sp = docs.sparkSession
     import sp.implicits._
     var state = DedupClusters.ckpt(
@@ -627,8 +619,7 @@ object TextAnalysis {
         .select(
           col("freq"),
           concat_ws(" ",
-            expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")).as("sym")),
-      checkpointDir)
+            expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")).as("sym")))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var r = 1
     var exhausted = false
@@ -654,8 +645,7 @@ object TextAnalysis {
             col("freq"),
             trim(call_function("replace",
               concat(lit(" "), col("sym"), lit(" ")),
-              lit(s" $pair "), lit(s" $merged "))).as("sym")),
-          checkpointDir)
+              lit(s" $pair "), lit(s" $merged "))).as("sym")))
         r += 1
       }
     }

@@ -569,6 +569,51 @@ class CliAdmitSpec extends SparkSpec {
     assert(spark.read.parquet(sigsDir).count() === 101L)
   }
 
+  test("admit --ckpt runs under a reliable checkpoint dir: same report and admits, dir unset after") {
+    val base = tmpDir("cli-admit-ckpt")
+    val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .filter(col("doc_id") < 100).select("doc_id", "text", "source")
+    // 2 exact corpus dups, 2 near corpus dups, an intra-batch near pair
+    // (the --strict pass), one fresh doc
+    val novel = "the harbour master recorded nine grain barges waiting " +
+      "beyond the breakwater while the spring tide turned at noon"
+    val batch = corpus.filter(col("doc_id") < 2)
+      .withColumn("doc_id", col("doc_id") + 50000L)
+      .unionByName(corpus.filter(col("doc_id") >= 2 && col("doc_id") < 4)
+        .withColumn("doc_id", col("doc_id") + 70000L)
+        .withColumn("text", concat(col("text"), lit(" zq"))))
+      .unionByName(Seq(
+        (60001L, novel, "batch"),
+        (60002L, novel + " zq", "batch"),
+        (80000L, "a fresh catalogue of alpine hut opening dates for the " +
+          "coming season across the western ranges", "batch")).toDF("doc_id", "text", "source"))
+    val corpusPath = base.getPath + "/corpus.parquet"
+    val batchPath = base.getPath + "/batch.parquet"
+    corpus.write.parquet(corpusPath)
+    batch.write.parquet(batchPath)
+    val ckptDir = base.getPath + "/ckpt"
+
+    def admit(name: String, extra: List[String]): (Set[(String, Long, Long)], Set[Long]) = {
+      val out = s"${base.getPath}/$name"
+      Console.withOut(new java.io.PrintStream(new java.io.ByteArrayOutputStream())) {
+        assert(Cli.run(spark, List("admit", corpusPath, batchPath, out,
+          "--sigs", s"${base.getPath}/sigs_$name", "--strict") ++ extra) === 0)
+      }
+      (spark.read.parquet(s"$out/report").as[(String, Long, Long)].collect().toSet,
+        spark.read.parquet(s"$out/admitted").select("doc_id").as[Long].collect().toSet)
+    }
+    val (plainReport, plainIds) = admit("plain", Nil)
+    val (ckptReport, ckptIds) = admit("ckpt", List("--ckpt", ckptDir))
+    assert(ckptReport === plainReport)
+    assert(ckptIds === plainIds)
+    assert(plainIds === Set(60001L, 80000L))
+    // the cuts were reliable ones under the --ckpt dir, and the verb left
+    // the shared context without a dir (a leaked one would turn every
+    // later cut in this JVM reliable)
+    assert(rddCheckpoints(ckptDir) > 0, s"no rdd checkpoints under $ckptDir")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+  }
+
   test("sidecar probes are scheme-aware: file: URIs hit the sidecar branch, IMI layout detected") {
     // regression pin for the probe defect: a java.io.File probe on a
     // scheme-qualified path ("file:/…") ALWAYS answers false (the scheme

@@ -24,6 +24,13 @@ abstract class SparkSpec extends AnyFunSuite {
     d
   }
 
+  /** RDD checkpoint dirs (`rdd-<id>`) written anywhere under `dir`. */
+  def rddCheckpoints(dir: String): Long = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(root)) 0L
+    else java.nio.file.Files.walk(root).filter(_.getFileName.toString.startsWith("rdd-")).count()
+  }
+
   def writeFile(dir: java.io.File, name: String, content: String): java.io.File = {
     val f = new java.io.File(dir, name)
     java.nio.file.Files.writeString(f.toPath, content)

@@ -118,7 +118,7 @@ class AdmissionSpec extends SparkSpec {
     Admission.legs(
       spark.read.schema(Dedup.dedupSignatures(batch).schema).parquet(st.sigs), batch,
       Some(() => Similarity.admitEmbeddingSigs(spark, st.esigs, batchEmb)), None, None,
-      strict, None)
+      strict)
 
   private def statuses(st: DataFrame): Map[Long, String] =
     st.select("doc_id", "status").as[(Long, String)].collect().toMap
@@ -262,9 +262,9 @@ class AdmissionSpec extends SparkSpec {
       6000003L -> 5L, 6000004L -> 5L).toDF("vec_id", "v")
       .join(vec, "v").select("vec_id", "embedding")
 
-    val corpusSt = Admission.classify(textEmbLegs(st, batch, batchEmb, strict = false), None)
+    val corpusSt = Admission.classify(textEmbLegs(st, batch, batchEmb, strict = false))
     val legs = textEmbLegs(st, batch, batchEmb, strict = true)
-    val got = Admission.classify(legs, None)
+    val got = Admission.classify(legs)
     // the serial composition: each pass's one-call form over the docs the
     // earlier passes left admitted
     def admittedIn(s: DataFrame) = s.filter(col("status") === "admitted")
@@ -291,7 +291,7 @@ class AdmissionSpec extends SparkSpec {
     val out = new java.io.File(st.base, "out").getPath
     val (legs, _, legJobs) = jobsOf(textEmbLegs(st, st.batch, st.batchEmb, strict = true))
     val (admitted, _, tail) = jobsOf {
-      val s = Admission.classify(legs.get, None)
+      val s = Admission.classify(legs.get)
       val ids = s.filter(col("status") === "admitted").select("doc_id")
       Admission.appendState(ids, legs.get, Some(st.sigs), Some(st.esigs), None,
         Seq(() => st.batch.join(ids, "doc_id").write.parquet(out)))

@@ -39,13 +39,13 @@ class DedupClustersSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       val (counted, countedJobs) = run(DedupClusters.connectedComponents(pairs))
-      val (bounded, boundedJobs) = run(DedupClusters.componentsAtMost(7L, None)(pairs))
+      val (bounded, boundedJobs) = run(DedupClusters.componentsAtMost(7L)(pairs))
       assert(bounded === counted)
       // the counted path counts (and cuts) the edge list before the
       // union-find job; the bounded path runs the union-find job alone
       assert(boundedJobs === 1 && countedJobs > boundedJobs, s"counted: $countedJobs jobs, bounded: $boundedJobs")
       // a bound past the one-task threshold takes the counted path
-      val (big, _) = run(DedupClusters.componentsAtMost(DedupClusters.OneTaskEdges, None)(pairs))
+      val (big, _) = run(DedupClusters.componentsAtMost(DedupClusters.OneTaskEdges)(pairs))
       assert(big === counted)
     } finally sc.removeSparkListener(listener)
   }
@@ -91,16 +91,103 @@ class DedupClustersSpec extends SparkSpec {
     val pairs = (chain ++ bridge :+ (90L, 91L)).toDF("a", "b")
     val local = DedupClusters.connectedComponents(pairs, maxIter = 40)
       .as[(Long, Long)].collect().toMap
-    val reliable = DedupClusters.connectedComponents(
-      pairs, maxIter = 40, checkpointDir = Some(dir)).as[(Long, Long)].collect().toMap
-    val reliableStar = DedupClusters.connectedComponentsStar(
-      pairs, checkpointDir = Some(dir)).as[(Long, Long)].collect().toMap
+    val (reliable, reliableStar) = graft.Sessions.withCheckpointDir(spark, dir) {
+      (DedupClusters.connectedComponents(pairs, maxIter = 40).as[(Long, Long)].collect().toMap,
+        DedupClusters.connectedComponentsStar(pairs).as[(Long, Long)].collect().toMap)
+    }
     assert(reliable === local)
     assert(reliableStar === local)
-    // the reliable dir was actually used (RDD checkpoint files exist)
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
-    assert(wrote > 0, s"no rdd checkpoints under $dir")
+    // the scoped dir was actually used (RDD checkpoint files exist), and
+    // the scope left the shared context without a dir
+    assert(rddCheckpoints(dir) > 0, s"no rdd checkpoints under $dir")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+  }
+
+  /** The RDD a cut frame reads (the `LogicalRDD` a checkpoint plans as). */
+  private def cutRdd(cut: org.apache.spark.sql.DataFrame) =
+    cut.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.get
+
+  /** Jobs `body` starts, and the RDD names of every stage they ran. */
+  private def jobsOf[T](body: => T): (T, Int, Seq[String]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val rdds = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        e.stageInfos.foreach(_.rddInfos.foreach(r => rdds.add(r.name)))
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get, scala.jdk.CollectionConverters.CollectionHasAsScala(rdds).asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("ckpt with no checkpoint dir: a lazy local cut, no job of its own, later reads hit local blocks") {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val df = spark.range(0, 1000).toDF("id").filter($"id" % 3 === 0)
+    val (cut, cutJobs, _) = jobsOf(DedupClusters.ckpt(df))
+    assert(cutJobs === 0, s"ckpt started $cutJobs jobs")
+    val (n, firstJobs, _) = jobsOf(cut.count())
+    assert(n === 334L && firstJobs > 0)
+    // the first action materialized the cut into executor-local blocks:
+    // checkpointed, with no reliable checkpoint file
+    val rdd = cutRdd(cut)
+    assert(rdd.isCheckpointed)
+    assert(rdd.getCheckpointFile.isEmpty)
+    val (m, _, read) = jobsOf(cut.agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0))
+    assert(m === (0L until 1000L by 3L).sum)
+    assert(read.contains("LocalCheckpointRDD"), read.distinct.mkString(", "))
+  }
+
+  test("ckpt inside Sessions.withCheckpointDir: a reliable cut written under the scoped dir") {
+    val dir = tmpDir("graft_ckpt_scope").getPath
+    val df = spark.range(0, 1000).toDF("id").filter($"id" % 3 === 0)
+    val cut = graft.Sessions.withCheckpointDir(spark, dir) {
+      assert(spark.sparkContext.getCheckpointDir.exists(_.contains(dir)))
+      DedupClusters.ckpt(df)
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    assert(cutRdd(cut).getCheckpointFile.exists(_.contains(dir)), cutRdd(cut).getCheckpointFile)
+    assert(rddCheckpoints(dir) > 0, s"no rdd checkpoints under $dir")
+    // the cut outlives its scope: it reads its reliable files
+    assert(cut.count() === 334L)
+  }
+
+  test("a nested withCheckpointDir scope runs under the outer dir and leaves it set") {
+    val outer = tmpDir("graft_ckpt_outer").getPath
+    val inner = tmpDir("graft_ckpt_inner").getPath
+    val sc = spark.sparkContext
+    graft.Sessions.withCheckpointDir(spark, outer) {
+      val cut = graft.Sessions.withCheckpointDir(spark, inner) {
+        assert(sc.getCheckpointDir.exists(_.contains(outer)), sc.getCheckpointDir)
+        DedupClusters.ckpt(spark.range(0, 100).toDF("id"))
+      }
+      assert(cutRdd(cut).getCheckpointFile.exists(_.contains(outer)))
+      // the inner scope did not unset the outer one
+      assert(sc.getCheckpointDir.exists(_.contains(outer)), sc.getCheckpointDir)
+    }
+    assert(rddCheckpoints(outer) > 0, s"no rdd checkpoints under $outer")
+    assert(rddCheckpoints(inner) === 0L)
+    assert(sc.getCheckpointDir.isEmpty)
+  }
+
+  test("a withCheckpointDir scope whose body throws leaves the context with no dir") {
+    val dir = tmpDir("graft_ckpt_throw").getPath
+    val e = intercept[IllegalStateException] {
+      graft.Sessions.withCheckpointDir(spark, dir) {
+        assert(spark.sparkContext.getCheckpointDir.nonEmpty)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage === "body failed")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
   }
 
   test("mega-star hot key: AQE splits the bare join; the CC join needs salting (identical result)") {

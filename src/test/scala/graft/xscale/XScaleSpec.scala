@@ -462,23 +462,25 @@ class XScaleSpec extends SparkSpec {
     // trainSample only changes which vectors TRAIN the quantizer, never
     // which pairs come out (all clone-group members land in one cluster
     // wherever the centroids sit, cosine pairing is exact within clusters);
-    // checkpointDir swaps executor-local for reliable materialization —
-    // also invisible to results
+    // a session checkpoint dir swaps executor-local for reliable
+    // materialization — also invisible to results
     val ckptDir = tmpDir("x50-knobs").getPath + "/ckpt"
-    val knobs = Dedup.jointPairs(docs, emb,
-      trainSample = 0.5, checkpointDir = Some(ckptDir))
-      .select("a", "b").as[(Long, Long)].collect().toSet
+    val knobs = graft.Sessions.withCheckpointDir(spark, ckptDir) {
+      Dedup.jointPairs(docs, emb, trainSample = 0.5)
+        .select("a", "b").as[(Long, Long)].collect().toSet
+    }
     assert(knobs === base)
-    // the run switched the context onto a reliable checkpoint dir (the
-    // first Some(dir) caller in the shared test JVM wins, so assert the
-    // posture, not the specific path)
-    assert(spark.sparkContext.getCheckpointDir.nonEmpty)
+    // the cuts were reliable ones under the scoped dir, and the scope
+    // left the shared context without a dir
+    assert(rddCheckpoints(ckptDir) > 0, s"no rdd checkpoints under $ckptDir")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
     // jointDedup end-to-end with both knobs: same survivors as default
     val sDefault = Dedup.jointDedup(docs, emb)
       .select("doc_id").as[Long].collect().toSet
-    val sKnobs = Dedup.jointDedup(docs, emb,
-      trainSample = 0.5, checkpointDir = Some(ckptDir))
-      .select("doc_id").as[Long].collect().toSet
+    val sKnobs = graft.Sessions.withCheckpointDir(spark, ckptDir) {
+      Dedup.jointDedup(docs, emb, trainSample = 0.5)
+        .select("doc_id").as[Long].collect().toSet
+    }
     assert(sKnobs === sDefault)
   }
 
@@ -1143,32 +1145,33 @@ class XScaleSpec extends SparkSpec {
   }
 
   test("PQ/matryoshka/BPE checkpointDir knob: reliable materialization, results invariant") {
-    // the knob only swaps executor-local blocks for reliable checkpoints —
-    // every result must be bit-identical to the default path (the x50 rule:
-    // new ops ship with the checkpointDir knob, and it never changes values)
+    // a session checkpoint dir only swaps executor-local blocks for
+    // reliable checkpoints — every result must be bit-identical to the
+    // default path (the x50 rule: it never changes values)
     val ckptDir = tmpDir("newops-ckpt").getPath + "/ckpt"
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    def reliable[T](body: => T): T = graft.Sessions.withCheckpointDir(spark, ckptDir)(body)
     val codesBase = Similarity.pqCodes(emb)
       .select("vec_id", "m", "code").as[(Long, Long, Long)].collect().toSet
-    val codesCkpt = Similarity.pqCodes(emb, checkpointDir = Some(ckptDir))
-      .select("vec_id", "m", "code").as[(Long, Long, Long)].collect().toSet
+    val codesCkpt = reliable(Similarity.pqCodes(emb)
+      .select("vec_id", "m", "code").as[(Long, Long, Long)].collect().toSet)
     assert(codesCkpt === codesBase)
     val rrBase = Similarity.pqAdcRerank(emb, col("vec_id") < 5)
       .select("query_id", "rank", "neighbor_id").as[(Long, Long, Long)].collect().toSet
-    val rrCkpt = Similarity.pqAdcRerank(emb, col("vec_id") < 5, checkpointDir = Some(ckptDir))
-      .select("query_id", "rank", "neighbor_id").as[(Long, Long, Long)].collect().toSet
+    val rrCkpt = reliable(Similarity.pqAdcRerank(emb, col("vec_id") < 5)
+      .select("query_id", "rank", "neighbor_id").as[(Long, Long, Long)].collect().toSet)
     assert(rrCkpt === rrBase)
     val mfBase = Similarity.matryoshkaFidelity(emb, col("vec_id") < 5)
       .as[(Long, Long, Long, Long)].collect().toSeq
-    val mfCkpt = Similarity.matryoshkaFidelity(emb, col("vec_id") < 5,
-      checkpointDir = Some(ckptDir)).as[(Long, Long, Long, Long)].collect().toSeq
+    val mfCkpt = reliable(Similarity.matryoshkaFidelity(emb, col("vec_id") < 5)
+      .as[(Long, Long, Long, Long)].collect().toSeq)
     assert(mfCkpt === mfBase)
     val docs = Seq((1L, "aa ab"), (2L, "ab ab b")).toDF("doc_id", "text")
-    assert(TextAnalysis.bpeTrain(docs, checkpointDir = Some(ckptDir)) ===
-      TextAnalysis.bpeTrain(docs))
-    // the run switched the context onto a reliable checkpoint dir (first
-    // Some(dir) caller in the shared test JVM wins — assert the posture)
-    assert(spark.sparkContext.getCheckpointDir.nonEmpty)
+    assert(reliable(TextAnalysis.bpeTrain(docs)) === TextAnalysis.bpeTrain(docs))
+    // the cuts were reliable ones under the scoped dir, and each scope
+    // left the shared context without a dir
+    assert(rddCheckpoints(ckptDir) > 0, s"no rdd checkpoints under $ckptDir")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
   }
 
   test("x71 top n-grams: hand fixture ranks the planted boilerplate first, hash = h60(gram)") {
